@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from .common import duck_sum128, fround, read, spark_sum64
 from .dedup import _SPARK_NORM, _duck_hash, _duck_hash60, _spark_hash, _spark_hash60
+from .kernels import docs, h60, map_docs, tokenize_batch
 from .text import _r
 
 # ---------------------------------------------------------------------------
@@ -50,65 +51,41 @@ _SPARK_CHUNKS = f"regexp_extract_all({_SPARK_NORM}, '{_CHUNK_RE}', 0)"
 _DUCK_CHUNKS = f"regexp_extract_all({_DUCK_NORM}, '{_CHUNK_RE}', 0)"
 
 
-def _chunk_exploded_batches(it):
+def _chunk_exploded(ids, texts):
     """(doc_id, chunk_idx, chunk, chunk_h) rows — the C-regex twin of
     ``posexplode(_SPARK_CHUNKS)`` + ``_spark_hash60(chunk)``: the norm
     text split into consecutive <=CHUNK_WORDS-word chunks (exactly the
     greedy lookahead matches).  Null/empty text explodes to nothing."""
-    from hashlib import md5
-
-    import pyarrow as pa
-
-    from .dedup import _tokenize_batch
-
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        doc_ids = batch.column("doc_id").to_pylist()
-        id_type = batch.schema.field("doc_id").type
-        out_id, out_idx, out_c, out_h = [], [], [], []
-        words_per_doc, _c, _b = _tokenize_batch(texts)
-        for did, ws in zip(doc_ids, words_per_doc):
-            if not ws:
-                continue
-            for idx, i in enumerate(range(0, len(ws), CHUNK_WORDS)):
-                chunk = " ".join(ws[i : i + CHUNK_WORDS])
-                out_id.append(did)
-                out_idx.append(idx)
-                out_c.append(chunk)
-                out_h.append(
-                    int.from_bytes(md5(chunk.encode()).digest()[:8], "big") >> 4
-                )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(out_id, type=id_type),
-                pa.array(out_idx, type=pa.int32()),
-                pa.array(out_c, type=pa.string()),
-                pa.array(out_h, type=pa.int64()),
-            ],
-            ["doc_id", "chunk_idx", "chunk", "chunk_h"],
-        )
-
-
-def _chunk_count_batches(it):
-    """(doc_id, n_chunks) — ``size(_SPARK_CHUNKS)`` as bigint: 0 for
-    empty text, null for null text (size(NULL) semantics)."""
-    import pyarrow as pa
-
-    from .dedup import _tokenize_batch
-
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        words_per_doc, _c, _b = _tokenize_batch(texts)
-        counts = [
-            None
-            if ws is None
-            else (len(ws) + CHUNK_WORDS - 1) // CHUNK_WORDS
-            for ws in words_per_doc
+    out_id, out_idx, out_c = [], [], []
+    for did, ws in zip(ids, tokenize_batch(texts)):
+        if not ws:
+            continue
+        chunks = [
+            " ".join(ws[i : i + CHUNK_WORDS]) for i in range(0, len(ws), CHUNK_WORDS)
         ]
-        yield pa.RecordBatch.from_arrays(
-            [batch.column("doc_id"), pa.array(counts, type=pa.int64())],
-            ["doc_id", "n_chunks"],
-        )
+        out_id += [did] * len(chunks)
+        out_idx += range(len(chunks))
+        out_c += chunks
+    return {
+        "doc_id": out_id,
+        "chunk_idx": out_idx,
+        "chunk": out_c,
+        "chunk_h": h60(out_c),
+    }
+
+
+def _chunk_count(ids, texts):
+    """``size(_SPARK_CHUNKS)`` as bigint: 0 for empty text, null for
+    null text (size(NULL) semantics)."""
+    return {
+        "n_chunks": [
+            None if ws is None else (len(ws) + CHUNK_WORDS - 1) // CHUNK_WORDS
+            for ws in tokenize_batch(texts)
+        ]
+    }
+
+
+_CHUNK_DDL = "chunk_idx int, chunk string, chunk_h bigint"
 
 
 def paragraph_dedup(spark, sf_dir):
@@ -129,16 +106,8 @@ def paragraph_dedup(spark, sf_dir):
     the JVM chunk regex + interpreted per-chunk md5/conv subtree was
     re-executed for the dup table, the keep side and the count side;
     17 -> ~5 s at 50k docs)."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    from .dedup import _spread_docs
-
-    ensure_package_on_workers(spark)
-    d, id_t = _spread_docs(spark, sf_dir)
-    exploded = d.mapInArrow(
-        _chunk_exploded_batches,
-        f"doc_id {id_t}, chunk_idx int, chunk string, chunk_h bigint",
-    )
+    d = docs(spark, sf_dir)
+    exploded = map_docs(spark, d, _chunk_exploded, _CHUNK_DDL)
     dup_chunks = (
         exploded.select("chunk_h")
         .groupBy("chunk_h")
@@ -158,7 +127,7 @@ def paragraph_dedup(spark, sf_dir):
         )
     )
     return (
-        d.mapInArrow(_chunk_count_batches, f"doc_id {id_t}, n_chunks bigint")
+        map_docs(spark, d, _chunk_count, "n_chunks bigint")
         .join(kept, "doc_id", "left")
         .select(
             "doc_id",
@@ -497,10 +466,8 @@ def knn_join(spark, sf_dir):
     from .similarity import _query_vecs, _scored_against_queries
 
     e = read(spark, sf_dir, "embeddings")
-    q_rows = _query_vecs(e, F.col("vec_id") < KNN_QUERIES)
-    scored = _scored_against_queries(
-        spark, e, q_rows, F.col("vec_id") >= KNN_QUERIES
-    )
+    q_rows = _query_vecs(e, F.col("vec_id") < KNN_QUERIES, KNN_QUERIES)
+    scored = _scored_against_queries(e, q_rows, F.col("vec_id") >= KNN_QUERIES)
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
@@ -538,16 +505,7 @@ def chunk_dedup_stats(spark, sf_dir):
     groupBy (map-side partial, 8-byte shuffle keys — same 60-bit md5
     stand-in as paragraph_dedup, from the same r07 Arrow kernel) + a
     single-row rollup."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    from .dedup import _spread_docs
-
-    ensure_package_on_workers(spark)
-    d, id_t = _spread_docs(spark, sf_dir)
-    exploded = d.mapInArrow(
-        _chunk_exploded_batches,
-        f"doc_id {id_t}, chunk_idx int, chunk string, chunk_h bigint",
-    ).select("chunk_h")
+    exploded = map_docs(spark, sf_dir, _chunk_exploded, _CHUNK_DDL).select("chunk_h")
     per_chunk = exploded.groupBy("chunk_h").agg(F.count("*").alias("freq"))
     return per_chunk.select(
         F.sum("freq").cast("bigint").alias("n_occurrences"),

@@ -18,6 +18,20 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .common import read, spread
+from .kernels import (
+    bounded_collect,
+    collect_within,
+    docs,
+    h60,
+    map_arrow,
+    map_docs,
+    md5_u64,
+    null_safe_i64,
+    segments,
+    shingles_for,
+    tokenize_batch,
+    vote32,
+)
 
 N_PERMS = 8
 BAND_SIZE = 2
@@ -131,183 +145,39 @@ _MINHASH_A = (998377, 811823, 651439, 527581, 423037, 342049, 276197, 223409)
 _MINHASH_B = (12721, 29363, 47563, 65537, 83701, 104729, 122887, 141079)
 
 
-# --- Arrow-native tokenize+hash kernels (guide §4.2) -----------------
-#
-# The word/shingle -> md5 -> integer pipelines are per-document
-# independent (no cross-row state), so the whole computation runs
-# inside one mapInArrow stage: C-backed `re` tokenization, hashlib md5
-# (first 4 digest bytes big-endian == the portable "first 8 hex chars"
-# hash), and numpy batch-level vote/min reductions.  The JVM
-# expression forms (kept verbatim in the oracle SQL) pay an
-# interpreted-HOF md5+conv per element — measured 8.3 s (simhash) /
-# 5.8 s (minhash) at sf1.0/local[32] vs ~1 s here; even the
-# explode+codegen-HashAggregate rewrite only reached 5.1 / 4.5 s
-# because JVM md5-hex + conv + per-row aggregation dominate.
-#
-# Tokenization parity is EXACT by construction: the ASCII strip regex
-# '[^a-zA-Z0-9 ]' runs FIRST, so lower()/split() only ever see ASCII
-# (Java/Python/DuckDB case-fold and whitespace semantics coincide on
-# ASCII; the corpus-wide \s-class landmines do not apply because every
-# non-[a-zA-Z0-9 ] byte is already a space).  Null text yields null
-# outputs (matching transform(NULL) -> NULL in both engines); zero
-# words yield simhash 0 / the md5('') shingle, matching the array
-# forms.  Memory per batch is bounded: Arrow ships <=512 docs/batch
-# (session.py), and the per-bit reductions use one cumsum buffer over
-# the batch's words, never an n_words x 32 matrix (a 10M-word mega-doc
-# costs one 80 MB int64 buffer, not 1.3 GB).
-
-_ASCII_STRIP = "[^a-zA-Z0-9 ]"
+# --- per-document Arrow kernels (kernels.map_docs; guide §4.2) ---------
 
 
-def _spread_docs(spark, sf_dir):
-    """(doc_id, text) pre-spread to cluster parallelism for the Arrow
-    kernels (common.spread: the bench corpus is ONE parquet file ->
-    one scan split -> a single Python worker would run the whole
-    stage; measured 3.0 s single-task vs ~0.8 s spread at
-    sf1.0/local[32]).  Also returns the doc_id type: bigint in the
-    driver corpus but string in planted test corpora — the kernels
-    pass it through untouched, so the output schema mirrors whatever
-    the scan carries."""
-    d = spread(spark, read(spark, sf_dir, "documents").select("doc_id", "text"))
-    return d, dict(d.dtypes)["doc_id"]
+def _simhash(ids, texts):
+    words = tokenize_batch(texts)
+    counts, bounds = segments(words)
+    h = md5_u64(w for ws in words if ws for w in ws) >> _np.uint64(32)
+    return {"simhash": null_safe_i64(vote32(h, counts, bounds), texts)}
 
 
-def _tokenize_batch(texts):
-    """words-per-doc lists mirroring ``_SPARK_WORDS`` (None for null
-    text), plus int64 word counts and doc boundary offsets."""
-    import re
-
-    import numpy as np
-
-    strip = re.compile(_ASCII_STRIP)
-    words_per_doc = [
-        None if t is None else strip.sub(" ", t).lower().split() for t in texts
-    ]
-    counts = np.fromiter(
-        (0 if ws is None else len(ws) for ws in words_per_doc),
-        dtype=np.int64,
-        count=len(words_per_doc),
-    )
-    bounds = np.zeros(len(words_per_doc) + 1, dtype=np.int64)
-    np.cumsum(counts, out=bounds[1:])
-    return words_per_doc, counts, bounds
+def _simhash_wide(ids, texts):
+    """fp_lo votes over md5 digest bytes 0-3, fp_hi over bytes 4-7 of
+    the same md5 (hex chars 1-8 / 9-16)."""
+    words = tokenize_batch(texts)
+    counts, bounds = segments(words)
+    h = md5_u64(w for ws in words if ws for w in ws)
+    lo, hi = h >> _np.uint64(32), h & _np.uint64(0xFFFFFFFF)
+    return {
+        "fp_lo": null_safe_i64(vote32(lo, counts, bounds), texts),
+        "fp_hi": null_safe_i64(vote32(hi, counts, bounds), texts),
+    }
 
 
-def _md5_u64(strings_iter):
-    """uint64 array of the portable 32-bit hash (first 8 md5 hex chars
-    == first 4 digest bytes, big-endian) for a flat string iterable."""
-    from hashlib import md5
-
-    import numpy as np
-
-    buf = b"".join(md5(s.encode()).digest()[:4] for s in strings_iter)
-    return np.frombuffer(buf, dtype=">u4").astype(np.uint64)
-
-
-def _vote32(h, counts, bounds):
-    """Packed 32-bit majority vote per doc segment: bit b of doc i is
-    set iff 2 * |{hashes in segment i with bit b set}| > counts[i].
-    One int64 cumsum buffer over the batch's hashes per bit — bounded
-    memory even when one doc holds millions of words."""
-    import numpy as np
-
-    fp = np.zeros(len(counts), dtype=np.int64)
-    cs = np.empty(len(h) + 1, dtype=np.int64)
-    cs[0] = 0
-    for b in range(32):
-        np.cumsum((h >> np.uint64(b)) & np.uint64(1), out=cs[1:])
-        ones = cs[bounds[1:]] - cs[bounds[:-1]]
-        fp |= (2 * ones > counts).astype(np.int64) << b
-    return fp
-
-
-def _null_safe_i64(values, texts):
-    import pyarrow as pa
-
-    if any(t is None for t in texts):
-        return pa.array(
-            [None if t is None else int(v) for t, v in zip(texts, values)],
-            type=pa.int64(),
-        )
-    return pa.array(values, type=pa.int64())
-
-
-def _simhash_batches(it):
-    import pyarrow as pa
-
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        words_per_doc, counts, bounds = _tokenize_batch(texts)
-        h = _md5_u64(w for ws in words_per_doc if ws for w in ws)
-        fp = _vote32(h, counts, bounds)
-        yield pa.RecordBatch.from_arrays(
-            [batch.column("doc_id"), _null_safe_i64(fp, texts)],
-            ["doc_id", "simhash"],
-        )
-
-
-def _simhash_wide_batches(it):
-    from hashlib import md5
-
-    import numpy as np
-    import pyarrow as pa
-
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        words_per_doc, counts, bounds = _tokenize_batch(texts)
-        buf = b"".join(
-            md5(w.encode()).digest()[:8]
-            for ws in words_per_doc
-            if ws
-            for w in ws
-        )
-        both = np.frombuffer(buf, dtype=">u4").astype(np.uint64).reshape(-1, 2)
-        fp_lo = _vote32(np.ascontiguousarray(both[:, 0]), counts, bounds)
-        fp_hi = _vote32(np.ascontiguousarray(both[:, 1]), counts, bounds)
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("doc_id"),
-                _null_safe_i64(fp_lo, texts),
-                _null_safe_i64(fp_hi, texts),
-            ],
-            ["doc_id", "fp_lo", "fp_hi"],
-        )
-
-
-def _shingles_for(words):
-    """3-word shingles mirroring ``_SPARK_SHINGLES`` (never empty)."""
-    if len(words) >= 3:
-        return [" ".join(words[i : i + 3]) for i in range(len(words) - 2)]
-    return [" ".join(words)]
-
-
-def _shingle_hash_batches(it):
-    """Per doc: the sorted distinct 64-bit md5 prefixes of its shingles,
-    packed as one binary blob (compact collect for the candidate
-    prefilter's broadcast table)."""
-    from hashlib import md5
-
-    import numpy as np
-    import pyarrow as pa
-
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        words_per_doc, _c, _b = _tokenize_batch(texts)
-        blobs = []
-        for ws in words_per_doc:
-            if ws is None:
-                blobs.append(None)
-                continue
-            sh = set(_shingles_for(ws))
-            arr = np.frombuffer(
-                b"".join(md5(s.encode()).digest()[:8] for s in sh), dtype=">u8"
-            ).astype(np.uint64)
-            arr.sort()
-            blobs.append(arr.tobytes())
-        yield pa.RecordBatch.from_arrays(
-            [batch.column("doc_id"), pa.array(blobs, type=pa.binary())],
-            ["doc_id", "hs"],
-        )
+def _shingle_hash(ids, texts):
+    """Per doc: the sorted 64-bit md5 prefixes of its distinct
+    shingles, packed as one binary blob (compact collect for the
+    candidate prefilter's broadcast table)."""
+    return {
+        "hs": [
+            None if ws is None else _np.sort(md5_u64(set(shingles_for(ws)))).tobytes()
+            for ws in tokenize_batch(texts)
+        ]
+    }
 
 
 def _bucket_hamming_batches(it):
@@ -373,42 +243,21 @@ def _bucket_hamming_batches(it):
         )
 
 
-def _shingle_h60_batches(it):
+def _shingle_h60(ids, texts):
     """Exploded (doc_id, n, sh_h) rows — the C-regex twin of
     ``explode(array_distinct(_SPARK_SHINGLES))`` + ``_spark_hash60``:
     per doc, one row per DISTINCT shingle carrying the distinct count
-    and the shingle's 60-bit md5 int (first 15 hex chars == first 8
-    digest bytes >> 4).  Null text explodes to nothing, matching
-    ``explode(NULL)``."""
-    from hashlib import md5
-
-    import pyarrow as pa
-
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        doc_ids = batch.column("doc_id").to_pylist()
-        id_type = batch.schema.field("doc_id").type
-        out_ids, out_n, out_h = [], [], []
-        words_per_doc, _c, _b = _tokenize_batch(texts)
-        for did, ws in zip(doc_ids, words_per_doc):
-            if ws is None:
-                continue
-            sh = list(dict.fromkeys(_shingles_for(ws)))
-            n = len(sh)
-            for s in sh:
-                out_ids.append(did)
-                out_n.append(n)
-                out_h.append(
-                    int.from_bytes(md5(s.encode()).digest()[:8], "big") >> 4
-                )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(out_ids, type=id_type),
-                pa.array(out_n, type=pa.int32()),
-                pa.array(out_h, type=pa.int64()),
-            ],
-            ["doc_id", "n", "sh_h"],
-        )
+    and the shingle's 60-bit md5 int.  Null text explodes to nothing,
+    matching ``explode(NULL)``."""
+    out_ids, out_n, flat = [], [], []
+    for did, ws in zip(ids, tokenize_batch(texts)):
+        if ws is None:
+            continue
+        sh = list(dict.fromkeys(shingles_for(ws)))
+        out_ids += [did] * len(sh)
+        out_n += [len(sh)] * len(sh)
+        flat += sh
+    return {"doc_id": out_ids, "n": out_n, "sh_h": h60(flat)}
 
 
 def _pair_hash_prefilter(spark, pairs, hs_map, keep):
@@ -439,9 +288,6 @@ def _pair_hash_prefilter(spark, pairs, hs_map, keep):
     once per shared prefix shingle — tens of thousands of duplicates
     each (the skew soak caught exactly this class: 10 co-identical
     50k-shingle docs spun one task for 20+ minutes before the memo)."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     bc = spark.sparkContext.broadcast(hs_map)
     dtypes = dict(pairs.dtypes)
     schema = f"doc_a {dtypes['doc_a']}, doc_b {dtypes['doc_b']}"
@@ -454,14 +300,14 @@ def _pair_hash_prefilter(spark, pairs, hs_map, keep):
         sizes = offs[1:] - offs[:-1]
         m_ids = len(ids_arr)
         int_ids = ids_arr.dtype.kind in "iu"
-        # high 32 bits, per-doc sortedness preserved (monotone map)
-        flat32 = flat >> np.uint64(32)
         pair_memo: dict = {}
 
         def col_to_np(col):
             if int_ids:
                 return col.to_numpy(zero_copy_only=False)
-            return np.asarray(col.to_pylist(), dtype=ids_arr.dtype)
+            # own width: forcing the map's '<U' width would truncate a
+            # longer unknown id onto a known one
+            return np.asarray(col.to_pylist())
 
         def idx_of(vals):
             if m_ids == 0:
@@ -484,7 +330,9 @@ def _pair_hash_prefilter(spark, pairs, hs_map, keep):
                 return rep
             base = np.repeat(offs[idx] - (np.cumsum(lens) - lens), lens)
             pos = np.arange(total, dtype=np.int64) + base
-            return rep | flat32[pos]
+            # high 32 bits of the gathered slice only (a monotone map:
+            # per-doc sortedness is preserved)
+            return rep | (flat[pos] >> np.uint64(32))
 
         for batch in it:
             if batch.num_rows == 0:
@@ -545,7 +393,12 @@ def _pair_hash_prefilter(spark, pairs, hs_map, keep):
                     pair_memo[key] = v
             yield batch.filter(pa.array(verdicts[inv]))
 
-    return pairs.mapInArrow(batches, schema)
+    return map_arrow(pairs, batches, schema)
+
+
+# broadcast bound of the prefilter's shingle-hash table (see below);
+# above it the collect raises instead of exhausting the driver
+SHINGLE_HASH_MAP_MAX_DOCS = 10_000_000
 
 
 def _shingle_hash_map(spark, d):
@@ -554,94 +407,57 @@ def _shingle_hash_map(spark, d):
     COLUMNAR for the broadcast: numpy buffers pickle as raw bytes, so
     the per-worker unpickle is C-speed instead of rebuilding a
     corpus-sized dict, and lookups are searchsorted.  ~8 B x
-    shingles/doc x docs — broadcast-class to ~1e7 docs; band the
-    candidate join past that."""
-    import numpy as np
+    shingles/doc x docs — broadcast-class to ``SHINGLE_HASH_MAP_MAX_DOCS``
+    docs; band the candidate join past that."""
+    import pyarrow.compute as pc
 
-    id_t = dict(d.dtypes)["doc_id"]
-    tbl = d.mapInArrow(
-        _shingle_hash_batches, f"doc_id {id_t}, hs binary"
-    ).toArrow()
-    packed = sorted(
-        (i, b)
-        for i, b in zip(
-            tbl.column("doc_id").to_pylist(), tbl.column("hs").to_pylist()
-        )
-        if b is not None
+    tbl = collect_within(
+        map_docs(spark, d, _shingle_hash, "hs binary"),
+        SHINGLE_HASH_MAP_MAX_DOCS,
+        "shingle-hash broadcast table",
     )
-    ids_arr = np.array([i for i, _ in packed])
-    lens = np.fromiter(
-        (len(b) // 8 for _, b in packed), dtype=np.int64, count=len(packed)
-    )
-    offs = np.zeros(len(packed) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    flat = np.frombuffer(b"".join(b for _, b in packed), dtype=np.uint64)
+    tbl = tbl.filter(pc.is_valid(tbl["hs"])).sort_by("doc_id")
+    hs = tbl.column("hs").to_pylist()
+    ids_arr = _np.array(tbl.column("doc_id").to_pylist())
+    lens = _np.fromiter((len(b) // 8 for b in hs), dtype=_np.int64, count=len(hs))
+    offs = _np.zeros(len(hs) + 1, dtype=_np.int64)
+    _np.cumsum(lens, out=offs[1:])
+    flat = _np.frombuffer(b"".join(hs), dtype=_np.uint64)
     return ids_arr, offs, flat
 
 
-def _shingle_batches(it):
+def _shingle(ids, texts):
     """Distinct 3-word shingle STRING arrays per doc — the C-regex twin
     of ``array_distinct(_SPARK_SHINGLES)`` (mllib_minhash_pairs needs
     the strings themselves for HashingTF + the exact verify, not their
     hashes).  dict.fromkeys preserves first occurrence exactly like
     array_distinct; null text yields a null array."""
-    import pyarrow as pa
-
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        words_per_doc, _c, _b = _tokenize_batch(texts)
-        out = [
-            None if ws is None else list(dict.fromkeys(_shingles_for(ws)))
-            for ws in words_per_doc
+    return {
+        "shingles": [
+            None if ws is None else list(dict.fromkeys(shingles_for(ws)))
+            for ws in tokenize_batch(texts)
         ]
-        yield pa.RecordBatch.from_arrays(
-            [batch.column("doc_id"), pa.array(out, type=pa.list_(pa.string()))],
-            ["doc_id", "shingles"],
-        )
+    }
 
 
-def _minhash_batches(it):
-    import numpy as np
-    import pyarrow as pa
-
-    a = np.array(_MINHASH_A, dtype=np.uint64)
-    b = np.array(_MINHASH_B, dtype=np.uint64)
-    p = np.uint64(_MINHASH_P)
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        words_per_doc, _counts, _bounds = _tokenize_batch(texts)
-        shingles_per_doc = [
-            None if ws is None else _shingles_for(ws) for ws in words_per_doc
-        ]
-        n_sh = np.fromiter(
-            (0 if s is None else len(s) for s in shingles_per_doc),
-            dtype=np.int64,
-            count=len(texts),
-        )
-        starts = np.zeros(len(texts) + 1, dtype=np.int64)
-        np.cumsum(n_sh, out=starts[1:])
-        h = _md5_u64(s for sh in shingles_per_doc if sh for s in sh)
-        live = n_sh > 0  # only null-text docs have no shingles
-        cols = []
-        for k in range(N_PERMS):
+def _minhash(ids, texts):
+    a = _np.array(_MINHASH_A, dtype=_np.uint64)
+    b = _np.array(_MINHASH_B, dtype=_np.uint64)
+    p = _np.uint64(_MINHASH_P)
+    shingles = [
+        None if ws is None else shingles_for(ws) for ws in tokenize_batch(texts)
+    ]
+    n_sh, starts = segments(shingles)
+    h = md5_u64(s for sh in shingles if sh for s in sh) >> _np.uint64(32)
+    live = n_sh > 0  # only null-text docs have no shingles
+    out = {}
+    for k in range(N_PERMS):
+        mins = _np.zeros(len(texts), dtype=_np.int64)
+        if len(h):
             perm = (a[k] * h + b[k]) % p
-            mins = np.zeros(len(texts), dtype=np.int64)
-            if len(h):
-                red = np.minimum.reduceat(perm, starts[:-1][live])
-                mins[live] = red.astype(np.int64)
-            if live.all():
-                cols.append(pa.array(mins, type=pa.int64()))
-            else:
-                cols.append(
-                    pa.array(
-                        [int(v) if ok else None for v, ok in zip(mins, live)],
-                        type=pa.int64(),
-                    )
-                )
-        yield pa.RecordBatch.from_arrays(
-            [batch.column("doc_id")] + cols,
-            ["doc_id"] + [f"mh{k}" for k in range(N_PERMS)],
-        )
+            mins[live] = _np.minimum.reduceat(perm, starts[:-1][live]).astype(_np.int64)
+        out[f"mh{k}"] = null_safe_i64(mins, texts)
+    return out
 
 
 def minhash_signatures(spark, sf_dir):
@@ -654,12 +470,8 @@ def minhash_signatures(spark, sf_dir):
     (integer arithmetic over the same md5 prefix); 5.8 s -> ~1 s at
     sf1.0/local[32].  Only (doc_id, text) crosses the Python boundary
     (guide §4.1: project before the opaque stage)."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    d, id_t = _spread_docs(spark, sf_dir)
-    schema = f"doc_id {id_t}, " + ", ".join(f"mh{k} bigint" for k in range(N_PERMS))
-    return d.mapInArrow(_minhash_batches, schema)
+    schema = ", ".join(f"mh{k} bigint" for k in range(N_PERMS))
+    return map_docs(spark, sf_dir, _minhash, schema)
 
 
 def _minhash_sql() -> str:
@@ -830,13 +642,7 @@ def ngram_jaccard_pairs(spark, sf_dir):
     shuffle exists anywhere.  r07: the shingle-set table comes from the
     same C-regex Arrow kernel as mllib/containment (the JVM regex +
     array_distinct subtree ran once per join side)."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    d, id_t = _spread_docs(spark, sf_dir)
-    sets = d.mapInArrow(
-        _shingle_batches, f"doc_id {id_t}, shingles array<string>"
-    )
+    sets = map_docs(spark, sf_dir, _shingle, "shingles array<string>")
     cand = lsh_candidate_pairs(spark, sf_dir)
     return (
         cand.join(
@@ -937,11 +743,7 @@ def simhash(spark, sf_dir):
     plus a fresh 33-element array per word); an explode+codegen
     HashAggregate rewrite reached 5.1 s; this form ~1 s.  Only
     (doc_id, text) crosses the Python boundary."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    d, id_t = _spread_docs(spark, sf_dir)
-    return d.mapInArrow(_simhash_batches, f"doc_id {id_t}, simhash bigint")
+    return map_docs(spark, sf_dir, _simhash, "simhash bigint")
 
 
 def _simhash_sql() -> str:
@@ -1026,11 +828,10 @@ def simhash_neardup_pairs(spark, sf_dir):
     # in numpy and emits only qualifying pairs, so the dedup shuffle
     # carries the output-sized survivor set.  36 -> ~3 s at 50k docs.
     id_t = dict(sig.dtypes)["doc_id"]
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    pairs = buckets.select("members").mapInArrow(
-        _bucket_hamming_batches, f"doc_a {id_t}, doc_b {id_t}, hamming int"
+    pairs = map_arrow(
+        buckets.select("members"),
+        _bucket_hamming_batches,
+        f"doc_a {id_t}, doc_b {id_t}, hamming int",
     )
     return pairs.distinct()
 
@@ -1075,7 +876,7 @@ def _with_planted(e):
     return e.select("vec_id", "embedding", "label").unionByName(planted)
 
 
-def _hyperplane_sig_batches(planes, keep_embedding: bool = False):
+def hyperplane_sig_batches(planes, keep_embedding: bool = False):
     """mapInArrow factory: per-vector hyperplane signature with the
     EXACT sequential-fold dot of ``_sig_expr_spark`` (dimension-major
     accumulation; strict > 0 per plane; null embedding -> null sig).
@@ -1157,9 +958,6 @@ def embedding_neardup_pairs(spark, sf_dir):
     32 -> ~2 s, bit-identical membership and values."""
     from .similarity import HYPERPLANES
 
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     e = _with_planted(read(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding"
     )
@@ -1178,14 +976,23 @@ def embedding_neardup_pairs(spark, sf_dir):
     return _cosine_pair_verify(spark, _packed_embeddings(tbl), pairs)
 
 
+# driver bound of the collected embedding table (see below): 2M vectors
+# x 64 dims is ~0.5 GB of float32 plus the 1 GB float64 verify matrix;
+# past it the collect raises instead of exhausting the driver
+EMBEDDINGS_COLLECT_MAX = 2_000_000
+
+
 def _collect_embeddings(e):
     """ONE job: the (planted) embedding table collected as an Arrow
     table — shared by the driver-side signature fold and the verify
     broadcast, so the near-dup operators scan the embeddings exactly
-    once (broadcast-class: dim x 4 B per vector; the embeddings table
-    is the SMALL side of this design at any corpus scale where
-    all-pairs banding is viable)."""
-    return e.toArrow().combine_chunks()
+    once (broadcast-class: dim x 4 B per vector, up to
+    ``EMBEDDINGS_COLLECT_MAX`` vectors; the embeddings table is the
+    SMALL side of this design at any corpus scale where all-pairs
+    banding is viable)."""
+    return collect_within(
+        e, EMBEDDINGS_COLLECT_MAX, "near-dup embedding table"
+    ).combine_chunks()
 
 
 def _packed_embeddings(tbl):
@@ -1209,7 +1016,7 @@ def _packed_embeddings(tbl):
 
 def _driver_sig_rows(tbl, planes):
     """(vec_id, sig) rows computed by running the SAME
-    ``_hyperplane_sig_batches`` kernel code over the collected Arrow
+    ``hyperplane_sig_batches`` kernel code over the collected Arrow
     batches on the driver — bit-identical signatures by construction.
     Rationale (r07 session 3): the sig kernel subtree re-ran once per
     self-join side (exchange reuse never fires across mapInArrow
@@ -1218,7 +1025,7 @@ def _driver_sig_rows(tbl, planes):
     kernel passes.  Null-sig rows are dropped — a null key joins
     nothing in an equi-join, so the candidate set is unchanged."""
     out = []
-    for ob in _hyperplane_sig_batches(planes)(tbl.to_batches()):
+    for ob in hyperplane_sig_batches(planes)(tbl.to_batches()):
         out.extend(
             (i, s)
             for i, s in zip(
@@ -1290,9 +1097,7 @@ def _cosine_pair_verify(spark, packed, pairs):
                 ["vec_a", "vec_b", "cosine"],
             )
 
-    return pairs.mapInArrow(
-        verify, "vec_a bigint, vec_b bigint, cosine double"
-    )
+    return map_arrow(pairs, verify, "vec_a bigint, vec_b bigint, cosine double")
 
 
 def _neardup_sql() -> str:
@@ -1398,16 +1203,12 @@ def mllib_minhash_pairs(spark, sf_dir):
     from pyspark.ml.feature import HashingTF, MinHashLSH
     from pyspark.ml.functions import vector_to_array
 
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    d, id_t = _spread_docs(spark, sf_dir)
-    shingled = d.mapInArrow(
-        _shingle_batches, f"doc_id {id_t}, shingles array<string>"
-    ).filter(
+    d = docs(spark, sf_dir)
+    nonempty = (
         "size(shingles) > 0 AND (size(shingles) > 1"
         " OR element_at(shingles, 1) <> '')"
     )
+    shingled = map_docs(spark, d, _shingle, "shingles array<string>").filter(nonempty)
     tf = HashingTF(
         inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True
     )
@@ -1442,27 +1243,11 @@ def mllib_minhash_pairs(spark, sf_dir):
         _shingle_hash_map(spark, d),
         lambda c, na, nb: 3 * c + 6 >= na + nb,
     ).distinct()
-    # survivor-only verify (the containment_pairs pattern): the
-    # prefiltered pair set is output-sized, so collect it (bounded by a
-    # limit probe) and tokenize only surviving docs; past the bound,
-    # fall back to the full-corpus broadcast-join verify
-    probe = pairs.limit(CONTAINMENT_VERIFY_COLLECT_MAX + 1).collect()
-    if len(probe) <= CONTAINMENT_VERIFY_COLLECT_MAX:
-        pairs_use = spark.createDataFrame(
-            [(r["doc_a"], r["doc_b"]) for r in probe],
-            f"doc_a {id_t}, doc_b {id_t}",
-        )
-        ids = sorted({r["doc_a"] for r in probe} | {r["doc_b"] for r in probe})
-        ids_df = spark.createDataFrame([(i,) for i in ids], f"doc_id {id_t}")
-        src = d.join(F.broadcast(ids_df), "doc_id")
-        verify_side = src.mapInArrow(
-            _shingle_batches, f"doc_id {id_t}, shingles array<string>"
-        ).filter(
-            "size(shingles) > 0 AND (size(shingles) > 1"
-            " OR element_at(shingles, 1) <> '')"
-        )
-    else:
-        pairs_use, verify_side = pairs, shingled
+    # survivor-only verify (the containment_pairs pattern)
+    pairs_use, src = _survivor_verify_inputs(spark, d, pairs)
+    verify_side = map_docs(spark, src, _shingle, "shingles array<string>").filter(
+        nonempty
+    )
     sa = verify_side.select(
         F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa")
     )
@@ -1616,13 +1401,7 @@ def simhash_wide(spark, sf_dir):
     Round-7: same Arrow kernel as ``simhash`` (guide §4.2) — one md5
     per word yields both words' hash halves (digest bytes 0-3 / 4-7 ==
     hex chars 1-8 / 9-16), numpy vote reduction per half."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    d, id_t = _spread_docs(spark, sf_dir)
-    return d.mapInArrow(
-        _simhash_wide_batches, f"doc_id {id_t}, fp_lo bigint, fp_hi bigint"
-    )
+    return map_docs(spark, sf_dir, _simhash_wide, "fp_lo bigint, fp_hi bigint")
 
 
 def _simhash_wide_sql() -> str:
@@ -1872,9 +1651,6 @@ def embedding_neardup_pairs_wide(spark, sf_dir):
     was most of the old 8.5 s)."""
     from .similarity import WIDE_HYPERPLANES
 
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     e = _with_planted(read(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding"
     )
@@ -1988,15 +1764,33 @@ CONTAINMENT_MAX_DF = 1000
 CONTAINMENT_VERIFY_COLLECT_MAX = 2_000_000
 
 
-def _containment_candidates(spark, d, id_t):
+def _survivor_verify_inputs(spark, d, pairs):
+    """(pairs, docs) for an exact string verify of the candidate
+    ``pairs``.  The prefiltered pair set is output-sized, so it is
+    collected (bounded) and shipped back as a local table with the
+    docs cut to those in a surviving pair — the verify kernels then
+    tokenize only survivor docs.  Past ``CONTAINMENT_VERIFY_COLLECT_MAX``
+    pairs the verify falls back to the distributed pairs against the
+    whole corpus ``d``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl = bounded_collect(pairs, CONTAINMENT_VERIFY_COLLECT_MAX)
+    if tbl is None:
+        return pairs, d
+    a, b = tbl.column("doc_a"), tbl.column("doc_b")
+    ids = pc.unique(pa.chunked_array(a.chunks + b.chunks, type=a.type))
+    ids_df = spark.createDataFrame(pa.table({"doc_id": ids}))
+    return spark.createDataFrame(tbl), d.join(F.broadcast(ids_df), "doc_id")
+
+
+def _containment_candidates(spark, d):
     """The distinct, prefilter-surviving candidate pair set of the
     containment join (the phase before the exact string verify) — its
     own function so the candidate plan shape (sh_h join keys, df cap
     before the join) stays pin-able after the verify phase collects
     this set eagerly."""
-    ex = d.mapInArrow(
-        _shingle_h60_batches, f"doc_id {id_t}, n int, sh_h bigint"
-    )
+    ex = map_docs(spark, d, _shingle_h60, "n int, sh_h bigint")
     df_tbl = ex.groupBy("sh_h").agg(F.count("*").alias("df"))
     ranked = ex.join(df_tbl, "sh_h")
     w = Window.partitionBy("doc_id").orderBy("df", "sh_h")
@@ -2047,28 +1841,11 @@ def containment_pairs(spark, sf_dir):
     survivor docs instead of the whole corpus twice; past
     ``CONTAINMENT_VERIFY_COLLECT_MAX`` pairs the verify falls back to
     the full-corpus broadcast-join form."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    d, id_t = _spread_docs(spark, sf_dir)
-    cand = _containment_candidates(spark, d, id_t)
-    probe = cand.limit(CONTAINMENT_VERIFY_COLLECT_MAX + 1).collect()
-    if len(probe) <= CONTAINMENT_VERIFY_COLLECT_MAX:
-        # survivor path: verify-side kernels tokenize only the docs that
-        # appear in a surviving pair (the survivor set is the same
-        # broadcast-class table F.broadcast(cand) already shipped)
-        cand_use = spark.createDataFrame(
-            [(r["doc_a"], r["doc_b"]) for r in probe],
-            f"doc_a {id_t}, doc_b {id_t}",
-        )
-        ids = sorted({r["doc_a"] for r in probe} | {r["doc_b"] for r in probe})
-        ids_df = spark.createDataFrame([(i,) for i in ids], f"doc_id {id_t}")
-        src = d.join(F.broadcast(ids_df), "doc_id")
-    else:
-        cand_use, src = cand, d
-    sets = src.mapInArrow(
-        _shingle_batches, f"doc_id {id_t}, shingles array<string>"
+    d = docs(spark, sf_dir)
+    cand_use, src = _survivor_verify_inputs(
+        spark, d, _containment_candidates(spark, d)
     )
+    sets = map_docs(spark, src, _shingle, "shingles array<string>")
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sb"))
     with_a = sa.join(F.broadcast(cand_use), "doc_a")
@@ -2150,13 +1927,7 @@ def containment_stats(spark, sf_dir):
     instead of assumed.  Pure integer aggregates over the same
     explode + df-groupBy + rank window the pair query runs (from the
     same r07 Arrow kernel); one row."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    d, id_t = _spread_docs(spark, sf_dir)
-    ex = d.mapInArrow(
-        _shingle_h60_batches, f"doc_id {id_t}, n int, sh_h bigint"
-    )
+    ex = map_docs(spark, sf_dir, _shingle_h60, "n int, sh_h bigint")
     df_tbl = ex.groupBy("sh_h").agg(F.count("*").alias("df"))
     sh_stats = df_tbl.agg(
         F.count("*").cast("bigint").alias("n_shingles"),
@@ -2335,46 +2106,26 @@ def _gram_expr_duck(n: int) -> str:
     )
 
 
-def _gram_h60_batches(n: int):
-    """mapInArrow factory: exploded DISTINCT n-gram 60-bit md5 ints per
-    doc — the C twin of ``explode(array_distinct(transform(
+def _gram_h60(n: int):
+    """Kernel factory: exploded DISTINCT n-gram 60-bit md5 ints per doc
+    — the C twin of ``explode(array_distinct(transform(
     _gram_expr_spark(n), g -> _spark_hash60(g))))``.  Distinctness is
     on the HASH (exactly like the array form); < n words or null text
     explodes to nothing."""
 
-    def batches(it):
-        from hashlib import md5
-
-        import pyarrow as pa
-
-        for batch in it:
-            texts = batch.column("text").to_pylist()
-            doc_ids = batch.column("doc_id").to_pylist()
-            id_type = batch.schema.field("doc_id").type
-            out_ids, out_h = [], []
-            words_per_doc, _c, _b = _tokenize_batch(texts)
-            for did, ws in zip(doc_ids, words_per_doc):
-                if ws is None or len(ws) < n:
-                    continue
-                seen = set()
-                for i in range(len(ws) - n + 1):
-                    h = (
-                        int.from_bytes(
-                            md5(" ".join(ws[i : i + n]).encode()).digest()[:8],
-                            "big",
-                        )
-                        >> 4
-                    )
-                    if h not in seen:
-                        seen.add(h)
-                        out_ids.append(did)
-                        out_h.append(h)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=id_type), pa.array(out_h, type=pa.int64())],
-                ["doc_id", "gram"],
+    def grams(ids, texts):
+        out_ids, out_h = [], []
+        for did, ws in zip(ids, tokenize_batch(texts)):
+            if ws is None or len(ws) < n:
+                continue
+            hs = dict.fromkeys(
+                h60(" ".join(ws[i : i + n]) for i in range(len(ws) - n + 1)).tolist()
             )
+            out_ids += [did] * len(hs)
+            out_h += hs
+        return {"doc_id": out_ids, "gram": out_h}
 
-    return batches
+    return grams
 
 
 def decontaminate_against_eval(spark, sf_dir):
@@ -2387,22 +2138,12 @@ def decontaminate_against_eval(spark, sf_dir):
     (the JVM ``transform(grams, g -> md5/conv)`` paid an interpreted
     hash per gram — 19.5 -> ~3 s at 50k docs); the eval-side doc_id
     filter sits below its kernel so it pushes to the parquet scan."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     base = read(spark, sf_dir, "documents").select("doc_id", "text")
-    id_t = dict(base.dtypes)["doc_id"]
-    gk = _gram_h60_batches(DECON_NGRAM)
-    schema = f"doc_id {id_t}, gram bigint"
-    eval_grams = (
-        base.filter(F.col("doc_id") < EVAL_SET_SIZE)
-        .mapInArrow(gk, schema)
-        .select("gram")
-        .distinct()
-    )
-    corpus_grams = spread(
-        spark, base.filter(F.col("doc_id") >= EVAL_SET_SIZE)
-    ).mapInArrow(gk, schema)
+    gk = _gram_h60(DECON_NGRAM)
+    eval_docs = base.filter(F.col("doc_id") < EVAL_SET_SIZE)
+    corpus_docs = spread(spark, base.filter(F.col("doc_id") >= EVAL_SET_SIZE))
+    eval_grams = map_docs(spark, eval_docs, gk, "gram bigint").select("gram").distinct()
+    corpus_grams = map_docs(spark, corpus_docs, gk, "gram bigint")
     hits = (
         corpus_grams.join(F.broadcast(eval_grams), "gram", "left_semi")
         .groupBy("doc_id")
@@ -2718,14 +2459,23 @@ def dedup_clusters(spark, sf_dir):
     localCheckpoint) is parked on the session release registry and
     freed when the NEXT dedup_clusters call starts (or via
     :func:`drain_cc_releases`)."""
+    import pyarrow as pa
+
     edges = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    probe = edges.limit(CC_SMALL_GRAPH_MAX_EDGES + 1).collect()
-    if len(probe) <= CC_SMALL_GRAPH_MAX_EDGES:
-        labels = _union_find_clusters([(r["doc_a"], r["doc_b"]) for r in probe])
-        schema = edges.select(
-            F.col("doc_a").alias("doc_id"), F.col("doc_a").alias("cluster_id")
-        ).schema
-        return spark.createDataFrame(labels, schema)
+    tbl = bounded_collect(edges, CC_SMALL_GRAPH_MAX_EDGES)
+    if tbl is not None:
+        labels = _union_find_clusters(
+            zip(tbl.column("doc_a").to_pylist(), tbl.column("doc_b").to_pylist())
+        )
+        id_type = tbl.schema.field("doc_a").type
+        return spark.createDataFrame(
+            pa.table(
+                {
+                    "doc_id": pa.array([v for v, _ in labels], type=id_type),
+                    "cluster_id": pa.array([c for _, c in labels], type=id_type),
+                }
+            )
+        )
     drain_cc_releases()
     return connected_components(edges, checkpoint_release=_CC_PENDING_RELEASES)
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .common import read
+from .kernels import collect_within, map_arrow
 
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -108,26 +109,26 @@ def _query_cosine_batches(q_rows):
     return batches
 
 
-def _query_vecs(e, pred) -> list:
-    """Collected (vec_id, doubles) query rows (broadcast-class — the
-    same rows every prior plan collected inside ``F.broadcast(q)``)."""
+def _query_vecs(e, pred, cap) -> list:
+    """Collected (vec_id, doubles) query rows — the same rows every
+    prior plan collected inside ``F.broadcast(q)``; more than ``cap``
+    (the caller's query count) raises."""
+    tbl = collect_within(
+        e.filter(pred).select("vec_id", "embedding"), cap, "ANN query vectors"
+    )
     return [
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in e.filter(pred).select("vec_id", "embedding").collect()
+        (i, [float(x) for x in v])
+        for i, v in zip(
+            tbl.column("vec_id").to_pylist(), tbl.column("embedding").to_pylist()
+        )
     ]
 
 
-def _scored_against_queries(spark, e, q_rows, corpus_pred):
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    return (
-        e.filter(corpus_pred)
-        .select("vec_id", "label", "embedding")
-        .mapInArrow(
-            _query_cosine_batches(q_rows),
-            "q_id bigint, vec_id bigint, label int, cosine_raw double",
-        )
+def _scored_against_queries(e, q_rows, corpus_pred):
+    return map_arrow(
+        e.filter(corpus_pred).select("vec_id", "label", "embedding"),
+        _query_cosine_batches(q_rows),
+        "q_id bigint, vec_id bigint, label int, cosine_raw double",
     )
 
 
@@ -137,10 +138,8 @@ def ann_bruteforce_topk(spark, sf_dir):
     is the Arrow kernel's exact fold instead of an interpreted HOF
     chain; ordering/limit/rounding stay in the JVM plan."""
     e = read(spark, sf_dir, "embeddings")
-    q_rows = _query_vecs(e, F.col("vec_id") == QUERY_VEC_ID)
-    scored = _scored_against_queries(
-        spark, e, q_rows, F.col("vec_id") != QUERY_VEC_ID
-    )
+    q_rows = _query_vecs(e, F.col("vec_id") == QUERY_VEC_ID, 1)
+    scored = _scored_against_queries(e, q_rows, F.col("vec_id") != QUERY_VEC_ID)
     return (
         scored.orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
         .limit(TOP_K)
@@ -262,21 +261,22 @@ def _seed_centroid_rows(e, k: int) -> list:
         seeds.withColumn("cell", (F.row_number().over(w) - 1).cast("int"))
         .select("cell", "centroid")
     )
-    return sorted(
-        ((r["cell"], list(r["centroid"])) for r in seeds.collect()),
-        key=lambda cv: cv[0],
-    )
+    return _collect_centroid_rows(seeds)
 
 
 def _collect_centroid_rows(cents_df) -> list:
     """(cell, centroid) rows of a ``_cell_centroids`` output, collected
     driver-side and cell-sorted.  Same broadcast-class size argument as
-    ``_seed_centroid_rows`` — this is the table every prior plan shipped
-    through ``F.broadcast``; collecting it instead lets the argmax
-    assignment run as a numpy kernel rather than an interpreted
+    ``_seed_centroid_rows`` (at most ``MAX_IVF_CELLS`` rows; more
+    raises) — this is the table every prior plan shipped through
+    ``F.broadcast``; collecting it instead lets the argmax assignment
+    run as a numpy kernel rather than an interpreted
     higher-order-function chain."""
+    tbl = collect_within(
+        cents_df.select("cell", "centroid"), MAX_IVF_CELLS, "IVF centroid table"
+    )
     return sorted(
-        ((r["cell"], list(r["centroid"])) for r in cents_df.collect()),
+        zip(tbl.column("cell").to_pylist(), tbl.column("centroid").to_pylist()),
         key=lambda cv: cv[0],
     )
 
@@ -320,11 +320,7 @@ def _assign_kernel(e, cent_rows: list):
     cosines) and Spark's NaN-greatest double ordering (the isnan
     clause).  Null embeddings yield null cells, matching
     ``transform(NULL) -> NULL`` propagation."""
-    spark = e.sparkSession
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    bc = spark.sparkContext.broadcast(cent_rows)
+    bc = e.sparkSession.sparkContext.broadcast(cent_rows)
     dtypes = dict(e.dtypes)
     schema = (
         f"vec_id {dtypes['vec_id']}, label {dtypes['label']},"
@@ -400,7 +396,7 @@ def _assign_kernel(e, cent_rows: list):
                 ["vec_id", "label", "embedding", "cell"],
             )
 
-    return e.select("vec_id", "label", "embedding").mapInArrow(batches, schema)
+    return map_arrow(e.select("vec_id", "label", "embedding"), batches, schema)
 
 
 def _seed_assignment(e, k: int):
@@ -551,12 +547,7 @@ def _probe_cells(cent_rows: list, qvec: list, n_probes: int) -> list:
 def _query_vec(e) -> list:
     """The query embedding as driver-side doubles (single-row collect —
     the same row every prior plan collected inside ``F.broadcast(q)``)."""
-    row = (
-        e.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select("embedding")
-        .collect()[0]
-    )
-    return [float(x) for x in row["embedding"]]
+    return _query_vecs(e, F.col("vec_id") == QUERY_VEC_ID, 1)[0][1]
 
 
 def ann_ivf_topk(spark, sf_dir):
@@ -794,19 +785,18 @@ def _sig_expr_duck(vec: str, planes=None) -> str:
 
 def _hyperplane_sig_df(spark, sf_dir, planes):
     """(vec_id, label, embedding, sig) via the Arrow signature kernel
-    (dedup._hyperplane_sig_batches with embedding pass-through) over a
+    (dedup.hyperplane_sig_batches with embedding pass-through) over a
     spread scan — bit-identical signatures to ``_sig_expr_spark``."""
-    from ..pipeline.session import ensure_package_on_workers
     from .common import spread
-    from .dedup import _hyperplane_sig_batches
+    from .dedup import hyperplane_sig_batches
 
-    ensure_package_on_workers(spark)
     e = spread(
         spark,
         read(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding"),
     )
-    return e.mapInArrow(
-        _hyperplane_sig_batches(planes, keep_embedding=True),
+    return map_arrow(
+        e,
+        hyperplane_sig_batches(planes, keep_embedding=True),
         "vec_id bigint, label int, embedding array<float>, sig bigint",
     )
 

@@ -9,10 +9,16 @@ no Python in the hot path.
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+from hashlib import md5
+from math import floor
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .common import read, spread
+from .kernels import collect_within, map_docs, tokenize_batch
 
 
 def comma_score(spark, sf_dir):
@@ -277,7 +283,10 @@ FROM m
 FINGERPRINT_CAP = 8192
 
 
-def _fingerprint_batches(it):
+_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _fingerprint(ids, texts):
     """Arrow kernel for ``doc_fingerprint`` (guide §4.2): the old JVM
     form ran one interpreted md5 PER 16-char WINDOW inside a
     ``transform`` lambda (HOFs are CodegenFallback) — ~14M interpreted
@@ -290,48 +299,33 @@ def _fingerprint_batches(it):
     windows = substring(head, i, 16) for i in 1..max(len-15, 1) (the
     final short/empty windows of the 1-window case included); null
     text -> null outputs."""
-    import re
-    from hashlib import md5
-
-    import pyarrow as pa
-
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        content, fps = [], []
-        for t in texts:
-            if t is None:
-                content.append(None)
-                fps.append(None)
-                continue
-            norm = ws.sub(" ", t).strip(" ").lower()
-            b = norm.encode()
-            content.append(md5(b).hexdigest())
-            if len(norm) == len(b):
-                # pure-ASCII fast path: char windows == byte windows
-                head = b[:FINGERPRINT_CAP]
-                fps.append(
-                    min(
-                        md5(head[i : i + 16]).digest()
-                        for i in range(max(len(head) - 15, 1))
-                    ).hex()
-                )
-            else:
-                head_s = norm[:FINGERPRINT_CAP]
-                fps.append(
-                    min(
-                        md5(head_s[i : i + 16].encode()).digest()
-                        for i in range(max(len(head_s) - 15, 1))
-                    ).hex()
-                )
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("doc_id"),
-                pa.array(content, type=pa.string()),
-                pa.array(fps, type=pa.string()),
-            ],
-            ["doc_id", "content_md5", "fingerprint"],
-        )
+    content, fps = [], []
+    for t in texts:
+        if t is None:
+            content.append(None)
+            fps.append(None)
+            continue
+        norm = _WS.sub(" ", t).strip(" ").lower()
+        b = norm.encode()
+        content.append(md5(b).hexdigest())
+        if len(norm) == len(b):
+            # pure-ASCII fast path: char windows == byte windows
+            head = b[:FINGERPRINT_CAP]
+            fps.append(
+                min(
+                    md5(head[i : i + 16]).digest()
+                    for i in range(max(len(head) - 15, 1))
+                ).hex()
+            )
+        else:
+            head_s = norm[:FINGERPRINT_CAP]
+            fps.append(
+                min(
+                    md5(head_s[i : i + 16].encode()).digest()
+                    for i in range(max(len(head_s) - 15, 1))
+                ).hex()
+            )
+    return {"content_md5": content, "fingerprint": fps}
 
 
 def doc_fingerprint(spark, sf_dir):
@@ -339,16 +333,10 @@ def doc_fingerprint(spark, sf_dir):
     sliding windows of the first FINGERPRINT_CAP normalized chars
     (winnowing-style), plus a whole-document content hash.
 
-    Round-7: Arrow kernel (see ``_fingerprint_batches``); 18.6 s ->
+    Round-7: Arrow kernel (see ``_fingerprint``); 18.6 s ->
     ~0.7 s at sf1.0/local[32], values bit-identical (oracle green)."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    d = spread(spark, read(spark, sf_dir, "documents").select("doc_id", "text"))
-    id_t = dict(d.dtypes)["doc_id"]
-    return d.mapInArrow(
-        _fingerprint_batches,
-        f"doc_id {id_t}, content_md5 string, fingerprint string",
+    return map_docs(
+        spark, sf_dir, _fingerprint, "content_md5 string, fingerprint string"
     )
 
 
@@ -380,11 +368,11 @@ QUERIES = {
 }
 
 
-def _token_set_sim_batches(ref_tokens):
-    """mapInArrow factory for ``token_set_similarity``: the old JVM form
+def _token_set_sim(ref_tokens):
+    """Kernel factory for ``token_set_similarity``: the old JVM form
     paid an interpreted ``filter(tokens, t -> NOT array_contains(ref,
     t))`` — O(tokens x ref) per doc through a CodegenFallback HOF.
-    Here: C tokenization (``_tokenize_batch``, bit-parity with the
+    Here: C tokenization (``tokenize_batch``, bit-parity with the
     expression), one Python set probe per token, integer arithmetic
     identical to the SQL CASE (all operands are non-negative ints, so
     ``//`` == Spark ``div``).  Tokens are ASCII post-strip, so Python
@@ -392,36 +380,26 @@ def _token_set_sim_batches(ref_tokens):
     null similarity (the expression's null flow); a null ref token
     array drops every element in the JVM filter (NULL predicate), so
     ``ref_tokens=None`` maps to a = 0."""
+    refset = set(ref_tokens) if ref_tokens is not None else None
 
-    def batches(it):
-        import pyarrow as pa
+    def sims(ids, texts):
+        out = []
+        for ws in tokenize_batch(texts):
+            if ws is None:
+                out.append(None)
+                continue
+            b = len(" ".join(ws))
+            if b == 0:
+                out.append(10000)
+                continue
+            if refset is None:
+                a = 0
+            else:
+                a = len(" ".join(t for t in ws if t not in refset))
+            out.append(((b - a) * 20000 + b) // (2 * b))
+        return {"similarity_e4": out}
 
-        from .dedup import _tokenize_batch
-
-        refset = set(ref_tokens) if ref_tokens is not None else None
-        for batch in it:
-            texts = batch.column("text").to_pylist()
-            words_per_doc, _c, _b = _tokenize_batch(texts)
-            sims = []
-            for ws in words_per_doc:
-                if ws is None:
-                    sims.append(None)
-                    continue
-                b = len(" ".join(ws))
-                if b == 0:
-                    sims.append(10000)
-                    continue
-                if refset is None:
-                    a = 0
-                else:
-                    a = len(" ".join(t for t in ws if t not in refset))
-                sims.append(((b - a) * 20000 + b) // (2 * b))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("doc_id"), pa.array(sims, type=pa.int64())],
-                ["doc_id", "similarity_e4"],
-            )
-
-    return batches
+    return sims
 
 
 def token_set_similarity(spark, sf_dir):
@@ -435,12 +413,9 @@ def token_set_similarity(spark, sf_dir):
     tfidf recipe; no double ever crosses the driver hash).  b = 0 ⇒
     similarity 1.0 ⇒ 10000, mirroring the old double branch.
 
-    r07: Arrow kernel (``_token_set_sim_batches``); the single ref row
-    is collected at build time (the same 1-row table the old plan
-    shipped inside F.broadcast) — 2.4 s -> ~1.2 s at 10x-sf0.1."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
+    r07: Arrow kernel (``_token_set_sim``); the single ref row is
+    collected at build time (the same 1-row table the old plan shipped
+    inside F.broadcast) — 2.4 s -> ~1.2 s at 10x-sf0.1."""
     base = read(spark, sf_dir, "documents").select("doc_id", "text")
     toks = F.expr(
         "regexp_extract_all(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', ' ')),"
@@ -449,18 +424,22 @@ def token_set_similarity(spark, sf_dir):
     # the 1-row ref branch stays on the raw scan so the doc_id=0
     # predicate pushes to parquet instead of scanning behind a
     # round-robin exchange
-    ref_rows = (
-        base.filter(F.col("doc_id") == 0).select(toks.alias("ref_tokens")).collect()
+    ref = collect_within(
+        base.filter(F.col("doc_id") == 0).select(toks.alias("ref_tokens")),
+        1,
+        "token_set_similarity reference doc (doc_id 0)",
     )
     d = spread(spark, base)
-    if not ref_rows:
+    if ref.num_rows == 0:
         # crossJoin against an empty ref table yields no rows
         return d.select(
             "doc_id", F.lit(None).cast("bigint").alias("similarity_e4")
         ).limit(0)
-    return d.mapInArrow(
-        _token_set_sim_batches(ref_rows[0]["ref_tokens"]),
-        f"doc_id {dict(d.dtypes)['doc_id']}, similarity_e4 bigint",
+    return map_docs(
+        spark,
+        d,
+        _token_set_sim(ref.column("ref_tokens")[0].as_py()),
+        "similarity_e4 bigint",
     )
 
 
@@ -635,35 +614,20 @@ QUERIES["pii_scan"] = (pii_scan, PII_SQL)
 TOP_TERMS_K = 100
 
 
-def _word_count_batches(it):
+def _word_count(ids, texts):
     """Arrow kernel for ``top_terms``: per-batch word Counter — the
     Python-side equivalent of the map-side PARTIAL count (exact integer
     partials, summed by the final aggregation), so only ~vocab-sized
     rows leave each task instead of one exploded row per token.
-    Tokenization is ``_tokenize_batch`` — bit-parity with
+    Tokenization is ``tokenize_batch`` — bit-parity with
     ``_SPARK_WORDS`` (ASCII strip first, so lower()/split() only see
     ASCII); null/empty text contributes nothing, exactly like
     ``explode`` of an empty array."""
-    from collections import Counter
-
-    import pyarrow as pa
-
-    from .dedup import _tokenize_batch
-
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        words_per_doc, _c, _b = _tokenize_batch(texts)
-        counts: Counter = Counter()
-        for ws in words_per_doc:
-            if ws:
-                counts.update(ws)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(list(counts.keys()), type=pa.string()),
-                pa.array(list(counts.values()), type=pa.int64()),
-            ],
-            ["word", "n"],
-        )
+    counts: Counter = Counter()
+    for ws in tokenize_batch(texts):
+        if ws:
+            counts.update(ws)
+    return {"word": list(counts.keys()), "n": list(counts.values())}
 
 
 def top_terms(spark, sf_dir):
@@ -675,11 +639,8 @@ def top_terms(spark, sf_dir):
     2.7M-row explode per 10x-sf0.1 — 2.5 s vs ~1.2 s).  Final sum is
     an exact integer aggregation; TakeOrdered for the top-k, no global
     sort."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     d = spread(spark, read(spark, sf_dir, "documents").select("text"))
-    partial = d.mapInArrow(_word_count_batches, "word string, n bigint")
+    partial = map_docs(spark, d, _word_count, "word string, n bigint")
     return (
         partial.groupBy("word")
         .agg(F.sum("n").alias("n"))
@@ -709,13 +670,12 @@ QUERIES["top_terms"] = (top_terms, TOP_TERMS_SQL)
 # earlier word, and the same for 2-grams — all array-native Spark
 # built-ins (whole-stage codegen, zero Python), map-side only.
 from .dedup import _DUCK_WORDS as _R_DUCK_WORDS
-from .dedup import _SPARK_WORDS as _R_SPARK_WORDS
 
 
-def _repetition_batches(it):
+def _repetition(ids, texts):
     """Arrow kernel for ``repetition_stats``: the JVM form tokenized
     three ways (words, normalized text, lookahead bigram regex) and
-    paid ``array_distinct`` per row.  Here: ``_tokenize_batch`` (bit-
+    paid ``array_distinct`` per row.  Here: ``tokenize_batch`` (bit-
     parity with ``_SPARK_WORDS``), sets for the distinct counts, and
     the SAME IEEE double expression (1.0 - nd/n, *1e4, +0.5, floor,
     /1e4 — each step a correctly rounded double op in the same order,
@@ -723,63 +683,37 @@ def _repetition_batches(it):
     lookahead regex matches over the normalized text (<2 words -> no
     matches -> size 0 -> 0.0).  Null text -> null outputs (size(NULL)
     flows null through the CASE)."""
-    from math import floor
-
-    import pyarrow as pa
-
-    from .dedup import _tokenize_batch
-
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        words_per_doc, _c, _b = _tokenize_batch(texts)
-        n_out, dw_out, db_out = [], [], []
-        for ws in words_per_doc:
-            if ws is None:
-                n_out.append(None)
-                dw_out.append(None)
-                db_out.append(None)
-                continue
-            n = len(ws)
-            n_out.append(n)
-            if n == 0:
-                dw_out.append(0.0)
-            else:
-                dw_out.append(
-                    floor((1.0 - len(set(ws)) / n) * 10000 + 0.5) / 10000
-                )
-            nb = n - 1 if n >= 2 else 0
-            if nb == 0:
-                db_out.append(0.0)
-            else:
-                bigrams = {
-                    ws[i] + " " + ws[i + 1] for i in range(nb)
-                }
-                db_out.append(
-                    floor((1.0 - len(bigrams) / nb) * 10000 + 0.5) / 10000
-                )
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("doc_id"),
-                pa.array(n_out, type=pa.int32()),
-                pa.array(dw_out, type=pa.float64()),
-                pa.array(db_out, type=pa.float64()),
-            ],
-            ["doc_id", "n_words", "dup_word_frac", "dup_bigram_frac"],
-        )
+    n_out, dw_out, db_out = [], [], []
+    for ws in tokenize_batch(texts):
+        if ws is None:
+            n_out.append(None)
+            dw_out.append(None)
+            db_out.append(None)
+            continue
+        n = len(ws)
+        n_out.append(n)
+        if n == 0:
+            dw_out.append(0.0)
+        else:
+            dw_out.append(floor((1.0 - len(set(ws)) / n) * 10000 + 0.5) / 10000)
+        nb = n - 1 if n >= 2 else 0
+        if nb == 0:
+            db_out.append(0.0)
+        else:
+            bigrams = {ws[i] + " " + ws[i + 1] for i in range(nb)}
+            db_out.append(floor((1.0 - len(bigrams) / nb) * 10000 + 0.5) / 10000)
+    return {"n_words": n_out, "dup_word_frac": dw_out, "dup_bigram_frac": db_out}
 
 
 def repetition_stats(spark, sf_dir):
     """(doc_id, n_words, dup_word_frac, dup_bigram_frac) — repetition
     quality signals for filter thresholds.  r07: Arrow kernel (see
-    ``_repetition_batches``); 2.3 s -> ~1.2 s at 10x-sf0.1."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    d = spread(spark, read(spark, sf_dir, "documents").select("doc_id", "text"))
-    return d.mapInArrow(
-        _repetition_batches,
-        f"doc_id {dict(d.dtypes)['doc_id']}, n_words int,"
-        " dup_word_frac double, dup_bigram_frac double",
+    ``_repetition``); 2.3 s -> ~1.2 s at 10x-sf0.1."""
+    return map_docs(
+        spark,
+        sf_dir,
+        _repetition,
+        "n_words int, dup_word_frac double, dup_bigram_frac double",
     )
 
 
@@ -810,41 +744,23 @@ QUERIES["repetition_stats"] = (repetition_stats, REPETITION_SQL)
 TFIDF_TOP_K = 3
 
 
-def _tf_batches(it):
+def _tf(ids, texts):
     """Arrow kernel for ``tfidf_top_terms``: per-document word Counter
     -> final (doc_id, word, tf) rows.  Each doc is wholly contained in
     one Arrow row, so the per-doc counts ARE the global tf values (no
     cross-batch merge needed) — exact integers, identical to
     ``explode`` + ``groupBy(doc_id, word).count()``.  Tokenization is
-    ``_tokenize_batch`` (bit-parity with ``_SPARK_WORDS``); null/empty
+    ``tokenize_batch`` (bit-parity with ``_SPARK_WORDS``); null/empty
     text emits nothing, matching explode-of-empty."""
-    from collections import Counter
-
-    import pyarrow as pa
-
-    from .dedup import _tokenize_batch
-
-    for batch in it:
-        texts = batch.column("text").to_pylist()
-        doc_ids = batch.column("doc_id").to_pylist()
-        id_type = batch.schema.field("doc_id").type
-        out_d, out_w, out_c = [], [], []
-        words_per_doc, _c, _b = _tokenize_batch(texts)
-        for did, ws in zip(doc_ids, words_per_doc):
-            if not ws:
-                continue
-            counts = Counter(ws)
-            out_d.extend([did] * len(counts))
-            out_w.extend(counts.keys())
-            out_c.extend(counts.values())
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(out_d, type=id_type),
-                pa.array(out_w, type=pa.string()),
-                pa.array(out_c, type=pa.int64()),
-            ],
-            ["doc_id", "word", "tf"],
-        )
+    out_d, out_w, out_c = [], [], []
+    for did, ws in zip(ids, tokenize_batch(texts)):
+        if not ws:
+            continue
+        counts = Counter(ws)
+        out_d += [did] * len(counts)
+        out_w += counts.keys()
+        out_c += counts.values()
+    return {"doc_id": out_d, "word": out_w, "tf": out_c}
 
 
 def tfidf_top_terms(spark, sf_dir):
@@ -866,11 +782,6 @@ def tfidf_top_terms(spark, sf_dir):
     word keys are fine because each hot word is ONE row on the df side
     (AQE skew-join splits the tf side if needed).  Final per-doc top-k
     is a window on doc_id — uniformly distributed, no skew."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    d = spread(spark, read(spark, sf_dir, "documents").select("doc_id", "text"))
-    id_t = dict(d.dtypes)["doc_id"]
     # r07 Arrow kernel: each document lives whole inside one Arrow row,
     # so a per-doc Counter emits the FINAL (doc_id, word, tf) rows —
     # exact integers, no explode, no (doc_id, word) aggregation at all
@@ -880,7 +791,7 @@ def tfidf_top_terms(spark, sf_dir):
     # below exchanges, and — measured, r07 — exchange reuse never
     # fires across mapInArrow subtrees, so a pinned repartition only
     # adds shuffles): two ~0.5 s kernel passes beat one 4 s explode.
-    tf = d.mapInArrow(_tf_batches, f"doc_id {id_t}, word string, tf bigint")
+    tf = map_docs(spark, sf_dir, _tf, "word string, tf bigint")
     df = tf.groupBy("word").agg(F.count(F.when(F.col("tf") >= 1, 1)).alias("df"))
     scored = tf.join(df, "word").withColumn(
         "score_micro", F.expr("tf * 1000000L DIV df")

@@ -1,44 +1,15 @@
-"""Table I/O abstraction: Iceberg when a catalog is configured,
-parquet otherwise.
+"""Corpus I/O: the bucketed-corpus writer and the multi-format
+documents reader.
 
-The north rule targets Iceberg tables (atomic appends make the
-output+lineage commit transactional, and ``bucket(N, doc_id)`` hidden
-partitioning lets the extraction shuffle be elided via storage-
-partitioned scans).  This sandbox has no Iceberg runtime jars, so the
-same call sites run on parquet paths; the semantics relied upon —
-append-only output, lineage-as-commit-point — hold in both modes
-(see ``job.run_extraction``'s commit-protocol note for the parquet
-caveat).
+Output and lineage are plain parquet appends; the semantics relied
+upon — append-only output, lineage-as-commit-point — are the ones an
+Iceberg table would make transactional (see ``job.run_extraction``'s
+commit-protocol note for the parquet caveat).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
-def read_table(spark: SparkSession, location: str) -> DataFrame:
-    """``catalog.db.table`` -> Iceberg/catalog table; anything else ->
-    parquet path."""
-    if "/" not in location and "." in location:
-        return spark.read.table(location)
-    return spark.read.parquet(location)
-
-
-def append_table(df: DataFrame, location: str) -> None:
-    if "/" not in location and "." in location:
-        df.writeTo(location).append()
-    else:
-        df.write.mode("append").parquet(location)
 
 
 def write_bucketed_corpus(
@@ -49,10 +20,9 @@ def write_bucketed_corpus(
     each bucket as its own file set and records the layout in the
     catalog, so every later scan reports
     ``HashPartitioning(doc_id, N)`` and Catalyst elides the Exchange
-    for any doc_id-keyed aggregation or join over it.  This is the
-    parquet-mode realization of the Iceberg ``bucket(N, doc_id)``
-    layout in ``iceberg_ddl`` — same plan effect, demonstrable in this
-    sandbox (tests/test_bucketed.py asserts zero Exchange)."""
+    for any doc_id-keyed aggregation or join over it — the plan effect
+    of an Iceberg ``bucket(N, doc_id)`` layout (tests/test_bucketed.py
+    asserts zero Exchange)."""
     (
         df.repartition(n_buckets, "doc_id")
         .write.mode("overwrite")
@@ -61,21 +31,6 @@ def write_bucketed_corpus(
         .format("parquet")
         .saveAsTable(table)
     )
-
-
-def iceberg_ddl(table: str, n_buckets: int = 1024) -> str:
-    """The production table layout: hidden bucket partitioning on
-    doc_id co-locates the extraction input with the stable partition
-    keys, so the per-run shuffle disappears at steady state."""
-    return f"""
-CREATE TABLE {table} (
-  doc_id STRING,
-  spans  ARRAY<STRUCT<kind: STRING, text: STRING, media_ref: STRING, offset: INT>>
-)
-USING iceberg
-PARTITIONED BY (bucket({n_buckets}, doc_id))
-TBLPROPERTIES ('write.distribution-mode' = 'hash')
-"""
 
 
 _FORMAT_BY_EXT = {

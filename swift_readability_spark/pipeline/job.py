@@ -28,6 +28,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 SPAN_STRUCT = T.StructType(
     [
@@ -66,33 +67,7 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
-_ARROW_SPAN = pa.struct(
-    [
-        ("kind", pa.string()),
-        ("text", pa.string()),
-        ("media_ref", pa.string()),
-        ("offset", pa.int32()),
-    ]
-)
-_ARROW_OUT = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("spans", pa.list_(_ARROW_SPAN)),
-        ("title", pa.string()),
-        ("byline", pa.string()),
-        ("dir", pa.string()),
-        ("lang", pa.string()),
-        ("excerpt", pa.string()),
-        ("site_name", pa.string()),
-        ("published_time", pa.string()),
-        ("text_length", pa.int32()),
-        ("readerable", pa.bool_()),
-        ("error", pa.string()),
-        ("partition_key", pa.int32()),
-        ("run_id", pa.string()),
-        ("wall_ms", pa.float64()),
-    ]
-)
+_ARROW_OUT = to_arrow_schema(EXTRACTED_SCHEMA)
 
 # payload size (chars of text+refs) above which a document is routed to
 # the dedicated heavy route; at 10^12-doc scale this is the knob that
@@ -310,12 +285,6 @@ def read_committed(
     return out.join(
         F.broadcast(lineage.distinct()), ["run_id", "partition_key"], "left_semi"
     )
-
-
-def committed_keys(spark: SparkSession, lineage_path: str) -> DataFrame | None:
-    """Partition keys already committed by any previous run."""
-    state = committed_state(spark, lineage_path)
-    return state[0] if state else None
 
 
 def committed_state(

@@ -16,9 +16,10 @@ batch DataFrame and the whole batch pipeline applies unchanged.
 
 from __future__ import annotations
 
+import os
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .job import (
     DOCUMENTS_SCHEMA,
@@ -26,6 +27,24 @@ from .job import (
     lineage_from_output,
     plan_extraction,
 )
+
+
+def _read_parquet_stream(
+    spark: SparkSession,
+    input_path: str,
+    schema,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """A parquet file stream over ``input_path``.  The file-stream
+    source requires a directory, so a single parquet file streams its
+    parent with a glob filter."""
+    reader = spark.readStream.schema(schema).format("parquet")
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    if os.path.isfile(input_path):
+        reader = reader.option("pathGlobFilter", os.path.basename(input_path))
+        input_path = os.path.dirname(input_path) or "."
+    return reader.load(input_path)
 
 
 def run_extraction_stream(
@@ -46,20 +65,9 @@ def run_extraction_stream(
         n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     checkpoint_path = checkpoint_path or output_path + "_checkpoint"
 
-    reader = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .format("parquet")
+    stream = _read_parquet_stream(
+        spark, input_path, DOCUMENTS_SCHEMA, max_files_per_trigger
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    # the file-stream source requires a directory; accept a single
-    # parquet file by streaming its parent with a glob filter
-    import os
-
-    if os.path.isfile(input_path):
-        reader = reader.option("pathGlobFilter", os.path.basename(input_path))
-        input_path = os.path.dirname(input_path) or "."
-    stream = reader.load(input_path)
 
     def process_batch(batch_df, batch_id: int) -> None:
         started_at = time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime())
@@ -113,14 +121,9 @@ def run_windowed_stream(
     Drains available input (AvailableNow) into an in-memory sink and
     returns the result DataFrame.
     """
-    import os
     import pyspark.sql.functions as F
 
-    reader = spark.readStream.schema(EVENTS_SCHEMA).format("parquet")
-    if os.path.isfile(input_path):
-        reader = reader.option("pathGlobFilter", os.path.basename(input_path))
-        input_path = os.path.dirname(input_path) or "."
-    stream = reader.load(input_path)
+    stream = _read_parquet_stream(spark, input_path, EVENTS_SCHEMA)
 
     agg = (
         stream.withWatermark("ts", watermark)
@@ -175,13 +178,7 @@ def run_dedup_stream(
     re-deliveries beyond the horizon are dropped as new-but-duplicate
     (the standard trade — tighten the watermark to what the delivery
     layer can actually replay)."""
-    import os
-
-    reader = spark.readStream.schema(EVENTS_SCHEMA).format("parquet")
-    if os.path.isfile(input_path):
-        reader = reader.option("pathGlobFilter", os.path.basename(input_path))
-        input_path = os.path.dirname(input_path) or "."
-    stream = reader.load(input_path)
+    stream = _read_parquet_stream(spark, input_path, EVENTS_SCHEMA)
 
     deduped = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]

@@ -19,10 +19,17 @@ def spark():
 
 @pytest.fixture(scope="session")
 def corpus_dir(tmp_path_factory):
-    """Small deterministic spans corpus: all 130 fixtures + 20 synthetic
-    docs (one mega-doc)."""
-    from swift_readability_spark.corpus.synth import build_corpus
+    """Small deterministic spans corpus: 40 synthetic docs (one
+    mega-doc, ``syn-42-39``) plus all 130 fixtures when the reference
+    checkout is present."""
+    from swift_readability_spark.corpus.synth import FIXTURES_DIR, build_corpus
 
     out = tmp_path_factory.mktemp("corpus")
-    build_corpus(str(out), n_synth=20, seed=42, include_fixtures=True, mega_every=20)
+    build_corpus(
+        str(out),
+        n_synth=40,
+        seed=42,
+        include_fixtures=FIXTURES_DIR.is_dir(),
+        mega_every=40,
+    )
     return str(out)

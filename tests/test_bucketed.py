@@ -4,8 +4,7 @@
 ``bucketBy(N, doc_id)``; Catalyst then reports
 ``HashPartitioning(doc_id, N)`` from the scan, so doc_id-keyed
 aggregations/joins over the bucketed table need NO Exchange — the
-sandbox-runnable realization of the Iceberg ``bucket(N, doc_id)``
-layout the production DDL declares (pipeline/io.py).
+plain-Spark realization of an Iceberg ``bucket(N, doc_id)`` layout.
 """
 
 import pytest

@@ -1,6 +1,9 @@
 """Every oracle SQL must parse/bind in DuckDB against the real table
 schemas — catches oracle typos in seconds, without Spark."""
 
+import hashlib
+import json
+
 import duckdb
 import pytest
 
@@ -20,6 +23,17 @@ def con():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet') LIMIT 0"
         )
     return con
+
+
+# sha256 of the registry's (name, oracle SQL) pairs in registry order: the
+# oracle text and the driver-window order are a contract (ROADMAP
+# standing rules), so any change to either must update this pin on purpose
+ORACLE_SQL_SHA256 = "d8ad48d8e9b0ae1c2a4ac82af637a52dacc972b2ea39303ffc918ed0baf92b5c"
+
+
+def test_oracle_sql_pinned():
+    blob = json.dumps(list(entrymod.oracle_sql().items()))
+    assert hashlib.sha256(blob.encode()).hexdigest() == ORACLE_SQL_SHA256
 
 
 def test_registry_counts():

@@ -4,6 +4,7 @@ routing.  Uses the deterministic synthetic corpus (conftest)."""
 import pyspark.sql.functions as F
 import pytest
 
+from swift_readability_spark.corpus.synth import FIXTURES_DIR
 from swift_readability_spark.pipeline.job import (
     lineage_from_output,
     run_extraction,
@@ -11,6 +12,10 @@ from swift_readability_spark.pipeline.job import (
 )
 
 N_PARTITIONS = 8
+MEGA_DOC = "syn-42-39"  # conftest.corpus_dir: the one mega-doc
+# one fixture page when the reference corpus is present, else a small
+# synthetic doc, plus the first synthetic doc and the mega-doc
+SAMPLE_IDS = ("001" if FIXTURES_DIR.is_dir() else "syn-42-1", "syn-42-0", MEGA_DOC)
 
 
 @pytest.fixture(scope="module")
@@ -53,15 +58,11 @@ def test_spark_matches_pure_python(spark, corpus_dir, extracted):
     core (determinism across the Arrow boundary)."""
     from swift_readability_spark.extract import extract_document
 
-    rows = (
-        extracted["df"]
-        .filter(F.col("doc_id").isin("001", "syn-42-0", "syn-42-19"))
-        .collect()
-    )
+    rows = extracted["df"].filter(F.col("doc_id").isin(*SAMPLE_IDS)).collect()
     docs = {
         r["doc_id"]: r["spans"]
         for r in spark.read.parquet(corpus_dir + "/documents.parquet")
-        .filter(F.col("doc_id").isin("001", "syn-42-0", "syn-42-19"))
+        .filter(F.col("doc_id").isin(*SAMPLE_IDS))
         .collect()
     }
     assert len(rows) == 3
@@ -77,6 +78,10 @@ def test_spark_matches_pure_python(spark, corpus_dir, extracted):
         assert local["title"] == row["title"]
 
 
+@pytest.mark.skipif(
+    not FIXTURES_DIR.is_dir(),
+    reason=f"reference fixture corpus not present at {FIXTURES_DIR}",
+)
 def test_fixture_parity_through_spark(spark, corpus_dir, extracted):
     """Golden-span equality for ALL 130 fixtures that went through the
     full distributed path (the same gate as the pure-Python suite, but
@@ -268,7 +273,7 @@ def test_legacy_null_domain_rows_mixed_with_recorded_domain_raise(
 
 def test_mega_doc_flows_through_heavy_path(spark, corpus_dir, extracted):
     """The synthetic mega-doc is present and non-trivially extracted."""
-    mega = extracted["df"].filter(F.col("doc_id") == "syn-42-19").collect()
+    mega = extracted["df"].filter(F.col("doc_id") == MEGA_DOC).collect()
     assert len(mega) == 1
     assert mega[0]["text_length"] > 100_000
 

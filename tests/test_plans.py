@@ -250,13 +250,10 @@ def test_containment_prefix_join_is_hash_keyed_and_df_capped(spark, reg):
     (hot boilerplate shingles cannot become join keys).  r07: the
     survivor set is collected for the verify phase, so the candidate
     plan is pinned via its own builder."""
-    from swift_readability_spark.operators.dedup import (
-        _containment_candidates,
-        _spread_docs,
-    )
+    from swift_readability_spark.operators.dedup import _containment_candidates
+    from swift_readability_spark.operators.kernels import docs
 
-    d, id_t = _spread_docs(spark, SF)
-    plan = _plan(_containment_candidates(spark, d, id_t))
+    plan = _plan(_containment_candidates(spark, docs(spark, SF)))
     assert "sh_h" in plan
     assert "1000" in plan  # CONTAINMENT_MAX_DF filter present
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

@@ -116,6 +116,21 @@ def test_prefilter_missing_doc_raises(spark):
         out.collect()
 
 
+def test_prefilter_long_string_id_does_not_alias(spark):
+    """A candidate id longer than every mapped id whose prefix IS a
+    mapped id must not be truncated onto that id: it is unknown, so the
+    guard raises KeyError instead of using the wrong doc's hash set."""
+    sets = {"doc-1": [np.uint64(1)], "doc-2": [np.uint64(2)]}
+    df = spark.createDataFrame(
+        [("doc-1", "doc-2-unmapped")], "doc_a string, doc_b string"
+    )
+    out = _pair_hash_prefilter(
+        spark, df, _pack_map(sets), lambda c, na, nb: c >= 0
+    )
+    with pytest.raises(Exception, match="KeyError.*missing from hash map"):
+        out.collect()
+
+
 def _brute_hamming_pairs(members):
     """Reference: all pairs with popcount(xor) <= SIMHASH_MAX_HAMMING,
     doc_a < doc_b in member (sorted) order."""

@@ -5,8 +5,7 @@ the driver corpus, over one shared Spark session."""
 
 import re
 
-import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 # words of 1-3 ascii alnum chars, texts with messy separators
@@ -89,3 +88,36 @@ def test_ngrams_match_python_reference(spark, text, n):
     words = _py_words(text)
     want = [" ".join(words[i : i + n]) for i in range(max(len(words) - n + 1, 0))]
     assert got == want
+
+
+# arbitrary Unicode (no lone surrogates: not encodable), biased toward
+# the characters where Python and Java text handling could disagree:
+# non-ASCII letters, U+212A KELVIN SIGN (lowercases to ASCII 'k'),
+# U+0130, NBSP, tabs/newlines and ASCII punctuation
+_unicode_text = st.text(
+    alphabet=st.one_of(
+        st.sampled_from("aZ9 \t\n\u00a0\u212a\u0130\u00e9\u00df\u4e2d.,-_"),
+        st.characters(blacklist_categories=("Cs",)),
+    ),
+    max_size=40,
+)
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(st.lists(st.one_of(st.none(), _unicode_text), min_size=1, max_size=8))
+@example([None, "", "\u212aelvin caf\u00e9\u00a0na\u00efve\tTAB", " \u00a0 "])
+def test_tokenize_batch_matches_spark_words(spark, texts):
+    """The Python tokenizer every Arrow kernel shares equals the JVM
+    ``_SPARK_WORDS`` expression row for row (None for null text)."""
+    from pyspark.sql import functions as F
+
+    from swift_readability_spark.operators.dedup import _SPARK_WORDS
+    from swift_readability_spark.operators.kernels import tokenize_batch
+
+    df = spark.createDataFrame(list(enumerate(texts)), "i INT, text STRING")
+    got = dict(df.select("i", F.expr(_SPARK_WORDS).alias("w")).collect())
+    assert tokenize_batch(texts) == [got[i] for i in range(len(texts))]
