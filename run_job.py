@@ -36,12 +36,6 @@ def main() -> None:
         help="process via Structured Streaming Trigger.AvailableNow micro-batches",
     )
     ap.add_argument(
-        "--heavy-threshold",
-        type=int,
-        default=None,
-        help="payload chars above which a doc is routed to its own partition",
-    )
-    ap.add_argument(
         "--pre-partitioned",
         action="store_true",
         help="trust the input's existing distribution (bucketed corpus): no shuffle",
@@ -75,11 +69,6 @@ def main() -> None:
         from swift_readability_spark.pipeline.io import read_documents
 
         documents = read_documents(spark, args.input, fmt=args.input_format)
-        kwargs = {}
-        if args.heavy_threshold is not None:
-            kwargs["heavy_threshold"] = args.heavy_threshold
-        if args.pre_partitioned:
-            kwargs["assume_pre_partitioned"] = True
         run_id = run_extraction(
             spark,
             documents,
@@ -89,7 +78,7 @@ def main() -> None:
             n_partitions=args.partitions,
             run_id=args.run_id,
             resume=not args.no_resume,
-            **kwargs,
+            assume_pre_partitioned=args.pre_partitioned,
         )
         print(f"run_id={run_id}")
     spark.stop()

@@ -281,18 +281,6 @@ class Node:
         return None
 
     @property
-    def previous_sibling(self) -> "Node | None":
-        p = self.parent
-        if p is None:
-            return None
-        i = self._sib_index()
-        if i > 0:
-            prev = p.children[i - 1]
-            prev._idx = i - 1
-            return prev
-        return None
-
-    @property
     def text_content(self) -> str:
         return ""
 

@@ -897,9 +897,6 @@ class Grabber:
             if self.get_class_weight(node) < 0:
                 node.remove()
 
-    def clean_conditionally(self, e: Element, tag: str) -> None:
-        self.clean_conditionally_group(e, (tag,))
-
     def clean_conditionally_group(self, e: Element, tags: tuple[str, ...]) -> None:
         """cleanConditionally for several tags with ONE subtree walk.
         Equivalent to sequential per-tag sweeps: tags are processed in

@@ -6,10 +6,10 @@ DataFrame-native corpus layer per SURVEY.md §2.1/§4.3:
 - **stable partition keys**: ``pmod(xxhash64(doc_id), n_partitions)``
   — not physical task ids — so a re-run maps every document to the
   same key and resume can skip exactly the committed work.
-- **skew salting**: documents whose span payload exceeds
-  ``heavy_threshold`` get a per-document route key (one mega-doc per
-  task neighborhood) instead of sharing hash partitions with thousands
-  of small docs.  Combined with a bounded ``arrow.maxRecordsPerBatch``
+- **skew salting**: documents over ``DEFAULT_HEAVY_THRESHOLD`` chars of
+  span payload get a per-document route key (one mega-doc per task
+  neighborhood) instead of sharing hash partitions with thousands of
+  small docs.  Combined with a bounded ``arrow.maxRecordsPerBatch``
   this caps per-batch worker memory at any document-size distribution.
 - **resume**: a left-anti join of the input's partition keys against
   committed lineage rows (Iceberg would make the appends atomic; on
@@ -67,7 +67,11 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
-_ARROW_OUT = to_arrow_schema(EXTRACTED_SCHEMA)
+# the Arrow kernel's output: plan_extraction adds the rest in the JVM
+_KERNEL_SCHEMA = T.StructType(
+    [f for f in EXTRACTED_SCHEMA.fields if f.name not in ("partition_key", "run_id")]
+)
+_ARROW_OUT = to_arrow_schema(_KERNEL_SCHEMA)
 
 # payload size (chars of text+refs) above which a document is routed to
 # the dedicated heavy route; at 10^12-doc scale this is the knob that
@@ -82,7 +86,7 @@ _DOC_BYTES_EXPR = (
 )
 
 
-def make_extract_batches(base_url: str, run_id: str, options=None):
+def make_extract_batches(base_url: str, options=None):
     """Returns a mapInArrow function: vectorized batch extraction.
 
     The pure-Python readability core runs per document *inside* the
@@ -105,33 +109,15 @@ def make_extract_batches(base_url: str, run_id: str, options=None):
         gc.set_threshold(200_000, 50, 25)
 
         for batch in batches:
-            rows = batch.to_pylist()
-            out = {name: [] for name in _ARROW_OUT.names}
-            for row in rows:
+            results = []
+            for row in batch.to_pylist():
                 t0 = time.perf_counter()
                 result = extract_document(
                     row["doc_id"], row.get("spans") or [], base_url, options
                 )
-                wall_ms = (time.perf_counter() - t0) * 1000.0
-                out["doc_id"].append(result["doc_id"])
-                out["spans"].append(result["spans"])
-                out["title"].append(result["title"])
-                out["byline"].append(result["byline"])
-                out["dir"].append(result["dir"])
-                out["lang"].append(result["lang"])
-                out["excerpt"].append(result["excerpt"])
-                out["site_name"].append(result["site_name"])
-                out["published_time"].append(result["published_time"])
-                out["text_length"].append(result["text_length"])
-                out["readerable"].append(result["readerable"])
-                out["error"].append(result["error"])
-                out["partition_key"].append(row.get("partition_key", -1))
-                out["run_id"].append(run_id)
-                out["wall_ms"].append(wall_ms)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out[n], type=_ARROW_OUT.field(n).type) for n in _ARROW_OUT.names],
-                schema=_ARROW_OUT,
-            )
+                result["wall_ms"] = (time.perf_counter() - t0) * 1000.0
+                results.append(result)
+            yield pa.RecordBatch.from_pylist(results, schema=_ARROW_OUT)
             gc.collect()
 
     return extract_batches
@@ -171,60 +157,51 @@ def plan_extraction(
     base_url: str,
     run_id: str,
     n_partitions: int,
-    heavy_threshold: int = DEFAULT_HEAVY_THRESHOLD,
-    oversubscription: int = DEFAULT_TASK_OVERSUBSCRIPTION,
     assume_pre_partitioned: bool = False,
     options=None,
 ) -> DataFrame:
     """Build the (lazy) extraction DataFrame with skew-aware routing.
 
     One scan, one shuffle: the route key spreads documents uniformly
-    over ``n_partitions * oversubscription`` physical tasks, but
-    mega-docs get a per-document route key so they never pile onto
-    partitions shared with thousands of small docs.  (Two filtered
-    branches would scan the source twice — fatal at 100 TB.)  The
-    lineage/resume key (``partition_key``) is a *column* with its own
-    stable domain, independent of physical placement, so routing and
-    task sizing never affect resume semantics.
+    over ``n_partitions * DEFAULT_TASK_OVERSUBSCRIPTION`` physical
+    tasks, but mega-docs get a per-document route key so they never
+    pile onto partitions shared with thousands of small docs.  (Two
+    filtered branches would scan the source twice — fatal at 100 TB.)
+    The lineage/resume key (``partition_key``) is a *column* with its
+    own stable domain, computed from ``doc_id`` after the Arrow stage,
+    so routing and task sizing never affect resume semantics.
+
+    ``assume_pre_partitioned`` elides the shuffle for corpora already
+    written with a sane distribution (Iceberg bucket(N, doc_id) + hash
+    write mode, or a prior repartition-on-write): the scan partitions
+    are consumed directly — zero Exchange in the plan.  At 100 TB this
+    removes the single largest data movement of the job.
     """
     from .session import ensure_package_on_workers
 
     ensure_package_on_workers(df.sparkSession)
 
-    extract = make_extract_batches(base_url, run_id, options)
-    if assume_pre_partitioned:
-        # shuffle elision for corpora already written with a sane
-        # distribution (Iceberg bucket(N, doc_id) + hash write mode,
-        # or a prior repartition-on-write): the scan partitions are
-        # consumed directly — zero Exchange in the plan.  At 100 TB
-        # this removes the single largest data movement of the job.
-        return with_partition_key(df, n_partitions).mapInArrow(
-            extract, EXTRACTED_SCHEMA
-        )
-
-    routed = route_for_extraction(
-        df, n_partitions, heavy_threshold, oversubscription
+    if not assume_pre_partitioned:
+        df = route_for_extraction(df, n_partitions)
+    extracted = df.mapInArrow(make_extract_batches(base_url, options), _KERNEL_SCHEMA)
+    return (
+        with_partition_key(extracted, n_partitions)
+        .withColumn("run_id", F.lit(run_id))
+        .select(*EXTRACTED_SCHEMA.names)
     )
-    return routed.mapInArrow(extract, EXTRACTED_SCHEMA)
 
 
-def route_for_extraction(
-    df: DataFrame,
-    n_partitions: int,
-    heavy_threshold: int = DEFAULT_HEAVY_THRESHOLD,
-    oversubscription: int = DEFAULT_TASK_OVERSUBSCRIPTION,
-) -> DataFrame:
+def route_for_extraction(df: DataFrame, n_partitions: int) -> DataFrame:
     """The skew-aware physical routing stage (factored out so tests can
     assert placement): uniform hash route for light docs, a
-    per-document route key for docs over ``heavy_threshold`` so a
-    mega-doc never shares a task with thousands of small docs."""
-    physical = n_partitions * max(oversubscription, 1)
-    keyed = with_partition_key(df, n_partitions)
+    per-document route key for docs over ``DEFAULT_HEAVY_THRESHOLD`` so
+    a mega-doc never shares a task with thousands of small docs."""
+    physical = n_partitions * DEFAULT_TASK_OVERSUBSCRIPTION
     return (
-        keyed.withColumn(
+        df.withColumn(
             "_route_key",
             F.when(
-                F.expr(_DOC_BYTES_EXPR) > heavy_threshold,
+                F.expr(_DOC_BYTES_EXPR) > DEFAULT_HEAVY_THRESHOLD,
                 F.concat(F.lit("H:"), F.col("doc_id")),
             ).otherwise(
                 F.concat(
@@ -335,7 +312,6 @@ def run_extraction(
     n_partitions: int | None = None,
     run_id: str | None = None,
     resume: bool = True,
-    heavy_threshold: int = DEFAULT_HEAVY_THRESHOLD,
     options=None,
     assume_pre_partitioned: bool = False,
 ) -> str:
@@ -391,7 +367,6 @@ def run_extraction(
         base_url,
         run_id,
         n_partitions,
-        heavy_threshold,
         options=options,
         assume_pre_partitioned=assume_pre_partitioned,
     )

@@ -2,11 +2,12 @@
 
 The reference is batch-only (SURVEY.md §2.10); this is the corpus-level
 extension: a file-source stream of spans documents processed in
-micro-batches with ``Trigger.AvailableNow`` — each micro-batch runs the
-same skew-aware extraction plan via ``foreachBatch`` and appends output
-plus lineage, so a stream restart resumes from the Spark checkpoint
-AND the lineage anti-join (the double bookkeeping is harmless: lineage
-keys are idempotent).
+micro-batches with ``Trigger.AvailableNow`` — each micro-batch is one
+``run_extraction`` call via ``foreachBatch`` (same skew-aware plan, same
+output-then-lineage commit) under its own run id.  The Spark checkpoint
+alone makes restarts exactly-once: micro-batches never anti-join
+against lineage, since that would skip new documents whose partition
+keys an earlier batch committed.
 
 ``foreachBatch`` is used (rather than a streaming mapInArrow) because
 the extraction stage needs a repartition, which streaming DataFrames
@@ -17,16 +18,10 @@ batch DataFrame and the whole batch pipeline applies unchanged.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .job import (
-    DOCUMENTS_SCHEMA,
-    check_run_id,
-    lineage_from_output,
-    plan_extraction,
-)
+from .job import DOCUMENTS_SCHEMA, check_run_id, run_extraction
 
 
 def _read_parquet_stream(
@@ -61,8 +56,6 @@ def run_extraction_stream(
 ) -> None:
     """Drain all available input files as micro-batches, then stop."""
     run_id = check_run_id(run_id)
-    if n_partitions is None:
-        n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     checkpoint_path = checkpoint_path or output_path + "_checkpoint"
 
     stream = _read_parquet_stream(
@@ -70,18 +63,16 @@ def run_extraction_stream(
     )
 
     def process_batch(batch_df, batch_id: int) -> None:
-        started_at = time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime())
-        extracted = plan_extraction(
-            batch_df, base_url, f"{run_id}-{batch_id}", n_partitions
+        run_extraction(
+            batch_df.sparkSession,
+            batch_df,
+            output_path,
+            lineage_path,
+            base_url=base_url,
+            n_partitions=n_partitions,
+            run_id=f"{run_id}-{batch_id}",
+            resume=False,
         )
-        extracted.write.mode("append").partitionBy("run_id").parquet(output_path)
-        committed = (
-            batch_df.sparkSession.read.parquet(output_path)
-            .where(f"run_id = '{run_id}-{batch_id}'")
-        )
-        lineage_from_output(committed, started_at, n_partitions).write.mode(
-            "append"
-        ).parquet(lineage_path)
 
     query = (
         stream.writeStream.foreachBatch(process_batch)

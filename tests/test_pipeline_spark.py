@@ -46,6 +46,14 @@ def test_every_document_extracted(spark, corpus_dir, extracted):
     docs = spark.read.parquet(corpus_dir + "/documents.parquet")
     assert extracted["df"].count() == docs.count()
     assert extracted["df"].select("doc_id").distinct().count() == docs.count()
+    # partition_key and run_id are computed on the JVM side, after the
+    # Arrow stage: every row has its doc_id's resume key and this run id
+    want_key = F.pmod(F.xxhash64("doc_id"), F.lit(N_PARTITIONS)).cast("int")
+    wrong = extracted["df"].filter(
+        ~F.col("partition_key").eqNullSafe(want_key)
+        | ~F.col("run_id").eqNullSafe(F.lit(extracted["run_id"]))
+    )
+    assert wrong.count() == 0
 
 
 def test_no_unexpected_errors(extracted):
@@ -292,8 +300,9 @@ def test_pre_partitioned_mode_elides_shuffle(spark, corpus_dir):
     )
     plan = elided._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-    a = {(r["doc_id"], r["title"], r["text_length"]) for r in default.collect()}
-    b = {(r["doc_id"], r["title"], r["text_length"]) for r in elided.collect()}
+    cols = ("doc_id", "title", "text_length", "partition_key", "run_id")
+    a = {tuple(r[c] for c in cols) for r in default.collect()}
+    b = {tuple(r[c] for c in cols) for r in elided.collect()}
     assert a == b
 
 
