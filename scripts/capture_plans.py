@@ -2,16 +2,33 @@
 """Capture .explain('formatted') for registry queries into plans/<tag>/.
 
 Usage: python scripts/capture_plans.py --tag r07 --suffix before [query ...]
+
+Besides writing the plan files, prints one line per query:
+
+    <query> MapInArrow=<n> Exchange=<n>
+
+counted over the physical-plan nodes (the numbered ``(k) Name``
+entries; ``Exchange`` is the shuffle node only, not Broadcast- or
+ReusedExchange).  Comparing two trees' plan shapes is then one
+``diff`` of the two runs' stdout.
 """
 
 from __future__ import annotations
 
 import argparse
-import os
+import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+_NODE = re.compile(r"^\(\d+\) (\S+)", re.M)
+
+
+def node_counts(plan: str) -> Counter:
+    """Physical-plan node names of a formatted explain, counted."""
+    return Counter(_NODE.findall(plan))
 
 
 def main() -> None:
@@ -40,7 +57,8 @@ def main() -> None:
                 )
             )
             (outdir / f"{name}_{args.suffix}.txt").write_text(plan)
-            print(f"wrote {name}_{args.suffix}.txt")
+            n = node_counts(plan)
+            print(f"{name} MapInArrow={n['MapInArrow']} Exchange={n['Exchange']}")
     finally:
         spark.stop()
 

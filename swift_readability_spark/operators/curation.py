@@ -466,8 +466,8 @@ def knn_join(spark, sf_dir):
     from .similarity import _query_vecs, _scored_against_queries
 
     e = read(spark, sf_dir, "embeddings")
-    q_rows = _query_vecs(e, F.col("vec_id") < KNN_QUERIES, KNN_QUERIES)
-    scored = _scored_against_queries(e, q_rows, F.col("vec_id") >= KNN_QUERIES)
+    queries = _query_vecs(e, F.col("vec_id") < KNN_QUERIES, KNN_QUERIES)
+    scored = _scored_against_queries(e, queries, F.col("vec_id") >= KNN_QUERIES)
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))

@@ -22,6 +22,8 @@ from .kernels import (
     bounded_collect,
     collect_within,
     docs,
+    embedding_matrix,
+    fold_dot,
     h60,
     map_arrow,
     map_docs,
@@ -182,47 +184,69 @@ def _shingle_hash(ids, texts):
 
 def _bucket_hamming_batches(it):
     """Per Hamming-band bucket: expand member pairs and keep those with
-    XOR-popcount <= SIMHASH_MAX_HAMMING, vectorized over the bucket's
-    pair matrix.  Members arrive sorted (sort_array upstream), so
-    emitted pairs keep doc_a < doc_b exactly like the lambda form;
-    null-fingerprint members are skipped (the lambda form paired them
+    XOR-popcount <= SIMHASH_MAX_HAMMING (== SIMHASH_WIDE_MAX_HAMMING:
+    both widths use 4 bands), vectorized over the bucket's pair matrix.
+    A member is a struct of ``doc_id`` and the fingerprint's 32-bit
+    words (every other field); its Hamming distance is the sum of the
+    per-word popcounts, and a word outside [0, 2^32) raises ValueError
+    instead of wrapping.  Members arrive sorted (sort_array upstream),
+    so emitted pairs keep doc_a < doc_b exactly like the lambda form;
+    members with a null word are skipped (the lambda form paired them
     and then dropped the null hamming).
 
     r07 session 3 (measured: the synthetic corpus concentrates 200k
     banded rows into <1k buckets — 189M pair slots, max bucket 3404):
-    fingerprints are 32-bit, so the XOR runs in uint32 and popcount is
-    two 16-bit-LUT gathers + add (the 8-bit-LUT uint64 view paid 4x
-    the memory traffic); the pair matrix is row-CHUNKED to a bounded
-    slot budget (a degenerate bucket cannot allocate an n^2 buffer);
-    survivors are emitted by boolean indexing, not a per-pair Python
-    loop (~3.3M qualifying pairs here)."""
+    the XOR runs in uint32 and popcount is two 16-bit-LUT gathers + add
+    per word (the 8-bit-LUT uint64 view paid 4x the memory traffic);
+    the pair matrix is row-CHUNKED to a bounded slot budget (a
+    degenerate bucket cannot allocate an n^2 buffer); survivors are
+    emitted by boolean indexing, not a per-pair Python loop (~3.3M
+    qualifying pairs here)."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     _lut8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
     a16 = np.arange(65536, dtype=np.uint32)
+    # uint8 sums hold up to 7 words (224 bits)
     _lut16 = (_lut8[a16 & 255] + _lut8[a16 >> 8]).astype(np.uint8)
     CHUNK_SLOTS = 4_000_000
 
     for batch in it:
-        id_type = batch.schema.field("members").type.value_type.field(
-            "doc_id"
-        ).type
+        members = batch.column("members")
+        flat = members.flatten()
+        id_type = flat.type.field("doc_id").type
+        fields = dict(zip((f.name for f in flat.type), flat.flatten()))
+        ids_all = fields.pop("doc_id").to_numpy(zero_copy_only=False)
+        live_all = np.ones(len(flat), dtype=bool)
+        words = np.zeros((len(flat), len(fields)), dtype=np.int64)
+        for k, (name, col) in enumerate(fields.items()):
+            live_all &= col.is_valid().to_numpy(zero_copy_only=False)
+            words[:, k] = col.fill_null(0).to_numpy()
+            bad = (words[:, k] < 0) | (words[:, k] >= 1 << 32)
+            if bad.any():
+                raise ValueError(
+                    f"fingerprint word {name}={words[bad, k][0]} is outside [0, 2^32)"
+                )
+        words = words.astype(np.uint32)
+        lens = pc.list_value_length(members).fill_null(0).to_numpy()
+        bounds = np.concatenate([[0], np.cumsum(lens)])
         out_a, out_b, out_h = [], [], []
-        for members in batch.column("members").to_pylist():
-            live = [m for m in members if m["simhash"] is not None]
+        for start, end in zip(bounds[:-1], bounds[1:]):
+            live = start + np.flatnonzero(live_all[start:end])
             n = len(live)
             if n < 2:
                 continue
-            ids_np = np.array([m["doc_id"] for m in live])
-            fps = np.array([m["simhash"] for m in live], dtype=np.uint32)
+            ids_np, fps = ids_all[live], words[live]
             rows_per_chunk = max(CHUNK_SLOTS // n, 1)
             for lo in range(0, n - 1, rows_per_chunk):
                 hi = min(lo + rows_per_chunk, n - 1)
-                x = fps[lo:hi, None] ^ fps[None, :]
-                hm = _lut16[x & np.uint32(0xFFFF)] + _lut16[
-                    x >> np.uint32(16)
-                ]
+                hm = 0
+                for k in range(fps.shape[1]):
+                    x = fps[lo:hi, None, k] ^ fps[None, :, k]
+                    hm = hm + _lut16[x & np.uint32(0xFFFF)] + _lut16[
+                        x >> np.uint32(16)
+                    ]
                 # upper triangle only: column index > global row index
                 mask = hm <= SIMHASH_MAX_HAMMING
                 cols = np.arange(n)[None, :]
@@ -728,6 +752,101 @@ def _members_for_pair_budget(budget: int) -> int:
 SIMHASH_GUARD_MAX = _members_for_pair_budget(SIMHASH_BUCKET_PAIR_BUDGET)  # ~4472
 
 
+def _hamming_banded(fp, bands):
+    """``fp`` (doc_id + fingerprint words) exploded to one row per
+    (doc, band), with the band's index and value (``bands[b]``)."""
+    structs = [
+        F.struct(F.lit(b).alias("band"), v.alias("value"))
+        for b, v in enumerate(bands)
+    ]
+    return fp.select(*fp.columns, F.explode(F.array(*structs)).alias("bb")).select(
+        *fp.columns, "bb.band", "bb.value"
+    )
+
+
+def _hamming_band_pairs(fp, bands):
+    """The Hamming-band join of both fingerprint widths: docs are
+    equi-joined on (band, band value), and ``_bucket_hamming_batches``
+    expands each bucket's member pairs and keeps those within the
+    pigeonhole radius.
+
+    NO bucket cap is allowed here — dropping a bucket would break the
+    pigeonhole recall-1.0 guarantee — so instead of silently OOMing on
+    a degenerate bucket, a window ``count`` sizes every bucket BEFORE
+    any member list is collected and ``assert_true`` fails the job
+    LOUDLY at ``SIMHASH_GUARD_MAX`` (read at call time) with the remedy
+    in the message (run exact dedup first / widen the bands).  The
+    guard sits in a ``filter`` so Catalyst cannot prune it away.
+
+    r07 (guide §4.2): per-bucket pair expansion + Hamming filter in ONE
+    Arrow kernel.  The lambda form materialized every in-bucket pair as
+    an interpreted struct (~19M at 50k docs — avg bucket is
+    n/2^band_bits) and ran DISTINCT on all of them before the hamming
+    filter; the kernel XOR/popcounts the bucket matrix in numpy and
+    emits only qualifying pairs, so the dedup shuffle carries the
+    output-sized survivor set.  36 -> ~3 s at 50k docs."""
+    sized = _hamming_banded(fp, bands).withColumn(
+        "n", F.count("*").over(Window.partitionBy("band", "value"))
+    )
+    guarded = sized.filter(
+        F.assert_true(
+            F.col("n") <= SIMHASH_GUARD_MAX,
+            F.concat(
+                F.lit("simhash Hamming band (band="),
+                F.col("band").cast("string"),
+                F.lit(", value="),
+                F.col("value").cast("string"),
+                F.lit(f") holds > {SIMHASH_GUARD_MAX} docs (pair budget"
+                      f" {SIMHASH_BUCKET_PAIR_BUDGET} pairs/bucket); a cap"
+                      " would break the pigeonhole recall guarantee — run"
+                      " exact dedup upstream or widen the fingerprint/bands"
+                      " (see simhash_band_stats / simhash_wide_band_stats)"),
+            ),
+        ).isNull()
+    )
+    buckets = (
+        guarded.filter(F.col("n") > 1)
+        .groupBy("band", "value")
+        .agg(F.sort_array(F.collect_set(F.struct(*fp.columns))).alias("members"))
+    )
+    id_t = dict(fp.dtypes)["doc_id"]
+    pairs = map_arrow(
+        buckets.select("members"),
+        _bucket_hamming_batches,
+        f"doc_a {id_t}, doc_b {id_t}, hamming int",
+    )
+    return pairs.distinct()
+
+
+def _band_stats(fp, bands, size):
+    """Per band of a Hamming-band join: bucket count, candidate-pair
+    mass and the largest bucket, where ``size`` is the per-(band,
+    value) member-count aggregate."""
+    sizes = _hamming_banded(fp, bands).groupBy("band", "value").agg(size.alias("n"))
+    pair_mass = (F.col("n") * (F.col("n") - 1) / 2).cast("long")
+    return (
+        sizes.groupBy("band")
+        .agg(
+            F.count("*").cast("long").alias("n_buckets"),
+            F.sum(F.when(F.col("n") > 1, pair_mass).otherwise(0))
+            .cast("long")
+            .alias("candidate_pairs"),
+            F.max("n").cast("long").alias("max_bucket"),
+        )
+        .orderBy("band")
+    )
+
+
+def _simhash_bands():
+    """The 4 disjoint 8-bit band values of the 32-bit ``simhash``."""
+    return [
+        F.shiftright(F.col("simhash"), b * SIMHASH_BAND_BITS).bitwiseAND(
+            (1 << SIMHASH_BAND_BITS) - 1
+        )
+        for b in range(N_SIMHASH_BANDS)
+    ]
+
+
 def simhash(spark, sf_dir):
     """SimHash: per-word portable hash, signed bit-count vote per bit,
     packed into a 32-bit fingerprint.
@@ -767,73 +886,13 @@ def simhash_neardup_pairs(spark, sf_dir):
     docs are equi-joined on (band, band value) — by pigeonhole, any
     pair within Hamming distance 3 agrees exactly on at least one of
     the 4 bands, so the banding is EXACT (recall 1.0) for that radius;
-    the per-candidate ``bit_count(a ^ b)`` filter removes the false
-    positives.  Same single-shuffle shape as ``lsh_candidate_pairs``;
-    at 10^12 docs you widen to a 64-bit fingerprint with 16-bit bands
-    so each band has 65k buckets.
-
-    NO bucket cap is allowed here — dropping a bucket would break the
-    pigeonhole recall-1.0 guarantee — so instead of silently OOMing on
-    a degenerate bucket, a window ``count`` sizes every bucket BEFORE
-    any member list is collected and ``assert_true`` fails the job
-    LOUDLY at ``SIMHASH_GUARD_MAX`` with the remedy in the message
-    (run exact dedup first / widen the bands).  The guard sits in a
-    ``filter`` so Catalyst cannot prune it away."""
-    sig = simhash(spark, sf_dir)
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright(F.col("simhash"), b * SIMHASH_BAND_BITS)
-            .bitwiseAND((1 << SIMHASH_BAND_BITS) - 1)
-            .alias("value"),
-        )
-        for b in range(N_SIMHASH_BANDS)
-    ]
-    banded = sig.select(
-        "doc_id", "simhash", F.explode(F.array(*bands)).alias("bb")
-    ).select("doc_id", "simhash", "bb.band", "bb.value")
-    sized = banded.withColumn(
-        "n", F.count("*").over(Window.partitionBy("band", "value"))
-    )
-    guarded = sized.filter(
-        F.assert_true(
-            F.col("n") <= SIMHASH_GUARD_MAX,
-            F.concat(
-                F.lit("simhash Hamming band (band="),
-                F.col("band").cast("string"),
-                F.lit(", value="),
-                F.col("value").cast("string"),
-                F.lit(f") holds > {SIMHASH_GUARD_MAX} docs (pair budget"
-                      f" {SIMHASH_BUCKET_PAIR_BUDGET} pairs/bucket); a cap"
-                      " would break the pigeonhole recall guarantee — run"
-                      " exact dedup upstream or widen the fingerprint/bands"
-                      " (simhash_wide_neardup_pairs; see simhash_band_stats)"),
-            ),
-        ).isNull()
-    )
-    buckets = (
-        guarded.filter(F.col("n") > 1)
-        .groupBy("band", "value")
-        .agg(
-            F.sort_array(
-                F.collect_set(F.struct("doc_id", "simhash"))
-            ).alias("members")
-        )
-    )
-    # r07 (guide §4.2): per-bucket pair expansion + Hamming filter in
-    # ONE Arrow kernel.  The lambda form materialized every in-bucket
-    # pair as an interpreted struct (~19M at 50k docs — avg bucket is
-    # n/2^band_bits) and ran DISTINCT on all of them before the
-    # hamming <= 3 filter; the kernel XOR/popcounts the bucket matrix
-    # in numpy and emits only qualifying pairs, so the dedup shuffle
-    # carries the output-sized survivor set.  36 -> ~3 s at 50k docs.
-    id_t = dict(sig.dtypes)["doc_id"]
-    pairs = map_arrow(
-        buckets.select("members"),
-        _bucket_hamming_batches,
-        f"doc_a {id_t}, doc_b {id_t}, hamming int",
-    )
-    return pairs.distinct()
+    the per-candidate popcount filter removes the false positives.
+    Same single-shuffle shape as ``lsh_candidate_pairs``; at 10^12
+    docs you widen to a 64-bit fingerprint with 16-bit bands so each
+    band has 65k buckets (``simhash_wide_neardup_pairs``).  The join,
+    its loud pair-budget guard and the kernel are
+    ``_hamming_band_pairs``."""
+    return _hamming_band_pairs(simhash(spark, sf_dir), _simhash_bands())
 
 
 def _simhash_neardup_sql() -> str:
@@ -876,63 +935,32 @@ def _with_planted(e):
     return e.select("vec_id", "embedding", "label").unionByName(planted)
 
 
-def hyperplane_sig_batches(planes, keep_embedding: bool = False):
-    """mapInArrow factory: per-vector hyperplane signature with the
-    EXACT sequential-fold dot of ``_sig_expr_spark`` (dimension-major
-    accumulation; strict > 0 per plane; null embedding -> null sig).
-    ``keep_embedding`` passes the vector through for consumers that
-    rerank candidates (the hyperplane ANN queries)."""
+def _hyperplane_sigs(X, planes):
+    """int64 hyperplane signature per row of the float64 matrix ``X``:
+    bit b is set iff the exact sequential-fold dot with ``planes[b]``
+    is strictly > 0 — bit-identical to ``_sig_expr_spark``."""
+    P = _np.asarray(planes, dtype=_np.float64)
+    above = fold_dot(X[:, None, :], P[None, :, :]) > 0
+    bits = _np.arange(len(P), dtype=_np.int64)
+    return (above.astype(_np.int64) << bits).sum(axis=1)
+
+
+def hyperplane_sig_batches(planes):
+    """mapInArrow factory: each (vec_id, label, embedding) batch with
+    its ``_hyperplane_sigs`` appended as ``sig`` (null embedding -> null
+    sig); the vector passes through for the consumers that rerank
+    candidates (the hyperplane ANN queries)."""
+    dim = len(planes[0])
 
     def batches(it):
-        import numpy as np
         import pyarrow as pa
 
-        pm = np.array(planes, dtype=np.float64)
-        n_planes, dim = pm.shape
         for batch in it:
-            col = batch.column("embedding")
-            n = len(col)
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            lens = np.diff(col.offsets.to_numpy(zero_copy_only=False))
-            if col.null_count == 0 and (lens == dim).all():
-                X = (
-                    col.flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.float64)
-                    .reshape(n, dim)
-                )
-                sig = np.zeros(n, dtype=np.int64)
-                for b in range(n_planes):
-                    acc = np.zeros(n)
-                    for i in range(dim):
-                        acc = acc + X[:, i] * pm[b, i]
-                    sig |= (acc > 0).astype(np.int64) << b
-                sig_arr = pa.array(sig, type=pa.int64())
-            else:
-                vals = []
-                for row in col.to_pylist():
-                    if row is None:
-                        vals.append(None)
-                        continue
-                    s = 0
-                    for b in range(n_planes):
-                        acc = 0.0
-                        for x, h in zip(row, pm[b]):
-                            acc = acc + float(x) * h
-                        if acc > 0:
-                            s |= 1 << b
-                    vals.append(s)
-                sig_arr = pa.array(vals, type=pa.int64())
-            if keep_embedding:
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column("vec_id"), batch.column("label"), col, sig_arr],
-                    ["vec_id", "label", "embedding", "sig"],
-                )
-            else:
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column("vec_id"), sig_arr], ["vec_id", "sig"]
-                )
+            X, valid = embedding_matrix(batch.column("embedding"), dim)
+            sig = pa.array(_hyperplane_sigs(X, planes), type=pa.int64(), mask=~valid)
+            yield batch.append_column("sig", sig)
 
     return batches
 
@@ -950,21 +978,15 @@ def embedding_neardup_pairs(spark, sf_dir):
     in-bucket pair mass is n^2/256 (1.5M pairs at 20k vectors), so the
     verify paid ~1.5M interpreted 64-dim folds (32 s).  Session 3: the
     embeddings are collected ONCE (the verify already needed the full
-    float table on the driver); signatures come from the same kernel
-    code run driver-side over the collected batches (bit-identical),
-    so the self-join runs over the tiny parallelized (vec_id, sig)
+    float table on the driver); signatures come from the same
+    ``_hyperplane_sigs`` run driver-side (bit-identical), so the
+    self-join runs over the tiny parallelized (vec_id, sig)
     table instead of re-running the sig kernel once per join side, and
     the verify kernel gathers from the packed broadcast matrix —
     32 -> ~2 s, bit-identical membership and values."""
     from .similarity import HYPERPLANES
 
-    e = _with_planted(read(spark, sf_dir, "embeddings")).select(
-        "vec_id", "embedding"
-    )
-    tbl = _collect_embeddings(e)
-    sig = spark.createDataFrame(
-        _driver_sig_rows(tbl, HYPERPLANES), "vec_id bigint, sig bigint"
-    )
+    sig, packed = _collected_sigs(spark, sf_dir, HYPERPLANES)
     a, b = sig.alias("a"), sig.alias("b")
     pairs = (
         a.join(b, "sig")
@@ -973,7 +995,7 @@ def embedding_neardup_pairs(spark, sf_dir):
             F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
         )
     )
-    return _cosine_pair_verify(spark, _packed_embeddings(tbl), pairs)
+    return _cosine_pair_verify(spark, packed, pairs)
 
 
 # driver bound of the collected embedding table (see below): 2M vectors
@@ -982,75 +1004,47 @@ def embedding_neardup_pairs(spark, sf_dir):
 EMBEDDINGS_COLLECT_MAX = 2_000_000
 
 
-def _collect_embeddings(e):
-    """ONE job: the (planted) embedding table collected as an Arrow
-    table — shared by the driver-side signature fold and the verify
-    broadcast, so the near-dup operators scan the embeddings exactly
-    once (broadcast-class: dim x 4 B per vector, up to
+def _collected_sigs(spark, sf_dir, planes):
+    """ONE job: the (planted) embedding table collected to the driver
+    (broadcast-class: dim x 4 B per vector, up to
     ``EMBEDDINGS_COLLECT_MAX`` vectors; the embeddings table is the
     SMALL side of this design at any corpus scale where all-pairs
-    banding is viable)."""
-    return collect_within(
-        e, EMBEDDINGS_COLLECT_MAX, "near-dup embedding table"
-    ).combine_chunks()
-
-
-def _packed_embeddings(tbl):
-    """(sorted vec_id vector, float64 matrix) from the collected
-    table; null embeddings are excluded (their sig is null, so they
-    can never appear in a candidate pair)."""
-    import numpy as np
-
-    packed = sorted(
-        (i, v)
-        for i, v in zip(
-            tbl.column("vec_id").to_pylist(),
-            tbl.column("embedding").to_pylist(),
-        )
-        if v is not None
+    banding is viable), returned as the (vec_id, sig) DataFrame the
+    band join runs over and the (sorted vec_id vector, float64 matrix)
+    pair the verify broadcasts.  Rationale (r07 session 3): the sig
+    kernel subtree re-ran once per self-join side (exchange reuse never
+    fires across mapInArrow subtrees), and the verify already needs
+    this table, so one driver ``_hyperplane_sigs`` over ~20k vectors
+    replaces two distributed kernel passes.  Null embeddings are
+    dropped from both: their sig is null, and a null key joins nothing
+    in an equi-join, so the candidate set is unchanged."""
+    e = _with_planted(read(spark, sf_dir, "embeddings")).select(
+        "vec_id", "embedding"
     )
-    ids_arr = np.array([i for i, _ in packed], dtype=np.int64)
-    mat = np.array([v for _, v in packed], dtype=np.float64)
-    return ids_arr, mat
-
-
-def _driver_sig_rows(tbl, planes):
-    """(vec_id, sig) rows computed by running the SAME
-    ``hyperplane_sig_batches`` kernel code over the collected Arrow
-    batches on the driver — bit-identical signatures by construction.
-    Rationale (r07 session 3): the sig kernel subtree re-ran once per
-    self-join side (exchange reuse never fires across mapInArrow
-    subtrees), and the verify stage already collects this exact table,
-    so one driver fold over ~20k vectors replaces two distributed
-    kernel passes.  Null-sig rows are dropped — a null key joins
-    nothing in an equi-join, so the candidate set is unchanged."""
-    out = []
-    for ob in hyperplane_sig_batches(planes)(tbl.to_batches()):
-        out.extend(
-            (i, s)
-            for i, s in zip(
-                ob.column("vec_id").to_pylist(), ob.column("sig").to_pylist()
-            )
-            if s is not None
-        )
-    return out
+    tbl = collect_within(e, EMBEDDINGS_COLLECT_MAX, "near-dup embedding table")
+    X, valid = embedding_matrix(tbl.column("embedding"), len(planes[0]))
+    ids, X = tbl.column("vec_id").to_numpy()[valid], X[valid]
+    sig = spark.createDataFrame(
+        list(zip(ids.tolist(), _hyperplane_sigs(X, planes).tolist())),
+        "vec_id bigint, sig bigint",
+    )
+    order = _np.argsort(ids, kind="stable")
+    return sig, (ids[order], X[order])
 
 
 def _cosine_pair_verify(spark, packed, pairs):
     """Exact near-dup verify for candidate (vec_a, vec_b) rows: look
     both vectors up in the broadcast float table ``packed`` (from
-    ``_packed_embeddings``) and reproduce the JVM fold arithmetic
-    bit-for-bit: dimension-major accumulation == the sequential
-    ``aggregate(zip_with(...))`` fold, ``>= NEARDUP_MIN_COSINE`` on
+    ``_collected_sigs``) and reproduce the JVM fold arithmetic
+    bit-for-bit (``fold_dot`` == the sequential
+    ``aggregate(zip_with(...))`` fold), ``>= NEARDUP_MIN_COSINE`` on
     the raw double, floor-rounded output only.
 
     r07 session 3: the broadcast is a (sorted id vector, float64
     matrix) pair — numpy buffers unpickle at C-speed (the per-worker
     dict rebuild of 20k arrays cost ~0.5 s x workers), and each batch
     gathers its rows with two fancy-index ops instead of a Python
-    dict-lookup-and-stack loop per pair.  The accumulation lines are
-    UNCHANGED (same expressions, same order -> identical IEEE
-    results)."""
+    dict-lookup-and-stack loop per pair."""
     bc = spark.sparkContext.broadcast(packed)
 
     def verify(it):
@@ -1075,15 +1069,9 @@ def _cosine_pair_verify(spark, packed, pairs):
                 continue
             A = M[idx(batch.column("vec_a"))]
             B = M[idx(batch.column("vec_b"))]
-            n, dim = A.shape
-            dot = np.zeros(n)
-            na = np.zeros(n)
-            nb = np.zeros(n)
-            for i in range(dim):
-                dot = dot + A[:, i] * B[:, i]
-                na = na + A[:, i] * A[:, i]
-                nb = nb + B[:, i] * B[:, i]
-            cos = dot / (np.sqrt(na) * np.sqrt(nb))
+            cos = fold_dot(A, B) / (
+                np.sqrt(fold_dot(A, A)) * np.sqrt(fold_dot(B, B))
+            )
             keep = cos >= NEARDUP_MIN_COSINE
             yield pa.RecordBatch.from_arrays(
                 [
@@ -1308,33 +1296,8 @@ def simhash_band_stats(spark, sf_dir):
     that tells an operator when the band width must grow (at 10^12
     docs: 64-bit fingerprints, 16-bit bands) or exact dedup must run
     first (a giant bucket of identical boilerplate)."""
-    sig = simhash(spark, sf_dir)
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright(F.col("simhash"), b * SIMHASH_BAND_BITS)
-            .bitwiseAND((1 << SIMHASH_BAND_BITS) - 1)
-            .alias("value"),
-        )
-        for b in range(N_SIMHASH_BANDS)
-    ]
-    banded = sig.select(
-        "doc_id", F.explode(F.array(*bands)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.value")
-    sizes = banded.groupBy("band", "value").agg(
-        F.countDistinct("doc_id").alias("n")
-    )
-    pair_mass = (F.col("n") * (F.col("n") - 1) / 2).cast("long")
-    return (
-        sizes.groupBy("band")
-        .agg(
-            F.count("*").cast("long").alias("n_buckets"),
-            F.sum(F.when(F.col("n") > 1, pair_mass).otherwise(0))
-            .cast("long")
-            .alias("candidate_pairs"),
-            F.max("n").cast("long").alias("max_bucket"),
-        )
-        .orderBy("band")
+    return _band_stats(
+        simhash(spark, sf_dir), _simhash_bands(), F.countDistinct("doc_id")
     )
 
 
@@ -1464,72 +1427,25 @@ def _wide_band_value_duck(b: int, band_bits: int) -> str:
     )
 
 
-def simhash_wide_neardup_pairs(spark, sf_dir, band_bits: int = SIMHASH_WIDE_BAND_BITS):
-    """The corpus-scale Hamming-band join: 64-bit fingerprint, 4 bands
-    of ``band_bits`` (default 16) bits — 2^16 buckets per band instead
-    of 2^8, so candidate volume on a diverse corpus is n^2/65536 per
-    band and the log2(n) sizing rule (``recommended_band_bits``) keeps
-    it ~linear up to n ~ 10^5 per width step.  Pigeonhole recall is
-    still EXACT for Hamming distance <= 3 (any such pair agrees on one
-    of the 4 disjoint bands).  Same single-shuffle + window-count +
-    pair-budget ``assert_true`` guard shape as the 8-bit operator."""
-    wide = simhash_wide(spark, sf_dir)
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.expr(_wide_band_value_spark(b, band_bits)).alias("value"),
-        )
+def _wide_bands():
+    """The 4 disjoint 16-bit band values of the 64-bit fingerprint."""
+    return [
+        F.expr(_wide_band_value_spark(b, SIMHASH_WIDE_BAND_BITS))
         for b in range(N_SIMHASH_WIDE_BANDS)
     ]
-    banded = wide.select(
-        "doc_id", "fp_lo", "fp_hi", F.explode(F.array(*bands)).alias("bb")
-    ).select("doc_id", "fp_lo", "fp_hi", "bb.band", "bb.value")
-    sized = banded.withColumn(
-        "n", F.count("*").over(Window.partitionBy("band", "value"))
-    )
-    guarded = sized.filter(
-        F.assert_true(
-            F.col("n") <= SIMHASH_GUARD_MAX,
-            F.concat(
-                F.lit("simhash wide Hamming band (band="),
-                F.col("band").cast("string"),
-                F.lit(", value="),
-                F.col("value").cast("string"),
-                F.lit(f") holds > {SIMHASH_GUARD_MAX} docs (pair budget"
-                      f" {SIMHASH_BUCKET_PAIR_BUDGET} pairs/bucket) — run"
-                      " exact dedup upstream; the fingerprint cannot spread"
-                      " identical content"),
-            ),
-        ).isNull()
-    )
-    buckets = (
-        guarded.filter(F.col("n") > 1)
-        .groupBy("band", "value")
-        .agg(
-            F.sort_array(
-                F.collect_set(F.struct("doc_id", "fp_lo", "fp_hi"))
-            ).alias("members")
-        )
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(members, (x, i) ->"
-                " transform(slice(members, i + 2, size(members)), y ->"
-                " struct(x.doc_id AS doc_a, y.doc_id AS doc_b,"
-                " x.fp_lo AS lo_a, x.fp_hi AS hi_a,"
-                " y.fp_lo AS lo_b, y.fp_hi AS hi_b))))"
-            )
-        ).alias("p")
-    ).select("p.*").distinct()
-    return (
-        pairs.withColumn(
-            "hamming",
-            F.expr("bit_count(lo_a ^ lo_b) + bit_count(hi_a ^ hi_b)").cast("int"),
-        )
-        .filter(F.col("hamming") <= SIMHASH_WIDE_MAX_HAMMING)
-        .select("doc_a", "doc_b", "hamming")
-    )
+
+
+def simhash_wide_neardup_pairs(spark, sf_dir):
+    """The corpus-scale Hamming-band join: 64-bit fingerprint, 4 bands
+    of 16 bits — 2^16 buckets per band instead of 2^8, so candidate
+    volume on a diverse corpus is n^2/65536 per band and the log2(n)
+    sizing rule (``recommended_band_bits``) keeps it ~linear up to
+    n ~ 10^5 per width step.  Pigeonhole recall is still EXACT for
+    Hamming distance <= 3 (any such pair agrees on one of the 4
+    disjoint bands).  Same ``_hamming_band_pairs`` join, guard and
+    kernel as the 8-bit operator; the kernel sums the two words'
+    popcounts."""
+    return _hamming_band_pairs(simhash_wide(spark, sf_dir), _wide_bands())
 
 
 def _simhash_wide_neardup_sql() -> str:
@@ -1561,36 +1477,10 @@ def simhash_wide_band_stats(spark, sf_dir):
     the largest bucket — the dashboard that shows the log2(n) width
     rule holding (compare ``candidate_pairs`` against the 8-bit audit
     on the same corpus) and tells an operator when exact dedup must
-    run first."""
-    wide = simhash_wide(spark, sf_dir)
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.expr(
-                _wide_band_value_spark(b, SIMHASH_WIDE_BAND_BITS)
-            ).alias("value"),
-        )
-        for b in range(N_SIMHASH_WIDE_BANDS)
-    ]
-    banded = wide.select(
-        "doc_id", F.explode(F.array(*bands)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.value")
-    # (band, value, doc_id) is unique by construction (one fingerprint
-    # row per doc), so plain count == distinct count without the
-    # two-phase distinct aggregation
-    sizes = banded.groupBy("band", "value").agg(F.count("*").alias("n"))
-    pair_mass = (F.col("n") * (F.col("n") - 1) / 2).cast("long")
-    return (
-        sizes.groupBy("band")
-        .agg(
-            F.count("*").cast("long").alias("n_buckets"),
-            F.sum(F.when(F.col("n") > 1, pair_mass).otherwise(0))
-            .cast("long")
-            .alias("candidate_pairs"),
-            F.max("n").cast("long").alias("max_bucket"),
-        )
-        .orderBy("band")
-    )
+    run first.  (band, value, doc_id) is unique by construction (one
+    fingerprint row per doc), so plain count == distinct count without
+    the two-phase distinct aggregation."""
+    return _band_stats(simhash_wide(spark, sf_dir), _wide_bands(), F.count("*"))
 
 
 def _simhash_wide_band_stats_sql() -> str:
@@ -1651,13 +1541,7 @@ def embedding_neardup_pairs_wide(spark, sf_dir):
     was most of the old 8.5 s)."""
     from .similarity import WIDE_HYPERPLANES
 
-    e = _with_planted(read(spark, sf_dir, "embeddings")).select(
-        "vec_id", "embedding"
-    )
-    tbl = _collect_embeddings(e)
-    sig = spark.createDataFrame(
-        _driver_sig_rows(tbl, WIDE_HYPERPLANES), "vec_id bigint, sig bigint"
-    )
+    sig, packed = _collected_sigs(spark, sf_dir, WIDE_HYPERPLANES)
     bands = [
         F.struct(
             F.lit(b).alias("band"),
@@ -1682,7 +1566,7 @@ def embedding_neardup_pairs_wide(spark, sf_dir):
         )
         .dropDuplicates(["vec_a", "vec_b"])
     )
-    return _cosine_pair_verify(spark, _packed_embeddings(tbl), cand)
+    return _cosine_pair_verify(spark, packed, cand)
 
 
 def _neardup_wide_sql() -> str:

@@ -1,6 +1,6 @@
 """The Python boundary of the corpus operators: the shared per-document
-primitives, the one ``(doc_id, text)`` Arrow-kernel wrapper, and the
-one bounded driver collect.
+primitives, the vector primitives, the one ``(doc_id, text)``
+Arrow-kernel wrapper, and the one bounded driver collect.
 
 Kernels (the word/shingle/chunk -> md5 -> integer pipelines) are
 per-document independent, so each runs as one ``mapInArrow`` stage:
@@ -18,6 +18,14 @@ in both engines); zero words yield simhash 0 / the md5('') shingle,
 matching the array forms.  Memory per batch is bounded: Arrow ships
 <= 512 docs per batch (session.py) and the per-bit reductions use one
 cumsum buffer over the batch's words, never an n_words x 32 matrix.
+
+Vector primitives (the embedding kernels):
+``embedding_matrix`` unpacks an Arrow ``list<float|double>`` column
+into an (n, dim) float64 matrix plus its validity mask, and
+``fold_dot`` is the exact sequential-fold dot product that the cosine,
+hyperplane-signature and IVF-argmax kernels share with the JVM
+``aggregate(zip_with(...))`` forms.  Ragged rows and null elements
+raise instead of taking a slower path with different results.
 """
 
 from __future__ import annotations
@@ -97,6 +105,55 @@ def null_safe_i64(values, texts):
     if any(t is None for t in texts):
         return [None if t is None else int(v) for t, v in zip(texts, values)]
     return values
+
+
+# -- vector primitives -----------------------------------------------------
+
+
+def embedding_matrix(col, dim=None):
+    """(X, valid) for an Arrow ``list<float|double>`` column: the rows
+    as an (n, dim) float64 matrix (zeros on null rows) and the boolean
+    mask of non-null rows.  ``dim`` defaults to the first non-null
+    row's length.  A non-null row of another length, or one holding a
+    null element, raises ValueError naming the row."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
+    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if dim is None:
+        dim = int(lens[valid][0]) if valid.any() else 0
+    bad = np.flatnonzero(valid & (lens != dim))
+    if len(bad):
+        r = bad[0]
+        raise ValueError(f"embedding row {r} has {lens[r]} values, expected {dim}")
+    flat = col.flatten()
+    if flat.null_count:
+        r = pc.list_parent_indices(col).to_numpy()[
+            flat.is_null().to_numpy(zero_copy_only=False)
+        ][0]
+        raise ValueError(f"embedding row {r} holds a null element")
+    X = np.zeros((len(col), dim))
+    X[valid] = flat.to_numpy(zero_copy_only=False).reshape(int(valid.sum()), dim)
+    return X, valid
+
+
+def fold_dot(A, B):
+    """``acc = acc + A[..., i] * B[..., i]`` over the last axis from
+    ``acc = 0.0``, broadcasting the leading axes: the sequential left
+    fold of Spark's ``aggregate(zip_with(...), 0D, (acc, v) -> acc + v)``
+    bit for bit, because every numpy elementwise op is one correctly
+    rounded IEEE double op applied in the same order.  Row . vector is
+    ``fold_dot(X, v)``; every row against every cell is
+    ``fold_dot(X[:, None, :], C[None, :, :])``."""
+    if A.shape[-1] != B.shape[-1]:
+        raise ValueError(f"fold_dot: dimension {A.shape[-1]} != {B.shape[-1]}")
+    acc = np.zeros(np.broadcast_shapes(A.shape[:-1], B.shape[:-1]))
+    for i in range(A.shape[-1]):
+        acc = acc + A[..., i] * B[..., i]
+    return acc
 
 
 # -- the kernel wrapper ----------------------------------------------------

@@ -9,10 +9,11 @@ would execute cluster-wide with the cell as partition key.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from .common import read
-from .kernels import collect_within, map_arrow
+from .kernels import collect_within, embedding_matrix, fold_dot, map_arrow
 
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -27,107 +28,62 @@ QUERY_VEC_ID = 0
 TOP_K = 10
 
 
-def _query_cosine_batches(q_rows):
+def _query_cosine_batches(q_ids, Q):
     """mapInArrow factory: per corpus vector, the exact cosine against
-    each collected (q_id, qvec) — dimension-major numpy accumulation ==
-    the sequential ``aggregate(zip_with(...))`` fold bit-for-bit (the
-    interpreted HOF chain this replaces).  Emits one output row per
-    (input row, query); ragged/null rows fall back to scalar folds."""
+    each collected query (ids ``q_ids``, rows of ``Q``) — ``fold_dot``
+    == the sequential ``aggregate(zip_with(...))`` fold bit-for-bit
+    (the interpreted HOF chain this replaces).  Emits one output batch
+    per (input batch, query); null embeddings get a null cosine."""
+    qnorm = np.sqrt(fold_dot(Q, Q))
 
     def batches(it):
-        import math
-
-        import numpy as np
         import pyarrow as pa
 
-        qs = []
-        for qid, v in q_rows:
-            qv = np.asarray(v, dtype=np.float64)
-            acc = 0.0
-            for x in qv:
-                acc = acc + x * x
-            qs.append((qid, qv, math.sqrt(acc)))
-        dim = len(qs[0][1]) if qs else 0
         for batch in it:
-            col = batch.column("embedding")
-            n = len(col)
+            n = batch.num_rows
             if n == 0:
                 continue
-            vec_ids = batch.column("vec_id")
-            labels = batch.column("label")
-            lens = np.diff(col.offsets.to_numpy(zero_copy_only=False))
-            if col.null_count == 0 and (lens == dim).all():
-                X = (
-                    col.flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.float64)
-                    .reshape(n, dim)
+            X, valid = embedding_matrix(batch.column("embedding"), Q.shape[1])
+            enorm = np.sqrt(fold_dot(X, X))
+            dots = fold_dot(X[:, None, :], Q[None, :, :])
+            for j, qid in enumerate(q_ids):
+                cos = dots[:, j] / (enorm * qnorm[j])
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array([qid] * n, type=pa.int64()),
+                        batch.column("vec_id"),
+                        batch.column("label"),
+                        pa.array(cos, type=pa.float64(), mask=~valid),
+                    ],
+                    ["q_id", "vec_id", "label", "cosine_raw"],
                 )
-                acc = np.zeros(n)
-                for i in range(dim):
-                    acc = acc + X[:, i] * X[:, i]
-                enorm = np.sqrt(acc)
-                for qid, qv, qn in qs:
-                    dot = np.zeros(n)
-                    for i in range(dim):
-                        dot = dot + X[:, i] * qv[i]
-                    cos = dot / (enorm * qn)
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array([qid] * n, type=pa.int64()),
-                            vec_ids,
-                            labels,
-                            pa.array(cos, type=pa.float64()),
-                        ],
-                        ["q_id", "vec_id", "label", "cosine_raw"],
-                    )
-            else:
-                rows = col.to_pylist()
-                for qid, qv, qn in qs:
-                    out = []
-                    for row in rows:
-                        if row is None:
-                            out.append(None)
-                            continue
-                        acc = 0.0
-                        d = 0.0
-                        for x, y in zip(row, qv):
-                            xf = float(x)
-                            acc = acc + xf * xf
-                            d = d + xf * y
-                        out.append(d / (math.sqrt(acc) * qn))
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array([qid] * n, type=pa.int64()),
-                            vec_ids,
-                            labels,
-                            pa.array(out, type=pa.float64()),
-                        ],
-                        ["q_id", "vec_id", "label", "cosine_raw"],
-                    )
 
     return batches
 
 
-def _query_vecs(e, pred, cap) -> list:
-    """Collected (vec_id, doubles) query rows — the same rows every
-    prior plan collected inside ``F.broadcast(q)``; more than ``cap``
-    (the caller's query count) raises."""
+def _dense_rows(tbl, key, vectors, what):
+    """(keys, matrix) of a collected table whose ``vectors`` column must
+    hold no null row (query vectors, centroids)."""
+    X, valid = embedding_matrix(tbl.column(vectors))
+    if not valid.all():
+        raise ValueError(f"{what}: null vector")
+    return tbl.column(key).to_pylist(), X
+
+
+def _query_vecs(e, pred, cap):
+    """(q_ids, Q): the collected query rows — the same rows every prior
+    plan collected inside ``F.broadcast(q)``; more than ``cap`` (the
+    caller's query count) raises."""
     tbl = collect_within(
         e.filter(pred).select("vec_id", "embedding"), cap, "ANN query vectors"
     )
-    return [
-        (i, [float(x) for x in v])
-        for i, v in zip(
-            tbl.column("vec_id").to_pylist(), tbl.column("embedding").to_pylist()
-        )
-    ]
+    return _dense_rows(tbl, "vec_id", "embedding", "ANN query vectors")
 
 
-def _scored_against_queries(e, q_rows, corpus_pred):
+def _scored_against_queries(e, queries, corpus_pred):
     return map_arrow(
         e.filter(corpus_pred).select("vec_id", "label", "embedding"),
-        _query_cosine_batches(q_rows),
+        _query_cosine_batches(*queries),
         "q_id bigint, vec_id bigint, label int, cosine_raw double",
     )
 
@@ -138,8 +94,8 @@ def ann_bruteforce_topk(spark, sf_dir):
     is the Arrow kernel's exact fold instead of an interpreted HOF
     chain; ordering/limit/rounding stay in the JVM plan."""
     e = read(spark, sf_dir, "embeddings")
-    q_rows = _query_vecs(e, F.col("vec_id") == QUERY_VEC_ID, 1)
-    scored = _scored_against_queries(e, q_rows, F.col("vec_id") != QUERY_VEC_ID)
+    queries = _query_vecs(e, F.col("vec_id") == QUERY_VEC_ID, 1)
+    scored = _scored_against_queries(e, queries, F.col("vec_id") != QUERY_VEC_ID)
     return (
         scored.orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
         .limit(TOP_K)
@@ -238,10 +194,10 @@ _ASSIGN_EXPR = (
 )
 
 
-def _seed_centroid_rows(e, k: int) -> list:
-    """The k hash-ranked seed vectors as driver-side (cell, centroid)
-    rows.  The collect is broadcast-class by construction: the OLD plan
-    already collected this exact table to the driver inside
+def _seed_centroid_rows(e, k: int):
+    """The k hash-ranked seed vectors as driver-side (cell ids,
+    centroid matrix).  The collect is broadcast-class by construction:
+    the OLD plan already collected this exact table to the driver inside
     ``F.broadcast(cents_arr)`` — k ~ sqrt(n) rows x dim doubles (~16 MB
     at 10^9 vectors), bounded by MAX_IVF_CELLS."""
     from pyspark.sql import Window
@@ -264,44 +220,21 @@ def _seed_centroid_rows(e, k: int) -> list:
     return _collect_centroid_rows(seeds)
 
 
-def _collect_centroid_rows(cents_df) -> list:
-    """(cell, centroid) rows of a ``_cell_centroids`` output, collected
-    driver-side and cell-sorted.  Same broadcast-class size argument as
-    ``_seed_centroid_rows`` (at most ``MAX_IVF_CELLS`` rows; more
-    raises) — this is the table every prior plan shipped through
+def _collect_centroid_rows(cents_df):
+    """(cell ids, centroid matrix) of a ``_cell_centroids`` output,
+    collected driver-side and cell-sorted.  Same broadcast-class size
+    argument as ``_seed_centroid_rows`` (at most ``MAX_IVF_CELLS`` rows;
+    more raises) — this is the table every prior plan shipped through
     ``F.broadcast``; collecting it instead lets the argmax assignment
     run as a numpy kernel rather than an interpreted
     higher-order-function chain."""
     tbl = collect_within(
         cents_df.select("cell", "centroid"), MAX_IVF_CELLS, "IVF centroid table"
     )
-    return sorted(
-        zip(tbl.column("cell").to_pylist(), tbl.column("centroid").to_pylist()),
-        key=lambda cv: cv[0],
-    )
+    return _dense_rows(tbl.sort_by("cell"), "cell", "centroid", "IVF centroid table")
 
 
-def _fold_dot(x, y) -> float:
-    """Sequential left-fold dot product — bit-identical to Spark's
-    ``aggregate(zip_with(...), 0D, (acc, v) -> acc + v)`` (and DuckDB's
-    ``list_reduce``): Python floats are IEEE doubles with correctly
-    rounded ops, added in the same order."""
-    acc = 0.0
-    for a, b in zip(x, y):
-        acc = acc + float(a) * float(b)
-    return acc
-
-
-def _fold_norm(x) -> float:
-    import math
-
-    acc = 0.0
-    for a in x:
-        acc = acc + float(a) * float(a)
-    return math.sqrt(acc)
-
-
-def _assign_kernel(e, cent_rows: list):
+def _assign_kernel(e, cents):
     """argmax-cosine cell assignment as ONE mapInArrow stage
     (optimization guide §4.2): the JVM form ran
     ``array_max(transform(cents, ...))`` — higher-order functions are
@@ -309,18 +242,15 @@ def _assign_kernel(e, cent_rows: list):
     64-element fold (measured 47 s for 20k vectors x 141 cells at
     local[32]; this kernel: < 1 s).
 
-    Bit-exactness contract (the oracle SQL is unchanged): the cosine is
-    accumulated dimension-by-dimension over the whole batch —
-    ``acc = acc + x_i * c_i`` per dimension — which reproduces the
-    sequential left-fold of ``aggregate(zip_with(...))`` exactly (each
-    elementwise numpy op is a correctly rounded IEEE double op, applied
-    in the same order).  The argmax update iterates cells in ascending
-    order requiring a STRICT improvement, which reproduces the
-    ``max(struct(cc, -cell))`` tie-break (lowest cell wins equal
-    cosines) and Spark's NaN-greatest double ordering (the isnan
-    clause).  Null embeddings yield null cells, matching
+    Bit-exactness contract (the oracle SQL is unchanged): every cosine
+    term is a ``fold_dot``, which reproduces the sequential left-fold
+    of ``aggregate(zip_with(...))`` exactly.  The argmax update
+    iterates cells in ascending order requiring a STRICT improvement,
+    which reproduces the ``max(struct(cc, -cell))`` tie-break (lowest
+    cell wins equal cosines) and Spark's NaN-greatest double ordering
+    (the isnan clause).  Null embeddings yield null cells, matching
     ``transform(NULL) -> NULL`` propagation."""
-    bc = e.sparkSession.sparkContext.broadcast(cent_rows)
+    bc = e.sparkSession.sparkContext.broadcast(cents)
     dtypes = dict(e.dtypes)
     schema = (
         f"vec_id {dtypes['vec_id']}, label {dtypes['label']},"
@@ -328,70 +258,30 @@ def _assign_kernel(e, cent_rows: list):
     )
 
     def batches(it):
-        import numpy as np
         import pyarrow as pa
 
-        cents = bc.value
-        cell_ids = [c for c, _ in cents]
-        cmat = np.array([v for _, v in cents], dtype=np.float64)
-        cnorm = np.array([_fold_norm(v) for _, v in cents])
-        dim = cmat.shape[1] if len(cents) else 0
+        cell_ids, C = bc.value
+        cnorm = np.sqrt(fold_dot(C, C))
         for batch in it:
-            col = batch.column("embedding")
-            n = len(col)
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            lens = (
-                np.diff(col.offsets.to_numpy(zero_copy_only=False))
-                if n
-                else np.array([], dtype=np.int64)
-            )
-            if col.null_count == 0 and len(lens) and (lens == dim).all():
-                flat = col.flatten().to_numpy(zero_copy_only=False)
-                X = flat.astype(np.float64).reshape(n, dim)
-                acc = np.zeros(n)
-                for i in range(dim):
-                    acc = acc + X[:, i] * X[:, i]
-                enorm = np.sqrt(acc)
-                # dot of every row with every cell, dimension-major so
-                # each scalar add chain matches the sequential fold
-                dots = np.zeros((n, len(cents)))
-                for i in range(dim):
-                    dots = dots + X[:, i : i + 1] * cmat[None, :, i]
-                best_cc = dots[:, 0] / (enorm * cnorm[0])
-                best_cell = np.full(n, cell_ids[0], dtype=np.int64)
-                for j in range(1, len(cents)):
-                    cc = dots[:, j] / (enorm * cnorm[j])
-                    better = (cc > best_cc) | (
-                        np.isnan(cc) & ~np.isnan(best_cc)
-                    )
-                    best_cell = np.where(better, cell_ids[j], best_cell)
-                    best_cc = np.where(better, cc, best_cc)
-                cell_arr = pa.array(best_cell, type=pa.int32())
-            else:
-                # ragged / null fallback: exact scalar folds per row
-                out = []
-                for row in col.to_pylist():
-                    if row is None:
-                        out.append(None)
-                        continue
-                    en = _fold_norm(row)
-                    bc_cc, bc_cell = None, None
-                    for (cid, cv), cn in zip(cents, cnorm):
-                        d = _fold_dot(row, cv)
-                        cc = d / (en * cn)
-                        if bc_cell is None or cc > bc_cc or (
-                            cc != cc and bc_cc == bc_cc
-                        ):
-                            bc_cc, bc_cell = cc, cid
-                    out.append(bc_cell)
-                cell_arr = pa.array(out, type=pa.int32())
+            col = batch.column("embedding")
+            X, valid = embedding_matrix(col, C.shape[1])
+            enorm = np.sqrt(fold_dot(X, X))
+            dots = fold_dot(X[:, None, :], C[None, :, :])
+            best_cc = dots[:, 0] / (enorm * cnorm[0])
+            best_cell = np.full(len(X), cell_ids[0], dtype=np.int64)
+            for j in range(1, len(cell_ids)):
+                cc = dots[:, j] / (enorm * cnorm[j])
+                better = (cc > best_cc) | (np.isnan(cc) & ~np.isnan(best_cc))
+                best_cell = np.where(better, cell_ids[j], best_cell)
+                best_cc = np.where(better, cc, best_cc)
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("vec_id"),
                     batch.column("label"),
-                    batch.column("embedding"),
-                    cell_arr,
+                    col,
+                    pa.array(best_cell, type=pa.int32(), mask=~valid),
                 ],
                 ["vec_id", "label", "embedding", "cell"],
             )
@@ -521,33 +411,32 @@ FROM m
 N_PROBES = 3
 
 
-def _probe_cells(cent_rows: list, qvec: list, n_probes: int) -> list:
+def _probe_cells(cents, qvec, n_probes: int) -> list:
     """Top-``n_probes`` cells by query cosine, computed driver-side over
-    the (broadcast-class) collected centroid rows.  Replicates the JVM
-    probe ordering exactly: the same sequential folds (``_fold_dot`` /
-    ``_fold_norm`` == ``aggregate(zip_with(...))``), DESC by cosine with
-    NaN greatest (Spark double ordering), ties broken by ASC cell."""
+    the (broadcast-class) collected centroids.  Replicates the JVM
+    probe ordering exactly: the same sequential folds (``fold_dot`` ==
+    ``aggregate(zip_with(...))``), DESC by cosine with NaN greatest
+    (Spark double ordering), ties broken by ASC cell."""
     import math
 
-    qnorm = _fold_norm(qvec)
-    scored = []
-    for cell, cv in cent_rows:
-        cc = _fold_dot(cv, qvec) / (_fold_norm(cv) * qnorm)
-        scored.append((cell, cc))
-    scored.sort(
+    cell_ids, C = cents
+    cc = fold_dot(C, qvec) / (np.sqrt(fold_dot(C, C)) * np.sqrt(fold_dot(qvec, qvec)))
+    scored = sorted(
+        zip(cell_ids, cc.tolist()),
         key=lambda t: (
             0 if math.isnan(t[1]) else 1,
             0.0 if math.isnan(t[1]) else -t[1],
             t[0],
-        )
+        ),
     )
     return [cell for cell, _ in scored[:n_probes]]
 
 
-def _query_vec(e) -> list:
-    """The query embedding as driver-side doubles (single-row collect —
-    the same row every prior plan collected inside ``F.broadcast(q)``)."""
-    return _query_vecs(e, F.col("vec_id") == QUERY_VEC_ID, 1)[0][1]
+def _query_vec(e):
+    """The query embedding as a driver-side float64 vector (single-row
+    collect — the same row every prior plan collected inside
+    ``F.broadcast(q)``)."""
+    return _query_vecs(e, F.col("vec_id") == QUERY_VEC_ID, 1)[1][0]
 
 
 def ann_ivf_topk(spark, sf_dir):
@@ -565,8 +454,8 @@ def ann_ivf_topk(spark, sf_dir):
     e = read(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     k = recommended_ivf_cells(e.count())
     assigned = _seed_assignment(e, k)
-    cent_rows = _collect_centroid_rows(_cell_centroids(assigned))
-    best = _probe_cells(cent_rows, _query_vec(e), N_PROBES)
+    cents = _collect_centroid_rows(_cell_centroids(assigned))
+    best = _probe_cells(cents, _query_vec(e), N_PROBES)
     q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qvec")
     )
@@ -661,10 +550,10 @@ def ann_ivf_refined_topk(spark, sf_dir):
         # re-executed every earlier interpreted assignment once per
         # consumer (the whole query measured 250 s at 20k vectors;
         # now ~8 s).
-        cent_rows = _collect_centroid_rows(_cell_centroids(assigned))
-        assigned = _assign_kernel(e, cent_rows)
-    cent_rows = _collect_centroid_rows(_cell_centroids(assigned))
-    best = _probe_cells(cent_rows, _query_vec(e), N_PROBES_REFINED)
+        cents = _collect_centroid_rows(_cell_centroids(assigned))
+        assigned = _assign_kernel(e, cents)
+    cents = _collect_centroid_rows(_cell_centroids(assigned))
+    best = _probe_cells(cents, _query_vec(e), N_PROBES_REFINED)
     q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qvec")
     )
@@ -785,7 +674,7 @@ def _sig_expr_duck(vec: str, planes=None) -> str:
 
 def _hyperplane_sig_df(spark, sf_dir, planes):
     """(vec_id, label, embedding, sig) via the Arrow signature kernel
-    (dedup.hyperplane_sig_batches with embedding pass-through) over a
+    (dedup.hyperplane_sig_batches) over a
     spread scan — bit-identical signatures to ``_sig_expr_spark``."""
     from .common import spread
     from .dedup import hyperplane_sig_batches
@@ -796,7 +685,7 @@ def _hyperplane_sig_df(spark, sf_dir, planes):
     )
     return map_arrow(
         e,
-        hyperplane_sig_batches(planes, keep_embedding=True),
+        hyperplane_sig_batches(planes),
         "vec_id bigint, label int, embedding array<float>, sig bigint",
     )
 

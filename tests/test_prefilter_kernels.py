@@ -131,50 +131,29 @@ def test_prefilter_long_string_id_does_not_alias(spark):
         out.collect()
 
 
-def _brute_hamming_pairs(members):
-    """Reference: all pairs with popcount(xor) <= SIMHASH_MAX_HAMMING,
-    doc_a < doc_b in member (sorted) order."""
+def _brute_hamming_pairs(members, words):
+    """Reference: all pairs whose popcount(xor) summed over the
+    fingerprint ``words`` is <= SIMHASH_MAX_HAMMING, doc_a < doc_b in
+    member (sorted) order; members with a null word are skipped."""
     out = []
-    live = [(m["doc_id"], m["simhash"]) for m in members if m["simhash"] is not None]
+    live = [m for m in members if all(m[w] is not None for w in words)]
     for i in range(len(live)):
         for j in range(i + 1, len(live)):
-            h = bin(live[i][1] ^ live[j][1]).count("1")
+            h = sum(bin(live[i][w] ^ live[j][w]).count("1") for w in words)
             if h <= SIMHASH_MAX_HAMMING:
-                out.append((live[i][0], live[j][0], h))
+                out.append((live[i]["doc_id"], live[j]["doc_id"], h))
     return out
 
 
-def test_bucket_hamming_chunking_matches_bruteforce():
-    """A bucket big enough to engage the row-chunk loop (n^2 > the 4M
-    slot budget) produces exactly the brute-force pair set — chunk
-    boundaries lose no pairs and duplicate none."""
-    rng = np.random.default_rng(3)
-    n = 2200  # n^2 = 4.84M slots -> 2+ chunks
-    # cluster fingerprints so qualifying pairs exist across the bucket
-    centers = rng.integers(0, 1 << 32, size=12, dtype=np.uint64)
-    fps = []
-    for i in range(n):
-        c = int(centers[i % 12])
-        if i % 3:
-            c ^= 1 << int(rng.integers(0, 32))  # hamming 1 from center
-        fps.append(c)
-    members = [
-        {"doc_id": i, "simhash": fp} for i, fp in enumerate(fps)
-    ]
-    members[100]["simhash"] = None  # null-fingerprint member skipped
-    batch = pa.RecordBatch.from_arrays(
-        [
-            pa.array(
-                [members],
-                type=pa.list_(
-                    pa.struct(
-                        [("doc_id", pa.int64()), ("simhash", pa.int64())]
-                    )
-                ),
-            )
-        ],
-        ["members"],
+def _members_batch(members, words):
+    """One bucket row: ``members`` as list<struct<doc_id, *words>>."""
+    fields = [("doc_id", pa.int64())] + [(w, pa.int64()) for w in words]
+    return pa.RecordBatch.from_arrays(
+        [pa.array([members], type=pa.list_(pa.struct(fields)))], ["members"]
     )
+
+
+def _hamming_pairs(batch):
     got = []
     for ob in _bucket_hamming_batches([batch]):
         got.extend(
@@ -184,6 +163,43 @@ def test_bucket_hamming_chunking_matches_bruteforce():
                 ob.column("hamming").to_pylist(),
             )
         )
-    want = _brute_hamming_pairs(members)
-    assert sorted(got) == sorted(want)
-    assert len(want) > 1000  # the cluster design must yield real mass
+    return got
+
+
+def test_bucket_hamming_chunking_matches_bruteforce():
+    """A bucket big enough to engage the row-chunk loop (n^2 > the 4M
+    slot budget) produces exactly the brute-force pair set — chunk
+    boundaries lose no pairs and duplicate none — for the 32-bit
+    ``simhash`` members and for the two-word (fp_lo, fp_hi) 64-bit
+    members of the wide operator."""
+    for words in (("simhash",), ("fp_lo", "fp_hi")):
+        bits = 32 * len(words)
+        rng = np.random.default_rng(3)
+        n = 2200  # n^2 = 4.84M slots -> 2+ chunks
+        # cluster fingerprints so qualifying pairs exist across the bucket
+        centers = rng.integers(0, 1 << bits, size=12, dtype=np.uint64)
+        fps = []
+        for i in range(n):
+            c = int(centers[i % 12])
+            if i % 3:
+                c ^= 1 << int(rng.integers(0, bits))  # hamming 1 from center
+            fps.append(c)
+        # word k holds fingerprint bits [32k, 32k + 32)
+        members = [
+            {"doc_id": i, **{w: fp >> 32 * k & 0xFFFFFFFF for k, w in enumerate(words)}}
+            for i, fp in enumerate(fps)
+        ]
+        members[100][words[-1]] = None  # null-fingerprint member skipped
+        got = _hamming_pairs(_members_batch(members, words))
+        want = _brute_hamming_pairs(members, words)
+        assert sorted(got) == sorted(want)
+        assert len(want) > 1000  # the cluster design must yield real mass
+
+
+@pytest.mark.parametrize("word", [-1, 1 << 32])
+def test_bucket_hamming_rejects_word_outside_uint32(word):
+    """A fingerprint word the uint32 XOR cannot hold raises instead of
+    wrapping silently onto another fingerprint."""
+    members = [{"doc_id": 0, "simhash": 5}, {"doc_id": 1, "simhash": word}]
+    with pytest.raises(ValueError, match="outside"):
+        _hamming_pairs(_members_batch(members, ("simhash",)))
