@@ -190,9 +190,8 @@ def _bucket_hamming_batches(it):
     words (every other field); its Hamming distance is the sum of the
     per-word popcounts, and a word outside [0, 2^32) raises ValueError
     instead of wrapping.  Members arrive sorted (sort_array upstream),
-    so emitted pairs keep doc_a < doc_b exactly like the lambda form;
-    members with a null word are skipped (the lambda form paired them
-    and then dropped the null hamming).
+    so emitted pairs keep doc_a < doc_b; members with a null word are
+    skipped (their Hamming distance is null, so no such pair qualifies).
 
     r07 session 3 (measured: the synthetic corpus concentrates 200k
     banded rows into <1k buckets — 189M pair slots, max bucket 3404):
