@@ -1,6 +1,9 @@
 """The Python boundary of the corpus operators: the shared per-document
 primitives, the vector primitives, the one ``(doc_id, text)``
-Arrow-kernel wrapper, and the one bounded driver collect.
+Arrow-kernel wrapper, and the one bounded driver collect.  Every
+kernel stage goes through ``pipeline.session.map_arrow`` (re-exported
+here), which ships the package and installs the worker's zip re-read
+guard before the kernel runs.
 
 Kernels (the word/shingle/chunk -> md5 -> integer pipelines) are
 per-document independent, so each runs as one ``mapInArrow`` stage:
@@ -35,6 +38,7 @@ from hashlib import md5
 
 import numpy as np
 
+from ..pipeline.session import map_arrow
 from .common import read, spread
 
 _ASCII_STRIP = re.compile("[^a-zA-Z0-9 ]")
@@ -165,15 +169,6 @@ def docs(spark, sf_dir):
     one scan split -> a single Python worker would run the whole stage;
     measured 3.0 s single-task vs ~0.8 s spread at sf1.0/local[32])."""
     return spread(spark, read(spark, sf_dir, "documents").select("doc_id", "text"))
-
-
-def map_arrow(df, fn, ddl):
-    """``df.mapInArrow(fn, ddl)`` with the package shipped to the
-    executor Python workers first."""
-    from ..pipeline.session import ensure_package_on_workers
-
-    ensure_package_on_workers(df.sparkSession)
-    return df.mapInArrow(fn, ddl)
 
 
 def map_docs(spark, df, fn, out_ddl):

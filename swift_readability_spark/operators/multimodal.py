@@ -70,7 +70,7 @@ def media_decode_stub(spark, sf_dir):
     in, feature rows out.  This is the exact plumbing a real
     decode/resize/frame-sample stage uses — swap ``_fake_decode`` for
     the codec call on a cluster with codecs installed."""
-    from ..pipeline.session import ensure_package_on_workers
+    from ..pipeline.session import ensure_package_on_workers, on_worker
 
     ensure_package_on_workers(spark)
     d = read(spark, sf_dir, "documents").select(
@@ -91,7 +91,7 @@ def media_decode_stub(spark, sf_dir):
                 }
             )
 
-    return d.mapInPandas(decode_batches, _DECODE_SCHEMA)
+    return d.mapInPandas(on_worker(decode_batches), _DECODE_SCHEMA)
 
 
 # the stub arithmetic is SQL-expressible, so even the Pandas stage gets
@@ -133,7 +133,7 @@ def media_frame_sample(spark, sf_dir):
     the byte at the sampled offset (deterministic stand-in — no video
     codecs in this container); the Spark-side batch shape, exploded
     output schema, and partition behavior are the real thing."""
-    from ..pipeline.session import ensure_package_on_workers
+    from ..pipeline.session import ensure_package_on_workers, on_worker
 
     ensure_package_on_workers(spark)
     d = read(spark, sf_dir, "documents").select(
@@ -167,7 +167,7 @@ def media_frame_sample(spark, sf_dir):
                 }
             )
 
-    return d.mapInPandas(sample_batches, _FRAME_SCHEMA)
+    return d.mapInPandas(on_worker(sample_batches), _FRAME_SCHEMA)
 
 
 # ASCII corpus: byte at offset == ascii(char at offset+1)

@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from .session import map_arrow
+
 SPAN_STRUCT = T.StructType(
     [
         T.StructField("kind", T.StringType()),
@@ -177,13 +179,9 @@ def plan_extraction(
     are consumed directly — zero Exchange in the plan.  At 100 TB this
     removes the single largest data movement of the job.
     """
-    from .session import ensure_package_on_workers
-
-    ensure_package_on_workers(df.sparkSession)
-
     if not assume_pre_partitioned:
         df = route_for_extraction(df, n_partitions)
-    extracted = df.mapInArrow(make_extract_batches(base_url, options), _KERNEL_SCHEMA)
+    extracted = map_arrow(df, make_extract_batches(base_url, options), _KERNEL_SCHEMA)
     return (
         with_partition_key(extracted, n_partitions)
         .withColumn("run_id", F.lit(run_id))

@@ -12,6 +12,11 @@ local[N]):
   at cluster scale).
 - parquet maxPartitionBytes left at 128 MB: scan tasks stay
   executor-memory-sized at any corpus size.
+
+The package's Python stages all enter the executors through
+:func:`map_arrow` (or :func:`on_worker` for ``mapInPandas``), which
+ships the package and installs :func:`install_zip_reread_guard` in
+each worker before the stage's function runs.
 """
 
 from __future__ import annotations
@@ -61,6 +66,73 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
             zf.write(py, py.relative_to(pkg_dir.parent))
     spark.sparkContext.addPyFile(zip_name)
     spark.conf.set(marker, "1")
+
+
+def install_zip_reread_guard() -> None:
+    """Stop ``importlib.invalidate_caches()`` from re-reading unchanged
+    zip archives in this process.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task, and CPython 3.11's ``zipimporter.invalidate_caches``
+    re-reads the archive's whole zip directory in pure Python each time.
+    A worker holds a dozen importers on ``pyspark.zip`` (~1.3k entries)
+    and two on the Spark core jar (~5.4k), so every task paid
+    0.15-0.22 s before it saw its first batch.
+
+    The guard re-reads an archive only when its ``(st_mtime_ns,
+    st_size)`` differs from the last read or ``stat`` fails; otherwise
+    the importer keeps the directory already in zipimport's cache.  The
+    archives cached when the guard goes in count as read at that moment
+    (in a worker, the task's own ``invalidate_caches`` has just read
+    them).  A rewritten archive is still re-read, and a newly added one
+    still gets a fresh zipimporter.  Idempotent: it wraps once per
+    process."""
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "zip_reread_guard", False):
+        return
+
+    def stamp(archive):
+        try:
+            st = os.stat(archive)
+        except OSError:
+            return None
+        return st.st_mtime_ns, st.st_size
+
+    stamps = {a: stamp(a) for a in list(zipimport._zip_directory_cache)}
+
+    def invalidate_caches(self):
+        now = stamp(self.archive)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if now is not None and now == stamps.get(self.archive) and files is not None:
+            self._files = files
+            return
+        reread(self)
+        stamps[self.archive] = now
+
+    invalidate_caches.zip_reread_guard = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+def on_worker(fn):
+    """``fn`` with :func:`install_zip_reread_guard` run in the executor
+    before it; ``fn.__name__`` is kept (the stage's name in plan text)."""
+
+    def hooked(batches):
+        install_zip_reread_guard()
+        return fn(batches)
+
+    hooked.__name__ = fn.__name__
+    return hooked
+
+
+def map_arrow(df, fn, ddl):
+    """``df.mapInArrow(fn, ddl)`` with the package shipped to the
+    executor Python workers first and ``fn`` wrapped by
+    :func:`on_worker`: the one way the package enters ``mapInArrow``."""
+    ensure_package_on_workers(df.sparkSession)
+    return df.mapInArrow(on_worker(fn), ddl)
 
 
 def build_session(
