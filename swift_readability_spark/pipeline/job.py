@@ -1,16 +1,17 @@
-"""The corpus extraction job: scan -> resume filter -> skew-aware
-repartition -> Arrow-batch extraction -> output + lineage append.
+"""The corpus extraction job: scan -> resume filter -> hash
+repartition on doc_id -> Arrow-batch extraction -> output + lineage
+append.
 
 DataFrame-native corpus layer per SURVEY.md §2.1/§4.3:
 
 - **stable partition keys**: ``pmod(xxhash64(doc_id), n_partitions)``
   — not physical task ids — so a re-run maps every document to the
   same key and resume can skip exactly the committed work.
-- **skew salting**: documents over ``DEFAULT_HEAVY_THRESHOLD`` chars of
-  span payload get a per-document route key (one mega-doc per task
-  neighborhood) instead of sharing hash partitions with thousands of
-  small docs.  Combined with a bounded ``arrow.maxRecordsPerBatch``
-  this caps per-batch worker memory at any document-size distribution.
+- **one route**: a single hash of ``doc_id`` spreads documents, mega-docs
+  included, evenly over the extraction tasks.  Per-batch worker memory
+  is bounded by Spark closing every Arrow input batch at
+  ``arrow.maxRecordsPerBatch`` records or ``arrow.maxBytesPerBatch``
+  bytes, whichever comes first, at any document-size distribution.
 - **resume**: a left-anti join of the input's partition keys against
   committed lineage rows (Iceberg would make the appends atomic; on
   plain parquet the lineage write is the commit point because it is
@@ -74,18 +75,6 @@ _KERNEL_SCHEMA = T.StructType(
     [f for f in EXTRACTED_SCHEMA.fields if f.name not in ("partition_key", "run_id")]
 )
 _ARROW_OUT = to_arrow_schema(_KERNEL_SCHEMA)
-
-# payload size (chars of text+refs) above which a document is routed to
-# the dedicated heavy route; at 10^12-doc scale this is the knob that
-# keeps the p99 task time flat under heavy-tailed document sizes.
-# 256 KiB x 256 records/Arrow-batch bounds a light-path batch at
-# ~64 MiB of payload.
-DEFAULT_HEAVY_THRESHOLD = 1 << 18  # 256 KiB
-
-_DOC_BYTES_EXPR = (
-    "aggregate(spans, 0L, (acc, s) -> acc"
-    " + coalesce(length(s.text), 0) + coalesce(length(s.media_ref), 0))"
-)
 
 
 def make_extract_batches(base_url: str, options=None):
@@ -162,13 +151,11 @@ def plan_extraction(
     assume_pre_partitioned: bool = False,
     options=None,
 ) -> DataFrame:
-    """Build the (lazy) extraction DataFrame with skew-aware routing.
+    """Build the (lazy) extraction DataFrame.
 
-    One scan, one shuffle: the route key spreads documents uniformly
-    over ``n_partitions * DEFAULT_TASK_OVERSUBSCRIPTION`` physical
-    tasks, but mega-docs get a per-document route key so they never
-    pile onto partitions shared with thousands of small docs.  (Two
-    filtered branches would scan the source twice — fatal at 100 TB.)
+    One scan, one shuffle: :func:`route_for_extraction` hashes
+    ``doc_id`` over ``n_partitions * DEFAULT_TASK_OVERSUBSCRIPTION``
+    physical tasks, so documents of every size spread evenly.
     The lineage/resume key (``partition_key``) is a *column* with its
     own stable domain, computed from ``doc_id`` after the Arrow stage,
     so routing and task sizing never affect resume semantics.
@@ -190,26 +177,10 @@ def plan_extraction(
 
 
 def route_for_extraction(df: DataFrame, n_partitions: int) -> DataFrame:
-    """The skew-aware physical routing stage (factored out so tests can
-    assert placement): uniform hash route for light docs, a
-    per-document route key for docs over ``DEFAULT_HEAVY_THRESHOLD`` so
-    a mega-doc never shares a task with thousands of small docs."""
-    physical = n_partitions * DEFAULT_TASK_OVERSUBSCRIPTION
-    return (
-        df.withColumn(
-            "_route_key",
-            F.when(
-                F.expr(_DOC_BYTES_EXPR) > DEFAULT_HEAVY_THRESHOLD,
-                F.concat(F.lit("H:"), F.col("doc_id")),
-            ).otherwise(
-                F.concat(
-                    F.lit("L:"), F.pmod(F.xxhash64(F.col("doc_id")), F.lit(physical))
-                )
-            ),
-        )
-        .repartition(physical, "_route_key")
-        .drop("_route_key")
-    )
+    """The physical route of the extraction stage (factored out so tests
+    can assert placement): one hash of ``doc_id`` over
+    ``n_partitions * DEFAULT_TASK_OVERSUBSCRIPTION`` tasks."""
+    return df.repartition(n_partitions * DEFAULT_TASK_OVERSUBSCRIPTION, "doc_id")
 
 
 def lineage_from_output(extracted: DataFrame, started_at, n_partitions: int) -> DataFrame:

@@ -5,9 +5,9 @@ local[N]):
 
 - AQE on: post-shuffle coalescing + skew-join splitting re-plan the
   shuffles the corpus layer introduces.
-- Arrow exchange on with a bounded records-per-batch so one Python
-  batch never holds more than a few documents (mega-doc protection —
-  a 100 MB document must not share a batch with 9 more).
+- Arrow exchange on with a bounded records-per-batch; Spark also
+  closes every Arrow input batch at ``arrow.maxBytesPerBatch`` (64 MiB
+  by default), so a batch of big documents holds only a few of them.
 - shuffle.partitions sized by caller (cores at local scale; thousands
   at cluster scale).
 - parquet maxPartitionBytes left at 128 MB: scan tasks stay
@@ -21,6 +21,7 @@ each worker before the stage's function runs.
 
 from __future__ import annotations
 
+import atexit
 import os
 
 from pyspark.sql import SparkSession
@@ -31,9 +32,10 @@ from pyspark.sql import SparkSession
 # big documents blows worker memory.  Re-tuned in round 2 after the
 # core got ~1.5x faster per doc (transfer overhead became a larger
 # share): 512 measured +7% over 256 at sf0.1/local[32], 1024 only +1%
-# more.  512 x heavy-threshold (256 KiB) bounds a light-path batch at
-# ~128 MiB (4 GiB across 32 workers worst-case); mega-docs are routed
-# to their own partitions where a batch holds only a handful of rows.
+# more.  Batch memory is bounded by bytes, not by this count: Spark
+# closes every mapInArrow input batch at
+# spark.sql.execution.arrow.maxBytesPerBatch (64 MiB by default), so a
+# batch of ~1 MB mega-docs holds about 64 rows, not 512.
 ARROW_MAX_RECORDS_PER_BATCH = 512
 
 
@@ -41,7 +43,9 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     """Make ``swift_readability_spark`` importable in executor Python
     workers regardless of the driver's cwd/PYTHONPATH: zip the package
     once and ship it via addPyFile (the programmatic equivalent of
-    ``spark-submit --py-files``).  Idempotent per session."""
+    ``spark-submit --py-files``).  Idempotent per session.  Spark serves
+    the zip to executors for the session's whole life, so it is removed
+    when the driver process exits."""
     marker = "swift_readability_spark.workers_ready"
     try:
         if spark.conf.get(marker, None) == "1":
@@ -58,9 +62,8 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     fd, zip_name = tempfile.mkstemp(
         prefix="swift_readability_spark_pkg_", suffix=".zip"
     )
-    import os
-
     os.close(fd)
+    atexit.register(Path(zip_name).unlink, missing_ok=True)
     with zipfile.ZipFile(zip_name, "w") as zf:
         for py in sorted(pkg_dir.rglob("*.py")):
             zf.write(py, py.relative_to(pkg_dir.parent))

@@ -7,6 +7,8 @@ extraction, and the absence of any shingle-keyed join in the dedup
 verify stage.
 """
 
+import re
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -118,7 +120,7 @@ def test_ann_bruteforce_kernel_scores_single_scan(spark, reg):
 
 
 def test_extraction_has_exactly_one_exchange(spark, corpus_dir):
-    """One scan -> one skew-aware shuffle -> mapInArrow; a second
+    """One scan -> one hash shuffle on doc_id -> mapInArrow; a second
     Exchange would double the largest data movement of the job."""
     from swift_readability_spark.pipeline.job import plan_extraction
 
@@ -127,6 +129,8 @@ def test_extraction_has_exactly_one_exchange(spark, corpus_dir):
         plan_extraction(docs, "http://fakehost/test/page.html", "r", 4)
     )
     assert plan.count("Exchange") == 1
+    # n_partitions 4 x DEFAULT_TASK_OVERSUBSCRIPTION 4 physical tasks
+    assert re.search(r"Exchange hashpartitioning\(doc_id#\d+, 16\)", plan)
 
 
 def test_lang_id_stays_in_codegen(spark, reg):
@@ -320,3 +324,21 @@ def test_source_cap_broadcasts_counts_prefilter(spark, reg):
     # top-CAP applies before the full per-source sort materializes
     assert "WindowGroupLimit" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_curation_gate_filter_stays_above_its_projection(spark, reg):
+    """``curation_pipeline`` computes its gate once, as the projected
+    ``_keep`` column, and filters on ``when(_nd >= 0, _keep)``: the
+    nondeterministic ``_nd`` keeps Catalyst from pushing the predicate
+    below the projection, where FilterExec (no subexpression
+    elimination) would re-run every ``regexp_count`` per WHEN branch.
+    ``regexp_count`` prints as its replacement,
+    ``size(regexp_extract_all(...))``, so no Filter may hold a regexp."""
+    plan = _plan(reg["curation_pipeline"](spark, SF))
+    gate = re.search(r"Filter CASE WHEN \(_nd#\d+L? >= 0\) THEN _keep#\d+ END", plan)
+    keep = re.search(r"\) AS _keep#\d+", plan)
+    assert gate and keep
+    # the tree prints a parent before its children
+    assert gate.start() < plan.rindex("Project [", 0, keep.start()) < keep.start()
+    filters = re.findall(r"Filter (.*)", plan)
+    assert filters and not any("regexp" in f for f in filters)

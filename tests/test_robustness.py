@@ -82,8 +82,8 @@ def test_read_committed_filters_orphans(spark, corpus_dir, tmp_path_factory):
 
 
 def test_mega_document_isolated_and_extracted(spark):
-    """A multi-megabyte document flows through the heavy route and
-    extracts without destabilizing the job."""
+    """A multi-megabyte document mixed with small ones extracts without
+    destabilizing the job."""
     from swift_readability_spark.corpus.synth import synth_doc_html
     from swift_readability_spark.pipeline.job import DOCUMENTS_SCHEMA, plan_extraction
     from swift_readability_spark.spans.codec import html_to_spans
@@ -105,6 +105,38 @@ def test_mega_document_isolated_and_extracted(spark):
     assert by_id["mega"]["error"] is None
     assert by_id["mega"]["text_length"] > 1_000_000
     assert all(by_id[f"small-{i}"]["error"] is None for i in range(20))
+
+
+def test_arrow_input_batches_close_at_the_byte_cap(spark):
+    """Spark closes every ``mapInArrow`` input batch at
+    ``arrow.maxBytesPerBatch`` however many records
+    ``maxRecordsPerBatch`` allows: that cap bounds a batch of
+    mega-docs."""
+    from swift_readability_spark.pipeline.session import map_arrow
+
+    def batch_rows(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            yield pa.RecordBatch.from_pydict({"n": [batch.num_rows]})
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(1 << 20))
+    try:
+        rows = spark.range(0, 40, numPartitions=1).select(
+            F.repeat(F.lit("x"), 300_000).alias("text")
+        )
+        sizes = [r["n"] for r in map_arrow(rows, batch_rows, "n bigint").collect()]
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert sum(sizes) == 40
+    # 300 KB rows under a 1 MiB cap: a batch closes once its 4th row
+    # crosses the cap
+    assert max(sizes) <= 4
 
 
 def test_pathologically_deep_document_contained():

@@ -1,12 +1,17 @@
 """The worker hook: ``install_zip_reread_guard`` keeps
 ``importlib.invalidate_caches()`` from re-reading unchanged zip archives
-(pyspark's worker calls it at the start of every task), and every
-Python stage the package creates runs with the guard installed."""
+(pyspark's worker calls it at the start of every task), every Python
+stage the package creates runs with the guard installed, and the
+package zip shipped to the workers does not outlive the driver."""
 
 import importlib
+import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pytest
 
@@ -99,7 +104,6 @@ def test_one_mapinarrow_call_site():
     """Every ``mapInArrow`` the package creates goes through the one
     hooked ``map_arrow``."""
     import ast
-    from pathlib import Path
 
     pkg = Path(session.__file__).resolve().parent.parent
     sites = [
@@ -179,3 +183,37 @@ def test_workers_run_with_guard(spark):
     assert all(r["guarded"] for r in probed)
     assert all(r["zips"] > 0 for r in probed)
     assert [r["rereads"] for r in probed] == [0] * 256
+
+
+def test_package_zip_removed_at_driver_exit(tmp_path):
+    """A driver that ships the package and exits leaves no package zip
+    in its temp dir."""
+    script = textwrap.dedent(
+        """
+        import glob, os, sys, tempfile
+        sys.path.insert(0, sys.argv[1])
+        from swift_readability_spark.pipeline.session import build_session, map_arrow
+
+        def identity(batches):
+            yield from batches
+
+        spark = build_session(master="local[1]", shuffle_partitions=1)
+        print(map_arrow(spark.range(4), identity, "id long").count())
+        pattern = os.path.join(tempfile.gettempdir(), "swift_readability_spark_pkg_*.zip")
+        print(len(glob.glob(pattern)))
+        spark.stop()
+        """
+    )
+    repo = Path(__file__).resolve().parent.parent
+    out = subprocess.run(
+        [sys.executable, "-c", script, str(repo)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    # the job ran with one zip shipped from tmp_path ...
+    assert out.stdout.split()[-2:] == ["4", "1"]
+    # ... and the driver's exit removed it
+    assert list(tmp_path.glob("swift_readability_spark_pkg_*.zip")) == []
