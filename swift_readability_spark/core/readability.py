@@ -44,13 +44,16 @@ class ReadabilityOptions:
 
 @dataclass
 class ReadabilityResult:
-    """Mirrors the reference's ReadabilityResult (Readability.swift:4-18)."""
+    """Mirrors the reference's ReadabilityResult (Readability.swift:4-18).
+
+    ``content`` is serialized from ``article`` on first read (with the
+    options' serializer), so callers that only segment the article
+    never pay for the HTML string."""
 
     title: str | None
     byline: str | None
     dir: str | None
     lang: str | None
-    content: str
     text_content: str
     length: int
     excerpt: str | None
@@ -58,6 +61,23 @@ class ReadabilityResult:
     published_time: str | None
     readerable: bool
     article: Element = field(repr=False, default=None)
+    _options: ReadabilityOptions = field(
+        repr=False, compare=False, default_factory=ReadabilityOptions
+    )
+    _content: str | None = field(repr=False, compare=False, default=None)
+
+    @property
+    def content(self) -> str:
+        if self._content is None:
+            if self._options.serializer is not None:
+                self._content = self._options.serializer(self.article)
+            elif self._options.use_xml_serializer:
+                from .serializer import serialize_xml
+
+                self._content = serialize_xml(self.article, inner=True)
+            else:
+                self._content = self.article.inner_html
+        return self._content
 
 
 class ParseAbortError(RuntimeError):
@@ -74,7 +94,7 @@ def parse(
     Order of operations follows the canonical parse():
     guard -> readerable (pre-mutation) -> noscript unwrap -> JSON-LD ->
     script removal -> prep -> metadata -> grab -> postprocess ->
-    excerpt/lang fill -> serialize.
+    excerpt/lang fill; ``content`` is serialized on first read.
     """
     options = options or ReadabilityOptions()
     doc = parse_html(html, url)
@@ -190,22 +210,12 @@ def parse_document(
         if paragraphs:
             excerpt = js_trim(paragraphs[0].text_content)
 
-    if options.serializer is not None:
-        content = options.serializer(article_content)
-    elif options.use_xml_serializer:
-        from .serializer import serialize_xml
-
-        content = serialize_xml(article_content, inner=True)
-    else:
-        content = article_content.inner_html
-
     text_content = article_content.text_content
     return ReadabilityResult(
         title=metadata.get("title"),
         byline=metadata.get("byline") or grabber.article_byline,
         dir=grabber.article_dir,
         lang=grabber.article_lang,
-        content=content,
         text_content=text_content,
         length=len(text_content),
         excerpt=excerpt,
@@ -213,4 +223,5 @@ def parse_document(
         published_time=metadata.get("publishedTime"),
         readerable=readerable,
         article=article_content,
+        _options=options,
     )

@@ -70,6 +70,20 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
+# one row per (run_id, partition key): what lineage_from_output writes
+LINEAGE_SCHEMA = T.StructType(
+    [
+        T.StructField("run_id", T.StringType()),
+        T.StructField("partition_id", T.IntegerType()),
+        T.StructField("doc_count", T.LongType()),
+        T.StructField("checksum", T.StringType()),
+        T.StructField("wall_ms", T.DoubleType()),
+        T.StructField("started_at", T.TimestampType()),
+        T.StructField("finished_at", T.TimestampType()),
+        T.StructField("n_partitions", T.IntegerType()),
+    ]
+)
+
 # the Arrow kernel's output: plan_extraction adds the rest in the JVM
 _KERNEL_SCHEMA = T.StructType(
     [f for f in EXTRACTED_SCHEMA.fields if f.name not in ("partition_key", "run_id")]
@@ -136,11 +150,13 @@ def with_partition_key(df: DataFrame, n_partitions: int) -> DataFrame:
     )
 
 
-# physical tasks per scheduling slot: moderate task payloads keep the
-# JVM<->Python Arrow stream pipelined (measured 2.2x faster than
-# slot-sized tasks) and give the scheduler slack to absorb stragglers —
-# the same 2-4x-tasks-per-core rule of thumb used on real clusters
-DEFAULT_TASK_OVERSUBSCRIPTION = 4
+# physical extraction tasks per resume key: every task pays a fixed
+# cost (task deserialization, Python stage setup, one parquet writer,
+# one more file for the commit pass to read), so one task per key, and
+# with n_partitions = slots one task per slot.  On a cluster,
+# n_partitions >> slots already gives the scheduler small tasks to
+# balance stragglers with.
+DEFAULT_TASK_OVERSUBSCRIPTION = 1
 
 
 def plan_extraction(
@@ -233,24 +249,30 @@ def read_committed(
     )
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of its Hadoop FileSystem."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
+
 def committed_state(
     spark: SparkSession, lineage_path: str
 ) -> tuple[DataFrame, int | None] | None:
-    """(committed partition keys, recorded key domain) or None.
+    """(committed partition keys, recorded key domain), or None when
+    nothing is committed: no lineage yet, or lineage of empty runs only.
 
     The second element is the ``n_partitions`` every committed run used
-    (None for legacy lineage written before the column existed).
+    (None for legacy lineage written before the column existed: read
+    with ``LINEAGE_SCHEMA``, its rows have a null ``n_partitions``).
     Multiple distinct recorded domains mean the lineage is corrupt —
     anti-joining against a mixed domain can never be correct — so that
     raises instead of guessing."""
-    try:
-        lineage = spark.read.parquet(lineage_path)
-    except Exception:  # noqa: BLE001 - first run: no lineage yet
+    if not _path_exists(spark, lineage_path):
         return None
-    keys = lineage.select(F.col("partition_id").alias("partition_key")).distinct()
-    if "n_partitions" not in lineage.columns:
-        return keys, None
+    lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
     rows = [r[0] for r in lineage.select("n_partitions").distinct().collect()]
+    if not rows:
+        return None
     domains = sorted(r for r in rows if r is not None)
     has_null = any(r is None for r in rows)
     if len(domains) > 1:
@@ -269,6 +291,7 @@ def committed_state(
             "verify the legacy keys' domain — rewrite the lineage with "
             "an explicit n_partitions, or resume=False"
         )
+    keys = lineage.select(F.col("partition_id").alias("partition_key")).distinct()
     return keys, (int(domains[0]) if domains else None)
 
 
@@ -345,7 +368,11 @@ def run_extraction(
     # far bigger than any single run's slice)
     extracted.write.mode("append").partitionBy("run_id").parquet(output_path)
 
-    committed = spark.read.parquet(output_path).filter(F.col("run_id") == run_id)
+    committed = (
+        spark.read.schema(EXTRACTED_SCHEMA)
+        .parquet(output_path)
+        .filter(F.col("run_id") == run_id)
+    )
     lineage_from_output(committed, started_at, n_partitions).write.mode(
         "append"
     ).parquet(lineage_path)

@@ -279,6 +279,51 @@ def test_legacy_null_domain_rows_mixed_with_recorded_domain_raise(
         committed_state(spark, lineage)
 
 
+def test_legacy_lineage_without_domain_column(spark, tmp_path_factory):
+    """Lineage written before n_partitions was recorded reads back with
+    a null domain, so resume needs the original n_partitions passed
+    explicitly."""
+    from swift_readability_spark.pipeline.job import DOCUMENTS_SCHEMA, committed_state
+
+    out = tmp_path_factory.mktemp("legacy")
+    lineage = str(out / "lineage")
+    spark.createDataFrame(
+        [("r-old", 2, 3, "x", 1.0, None, None)],
+        "run_id string, partition_id int, doc_count long, checksum string,"
+        " wall_ms double, started_at timestamp, finished_at timestamp",
+    ).write.parquet(lineage)
+    keys, domain = committed_state(spark, lineage)
+    assert domain is None
+    assert [r["partition_key"] for r in keys.collect()] == [2]
+    with pytest.raises(ValueError, match="predates"):
+        run_extraction(
+            spark, spark.createDataFrame([], DOCUMENTS_SCHEMA), str(out / "extracted"), lineage
+        )
+
+
+def test_empty_first_run_then_rerun_without_n_partitions(spark, tmp_path_factory):
+    """A run over zero documents commits nothing: it must not fail at
+    the commit read (no parquet footer to infer a schema from), and a
+    rerun without n_partitions must not ask for the key domain of a
+    lineage that holds no rows."""
+    from swift_readability_spark.pipeline.job import DOCUMENTS_SCHEMA, LINEAGE_SCHEMA
+
+    out = tmp_path_factory.mktemp("empty")
+    paths = (str(out / "extracted"), str(out / "lineage"))
+    run_extraction(spark, spark.createDataFrame([], DOCUMENTS_SCHEMA), *paths)
+    page = "<html><body><p>" + "plain words here. " * 40 + "</p></body></html>"
+    span = {"kind": "text", "text": page, "media_ref": None, "offset": 0}
+    run_extraction(spark, spark.createDataFrame([("one", [span])], DOCUMENTS_SCHEMA), *paths)
+    rows = spark.read.parquet(paths[0]).collect()
+    assert [(r["doc_id"], r["error"]) for r in rows] == [("one", None)]
+    # the schema committed_state reads lineage with is what the job writes
+    lineage = spark.read.parquet(paths[1])
+    assert lineage.count() == 1
+    assert [(f.name, f.dataType) for f in lineage.schema] == [
+        (f.name, f.dataType) for f in LINEAGE_SCHEMA
+    ]
+
+
 def test_mega_doc_flows_through_heavy_path(spark, corpus_dir, extracted):
     """The synthetic mega-doc is present and non-trivially extracted."""
     mega = extracted["df"].filter(F.col("doc_id") == MEGA_DOC).collect()

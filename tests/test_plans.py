@@ -129,8 +129,8 @@ def test_extraction_has_exactly_one_exchange(spark, corpus_dir):
         plan_extraction(docs, "http://fakehost/test/page.html", "r", 4)
     )
     assert plan.count("Exchange") == 1
-    # n_partitions 4 x DEFAULT_TASK_OVERSUBSCRIPTION 4 physical tasks
-    assert re.search(r"Exchange hashpartitioning\(doc_id#\d+, 16\)", plan)
+    # n_partitions 4 x DEFAULT_TASK_OVERSUBSCRIPTION 1: one task per key
+    assert re.search(r"Exchange hashpartitioning\(doc_id#\d+, 4\)", plan)
 
 
 def test_lang_id_stays_in_codegen(spark, reg):

@@ -17,7 +17,7 @@ from swift_readability_spark.pipeline.job import (
 )
 
 N_SMALL = 2000
-N_PARTITIONS = 4  # x4 oversubscription -> 16 physical tasks
+N_PARTITIONS = 4  # x DEFAULT_TASK_OVERSUBSCRIPTION (1) -> 4 physical tasks
 
 
 def _mixed_corpus(spark):
@@ -59,7 +59,7 @@ def test_small_docs_stay_uniform(placement):
 
     counts = Counter(placement.values())
     physical = N_PARTITIONS * DEFAULT_TASK_OVERSUBSCRIPTION
-    # 2001 docs over 16 tasks: every task gets documents, and a uniform
+    # 2001 docs over the physical tasks: every task gets documents, and a uniform
     # hash keeps the fullest task under 1.5x the mean
     assert sorted(counts) == list(range(physical))
     assert max(counts.values()) < 1.5 * len(placement) / physical
