@@ -34,9 +34,12 @@ def interleaved_documents(
 ):
     """documents -> (doc_id, spans) in the BASELINE input_hint shape.
 
-    ``partitions`` pre-spreads the base table so the HTML construction
-    runs in parallel even when the source is a single parquet file
-    (otherwise the map stage feeding the extraction shuffle is serial).
+    ``partitions`` serves callers that materialize or replicate the
+    pages themselves (``perfbench`` writes them, ``bench.py``
+    cross-joins them): it round-robins the base table so the HTML
+    construction runs in parallel even when the source is a single
+    parquet file.  The extraction plans leave it unset, since their
+    ``doc_id`` route already spreads the corpus.
     ``where`` filters the source BELOW the Arrow stage (pushed to the
     parquet scan) — filters cannot be pushed through mapInArrow, so a
     consumer that only needs a slice must prune here, not above.
@@ -67,9 +70,10 @@ def interleaved_documents(
 def _extracted(spark, sf_dir, where: str | None = None):
     # partition count from actual cluster parallelism, not
     # spark.sql.shuffle.partitions: a default-200 session would spread
-    # this small demo corpus over 800 physical tasks of pure overhead
+    # this small demo corpus over 200 tasks of pure overhead.  The
+    # doc_id route is the plan's one corpus shuffle.
     n = max(int(spark.sparkContext.defaultParallelism), 2)
-    docs = interleaved_documents(spark, sf_dir, partitions=n, where=where)
+    docs = interleaved_documents(spark, sf_dir, where=where)
     return plan_extraction(
         docs, "http://fakehost/test/page.html", run_id="entry", n_partitions=n
     )

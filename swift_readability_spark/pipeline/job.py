@@ -176,11 +176,15 @@ def plan_extraction(
     own stable domain, computed from ``doc_id`` after the Arrow stage,
     so routing and task sizing never affect resume semantics.
 
-    ``assume_pre_partitioned`` elides the shuffle for corpora already
-    written with a sane distribution (Iceberg bucket(N, doc_id) + hash
-    write mode, or a prior repartition-on-write): the scan partitions
-    are consumed directly — zero Exchange in the plan.  At 100 TB this
-    removes the single largest data movement of the job.
+    Over a table whose scan reports ``hashpartitioning(doc_id,
+    n_partitions)`` (``write_bucketed_corpus`` with as many buckets)
+    Spark drops the route by itself.  ``assume_pre_partitioned`` elides
+    it for inputs that declare no layout Spark can see: a corpus read
+    by path but written with a sane distribution (Iceberg
+    bucket(N, doc_id) + hash write mode, or a prior
+    repartition-on-write).  The scan partitions are consumed directly —
+    zero Exchange in the plan.  At 100 TB this removes the single
+    largest data movement of the job.
     """
     if not assume_pre_partitioned:
         df = route_for_extraction(df, n_partitions)
@@ -201,7 +205,14 @@ def route_for_extraction(df: DataFrame, n_partitions: int) -> DataFrame:
 
 def lineage_from_output(extracted: DataFrame, started_at, n_partitions: int) -> DataFrame:
     """Per-partition lineage: doc count, order-insensitive checksum,
-    wall time.  Pure DataFrame aggregation (map-side partial + final).
+    wall time.  One codegen hash aggregate (map-side partial + final)
+    whose state per key is four numbers, however many documents it holds.
+
+    ``checksum`` is the hex of two sums over the documents: of the high
+    (signed) and of the low (unsigned) 32-bit half of
+    ``xxhash64(doc_id, spans)``.  Sums do not depend on row order, and
+    each stays exact in BIGINT up to 2^31 documents per key; beyond
+    that ANSI arithmetic raises instead of wrapping.
 
     ``n_partitions`` — the partition-key domain the run used — is
     recorded on every lineage row: resume anti-joins on
@@ -210,26 +221,25 @@ def lineage_from_output(extracted: DataFrame, started_at, n_partitions: int) -> 
     domains (skipping uncommitted documents or redoing committed ones).
     Persisting the domain lets ``run_extraction`` recompute keys in the
     recorded domain (or fail loudly on an explicit mismatch)."""
-    doc_hash = F.sha2(
-        F.concat_ws(
-            "\x1f", F.col("doc_id"), F.coalesce(F.to_json(F.col("spans")), F.lit(""))
-        ),
-        256,
-    )
+    h = F.xxhash64("doc_id", "spans")
     return (
-        extracted.withColumn("_doc_hash", doc_hash)
-        .groupBy("run_id", "partition_key")
+        extracted.groupBy("run_id", F.col("partition_key").alias("partition_id"))
         .agg(
             F.count("*").alias("doc_count"),
-            F.sha2(F.concat_ws(",", F.sort_array(F.collect_list("_doc_hash"))), 256).alias(
-                "checksum"
-            ),
+            F.sum(F.shiftright(h, 32)).alias("hi"),
+            F.sum(h.bitwiseAND(0xFFFFFFFF)).alias("lo"),
             F.sum("wall_ms").alias("wall_ms"),
         )
-        .withColumn("started_at", F.lit(started_at).cast("timestamp"))
-        .withColumn("finished_at", F.current_timestamp())
-        .withColumn("n_partitions", F.lit(int(n_partitions)))
-        .withColumnRenamed("partition_key", "partition_id")
+        .select(
+            "run_id",
+            "partition_id",
+            "doc_count",
+            F.format_string("%016x%016x", "hi", "lo").alias("checksum"),
+            "wall_ms",
+            F.lit(started_at).cast("timestamp").alias("started_at"),
+            F.current_timestamp().alias("finished_at"),
+            F.lit(int(n_partitions)).alias("n_partitions"),
+        )
     )
 
 
@@ -239,9 +249,11 @@ def read_committed(
     """Read extraction output restricted to committed work: a semi-join
     against lineage on (run_id, partition_key) drops orphan rows left
     by a crash between the output append and the lineage append (the
-    parquet-mode analogue of Iceberg's transactional visibility)."""
-    out = spark.read.parquet(output_path)
-    lineage = spark.read.parquet(lineage_path).select(
+    parquet-mode analogue of Iceberg's transactional visibility).  Both
+    paths are read with their schemas, so the paths of a run over zero
+    documents read as empty instead of failing schema inference."""
+    out = spark.read.schema(EXTRACTED_SCHEMA).parquet(output_path)
+    lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path).select(
         F.col("run_id"), F.col("partition_id").alias("partition_key")
     )
     return out.join(

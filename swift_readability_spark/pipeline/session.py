@@ -1,17 +1,19 @@
 """SparkSession builder tuned for the extraction workload.
 
 Scale design (targets a 1000-executor cluster even though tests run on
-local[N]):
+local[N]).  No conf is set to the value Spark already defaults to:
 
-- AQE on: post-shuffle coalescing + skew-join splitting re-plan the
-  shuffles the corpus layer introduces.
 - Arrow exchange on with a bounded records-per-batch; Spark also
   closes every Arrow input batch at ``arrow.maxBytesPerBatch`` (64 MiB
   by default), so a batch of big documents holds only a few of them.
 - shuffle.partitions sized by caller (cores at local scale; thousands
   at cluster scale).
-- parquet maxPartitionBytes left at 128 MB: scan tasks stay
-  executor-memory-sized at any corpus size.
+- session time zone UTC.
+
+What it leaves to Spark: AQE (post-shuffle coalescing and skew-join
+splitting are on by default), the scan split size (maxPartitionBytes
+128 MB, floored by ``defaultParallelism`` splits: scan tasks stay
+executor-memory-sized at any corpus size).
 
 The package's Python stages all enter the executors through
 :func:`map_arrow` (or :func:`on_worker` for ``mapInPandas``), which
@@ -156,18 +158,6 @@ def build_session(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # floor on SCAN parallelism, sized from actual cluster
-        # parallelism (shuffle_partitions == cores locally, executor
-        # cores on a cluster): Spark derives the split size as
-        # max(openCost, min(maxPartitionBytes, totalBytes/minPartitionNum)),
-        # so a 26 MB single-file table splits across cores (row-group
-        # granularity permitting) while a 100-TB scan still gets full
-        # 128 MB splits — scale-adaptive, not a local constant
-        # (guide §6: input split size).
-        .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",

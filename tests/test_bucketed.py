@@ -7,6 +7,8 @@ aggregations/joins over the bucketed table need NO Exchange — the
 plain-Spark realization of an Iceberg ``bucket(N, doc_id)`` layout.
 """
 
+import re
+
 import pytest
 
 import pyspark.sql.functions as F
@@ -51,17 +53,31 @@ def test_docid_self_join_has_no_exchange(bucketed):
 def test_extraction_over_bucketed_table_elides_shuffle(spark, bucketed):
     """The full extraction plan over the bucketed corpus in
     assume_pre_partitioned mode: zero Exchange, results identical to
-    the shuffled route."""
-    from swift_readability_spark.pipeline.job import plan_extraction
+    the shuffled route.  Without the flag Spark drops the route itself
+    when the bucket count equals the route's task count (the scan
+    already reports ``hashpartitioning(doc_id, N)``), also behind the
+    resume anti-join; at any other count the Exchange stays."""
+    from swift_readability_spark.pipeline.job import (
+        plan_extraction,
+        with_partition_key,
+    )
 
-    pre = plan_extraction(
-        bucketed, "http://fakehost/test/page.html", "r", N_BUCKETS,
-        assume_pre_partitioned=True,
-    )
+    url = "http://fakehost/test/page.html"
+    pre = plan_extraction(bucketed, url, "r", N_BUCKETS, assume_pre_partitioned=True)
     assert "Exchange" not in _plan(pre)
-    shuffled = plan_extraction(
-        bucketed, "http://fakehost/test/page.html", "r", N_BUCKETS
+    shuffled = plan_extraction(bucketed, url, "r", N_BUCKETS)
+    assert "Exchange" not in _plan(shuffled)
+    done = spark.createDataFrame([(1,)], "partition_key int")
+    pending = (
+        with_partition_key(bucketed, N_BUCKETS)
+        .join(F.broadcast(done), "partition_key", "left_anti")
+        .drop("partition_key")
     )
+    resumed = _plan(plan_extraction(pending, url, "r", N_BUCKETS))
+    assert "BroadcastExchange" in resumed
+    assert resumed.count("Exchange") == resumed.count("BroadcastExchange")
+    other = _plan(plan_extraction(bucketed, url, "r", N_BUCKETS // 2))
+    assert len(re.findall(r"Exchange hashpartitioning\(doc_id", other)) == 1
     got = {(r["doc_id"], r["title"], r["text_length"]) for r in pre.collect()}
     want = {(r["doc_id"], r["title"], r["text_length"]) for r in shuffled.collect()}
     assert got == want

@@ -6,7 +6,9 @@ import pytest
 
 from swift_readability_spark.corpus.synth import FIXTURES_DIR
 from swift_readability_spark.pipeline.job import (
+    SPANS_TYPE,
     lineage_from_output,
+    read_committed,
     run_extraction,
     with_partition_key,
 )
@@ -135,6 +137,79 @@ def test_checksum_deterministic(spark, extracted):
     c1 = {r["partition_id"]: r["checksum"] for r in l1.collect()}
     c2 = {r["partition_id"]: r["checksum"] for r in l2.collect()}
     assert c1 == c2
+
+
+def _checksums(df):
+    lineage = lineage_from_output(df, "2026-01-01 00:00:00", N_PARTITIONS)
+    return {r["partition_id"]: r["checksum"] for r in lineage.collect()}
+
+
+def test_checksum_ignores_row_order_and_sees_span_text(spark, extracted):
+    df = extracted["df"]
+    base = _checksums(df)
+    # the definition: hex of the sums of the high (signed) and low
+    # (unsigned) 32-bit halves of xxhash64(doc_id, spans), per key
+    sums = {}
+    for r in df.select("partition_key", F.xxhash64("doc_id", "spans").alias("h")).collect():
+        hi, lo = sums.get(r["partition_key"], (0, 0))
+        sums[r["partition_key"]] = (hi + (r["h"] >> 32), lo + (r["h"] & 0xFFFFFFFF))
+    mask = (1 << 64) - 1
+    assert base == {k: f"{hi & mask:016x}{lo & mask:016x}" for k, (hi, lo) in sums.items()}
+    assert _checksums(df.repartition(7).sortWithinPartitions(F.rand(1))) == base
+    # one document's span text changes: its key's checksum, and only
+    # that one, changes
+    edited = F.transform("spans", lambda s: s.withField("text", F.concat(s["text"], F.lit("!"))))
+    target = F.col("doc_id") == SAMPLE_IDS[1]
+    changed = _checksums(df.withColumn("spans", F.when(target, edited).otherwise(F.col("spans"))))
+    [key] = [r["partition_key"] for r in df.filter(target).collect()]
+    assert changed[key] != base[key]
+    assert {k: v for k, v in changed.items() if k != key} == {
+        k: v for k, v in base.items() if k != key
+    }
+
+
+def test_lineage_aggregate_holds_constant_state_per_key(spark):
+    """The commit pass is one codegen hash aggregate: no per-document
+    hash string, no collected array per key.  200k documents under one
+    partition key aggregate to one row."""
+    n = 200_000
+    span = F.struct(
+        F.lit("text").alias("kind"),
+        F.col("id").cast("string").alias("text"),
+        F.lit(None).cast("string").alias("media_ref"),
+        F.lit(0).alias("offset"),
+    )
+    docs = spark.range(n).select(
+        F.concat(F.lit("doc-"), F.col("id").cast("string")).alias("doc_id"),
+        F.array(span).cast(SPANS_TYPE).alias("spans"),
+        F.lit(3).alias("partition_key"),
+        F.lit("rbig").alias("run_id"),
+        F.lit(1.0).alias("wall_ms"),
+    )
+    lineage = lineage_from_output(docs, "2026-01-01 00:00:00", N_PARTITIONS)
+    plan = lineage._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" in plan
+    for banned in ("ObjectHashAggregate", "SortAggregate", "collect_list", "to_json", "sha2"):
+        assert banned not in plan, banned
+    [row] = lineage.collect()
+    assert (row["partition_id"], row["doc_count"], row["wall_ms"]) == (3, n, float(n))
+    assert len(row["checksum"]) == 32
+
+
+def test_session_leaves_spark_defaults_unset(spark):
+    """build_session restates no Spark default: AQE, its partition
+    coalescing and skew-join splitting read Spark's own ``true``, and
+    the scan split floor is Spark's ``defaultParallelism`` fallback."""
+    conf = spark.sparkContext.getConf()
+    for key in (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.skewJoin.enabled",
+    ):
+        assert not conf.contains(key), key
+        assert spark.conf.get(key) == "true", key
+    assert not conf.contains("spark.sql.files.minPartitionNum")
+    assert spark.conf.get("spark.sql.files.minPartitionNum", None) is None
 
 
 def test_lineage_records_key_domain(extracted):
@@ -302,18 +377,20 @@ def test_legacy_lineage_without_domain_column(spark, tmp_path_factory):
 
 
 def test_empty_first_run_then_rerun_without_n_partitions(spark, tmp_path_factory):
-    """A run over zero documents commits nothing: it must not fail at
-    the commit read (no parquet footer to infer a schema from), and a
-    rerun without n_partitions must not ask for the key domain of a
-    lineage that holds no rows."""
+    """A run over zero documents commits nothing: neither the commit
+    read nor ``read_committed`` may fail for want of a parquet footer to
+    infer a schema from, and a rerun without n_partitions must not ask
+    for the key domain of a lineage that holds no rows."""
     from swift_readability_spark.pipeline.job import DOCUMENTS_SCHEMA, LINEAGE_SCHEMA
 
     out = tmp_path_factory.mktemp("empty")
     paths = (str(out / "extracted"), str(out / "lineage"))
     run_extraction(spark, spark.createDataFrame([], DOCUMENTS_SCHEMA), *paths)
+    assert read_committed(spark, *paths).count() == 0
     page = "<html><body><p>" + "plain words here. " * 40 + "</p></body></html>"
     span = {"kind": "text", "text": page, "media_ref": None, "offset": 0}
     run_extraction(spark, spark.createDataFrame([("one", [span])], DOCUMENTS_SCHEMA), *paths)
+    assert read_committed(spark, *paths).count() == 1
     rows = spark.read.parquet(paths[0]).collect()
     assert [(r["doc_id"], r["error"]) for r in rows] == [("one", None)]
     # the schema committed_state reads lineage with is what the job writes

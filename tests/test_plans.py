@@ -133,6 +133,16 @@ def test_extraction_has_exactly_one_exchange(spark, corpus_dir):
     assert re.search(r"Exchange hashpartitioning\(doc_id#\d+, 4\)", plan)
 
 
+@pytest.mark.parametrize("query", ["extract_metadata", "extract_spans_stats"])
+def test_extraction_queries_shuffle_the_corpus_once(spark, reg, query):
+    """The doc_id route already spreads the constructed pages: no
+    round-robin pre-spread runs in front of it."""
+    plan = _plan(reg[query](spark, SF))
+    assert plan.count("Exchange") == 1
+    assert re.search(r"Exchange hashpartitioning\(doc_id#\d+, \d+\)", plan)
+    assert "RoundRobinPartitioning" not in plan
+
+
 def test_lang_id_stays_in_codegen(spark, reg):
     """The marker regexes run as JVM codegen expressions, never in a
     Python stage.  (With the r07 input-spread Exchange present the
