@@ -2,14 +2,18 @@
 """spark-submit entrypoint for the extraction job.
 
 Usage:
-  spark-submit --py-files swift_readability_spark.zip run_job.py \
+  spark-submit [--master <url>] run_job.py \
       --input  <documents parquet/iceberg path> \
       --output <extracted output path> \
       --lineage <lineage path> \
       [--base-url http://fakehost/test/page.html] \
-      [--partitions N] [--no-resume] [--streaming]
+      [--partitions N] [--run-id ID] [--no-resume] [--streaming] \
+      [--input-format parquet|json|csv|orc]
 
-Build the zip with:  python -m zipfile -c swift_readability_spark.zip swift_readability_spark
+The job runs in ``build_session``'s session under the launcher's master,
+and the package ships itself to the executors (no ``--py-files``).
+Without ``--partitions`` the resume-key domain is the one recorded in
+the lineage, else the session's ``defaultParallelism``.
 """
 
 from __future__ import annotations
@@ -36,11 +40,6 @@ def main() -> None:
         help="process via Structured Streaming Trigger.AvailableNow micro-batches",
     )
     ap.add_argument(
-        "--pre-partitioned",
-        action="store_true",
-        help="trust the input's existing distribution (bucketed corpus): no shuffle",
-    )
-    ap.add_argument(
         "--input-format",
         choices=["parquet", "json", "csv", "orc"],
         default=None,
@@ -49,11 +48,10 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from swift_readability_spark.pipeline.job import run_extraction
+    from swift_readability_spark.pipeline.session import build_session
 
-    spark = SparkSession.builder.appName("swift-readability-extract").getOrCreate()
+    spark = build_session(app_name="swift-readability-extract")
     if args.streaming:
         from swift_readability_spark.pipeline.streaming import run_extraction_stream
 
@@ -78,7 +76,6 @@ def main() -> None:
             n_partitions=args.partitions,
             run_id=args.run_id,
             resume=not args.no_resume,
-            assume_pre_partitioned=args.pre_partitioned,
         )
         print(f"run_id={run_id}")
     spark.stop()

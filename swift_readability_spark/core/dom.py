@@ -4,12 +4,13 @@ Design notes
 ------------
 The reference engine (swift-readability) delegates parsing to SwiftSoup
 (``/root/reference/Sources/SwiftReadability/Readability.swift:331-335``).
-We build our own minimal DOM on top of :mod:`html.parser` because the
-extraction heuristics only need: a mutable element tree, attributes,
-text content, and pre-order traversal.  A small HTML5-flavoured state
-machine supplies the structural normalizations the heuristics rely on
-(implied <html>/<head>/<body>, auto-closing <p>/<li>/<tr>/<td>,
-implicit <tbody>, void elements).
+We build our own minimal DOM, fed by the regex scanner in
+:mod:`.tokenizer`, because the extraction heuristics only need: a
+mutable element tree, attributes, text content, and pre-order
+traversal.  A small HTML5-flavoured state machine supplies the
+structural normalizations the heuristics rely on (implied
+<html>/<head>/<body>, auto-closing <p>/<li>/<tr>/<td>, implicit
+<tbody>, void elements).
 
 This module is pure Python and allocation-light: it is the hot path of
 the Arrow-batch extraction UDF, so nodes use ``__slots__`` and tag
@@ -752,8 +753,7 @@ def _serialize(node: Node, buf: list[str]) -> None:
 class _TreeBuilder:
     """HTML5-ish tree builder (implied structure + auto-close rules).
 
-    Fed by :mod:`.tokenizer` (a fast regex scanner with html.parser-
-    compatible callback semantics)."""
+    Fed by :mod:`.tokenizer` (a fast regex scanner)."""
 
     def __init__(self, document_uri: str):
         self.doc = Document(document_uri)
@@ -838,13 +838,7 @@ class _TreeBuilder:
             if t in stop:
                 return
 
-    # -- HTMLParser callbacks ---------------------------------------------
-    def handle_starttag(self, tag, attrs):
-        self._handle_start(tag, attrs, self_closing=False)
-
-    def handle_startendtag(self, tag, attrs):
-        self._handle_start(tag, attrs, self_closing=True)
-
+    # -- tokenizer callbacks ----------------------------------------------
     def _handle_start(self, tag: str, attrs, self_closing: bool) -> None:
         if tag == "html":
             self._ensure_html()
@@ -944,10 +938,6 @@ class _TreeBuilder:
     def handle_endtag(self, tag):
         if tag in VOID_ELEMENTS:
             return
-        if tag == "p":
-            # </p> with no open p inserts an empty <p> in HTML5; approximate
-            # by ignoring when absent.
-            pass
         if tag == "html" or tag == "body":
             if self.mode == 3:
                 # keep body as insertion point for trailing content
@@ -1001,12 +991,6 @@ class _TreeBuilder:
             self.stack[1]._append_fresh(Comment(data))
             return
         self.top._append_fresh(Comment(data))
-
-    def handle_decl(self, decl):
-        pass
-
-    def unknown_decl(self, data):
-        pass
 
 
 def parse_html(html: str, document_uri: str = "about:blank") -> Document:

@@ -135,27 +135,12 @@ def _parse_attrs_cached(blob: str) -> tuple:
 
 
 def tokenize(html: str, builder) -> None:
-    """Scan ``html`` and invoke builder.handle_* callbacks."""
+    """Scan ``html`` and invoke the tree builder's callbacks
+    (``_handle_start`` with a first-duplicate-wins attrs dict,
+    ``handle_endtag``, ``handle_data``, ``handle_comment``)."""
     handle_data = builder.handle_data
     handle_comment = builder.handle_comment
-    # call the tree builder's combined start handler directly when
-    # available (skips one wrapper frame per start tag — ~100k/doc on
-    # large pages); any html.parser-style builder still works
-    handle_start = getattr(builder, "_handle_start", None)
-    if handle_start is None:
-
-        def handle_start(tag, attrs, self_closing):  # pragma: no cover
-            # html.parser contract: attrs is a list of (name, value)
-            # tuples.  The fast path hands builders a first-dup-wins
-            # dict (valueless attrs as ""), so convert for external
-            # builders; duplicates are already collapsed and valueless
-            # attrs arrive as "" rather than None — builders needing
-            # those distinctions must implement _handle_start.
-            pairs = list(attrs.items())
-            if self_closing:
-                builder.handle_startendtag(tag, pairs)
-            else:
-                builder.handle_starttag(tag, pairs)
+    handle_start = builder._handle_start
     handle_endtag = builder.handle_endtag
     memo_get = _ATTR_MEMO.get  # inline the memo hit path (72% of blobs)
     i = 0

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import time
 import uuid
+from datetime import datetime, timezone
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -164,7 +165,6 @@ def plan_extraction(
     base_url: str,
     run_id: str,
     n_partitions: int,
-    assume_pre_partitioned: bool = False,
     options=None,
 ) -> DataFrame:
     """Build the (lazy) extraction DataFrame.
@@ -178,16 +178,11 @@ def plan_extraction(
 
     Over a table whose scan reports ``hashpartitioning(doc_id,
     n_partitions)`` (``write_bucketed_corpus`` with as many buckets)
-    Spark drops the route by itself.  ``assume_pre_partitioned`` elides
-    it for inputs that declare no layout Spark can see: a corpus read
-    by path but written with a sane distribution (Iceberg
-    bucket(N, doc_id) + hash write mode, or a prior
-    repartition-on-write).  The scan partitions are consumed directly —
-    zero Exchange in the plan.  At 100 TB this removes the single
-    largest data movement of the job.
+    Spark drops the route by itself, also behind the resume anti-join.
+    A plain parquet path declares no layout: Spark packs its files into
+    scan splits by size, so the route stays.
     """
-    if not assume_pre_partitioned:
-        df = route_for_extraction(df, n_partitions)
+    df = route_for_extraction(df, n_partitions)
     extracted = map_arrow(df, make_extract_batches(base_url, options), _KERNEL_SCHEMA)
     return (
         with_partition_key(extracted, n_partitions)
@@ -213,6 +208,10 @@ def lineage_from_output(extracted: DataFrame, started_at, n_partitions: int) -> 
     ``xxhash64(doc_id, spans)``.  Sums do not depend on row order, and
     each stays exact in BIGINT up to 2^31 documents per key; beyond
     that ANSI arithmetic raises instead of wrapping.
+
+    ``started_at`` is a timezone-aware datetime (one instant in any
+    session time zone) or a timestamp string, which Spark reads in the
+    session time zone.
 
     ``n_partitions`` — the partition-key domain the run used — is
     recorded on every lineage row: resume anti-joins on
@@ -317,9 +316,13 @@ def run_extraction(
     run_id: str | None = None,
     resume: bool = True,
     options=None,
-    assume_pre_partitioned: bool = False,
 ) -> str:
     """Execute the extraction job; returns the run_id.
+
+    ``n_partitions`` is the resume-key domain: the one recorded in the
+    lineage when resuming, else the session's ``defaultParallelism``
+    (one extraction task per slot, see
+    ``DEFAULT_TASK_OVERSUBSCRIPTION``).
 
     Commit protocol: output parquet is appended first; the lineage
     append afterwards is the commit point.  A crash between the two
@@ -334,7 +337,7 @@ def run_extraction(
     # across appends and breaking read_committed/resume for the whole
     # path (an all-hex-digit uuid4()[:12] happens with p≈0.35%/run)
     run_id = check_run_id(run_id or "r" + uuid.uuid4().hex[:11])
-    started_at = time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime())
+    started_at = datetime.now(timezone.utc)
 
     done = None
     if resume:
@@ -359,21 +362,14 @@ def run_extraction(
                     "(or resume=False)"
                 )
     if n_partitions is None:
-        n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n_partitions = spark.sparkContext.defaultParallelism
 
     pending = with_partition_key(documents, n_partitions)
     if done is not None:
         pending = pending.join(F.broadcast(done), "partition_key", "left_anti")
     pending = pending.drop("partition_key")
 
-    extracted = plan_extraction(
-        pending,
-        base_url,
-        run_id,
-        n_partitions,
-        options=options,
-        assume_pre_partitioned=assume_pre_partitioned,
-    )
+    extracted = plan_extraction(pending, base_url, run_id, n_partitions, options)
     # partitionBy(run_id): the commit pass below and any later
     # read_committed filter prune to THIS run's files instead of
     # rescanning every historical append (at 10^12 docs the output is

@@ -7,8 +7,11 @@ local[N]).  No conf is set to the value Spark already defaults to:
   closes every Arrow input batch at ``arrow.maxBytesPerBatch`` (64 MiB
   by default), so a batch of big documents holds only a few of them.
 - shuffle.partitions sized by caller (cores at local scale; thousands
-  at cluster scale).
+  at cluster scale), else the started session's ``defaultParallelism``.
 - session time zone UTC.
+
+The master is the caller's, else the launcher's: ``spark-submit
+--master``, or pyspark's own ``local[*]`` under plain ``python``.
 
 What it leaves to Spark: AQE (post-shuffle coalescing and skew-join
 splitting are on by default), the scan split size (maxPartitionBytes
@@ -146,19 +149,11 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = os.cpu_count() or 8
-    master = master or f"local[{cores}]"
-    if shuffle_partitions is None:
-        # at local scale: one shuffle partition per core; on a real
-        # cluster, pass ~2-3x total executor cores instead
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
-        shuffle_partitions = cores if n in ("", "*") else int(n)
-
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        builder.config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_MAX_RECORDS_PER_BATCH),
@@ -169,4 +164,10 @@ def build_session(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if shuffle_partitions is None:
+        # one shuffle partition per slot; on a real cluster, pass
+        # ~2-3x total executor cores instead
+        shuffle_partitions = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return spark

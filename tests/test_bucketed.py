@@ -51,22 +51,19 @@ def test_docid_self_join_has_no_exchange(bucketed):
 
 
 def test_extraction_over_bucketed_table_elides_shuffle(spark, bucketed):
-    """The full extraction plan over the bucketed corpus in
-    assume_pre_partitioned mode: zero Exchange, results identical to
-    the shuffled route.  Without the flag Spark drops the route itself
-    when the bucket count equals the route's task count (the scan
-    already reports ``hashpartitioning(doc_id, N)``), also behind the
-    resume anti-join; at any other count the Exchange stays."""
+    """The full extraction plan over the bucketed corpus: Spark drops
+    the route itself when the bucket count equals the route's task
+    count (the scan already reports ``hashpartitioning(doc_id, N)``),
+    also behind the resume anti-join, and extracts the same rows as the
+    routed plan; at any other count the one Exchange stays."""
     from swift_readability_spark.pipeline.job import (
         plan_extraction,
         with_partition_key,
     )
 
     url = "http://fakehost/test/page.html"
-    pre = plan_extraction(bucketed, url, "r", N_BUCKETS, assume_pre_partitioned=True)
-    assert "Exchange" not in _plan(pre)
-    shuffled = plan_extraction(bucketed, url, "r", N_BUCKETS)
-    assert "Exchange" not in _plan(shuffled)
+    elided = plan_extraction(bucketed, url, "r", N_BUCKETS)
+    assert "Exchange" not in _plan(elided)
     done = spark.createDataFrame([(1,)], "partition_key int")
     pending = (
         with_partition_key(bucketed, N_BUCKETS)
@@ -76,10 +73,10 @@ def test_extraction_over_bucketed_table_elides_shuffle(spark, bucketed):
     resumed = _plan(plan_extraction(pending, url, "r", N_BUCKETS))
     assert "BroadcastExchange" in resumed
     assert resumed.count("Exchange") == resumed.count("BroadcastExchange")
-    other = _plan(plan_extraction(bucketed, url, "r", N_BUCKETS // 2))
-    assert len(re.findall(r"Exchange hashpartitioning\(doc_id", other)) == 1
-    got = {(r["doc_id"], r["title"], r["text_length"]) for r in pre.collect()}
-    want = {(r["doc_id"], r["title"], r["text_length"]) for r in shuffled.collect()}
+    routed = plan_extraction(bucketed, url, "r", N_BUCKETS // 2)
+    assert len(re.findall(r"Exchange hashpartitioning\(doc_id", _plan(routed))) == 1
+    got = {(r["doc_id"], r["title"], r["text_length"]) for r in elided.collect()}
+    want = {(r["doc_id"], r["title"], r["text_length"]) for r in routed.collect()}
     assert got == want
 
 

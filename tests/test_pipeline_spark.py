@@ -6,6 +6,7 @@ import pytest
 
 from swift_readability_spark.corpus.synth import FIXTURES_DIR
 from swift_readability_spark.pipeline.job import (
+    DOCUMENTS_SCHEMA,
     SPANS_TYPE,
     lineage_from_output,
     read_committed,
@@ -18,6 +19,13 @@ MEGA_DOC = "syn-42-39"  # conftest.corpus_dir: the one mega-doc
 # one fixture page when the reference corpus is present, else a small
 # synthetic doc, plus the first synthetic doc and the mega-doc
 SAMPLE_IDS = ("001" if FIXTURES_DIR.is_dir() else "syn-42-1", "syn-42-0", MEGA_DOC)
+PLAIN_PAGE = "<html><body><p>" + "plain words here. " * 40 + "</p></body></html>"
+
+
+def _plain_docs(spark, doc_ids):
+    """One small readerable page per id."""
+    span = {"kind": "text", "text": PLAIN_PAGE, "media_ref": None, "offset": 0}
+    return spark.createDataFrame([(i, [span]) for i in doc_ids], DOCUMENTS_SCHEMA)
 
 
 @pytest.fixture(scope="module")
@@ -358,7 +366,7 @@ def test_legacy_lineage_without_domain_column(spark, tmp_path_factory):
     """Lineage written before n_partitions was recorded reads back with
     a null domain, so resume needs the original n_partitions passed
     explicitly."""
-    from swift_readability_spark.pipeline.job import DOCUMENTS_SCHEMA, committed_state
+    from swift_readability_spark.pipeline.job import committed_state
 
     out = tmp_path_factory.mktemp("legacy")
     lineage = str(out / "lineage")
@@ -376,20 +384,56 @@ def test_legacy_lineage_without_domain_column(spark, tmp_path_factory):
         )
 
 
+def test_run_extraction_defaults_to_default_parallelism(spark, tmp_path_factory):
+    """Without n_partitions (and no lineage to adopt a domain from) the
+    resume-key domain is the session's defaultParallelism: one
+    extraction task per slot, whatever spark.sql.shuffle.partitions is."""
+    out = tmp_path_factory.mktemp("default_domain")
+    docs = _plain_docs(spark, [f"d{i}" for i in range(6)])
+    run_extraction(spark, docs, str(out / "extracted"), str(out / "lineage"))
+    lineage = spark.read.parquet(str(out / "lineage")).collect()
+    assert {r["n_partitions"] for r in lineage} == {spark.sparkContext.defaultParallelism}
+
+
+def test_lineage_started_at_is_an_instant_in_any_session_time_zone(
+    spark, tmp_path_factory
+):
+    """started_at and finished_at are the same clock in a non-UTC
+    session: a UTC wall-clock string read in America/Los_Angeles would
+    land hours after finished_at."""
+    out = tmp_path_factory.mktemp("tz")
+    docs = _plain_docs(spark, ["tz-1", "tz-2"])
+    key = "spark.sql.session.timeZone"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        run_extraction(
+            spark, docs, str(out / "extracted"), str(out / "lineage"), n_partitions=2
+        )
+        elapsed = [
+            r[0]
+            for r in spark.read.parquet(str(out / "lineage"))
+            .select(F.unix_micros("finished_at") - F.unix_micros("started_at"))
+            .collect()
+        ]
+    finally:
+        spark.conf.set(key, before)
+    assert elapsed
+    assert all(0 <= us < 600 * 10**6 for us in elapsed), elapsed
+
+
 def test_empty_first_run_then_rerun_without_n_partitions(spark, tmp_path_factory):
     """A run over zero documents commits nothing: neither the commit
     read nor ``read_committed`` may fail for want of a parquet footer to
     infer a schema from, and a rerun without n_partitions must not ask
     for the key domain of a lineage that holds no rows."""
-    from swift_readability_spark.pipeline.job import DOCUMENTS_SCHEMA, LINEAGE_SCHEMA
+    from swift_readability_spark.pipeline.job import LINEAGE_SCHEMA
 
     out = tmp_path_factory.mktemp("empty")
     paths = (str(out / "extracted"), str(out / "lineage"))
     run_extraction(spark, spark.createDataFrame([], DOCUMENTS_SCHEMA), *paths)
     assert read_committed(spark, *paths).count() == 0
-    page = "<html><body><p>" + "plain words here. " * 40 + "</p></body></html>"
-    span = {"kind": "text", "text": page, "media_ref": None, "offset": 0}
-    run_extraction(spark, spark.createDataFrame([("one", [span])], DOCUMENTS_SCHEMA), *paths)
+    run_extraction(spark, _plain_docs(spark, ["one"]), *paths)
     assert read_committed(spark, *paths).count() == 1
     rows = spark.read.parquet(paths[0]).collect()
     assert [(r["doc_id"], r["error"]) for r in rows] == [("one", None)]
@@ -406,55 +450,3 @@ def test_mega_doc_flows_through_heavy_path(spark, corpus_dir, extracted):
     mega = extracted["df"].filter(F.col("doc_id") == MEGA_DOC).collect()
     assert len(mega) == 1
     assert mega[0]["text_length"] > 100_000
-
-
-def test_pre_partitioned_mode_elides_shuffle(spark, corpus_dir):
-    """assume_pre_partitioned consumes scan partitions directly:
-    no Exchange in the physical plan, identical results."""
-    from swift_readability_spark.pipeline.job import plan_extraction
-
-    docs = spark.read.parquet(corpus_dir + "/documents.parquet").filter(
-        F.col("doc_id").startswith("syn-")
-    )
-    default = plan_extraction(docs, "http://fakehost/test/page.html", "r", 4)
-    elided = plan_extraction(
-        docs, "http://fakehost/test/page.html", "r", 4, assume_pre_partitioned=True
-    )
-    plan = elided._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    cols = ("doc_id", "title", "text_length", "partition_key", "run_id")
-    a = {tuple(r[c] for c in cols) for r in default.collect()}
-    b = {tuple(r[c] for c in cols) for r in elided.collect()}
-    assert a == b
-
-
-def test_run_extraction_pre_partitioned_end_to_end(spark, corpus_dir, tmp_path_factory):
-    """The shuffle-elision flag through the FULL job (not just
-    plan_extraction): same rows as the shuffled route, lineage
-    committed, resume no-op on rerun."""
-    out = tmp_path_factory.mktemp("prepart")
-    docs = (
-        spark.read.parquet(corpus_dir + "/documents.parquet")
-        .filter(F.col("doc_id").startswith("syn-"))
-        .repartition(4, "doc_id")
-    )
-    run_extraction(
-        spark,
-        docs,
-        str(out / "extracted"),
-        str(out / "lineage"),
-        n_partitions=N_PARTITIONS,
-        assume_pre_partitioned=True,
-    )
-    got = spark.read.parquet(str(out / "extracted"))
-    assert got.count() == docs.count()
-    assert got.filter(F.col("error").isNotNull()).count() == 0
-    # rerun resumes to a no-op
-    run_extraction(
-        spark,
-        docs,
-        str(out / "extracted"),
-        str(out / "lineage"),
-        assume_pre_partitioned=True,
-    )
-    assert spark.read.parquet(str(out / "extracted")).count() == docs.count()
