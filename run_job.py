@@ -10,6 +10,10 @@ Usage:
       [--partitions N] [--run-id ID] [--no-resume] [--streaming] \
       [--input-format parquet|json|csv|orc]
 
+``--streaming`` reads a parquet file stream (any other
+``--input-format`` is rejected) and names micro-batch ``k``'s run
+``<run-id>-<k>`` (``stream-<k>`` without ``--run-id``).
+
 The job runs in ``build_session``'s session under the launcher's master,
 and the package ships itself to the executors (no ``--py-files``).
 Without ``--partitions`` the resume-key domain is the one recorded in
@@ -47,6 +51,8 @@ def main() -> None:
         "directories of part files need this set explicitly)",
     )
     args = ap.parse_args()
+    if args.streaming and args.input_format not in (None, "parquet"):
+        ap.error("--streaming reads parquet input only")
 
     from swift_readability_spark.pipeline.job import run_extraction
     from swift_readability_spark.pipeline.session import build_session
@@ -55,6 +61,7 @@ def main() -> None:
     if args.streaming:
         from swift_readability_spark.pipeline.streaming import run_extraction_stream
 
+        run_id = args.run_id or "stream"
         run_extraction_stream(
             spark,
             args.input,
@@ -62,6 +69,7 @@ def main() -> None:
             args.lineage,
             base_url=args.base_url,
             n_partitions=args.partitions,
+            run_id=run_id,
         )
     else:
         from swift_readability_spark.pipeline.io import read_documents
@@ -77,7 +85,7 @@ def main() -> None:
             run_id=args.run_id,
             resume=not args.no_resume,
         )
-        print(f"run_id={run_id}")
+    print(f"run_id={run_id}")
     spark.stop()
 
 

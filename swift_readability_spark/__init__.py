@@ -8,8 +8,8 @@ v0.6.0) as a Spark-first pipeline:
                 metadata) — runs vectorized inside Arrow batches.
 - ``spans/``    HTML <-> interleaved (kind, text, media_ref, offset)
                 span-sequence codec (the corpus data model).
-- ``pipeline/`` DataFrame-native corpus layer: partitioning, skew
-                salting, mapInArrow extraction, lineage + resume.
+- ``pipeline/`` DataFrame-native corpus layer: one hash route on
+                ``doc_id``, mapInArrow extraction, lineage + resume.
 - ``operators/``corpus-level demo operators (top-k, dedup, similarity
                 search, text analytics) expressed as native DataFrame
                 plans with DuckDB-checkable SQL oracles.

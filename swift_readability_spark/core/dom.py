@@ -766,13 +766,6 @@ class _TreeBuilder:
     def top(self) -> Element:
         return self.stack[-1]
 
-    def _open(self, tag: str, attrs_map: dict) -> Element:
-        # first-duplicate-wins and None->"" were already applied by the
-        # tokenizer's memoized blob parse; one C-level copy per element
-        el = Element(tag, dict(attrs_map) if attrs_map else None)
-        self.top._append_fresh(el)
-        return el
-
     def _push(self, el: Element) -> None:
         self.stack.append(el)
 
@@ -923,11 +916,13 @@ class _TreeBuilder:
                 ):
                     break
 
-        # _open/_push inlined (p/div/li/td are the most common tags and
-        # all land here; one Python frame per tag matters at 100k tags
-        # per large page).  Non-void self-closing tags (<div/>) are
-        # treated as open-only in HTML5, but real-world usage intends
-        # emptiness; keep closed.
+        # element creation and _push inlined (p/div/li/td are the most
+        # common tags and all land here; one Python frame per tag
+        # matters at 100k tags per large page).  First-duplicate-wins
+        # and None->"" were already applied by the tokenizer's memoized
+        # blob parse; one C-level copy per element.  Non-void
+        # self-closing tags (<div/>) are treated as open-only in HTML5,
+        # but real-world usage intends emptiness; keep closed.
         el = Element(tag, dict(attrs) if attrs else None)
         top = self.stack[-1]
         el.parent = top

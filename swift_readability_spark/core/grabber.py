@@ -10,8 +10,11 @@ Faithfulness notes (quirks deliberately mirrored):
   ``tagName === "object"`` against the *uppercase* DOM tagName, so the
   object-innerHTML video check never fires; we mirror that by omitting it.
 - scores are stored directly on nodes and reset per retry attempt by
-  restoring a pristine clone of the body (the canonical code re-parses
-  the cached innerHTML, which equally drops expando scores).
+  the DOM mutation-journal replay (``dom.journal_replay``): each score
+  initialization is journaled, and its undo resets the score to None
+  (the canonical code re-parses the cached innerHTML, which equally
+  drops expando scores; <body>'s score is not journaled and survives,
+  as the canonical expando does).
 """
 
 from __future__ import annotations

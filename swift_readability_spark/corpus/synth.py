@@ -4,7 +4,8 @@ parquet tables of interleaved spans (the BASELINE input_hint shape).
 No external data: document bodies are generated from a fixed word list
 with ``random.Random(seed)``; the reference fixture corpus (already on
 disk, public Mozilla test-pages) is converted through the span codec.
-Mega-docs (~100x median size) exercise the skew-salting path.
+Mega-docs (~100x median size) exercise per-task skew on the extraction
+route (one hash of ``doc_id``; no document takes a separate path).
 """
 
 from __future__ import annotations

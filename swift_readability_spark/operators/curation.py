@@ -443,12 +443,7 @@ FROM per
 KNN_QUERIES = 5  # vec_id < 5 are the query set
 KNN_K = 3
 
-from .similarity import (  # oracle-green FP-parity expressions
-    _D_DOT,
-    _D_NORM,
-    _DOT,
-    _NORM,
-)
+from .similarity import _D_DOT, _D_NORM  # oracle-green FP-parity expressions
 
 
 def knn_join(spark, sf_dir):

@@ -937,31 +937,12 @@ def _with_planted(e):
 def _hyperplane_sigs(X, planes):
     """int64 hyperplane signature per row of the float64 matrix ``X``:
     bit b is set iff the exact sequential-fold dot with ``planes[b]``
-    is strictly > 0 — bit-identical to ``_sig_expr_spark``."""
+    is strictly > 0 — the signature the oracles compute with
+    ``similarity._sig_expr_duck``."""
     P = _np.asarray(planes, dtype=_np.float64)
     above = fold_dot(X[:, None, :], P[None, :, :]) > 0
     bits = _np.arange(len(P), dtype=_np.int64)
     return (above.astype(_np.int64) << bits).sum(axis=1)
-
-
-def hyperplane_sig_batches(planes):
-    """mapInArrow factory: each (vec_id, label, embedding) batch with
-    its ``_hyperplane_sigs`` appended as ``sig`` (null embedding -> null
-    sig); the vector passes through for the consumers that rerank
-    candidates (the hyperplane ANN queries)."""
-    dim = len(planes[0])
-
-    def batches(it):
-        import pyarrow as pa
-
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            X, valid = embedding_matrix(batch.column("embedding"), dim)
-            sig = pa.array(_hyperplane_sigs(X, planes), type=pa.int64(), mask=~valid)
-            yield batch.append_column("sig", sig)
-
-    return batches
 
 
 def embedding_neardup_pairs(spark, sf_dir):
@@ -1132,9 +1113,6 @@ QUERIES = {
     "simhash_neardup_pairs": (simhash_neardup_pairs, _simhash_neardup_sql()),
     "embedding_neardup_pairs": (embedding_neardup_pairs, NEARDUP_SQL),
 }
-
-
-MLLIB_VERIFY_JACCARD = 0.5
 
 
 def mllib_minhash_pairs(spark, sf_dir):
@@ -1974,12 +1952,6 @@ EVAL_SET_SIZE = 20
 DECON_NGRAM = 8
 
 
-def _gram_expr_spark(n: int) -> str:
-    # lookahead regex over the norm column (collapse-proof, see
-    # _SPARK_SHINGLES); <n words naturally yields no matches
-    return f"regexp_extract_all(norm, '{_ngram_lookahead_re(n)}', 1)"
-
-
 def _gram_expr_duck(n: int) -> str:
     parts = " || ' ' || ".join(f"words[i + {j}]" for j in range(n))
     return (
@@ -1991,9 +1963,8 @@ def _gram_expr_duck(n: int) -> str:
 
 def _gram_h60(n: int):
     """Kernel factory: exploded DISTINCT n-gram 60-bit md5 ints per doc
-    — the C twin of ``explode(array_distinct(transform(
-    _gram_expr_spark(n), g -> _spark_hash60(g))))``.  Distinctness is
-    on the HASH (exactly like the array form); < n words or null text
+    over ``tokenize_batch``'s words.  Distinctness is on the HASH
+    (exactly like the oracle's array form); < n words or null text
     explodes to nothing."""
 
     def grams(ids, texts):

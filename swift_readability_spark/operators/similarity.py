@@ -2,9 +2,11 @@
 
 Brute-force cosine top-k is the correctness baseline; the IVF variant
 (coarse centroids as a partition prune) is the scale path: at 10^9+
-vectors the centroid assignment is a broadcast join (centroid table is
-tiny) and only the probed cell is scanned — the same plan shape Spark
-would execute cluster-wide with the cell as partition key.
+vectors the centroid table is tiny (collected driver-side, the argmax
+assignment is one Arrow kernel) and only the probed cells are scored —
+the same plan shape Spark would execute cluster-wide with the cell as
+partition key.  Every exact rerank (brute force, IVF, hyperplane LSH,
+``knn_join``) scores in the one query-cosine kernel.
 """
 
 from __future__ import annotations
@@ -15,35 +17,31 @@ from pyspark.sql import functions as F
 from .common import read
 from .kernels import collect_within, embedding_matrix, fold_dot, map_arrow
 
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-    " 0D, (acc, v) -> acc + v)"
-)
-_NORM = (
-    "sqrt(aggregate(transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
-    " 0D, (acc, v) -> acc + v))"
-)
-
 QUERY_VEC_ID = 0
 TOP_K = 10
 
 
-def _query_cosine_batches(q_ids, Q):
+def _query_cosine_batches(q_ids, Q, keep=None):
     """mapInArrow factory: per corpus vector, the exact cosine against
     each collected query (ids ``q_ids``, rows of ``Q``) — ``fold_dot``
-    == the sequential ``aggregate(zip_with(...))`` fold bit-for-bit
-    (the interpreted HOF chain this replaces).  Emits one output batch
-    per (input batch, query); null embeddings get a null cosine."""
+    == the sequential ``aggregate(zip_with(...))`` fold bit-for-bit.
+    Emits one output batch per (input batch, query); null embeddings
+    get a null cosine.  ``keep(X)``, when given, is a boolean row mask
+    over the batch's float64 matrix: only the non-null rows it keeps
+    are scored, every other row is dropped (the hyperplane probe)."""
     qnorm = np.sqrt(fold_dot(Q, Q))
 
     def batches(it):
         import pyarrow as pa
 
         for batch in it:
+            X, valid = embedding_matrix(batch.column("embedding"), Q.shape[1])
+            if keep is not None:
+                rows = np.flatnonzero(valid & keep(X))
+                batch, X, valid = batch.take(rows), X[rows], valid[rows]
             n = batch.num_rows
             if n == 0:
                 continue
-            X, valid = embedding_matrix(batch.column("embedding"), Q.shape[1])
             enorm = np.sqrt(fold_dot(X, X))
             dots = fold_dot(X[:, None, :], Q[None, :, :])
             for j, qid in enumerate(q_ids):
@@ -80,22 +78,19 @@ def _query_vecs(e, pred, cap):
     return _dense_rows(tbl, "vec_id", "embedding", "ANN query vectors")
 
 
-def _scored_against_queries(e, queries, corpus_pred):
+def _scored_against_queries(e, queries, corpus_pred, keep=None):
     return map_arrow(
         e.filter(corpus_pred).select("vec_id", "label", "embedding"),
-        _query_cosine_batches(*queries),
+        _query_cosine_batches(*queries, keep),
         "q_id bigint, vec_id bigint, label int, cosine_raw double",
     )
 
 
-def ann_bruteforce_topk(spark, sf_dir):
-    """Exact cosine top-10 neighbours of vec_id=0 (single scan +
-    TakeOrdered — no shuffle of the corpus).  r07: the per-row cosine
-    is the Arrow kernel's exact fold instead of an interpreted HOF
-    chain; ordering/limit/rounding stay in the JVM plan."""
-    e = read(spark, sf_dir, "embeddings")
-    queries = _query_vecs(e, F.col("vec_id") == QUERY_VEC_ID, 1)
-    scored = _scored_against_queries(e, queries, F.col("vec_id") != QUERY_VEC_ID)
+def _top_k(scored):
+    """The shared ANN tail: rank by the RAW cosine (identical IEEE folds
+    in both engines), ties by ascending vec_id, TakeOrdered; floor-based
+    rounding is output-only (round() is engine-divergent on doubles —
+    text.py::_r)."""
     return (
         scored.orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
         .limit(TOP_K)
@@ -104,6 +99,18 @@ def ann_bruteforce_topk(spark, sf_dir):
             "label",
             (F.floor(F.col("cosine_raw") * 10000 + 0.5) / 10000).alias("cosine"),
         )
+    )
+
+
+def ann_bruteforce_topk(spark, sf_dir):
+    """Exact cosine top-10 neighbours of vec_id=0 (single scan +
+    TakeOrdered — no shuffle of the corpus).  The per-row cosine is the
+    Arrow kernel's exact fold; ordering/limit/rounding stay in the JVM
+    plan."""
+    e = read(spark, sf_dir, "embeddings")
+    queries = _query_vecs(e, F.col("vec_id") == QUERY_VEC_ID, 1)
+    return _top_k(
+        _scored_against_queries(e, queries, F.col("vec_id") != QUERY_VEC_ID)
     )
 
 
@@ -173,25 +180,12 @@ _K_DUCK = (
     f" count(*) // {MIN_CELL_ROWS}, {MAX_IVF_CELLS}))"
 )
 
-# portable 60-bit hash ranks the seed choice (dedup.py helpers)
-from .dedup import _duck_hash60, _spark_hash60  # noqa: E402
+# portable 60-bit hash ranks the seed choice; the hyperplane signature
+# kernel is the near-dup operators' (dedup.py helpers)
+from .dedup import _duck_hash60, _hyperplane_sigs, _spark_hash60  # noqa: E402
 
 _SEED_H_SPARK = _spark_hash60("CAST(vec_id AS STRING)")
 _SEED_H_DUCK = _duck_hash60("CAST(vec_id AS VARCHAR)")
-
-_CENT_COS = (
-    "(aggregate(zip_with(embedding, c.centroid, (x, y) -> CAST(x AS DOUBLE) * y),"
-    " 0D, (a, v) -> a + v)"
-    " / ({enorm} * sqrt(aggregate(transform(c.centroid, x -> x * x),"
-    " 0D, (a, v) -> a + v))))"
-).format(enorm=_NORM.format(v="embedding"))
-
-# argmax cell by (cosine, lower cell id) — struct ordering gives the
-# deterministic tie-break both engines agree on
-_ASSIGN_EXPR = (
-    f"(array_max(transform(cents, c -> struct({_CENT_COS} AS cc,"
-    f" -c.cell AS negcell))).negcell) * -1"
-)
 
 
 def _seed_centroid_rows(e, k: int):
@@ -432,11 +426,14 @@ def _probe_cells(cents, qvec, n_probes: int) -> list:
     return [cell for cell, _ in scored[:n_probes]]
 
 
-def _query_vec(e):
-    """The query embedding as a driver-side float64 vector (single-row
-    collect — the same row every prior plan collected inside
-    ``F.broadcast(q)``)."""
-    return _query_vecs(e, F.col("vec_id") == QUERY_VEC_ID, 1)[1][0]
+def _probed_topk(e, assigned, cents, n_probes):
+    """Exact top-k of the query over the top-``n_probes`` cells of
+    ``assigned``: the probe pick and the rerank score the same
+    collected query row."""
+    queries = _query_vecs(e, F.col("vec_id") == QUERY_VEC_ID, 1)
+    best = _probe_cells(cents, queries[1][0], n_probes)
+    pred = F.col("cell").isin(best) & (F.col("vec_id") != QUERY_VEC_ID)
+    return _top_k(_scored_against_queries(assigned, queries, pred))
 
 
 def ann_ivf_topk(spark, sf_dir):
@@ -455,26 +452,7 @@ def ann_ivf_topk(spark, sf_dir):
     k = recommended_ivf_cells(e.count())
     assigned = _seed_assignment(e, k)
     cents = _collect_centroid_rows(_cell_centroids(assigned))
-    best = _probe_cells(cents, _query_vec(e), N_PROBES)
-    q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec")
-    )
-    cos = F.expr(_DOT.format(a="embedding", b="qvec")) / (
-        F.expr(_NORM.format(v="embedding")) * F.expr(_NORM.format(v="qvec"))
-    )
-    return (
-        assigned.filter(F.col("cell").isin(best))
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .withColumn("cosine_raw", cos)
-        .orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select(
-            "vec_id",
-            "label",
-            (F.floor(F.col("cosine_raw") * 10000 + 0.5) / 10000).alias("cosine"),
-        )
-    )
+    return _probed_topk(e, assigned, cents, N_PROBES)
 
 
 ANN_IVF_SQL = f"""
@@ -553,26 +531,7 @@ def ann_ivf_refined_topk(spark, sf_dir):
         cents = _collect_centroid_rows(_cell_centroids(assigned))
         assigned = _assign_kernel(e, cents)
     cents = _collect_centroid_rows(_cell_centroids(assigned))
-    best = _probe_cells(cents, _query_vec(e), N_PROBES_REFINED)
-    q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec")
-    )
-    cos = F.expr(_DOT.format(a="embedding", b="qvec")) / (
-        F.expr(_NORM.format(v="embedding")) * F.expr(_NORM.format(v="qvec"))
-    )
-    return (
-        assigned.filter(F.col("cell").isin(best))
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .withColumn("cosine_raw", cos)
-        .orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select(
-            "vec_id",
-            "label",
-            (F.floor(F.col("cosine_raw") * 10000 + 0.5) / 10000).alias("cosine"),
-        )
-    )
+    return _probed_topk(e, assigned, cents, N_PROBES_REFINED)
 
 
 def _refined_sql() -> str:
@@ -648,18 +607,6 @@ WIDE_HYPERPLANES = HYPERPLANES + _lcg_hyperplanes(
 )
 
 
-def _sig_expr_spark(vec: str, planes=None) -> str:
-    terms = []
-    for b, h in enumerate(planes if planes is not None else HYPERPLANES):
-        arr = "array(" + ", ".join(f"{x}D" for x in h) + ")"
-        dot = (
-            f"aggregate(zip_with({vec}, {arr},"
-            f" (x, y) -> CAST(x AS DOUBLE) * y), 0D, (a, v) -> a + v)"
-        )
-        terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << b} ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"
-
-
 def _sig_expr_duck(vec: str, planes=None) -> str:
     terms = []
     for b, h in enumerate(planes if planes is not None else HYPERPLANES):
@@ -672,54 +619,44 @@ def _sig_expr_duck(vec: str, planes=None) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _hyperplane_sig_df(spark, sf_dir, planes):
-    """(vec_id, label, embedding, sig) via the Arrow signature kernel
-    (dedup.hyperplane_sig_batches) over a
-    spread scan — bit-identical signatures to ``_sig_expr_spark``."""
-    from .common import spread
-    from .dedup import hyperplane_sig_batches
+def _hyperplane_topk(spark, sf_dir, planes, near):
+    """Exact top-k of the query over the corpus vectors whose hyperplane
+    signature (``dedup._hyperplane_sigs`` over ``planes``) is
+    ``near(sigs, qsig)`` the query's.  The query signature is computed
+    driver-side from the collected query row; the corpus signatures are
+    the scoring kernel's row mask, so the probe, the rerank and the
+    TakeOrdered are one scan and one Arrow stage (no join, no shuffle).
+    Candidates are pruned, never approximated: every returned cosine is
+    the true value."""
+    e = read(spark, sf_dir, "embeddings")
+    queries = _query_vecs(e, F.col("vec_id") == QUERY_VEC_ID, 1)
+    qsig = int(_hyperplane_sigs(queries[1], planes)[0])
 
-    e = spread(
-        spark,
-        read(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding"),
+    def keep(X):
+        return near(_hyperplane_sigs(X, planes), qsig)
+
+    return _top_k(
+        _scored_against_queries(e, queries, F.col("vec_id") != QUERY_VEC_ID, keep)
     )
-    return map_arrow(
-        e,
-        hyperplane_sig_batches(planes),
-        "vec_id bigint, label int, embedding array<float>, sig bigint",
-    )
+
+
+def _within_hamming_probe(sigs, qsig):
+    """``bit_count(sig ^ qsig) <= HAMMING_PROBE`` per row."""
+    x = sigs ^ qsig
+    n = np.zeros(len(x), dtype=np.int64)
+    for b in range(N_HYPERPLANES):
+        n += (x >> b) & 1
+    return n <= HAMMING_PROBE
 
 
 def ann_hyperplane_topk(spark, sf_dir):
     """Label-free ANN blocking: random-hyperplane LSH (vector SimHash).
     The corpus is bucketed by an 8-bit signature; the query scans only
     buckets within Hamming distance HAMMING_PROBE of its own signature
-    (9 of 256 cells) and exact-reranks by cosine.  This is the blocking
+    (37 of 256 cells) and exact-reranks by cosine.  This is the blocking
     that works when no IVF centroids / labels exist; at 10^9 vectors
-    widen the signature (e.g. 16-24 bits) so each bucket stays small.
-    Exactness note: candidates are pruned, never approximated — every
-    returned cosine is the true value.  r07: the signature is the Arrow
-    kernel (bit-exact fold parity), not the interpreted HOF chain."""
-    sig = _hyperplane_sig_df(spark, sf_dir, HYPERPLANES)
-    q = sig.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec"), F.col("sig").alias("qsig")
-    )
-    cos = F.expr(_DOT.format(a="embedding", b="qvec")) / (
-        F.expr(_NORM.format(v="embedding")) * F.expr(_NORM.format(v="qvec"))
-    )
-    return (
-        sig.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .filter(F.expr(f"bit_count(sig ^ qsig) <= {HAMMING_PROBE}"))
-        .withColumn("cosine_raw", cos)
-        .orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select(
-            "vec_id",
-            "label",
-            (F.floor(F.col("cosine_raw") * 10000 + 0.5) / 10000).alias("cosine"),
-        )
-    )
+    widen the signature (e.g. 16-24 bits) so each bucket stays small."""
+    return _hyperplane_topk(spark, sf_dir, HYPERPLANES, _within_hamming_probe)
 
 
 ANN_HYPERPLANE_SQL = f"""
@@ -753,9 +690,9 @@ QUERIES["ann_hyperplane_topk"] = (ann_hyperplane_topk, ANN_HYPERPLANE_SQL)
 # over the 32-bit signature: a candidate shares ANY band with the
 # query, so recall tolerates up to 3 flipped signature bits
 # (pigeonhole) vs the 8-bit probe's radius-2 — while scanning ~4/256
-# of a diverse corpus vs 9/256.  At 10^9+ vectors widen the bands
+# of a diverse corpus vs 37/256.  At 10^9+ vectors widen the bands
 # (2x16-bit halves — 1/32768 of the corpus, 1-flip tolerance), same
-# expression shape.
+# band test.
 ANN_WIDE_BAND_BITS = 8
 N_ANN_WIDE_BANDS = 4
 _ANN_WIDE_MASK = (1 << ANN_WIDE_BAND_BITS) - 1
@@ -769,36 +706,21 @@ def _wide_band_match(sig: str, qsig: str) -> str:
     )
 
 
+def _shares_wide_band(sigs, qsig):
+    """``_wide_band_match(sig, qsig)`` per row: any of the
+    N_ANN_WIDE_BANDS bands of ANN_WIDE_BAND_BITS bits equal."""
+    hit = np.zeros(len(sigs), dtype=bool)
+    for b in range(N_ANN_WIDE_BANDS):
+        s = b * ANN_WIDE_BAND_BITS
+        hit |= ((sigs >> s) & _ANN_WIDE_MASK) == ((qsig >> s) & _ANN_WIDE_MASK)
+    return hit
+
+
 def ann_hyperplane_wide_topk(spark, sf_dir):
     """ANN with the 32-bit (32-hyperplane) signature, banded 4x8 bits:
-    candidates share >= 1 band with the query — evaluated as a
-    map-side filter against the broadcast query signature (no join, no
-    shuffle, one corpus scan + TakeOrdered).  Candidates are pruned,
-    never approximated: every returned cosine is exact.  r07: kernel
-    signature (see ann_hyperplane_topk)."""
-    sig = _hyperplane_sig_df(spark, sf_dir, WIDE_HYPERPLANES)
-    q = sig.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec"), F.col("sig").alias("qsig")
-    )
-    cos = F.expr(_DOT.format(a="embedding", b="qvec")) / (
-        F.expr(_NORM.format(v="embedding")) * F.expr(_NORM.format(v="qvec"))
-    )
-    # rank by the RAW cosine (identical IEEE folds in both engines);
-    # floor-based rounding is output-only (round() is engine-divergent
-    # on doubles — text.py::_r)
-    return (
-        sig.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .filter(F.expr(_wide_band_match("sig", "qsig")))
-        .withColumn("cosine_raw", cos)
-        .orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select(
-            "vec_id",
-            "label",
-            (F.floor(F.col("cosine_raw") * 10000 + 0.5) / 10000).alias("cosine"),
-        )
-    )
+    candidates share >= 1 band with the query — the band match is the
+    scoring kernel's row mask (one corpus scan + TakeOrdered)."""
+    return _hyperplane_topk(spark, sf_dir, WIDE_HYPERPLANES, _shares_wide_band)
 
 
 def _ann_hyperplane_wide_sql() -> str:

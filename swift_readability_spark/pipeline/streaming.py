@@ -3,11 +3,12 @@
 The reference is batch-only (SURVEY.md §2.10); this is the corpus-level
 extension: a file-source stream of spans documents processed in
 micro-batches with ``Trigger.AvailableNow`` — each micro-batch is one
-``run_extraction`` call via ``foreachBatch`` (same skew-aware plan, same
-output-then-lineage commit) under its own run id.  The Spark checkpoint
-alone makes restarts exactly-once: micro-batches never anti-join
-against lineage, since that would skip new documents whose partition
-keys an earlier batch committed.
+``run_extraction`` call via ``foreachBatch`` (the same plan, one hash
+route on ``doc_id``, and the same output-then-lineage commit) under
+its own run id.  The Spark checkpoint alone makes restarts
+exactly-once: micro-batches never anti-join against lineage, since
+that would skip new documents whose partition keys an earlier batch
+committed.
 
 ``foreachBatch`` is used (rather than a streaming mapInArrow) because
 the extraction stage needs a repartition, which streaming DataFrames

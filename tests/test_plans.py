@@ -276,12 +276,24 @@ def test_containment_prefix_join_is_hash_keyed_and_df_capped(spark, reg):
     assert "BatchEvalPython" not in final and "ArrowEvalPython" not in final
 
 
-def test_ann_wide_is_scan_plus_takeordered(spark, reg):
-    """The wide-signature probe is a map-side filter against the
-    broadcast query row: corpus scanned once, no corpus shuffle."""
-    plan = _plan(reg["ann_hyperplane_wide_topk"](spark, SF))
-    assert "BroadcastNestedLoopJoin" in plan
+def _assert_one_kernel_takeordered(plan: str) -> None:
+    """The hyperplane probe is the scoring kernel's row mask against
+    the driver-computed query signature: one Arrow stage over one
+    corpus scan, no join, no shuffle, then TakeOrdered."""
+    assert plan.count("MapInArrow") == 1
+    assert "Exchange" not in plan
+    assert "Join" not in plan
     assert "TakeOrderedAndProject" in plan
+
+
+def test_ann_hyperplane_is_scan_plus_takeordered(spark, reg):
+    _assert_one_kernel_takeordered(_plan(reg["ann_hyperplane_topk"](spark, SF)))
+
+
+def test_ann_wide_is_scan_plus_takeordered(spark, reg):
+    _assert_one_kernel_takeordered(
+        _plan(reg["ann_hyperplane_wide_topk"](spark, SF))
+    )
 
 
 def test_extract_and_curate_single_arrow_pass(spark, reg):
@@ -306,9 +318,10 @@ def test_ann_ivf_corpus_side_never_sort_merges(spark, reg):
     """Scale-derived IVF (r07 shape): the argmax assignment is ONE
     Arrow kernel over the corpus scan, the probed cells are literal ids
     (driver-side pick over the broadcast-class centroid table), and the
-    only join left is the broadcast-nested-loop query singleton — the
-    corpus is never shuffled on a join key and never pays an
-    interpreted per-(vector, cell) higher-order-function fold."""
+    rerank scores the probed cells in the shared query-cosine kernel
+    against the collected query row — the corpus is never shuffled on
+    a join key and never pays an interpreted per-(vector, cell)
+    higher-order-function fold."""
     for q in ("ann_ivf_topk", "ann_ivf_refined_topk"):
         plan = _plan(reg[q](spark, SF))
         assert "SortMergeJoin" not in plan, q

@@ -44,3 +44,48 @@ def test_spark_submit_records_launcher_parallelism_and_resumes(tmp_path):
     _submit(*args)
     assert pq.read_table(output).num_rows == 12
     assert pq.read_table(lineage).num_rows == len(lin)
+
+
+def test_streaming_rejects_non_parquet_input_before_spark(tmp_path):
+    """The stream reads parquet only: another --input-format is a usage
+    error (exit 2) raised before any session starts."""
+    out = subprocess.run(
+        [
+            sys.executable,
+            str(REPO / "run_job.py"),
+            "--streaming",
+            "--input-format",
+            "csv",
+            "--input",
+            str(tmp_path / "docs.csv"),
+            "--output",
+            str(tmp_path / "out"),
+            "--lineage",
+            str(tmp_path / "lineage"),
+        ],
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 2, out.stderr[-2000:]
+    assert "--streaming reads parquet input only" in out.stderr
+    assert "SparkContext" not in out.stderr
+
+
+def test_streaming_names_runs_after_run_id(tmp_path):
+    """--run-id reaches the stream: micro-batch k commits as
+    ``<run-id>-<k>``."""
+    docs = build_corpus(str(tmp_path / "corpus"), n_synth=6, include_fixtures=False)
+    lineage = tmp_path / "lineage"
+    _submit(
+        "--streaming",
+        "--run-id",
+        "nightly",
+        "--input",
+        docs,
+        "--output",
+        str(tmp_path / "out"),
+        "--lineage",
+        str(lineage),
+    )
+    assert {r["run_id"] for r in pq.read_table(lineage).to_pylist()} == {"nightly-0"}

@@ -13,11 +13,12 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from swift_readability_spark.operators.dedup import hyperplane_sig_batches
-from swift_readability_spark.operators.kernels import fold_dot
+from swift_readability_spark.operators.dedup import _hyperplane_sigs
+from swift_readability_spark.operators.kernels import embedding_matrix, fold_dot
 from swift_readability_spark.operators.similarity import (
     HYPERPLANES,
     _query_cosine_batches,
+    _within_hamming_probe,
 )
 
 
@@ -68,11 +69,23 @@ def _batch(rows):
     )
 
 
-def _kernels():
-    return {
-        "sig": hyperplane_sig_batches(HYPERPLANES),
-        "cosine_raw": _query_cosine_batches([0], np.array([_GOOD[::-1]])),
-    }
+_Q = _GOOD[::-1]
+
+
+def _cosine(rows, keep=None):
+    kernel = _query_cosine_batches([0], np.array([_Q]), keep)
+    out = kernel(iter([_batch(rows)]))
+    return [v for b in out for v in b.column("cosine_raw").to_pylist()]
+
+
+def _exact_cosine(x):
+    return _seq_fold(x, _Q) / (np.sqrt(_seq_fold(x, x)) * np.sqrt(_seq_fold(_Q, _Q)))
+
+
+def _near_query(X):
+    """The 8-bit hyperplane probe around the query's signature."""
+    qsig = int(_hyperplane_sigs(np.array([_Q]), HYPERPLANES)[0])
+    return _within_hamming_probe(_hyperplane_sigs(X, HYPERPLANES), qsig)
 
 
 @pytest.mark.parametrize(
@@ -82,22 +95,34 @@ def _kernels():
 )
 def test_ragged_or_null_element_embedding_raises(bad):
     """A row of the wrong length or with a null element raises
-    ValueError naming the row in the hyperplane-signature and the
-    query-cosine kernels; a top-level null embedding still yields a
-    null sig / cosine next to a valid row's exact-fold value."""
-    for out_col, kernel in _kernels().items():
+    ValueError naming the row in the query-cosine kernel, with or
+    without a row mask; a top-level null embedding still yields a null
+    cosine next to a valid row's exact-fold value."""
+    for keep in (None, _near_query):
         with pytest.raises(ValueError, match="row 1"):
-            list(kernel(iter([_batch([_GOOD, bad])])))
+            _cosine([_GOOD, bad], keep)
+    assert _cosine([_GOOD, None]) == [_exact_cosine(_GOOD), None]
 
-    sig, cos = (
-        next(kernel(iter([_batch([_GOOD, None])]))).column(out_col).to_pylist()
-        for out_col, kernel in _kernels().items()
-    )
-    assert sig[1] is None and cos[1] is None
-    assert sig[0] == sum(
-        1 << b for b, h in enumerate(HYPERPLANES) if _seq_fold(_GOOD, h) > 0
-    )
-    q = _GOOD[::-1]
-    assert cos[0] == _seq_fold(_GOOD, q) / (
-        np.sqrt(_seq_fold(_GOOD, _GOOD)) * np.sqrt(_seq_fold(q, q))
-    )
+
+def test_hyperplane_sigs_are_the_sequential_fold_bits():
+    """Bit b of a signature is set iff the exact fold with plane b is
+    strictly positive, for a vector and its negation."""
+    X, _ = embedding_matrix(_batch([_GOOD, [-x for x in _GOOD]]).column("embedding"))
+    assert _hyperplane_sigs(X, HYPERPLANES).tolist() == [
+        sum(1 << b for b, h in enumerate(HYPERPLANES) if _seq_fold(v, h) > 0)
+        for v in (_GOOD, [-x for x in _GOOD])
+    ]
+
+
+def test_row_mask_drops_null_and_far_rows_before_scoring():
+    """With a row mask the kernel scores only the non-null rows it
+    keeps: a null embedding and a row whose signature is far from the
+    query's (its negation flips every bit) are dropped, and a near row
+    (the query, halved) keeps its exact-fold cosine."""
+    near, far = [x / 2 for x in _Q], [-x for x in _Q]
+    sigs = _hyperplane_sigs(np.array([_Q, far]), HYPERPLANES)
+    assert bin(int(sigs[0] ^ sigs[1])).count("1") > 2
+    batch = _batch([None, far, near])
+    out = list(_query_cosine_batches([0], np.array([_Q]), _near_query)(iter([batch])))
+    assert [b.column("vec_id").to_pylist() for b in out] == [[2]]
+    assert out[0].column("cosine_raw").to_pylist() == [_exact_cosine(near)]
