@@ -7,7 +7,10 @@ its numbers are cited in OPTIMIZATION_r07.md.
 Usage:
   python bench_extra.py [--sf DIR] [--passes N] [query ...]
 
-Prints one JSON line: {"sf":..., "queries": {name: best_sec}, "samples": {...}}
+One untimed warm-up pass runs every selected query first (JIT, Python
+workers, parquet footers), then ``--passes`` timed passes.  Prints one
+JSON line: {"sf":..., "queries": {name: best_sec}, "samples": {...}};
+``queries`` and ``samples`` come from the timed passes only.
 """
 
 from __future__ import annotations
@@ -52,15 +55,21 @@ def main() -> None:
     )
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {n: [] for n in names}
+
+    def run(name: str) -> float:
+        builder, _ = reg[name]
+        spark.sparkContext.setJobDescription(f"bench_extra:{name}")
+        t0 = time.perf_counter()
+        builder(spark, args.sf).write.mode("overwrite").format("noop").save()
+        return time.perf_counter() - t0
+
     try:
         spark.range(1_000_000).selectExpr("sum(id)").collect()
+        for name in names:
+            run(name)  # warm-up: a cold first run is not a sample
         for _p in range(args.passes):
             for name in names:
-                builder, _ = reg[name]
-                spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-                t0 = time.perf_counter()
-                builder(spark, args.sf).write.mode("overwrite").format("noop").save()
-                w = time.perf_counter() - t0
+                w = run(name)
                 samples[name].append(round(w, 3))
                 if name not in timings or w < timings[name]:
                     timings[name] = w

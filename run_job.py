@@ -6,7 +6,7 @@ Usage:
       --input  <documents parquet/iceberg path> \
       --output <extracted output path> \
       --lineage <lineage path> \
-      [--base-url http://fakehost/test/page.html] \
+      [--base-url URL] \
       [--partitions N] [--run-id ID] [--no-resume] [--streaming] \
       [--input-format parquet|json|csv|orc]
 
@@ -28,13 +28,15 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from swift_readability_spark.extract import DEFAULT_BASE_URL
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--lineage", required=True)
-    ap.add_argument("--base-url", default="http://fakehost/test/page.html")
+    ap.add_argument("--base-url", default=DEFAULT_BASE_URL)
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--no-resume", action="store_true")

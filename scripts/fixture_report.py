@@ -16,12 +16,11 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from swift_readability_spark.core.readability import ReadabilityOptions
-from swift_readability_spark.extract import extract_document
+from swift_readability_spark.extract import DEFAULT_BASE_URL, extract_document
 from swift_readability_spark.spans.codec import html_to_spans
 from swift_readability_spark.spans.compare import compare_spans
 
 FIXTURES = Path("/root/reference/Tests/SwiftReadabilityTests/Fixtures/test-pages")
-BASE_URL = "http://fakehost/test/page.html"
 
 META_FIELDS = [
     ("title", "title"),
@@ -41,12 +40,12 @@ def run_fixture(name: str, verbose: bool = False):
     expected_html = (d / "expected.html").read_text(encoding="utf-8")
     expected_meta = json.loads((d / "expected-metadata.json").read_text(encoding="utf-8"))
 
-    in_spans = html_to_spans(source, BASE_URL)
+    in_spans = html_to_spans(source, DEFAULT_BASE_URL)
     # the reference harness runs with classesToPreserve=["caption"]
     # (ReadabilityTests.swift:23)
     opts = ReadabilityOptions(classes_to_preserve=("caption",))
-    result = extract_document(name, in_spans, BASE_URL, opts)
-    exp_spans = html_to_spans(expected_html, BASE_URL, visibility_filter=False)
+    result = extract_document(name, in_spans, DEFAULT_BASE_URL, opts)
+    exp_spans = html_to_spans(expected_html, DEFAULT_BASE_URL, visibility_filter=False)
 
     mismatches = compare_spans(result["spans"], exp_spans)
     meta_mismatches = []

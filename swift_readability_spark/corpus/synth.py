@@ -17,12 +17,12 @@ from pathlib import Path
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from ..extract import DEFAULT_BASE_URL
 from ..spans.codec import html_to_spans
 
 FIXTURES_DIR = Path(
     "/root/reference/Tests/SwiftReadabilityTests/Fixtures/test-pages"
 )
-BASE_URL = "http://fakehost/test/page.html"
 
 _SPAN_TYPE = pa.list_(
     pa.struct(
@@ -95,7 +95,7 @@ def fixture_documents() -> list[tuple[str, list[dict]]]:
         if not d.is_dir():
             continue
         html = (d / "source.html").read_text(encoding="utf-8")
-        rows.append((d.name, html_to_spans(html, BASE_URL)))
+        rows.append((d.name, html_to_spans(html, DEFAULT_BASE_URL)))
     return rows
 
 
@@ -122,7 +122,7 @@ def write_expected_tables(out_dir: str) -> None:
             continue
         expected_html = (d / "expected.html").read_text(encoding="utf-8")
         spans_rows.append(
-            (d.name, html_to_spans(expected_html, BASE_URL, visibility_filter=False))
+            (d.name, html_to_spans(expected_html, DEFAULT_BASE_URL, visibility_filter=False))
         )
         meta = json.loads((d / "expected-metadata.json").read_text(encoding="utf-8"))
         meta_rows.append(

@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -67,8 +68,35 @@ def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
 # Spark's round() is additionally avoided everywhere: it rounds the
 # double's decimal STRING (Double.toString -> HALF_UP) while DuckDB
 # rounds the raw binary double, so they disagree on values like 0.50145
-# even when both engines hold the identical double (text.py::_r).
+# even when both engines hold the identical double (``floor_round``).
 # ---------------------------------------------------------------------------
+
+
+def floor_scaled(col: Column, digits: int) -> Column:
+    """``floor(x*10^k + 0.5)`` of a double Column as BIGINT: pure IEEE
+    double ops, bit-identical in any engine.  The integer-scaled
+    outputs (``*_e4`` columns) keep every double off the driver's hash
+    surface."""
+    return F.floor(col * 10**digits + F.lit(0.5))
+
+
+def floor_round(col: Column, digits: int) -> Column:
+    """Portable rounding of a double Column: floor(x*10^k + 0.5)/10^k.
+    Spark's round() converts the double through its decimal string
+    (Double.toString -> HALF_UP), so a value like 0.50145 whose nearest
+    double sits just BELOW the midpoint rounds UP in Spark but DOWN in
+    engines that round the raw binary double (DuckDB) — found by the
+    sf0.1 oracle sweep, one row in 6500."""
+    return floor_scaled(col, digits) / 10**digits
+
+
+def content_hash() -> Column:
+    """md5 of the normalized ``text`` column (whitespace runs -> one
+    space, trim, lower): the content key of every exact-dedup decision.
+    Explicit whitespace class, NOT \\s: Java's \\s includes \\x0B
+    (vertical tab) while DuckDB's RE2 \\s does not, so a \\x0B-bearing
+    doc would hash differently in the two engines."""
+    return F.md5(F.lower(F.trim(F.regexp_replace("text", "[ \t\n\x0b\f\r]+", " "))))
 
 
 def exact_scaled_int(col: str, digits: int = 2) -> str:

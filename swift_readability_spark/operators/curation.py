@@ -9,7 +9,7 @@ rules reused from the sibling modules:
 
 - portable 32-bit hash = first 8 hex chars of md5 (``_spark_hash`` /
   ``_duck_hash`` in dedup.py) — never engine ``hash()``,
-- portable rounding = floor(x*10^k + 0.5)/10^k (text.py::_r) — never
+- portable rounding = floor(x*10^k + 0.5)/10^k (common.floor_round) — never
   engine ``round()`` on doubles,
 - any per-key ordering ties broken by an explicit unique column.
 """
@@ -19,10 +19,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .common import duck_sum128, fround, read, spark_sum64
+from .common import content_hash, duck_sum128, floor_round, read, spark_sum64
 from .dedup import _SPARK_NORM, _duck_hash, _duck_hash60, _spark_hash, _spark_hash60
 from .kernels import docs, h60, map_docs, tokenize_batch
-from .text import _r
 
 # ---------------------------------------------------------------------------
 # shared chunk expressions (identical tokenization on both engines, same
@@ -176,6 +175,8 @@ PACK_BUCKETS = 8  # parallel packing streams
 
 _TOKENS_SPARK = "size(split(trim(text), '[ \\\\t\\\\n\\\\x0b\\\\f\\\\r]+'))"
 _TOKENS_DUCK = "len(string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+'))"
+# the packing stream of doc_id (pack_sequences, build_training_set)
+_PACK_BUCKET = f"pmod({_spark_hash('CAST(doc_id AS STRING)')}, {PACK_BUCKETS})"
 
 
 def pack_sequences(spark, sf_dir):
@@ -193,7 +194,7 @@ def pack_sequences(spark, sf_dir):
     d = read(spark, sf_dir, "documents")
     base = d.selectExpr(
         "doc_id",
-        f"pmod({_spark_hash(f'CAST(doc_id AS STRING)')}, {PACK_BUCKETS}) AS bucket",
+        f"{_PACK_BUCKET} AS bucket",
         f"CAST({_TOKENS_SPARK} AS BIGINT) AS n_tokens",
     )
     w = (
@@ -341,12 +342,11 @@ def _corpus_report_per_lang(spark, sf_dir):
     partial agg) producing per-language doc counts, token totals,
     distinct-content counts and the exact text-length sum."""
     d = read(spark, sf_dir, "documents")
-    norm = F.lower(F.trim(F.regexp_replace("text", "[ \t\n\x0b\f\r]+", " ")))
     return (
         d.select(
             "lang",
             F.expr(_TOKENS_SPARK).cast("bigint").alias("n_tokens"),
-            F.md5(norm).alias("content_hash"),
+            content_hash().alias("content_hash"),
             F.length("text").cast("bigint").alias("text_len"),
         )
         .groupBy("lang")
@@ -471,7 +471,7 @@ def knn_join(spark, sf_dir):
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
             F.col("rnk").cast("bigint").alias("rnk"),
-            _r(F.col("cosine_raw"), 4).alias("cosine"),
+            floor_round(F.col("cosine_raw"), 4).alias("cosine"),
         )
     )
 
@@ -547,19 +547,66 @@ STRATA_OVERSAMPLE = 8
 _STRATA_BUCKETS = 1_000_000
 
 
+def _hash_top_k(df, key, n_key, k, oversample, what, knob):
+    """The ``k`` rows with the lowest (hash bucket, doc_id) per ``key``
+    of ``df`` — the rows carry their key's size in column ``n_key`` —
+    plus their ``rnk``; a pure function of doc_id, never rand().
+
+    Oversample-then-exact, NOT a naive per-key window (which shuffles
+    the whole corpus and sends each key's full partition to one task):
+    a hash-bucket pre-filter keeps ~``oversample``*k candidates per key
+    map-side, whatever the key's size, then the exact top-k window runs
+    on candidates only.  Keys smaller than k keep everything (the
+    threshold saturates).
+
+    Loud floor on the probabilistic oversample ("no silent caps",
+    VERDICT r04 item 5): if a key's candidate pool ever undershoots
+    min(k, key size) — P is Chernoff-negligible but not zero on a
+    changing corpus — the job fails naming ``knob`` as the remedy
+    instead of silently returning a short sample.  The count window
+    shares the key partitioning with the row_number window: one
+    Exchange, and the guard sits in a filter so Catalyst can't prune
+    it (the simhash pair-budget guard pattern, dedup.py)."""
+    bucket = f"pmod({_spark_hash60('CAST(doc_id AS STRING)')}, {_STRATA_BUCKETS})"
+    # integer ceil-div keeps both engines bit-identical (no float ceil)
+    thresh = (
+        f"least(CAST({_STRATA_BUCKETS} AS BIGINT),"
+        f" CAST(({oversample * k}L * {_STRATA_BUCKETS}"
+        f" + {n_key} - 1) DIV {n_key} AS BIGINT))"
+    )
+    undershoot = F.concat(
+        F.lit(f"{what}: oversample pre-filter kept "),
+        F.col("n_cand").cast("string"),
+        F.lit(f" candidates for {key} '"),
+        F.col(key),
+        F.lit("' of "),
+        F.col(n_key).cast("string"),
+        F.lit(f" docs < min(K={k}, {key} size) — raise {knob} (now {oversample})"),
+    )
+    w = Window.partitionBy(key)
+    return (
+        df.withColumn("bucket", F.expr(bucket))
+        .filter(F.col("bucket") < F.expr(thresh))
+        .withColumn("n_cand", F.count("*").over(w))
+        .filter(
+            F.assert_true(
+                F.col("n_cand") >= F.least(F.lit(k), F.col(n_key)), undershoot
+            ).isNull()
+        )
+        .drop("n_cand")
+        .withColumn("rnk", F.row_number().over(w.orderBy("bucket", "doc_id")))
+        .filter(F.col("rnk") <= k)
+    )
+
+
 def stratified_sample(spark, sf_dir):
     """Exactly min(K, |stratum|) documents per language, deterministic
     under re-runs (pure function of doc_id, never rand()).
 
-    Scale shape — oversample-then-exact, NOT a naive per-stratum
-    window: a window over a raw stratum shuffles the whole corpus and
-    sends each language's full partition to one task (skew bomb for an
-    80%-English crawl).  Instead (1) a tiny per-language count
-    aggregates map-side and broadcasts, (2) a hash-bucket pre-filter
-    keeps ~``STRATA_OVERSAMPLE``*K candidates per stratum map-side (no
-    shuffle of the big side), (3) the exact top-K-by-hash window runs
-    on candidates only.  Strata smaller than K keep everything (the
-    threshold saturates).
+    Scale shape: a tiny per-language count aggregates map-side and
+    broadcasts, then ``_hash_top_k`` samples each stratum (a naive
+    window over a raw stratum would send each language's full
+    partition to one task — a skew bomb for an 80%-English crawl).
 
     NULL languages group under the '' sentinel (both engines): an
     inner join on the nullable key would silently drop the
@@ -568,55 +615,15 @@ def stratified_sample(spark, sf_dir):
         "lang", F.coalesce("lang", F.lit(""))
     )
     counts = d.groupBy("lang").agg(F.count("*").alias("n_stratum"))
-    bucket = f"pmod({_spark_hash60('CAST(doc_id AS STRING)')}, {_STRATA_BUCKETS})"
-    # integer ceil-div keeps both engines bit-identical (no float ceil)
-    thresh = (
-        f"least(CAST({_STRATA_BUCKETS} AS BIGINT),"
-        f" CAST(({STRATA_OVERSAMPLE * STRATA_K}L * {_STRATA_BUCKETS}"
-        f" + n_stratum - 1) DIV n_stratum AS BIGINT))"
-    )
-    cand = (
-        d.join(F.broadcast(counts), "lang")
-        .withColumn("bucket", F.expr(bucket))
-        .filter(F.col("bucket") < F.expr(thresh))
-    )
-    # loud floor on the probabilistic oversample ("no silent caps",
-    # VERDICT r04 item 5): if a stratum's candidate pool ever
-    # undershoots min(K, |stratum|) — P is Chernoff-negligible but not
-    # zero on a changing corpus — fail the job with the remedy instead
-    # of silently returning a short sample.  The count window shares
-    # the lang partitioning with the row_number window below: one
-    # Exchange, and the guard sits in a filter so Catalyst can't prune
-    # it (the simhash pair-budget guard pattern, dedup.py).
-    n_cand_w = Window.partitionBy("lang")
-    guarded = (
-        cand.withColumn("n_cand", F.count("*").over(n_cand_w))
-        .filter(
-            F.assert_true(
-                F.col("n_cand")
-                >= F.least(F.lit(STRATA_K), F.col("n_stratum")),
-                F.concat(
-                    F.lit("stratified_sample: oversample pre-filter kept "),
-                    F.col("n_cand").cast("string"),
-                    F.lit(" candidates for stratum '"),
-                    F.col("lang"),
-                    F.lit("' of "),
-                    F.col("n_stratum").cast("string"),
-                    F.lit(
-                        f" docs < min(K={STRATA_K}, stratum size) — raise"
-                        f" STRATA_OVERSAMPLE (now {STRATA_OVERSAMPLE})"
-                    ),
-                ),
-            ).isNull()
-        )
-        .drop("n_cand")
-    )
-    w = Window.partitionBy("lang").orderBy("bucket", "doc_id")
-    return (
-        guarded.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= STRATA_K)
-        .select("doc_id", "lang", F.col("rnk").cast("bigint").alias("rnk"))
-    )
+    return _hash_top_k(
+        d.join(F.broadcast(counts), "lang"),
+        "lang",
+        "n_stratum",
+        STRATA_K,
+        STRATA_OVERSAMPLE,
+        "stratified_sample",
+        "STRATA_OVERSAMPLE",
+    ).select("doc_id", "lang", F.col("rnk").cast("bigint").alias("rnk"))
 
 
 STRATIFIED_SAMPLE_SQL = f"""
@@ -646,77 +653,52 @@ SOURCE_CAP = 20  # max docs kept per source
 SOURCE_CAP_OVERSAMPLE = 8  # candidate pre-filter factor (see stratified)
 
 
+def _source_counts(spark, sf_dir):
+    """(documents with NULL sources as '', per-source ``n_source``)."""
+    d = read(spark, sf_dir, "documents").withColumn(
+        "source", F.coalesce("source", F.lit(""))
+    )
+    return d, d.groupBy("source").agg(F.count("*").alias("n_source"))
+
+
 def source_cap(spark, sf_dir):
     """Per-source frequency cap: keep at most ``SOURCE_CAP`` documents
     per ``source``, deterministic under re-runs (pure function of
     doc_id, never rand()).  The C4/RefinedWeb-style domain cap — no
     single domain may dominate a web-scale training corpus.
 
-    Scale shape — the stratified_sample machinery with a pass-through
-    branch: (1) per-source counts aggregate map-side; broadcast while
-    the distinct-source count fits the broadcast budget (20 here; at
-    crawl domain cardinality ~1e8 swap the broadcast for a plain
-    source-keyed join — agg, join and window all share the source
-    partitioning, so AQE coalesces to one Exchange of the big side).
+    Scale shape — stratified_sample's ``_hash_top_k`` with a
+    pass-through branch: (1) per-source counts aggregate map-side;
+    broadcast while the distinct-source count fits the broadcast
+    budget (20 here; at crawl domain cardinality ~1e8 swap the
+    broadcast for a plain source-keyed join — agg, join and window all
+    share the source partitioning, so AQE coalesces to one Exchange of
+    the big side).
     (2) Docs from under-cap sources pass through WITHOUT entering any
     window.  (3) Over-cap sources take the hash-bucket pre-filter
     (~OVERSAMPLE*CAP candidates per source regardless of source size —
     heavy-hitter-proof: a 1e9-doc domain still sends ~160 rows to its
-    window task), then the exact top-CAP-by-hash window on candidates
-    only, with the loud assert_true undershoot floor ("no silent
-    caps").
+    window task), the loud undershoot floor and the exact
+    top-CAP-by-hash window.
 
     NULL sources group under the '' sentinel (both engines, operator
     AND audit): an inner join on a nullable key would silently drop
     null-source docs while the groupBy-based audit still counted them
     — the conservation law n_kept == |output| would break."""
-    d = read(spark, sf_dir, "documents").withColumn(
-        "source", F.coalesce("source", F.lit(""))
-    )
-    counts = d.groupBy("source").agg(F.count("*").alias("n_source"))
+    d, counts = _source_counts(spark, sf_dir)
     joined = d.join(F.broadcast(counts), "source")
     under = joined.filter(F.col("n_source") <= SOURCE_CAP).select(
         "doc_id", "source"
     )
-    bucket = f"pmod({_spark_hash60('CAST(doc_id AS STRING)')}, {_STRATA_BUCKETS})"
-    thresh = (
-        f"least(CAST({_STRATA_BUCKETS} AS BIGINT),"
-        f" CAST(({SOURCE_CAP_OVERSAMPLE * SOURCE_CAP}L * {_STRATA_BUCKETS}"
-        f" + n_source - 1) DIV n_source AS BIGINT))"
-    )
-    cand = (
-        joined.filter(F.col("n_source") > SOURCE_CAP)
-        .withColumn("bucket", F.expr(bucket))
-        .filter(F.col("bucket") < F.expr(thresh))
-    )
-    n_cand_w = Window.partitionBy("source")
-    guarded = (
-        cand.withColumn("n_cand", F.count("*").over(n_cand_w))
-        .filter(
-            F.assert_true(
-                F.col("n_cand") >= F.lit(SOURCE_CAP),
-                F.concat(
-                    F.lit("source_cap: oversample pre-filter kept "),
-                    F.col("n_cand").cast("string"),
-                    F.lit(" candidates for source '"),
-                    F.col("source"),
-                    F.lit("' of "),
-                    F.col("n_source").cast("string"),
-                    F.lit(
-                        f" docs < CAP={SOURCE_CAP} — raise"
-                        f" SOURCE_CAP_OVERSAMPLE (now {SOURCE_CAP_OVERSAMPLE})"
-                    ),
-                ),
-            ).isNull()
-        )
-        .drop("n_cand")
-    )
-    w = Window.partitionBy("source").orderBy("bucket", "doc_id")
-    capped = (
-        guarded.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= SOURCE_CAP)
-        .select("doc_id", "source")
-    )
+    capped = _hash_top_k(
+        joined.filter(F.col("n_source") > SOURCE_CAP),
+        "source",
+        "n_source",
+        SOURCE_CAP,
+        SOURCE_CAP_OVERSAMPLE,
+        "source_cap",
+        "SOURCE_CAP_OVERSAMPLE",
+    ).select("doc_id", "source")
     return under.unionByName(capped)
 
 
@@ -755,10 +737,7 @@ def source_cap_stats(spark, sf_dir):
     agg and a single-row rollup, no window, no join.  NULL sources
     group under '' exactly as in source_cap, so n_kept == |source_cap
     output| holds on any corpus."""
-    d = read(spark, sf_dir, "documents").withColumn(
-        "source", F.coalesce("source", F.lit(""))
-    )
-    counts = d.groupBy("source").agg(F.count("*").alias("n_source"))
+    _, counts = _source_counts(spark, sf_dir)
     kept = F.least(F.col("n_source"), F.lit(SOURCE_CAP))
     return counts.agg(
         F.count("*").cast("bigint").alias("n_sources"),

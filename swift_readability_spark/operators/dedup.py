@@ -17,7 +17,7 @@ import numpy as _np
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .common import read, spread
+from .common import content_hash, floor_round, read, spread
 from .kernels import (
     bounded_collect,
     collect_within,
@@ -117,10 +117,9 @@ def dedup_exact(spark, sf_dir):
     only shuffle key is the content hash — no skew for real corpora)."""
     # r07: spread the single-split scan so the normalize+md5 projection
     # runs at cluster parallelism, not on one core (guide §2.5)
-    d = spread(spark, read(spark, sf_dir, "documents").select("doc_id", "text"))
-    norm = F.lower(F.trim(F.regexp_replace("text", "[ \t\n\x0b\f\r]+", " ")))
     return (
-        d.withColumn("content_hash", F.md5(norm))
+        docs(spark, sf_dir)
+        .withColumn("content_hash", content_hash())
         .groupBy("content_hash")
         .agg(
             F.count("*").alias("cluster_size"),
@@ -679,21 +678,19 @@ def ngram_jaccard_pairs(spark, sf_dir):
         .withColumn("common", F.size(F.array_intersect("sa", "sb")))
         # jaccard >= 0.2  <=>  6*common >= na+nb (exact integers, no
         # engine-divergent rounding in row membership); floor-based
-        # rounding is output-only (text.py::_r)
+        # rounding is output-only (common.floor_round)
         .filter(
             6 * F.col("common") >= F.size("sa") + F.size("sb")
         )
-        .withColumn(
-            "jaccard",
-            F.floor(
-                F.col("common")
-                / (F.size("sa") + F.size("sb") - F.col("common"))
-                * 10000
-                + 0.5
-            )
-            / 10000,
-        )
+        .withColumn("jaccard", _jaccard_rounded())
         .select("doc_a", "doc_b", "jaccard")
+    )
+
+
+def _jaccard_rounded():
+    """The verified pair's shingle Jaccard, floor-rounded to 4 dp."""
+    return floor_round(
+        F.col("common") / (F.size("sa") + F.size("sb") - F.col("common")), 4
     )
 
 
@@ -1208,35 +1205,12 @@ def mllib_minhash_pairs(spark, sf_dir):
         _shingle_hash_map(spark, d),
         lambda c, na, nb: 3 * c + 6 >= na + nb,
     ).distinct()
-    # survivor-only verify (the containment_pairs pattern)
-    pairs_use, src = _survivor_verify_inputs(spark, d, pairs)
-    verify_side = map_docs(spark, src, _shingle, "shingles array<string>").filter(
-        nonempty
-    )
-    sa = verify_side.select(
-        F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa")
-    )
-    sb = verify_side.select(
-        F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sb")
-    )
-    with_a = sa.join(F.broadcast(pairs_use), "doc_a")
-    with_b = sb.join(F.broadcast(pairs_use), "doc_b").select("doc_a", "doc_b", "sb")
     return (
-        with_a.join(F.broadcast(with_b), ["doc_a", "doc_b"])
-        .withColumn("common", F.size(F.array_intersect("sa", "sb")))
+        _survivor_verify(spark, d, pairs, nonempty)
         # jaccard >= 0.5  <=>  3*common >= na+nb (exact integers);
         # output rounding is the portable floor form
         .filter(3 * F.col("common") >= F.size("sa") + F.size("sb"))
-        .withColumn(
-            "jaccard",
-            F.floor(
-                F.col("common")
-                / (F.size("sa") + F.size("sb") - F.col("common"))
-                * 10000
-                + 0.5
-            )
-            / 10000,
-        )
+        .withColumn("jaccard", _jaccard_rounded())
         .select("doc_a", "doc_b", "jaccard")
     )
 
@@ -1625,24 +1599,39 @@ CONTAINMENT_MAX_DF = 1000
 CONTAINMENT_VERIFY_COLLECT_MAX = 2_000_000
 
 
-def _survivor_verify_inputs(spark, d, pairs):
-    """(pairs, docs) for an exact string verify of the candidate
-    ``pairs``.  The prefiltered pair set is output-sized, so it is
-    collected (bounded) and shipped back as a local table with the
-    docs cut to those in a surviving pair — the verify kernels then
-    tokenize only survivor docs.  Past ``CONTAINMENT_VERIFY_COLLECT_MAX``
-    pairs the verify falls back to the distributed pairs against the
-    whole corpus ``d``."""
+def _survivor_verify(spark, d, pairs, keep=None):
+    """The exact shingle-overlap verify of the candidate ``pairs``
+    (doc_a, doc_b) over the docs ``d``: (doc_a, doc_b, sa, sb, common)
+    with each side's distinct shingle strings (``_shingle``; rows
+    failing the SQL predicate ``keep``, when given, drop out) and
+    ``common`` = |sa ∩ sb|.  The prefiltered pair set is output-sized,
+    so it is collected (bounded) and shipped back as a local table with
+    the docs cut to those in a surviving pair — the kernel then
+    tokenizes only survivor docs.  Past
+    ``CONTAINMENT_VERIFY_COLLECT_MAX`` pairs the verify falls back to
+    the distributed pairs against the whole corpus ``d``.  Three
+    broadcast joins attach the two shingle sets: payload moves once,
+    decisions ride keys."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     tbl = bounded_collect(pairs, CONTAINMENT_VERIFY_COLLECT_MAX)
-    if tbl is None:
-        return pairs, d
-    a, b = tbl.column("doc_a"), tbl.column("doc_b")
-    ids = pc.unique(pa.chunked_array(a.chunks + b.chunks, type=a.type))
-    ids_df = spark.createDataFrame(pa.table({"doc_id": ids}))
-    return spark.createDataFrame(tbl), d.join(F.broadcast(ids_df), "doc_id")
+    if tbl is not None:
+        a, b = tbl.column("doc_a"), tbl.column("doc_b")
+        ids = pc.unique(pa.chunked_array(a.chunks + b.chunks, type=a.type))
+        ids_df = spark.createDataFrame(pa.table({"doc_id": ids}))
+        pairs = spark.createDataFrame(tbl)
+        d = d.join(F.broadcast(ids_df), "doc_id")
+    sets = map_docs(spark, d, _shingle, "shingles array<string>")
+    if keep is not None:
+        sets = sets.filter(keep)
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sb"))
+    with_a = sa.join(F.broadcast(pairs), "doc_a")
+    with_b = sb.join(F.broadcast(pairs), "doc_b").select("doc_a", "doc_b", "sb")
+    return with_a.join(F.broadcast(with_b), ["doc_a", "doc_b"]).withColumn(
+        "common", F.size(F.array_intersect("sa", "sb"))
+    )
 
 
 def _containment_candidates(spark, d):
@@ -1703,33 +1692,22 @@ def containment_pairs(spark, sf_dir):
     ``CONTAINMENT_VERIFY_COLLECT_MAX`` pairs the verify falls back to
     the full-corpus broadcast-join form."""
     d = docs(spark, sf_dir)
-    cand_use, src = _survivor_verify_inputs(
-        spark, d, _containment_candidates(spark, d)
-    )
-    sets = map_docs(spark, src, _shingle, "shingles array<string>")
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sb"))
-    with_a = sa.join(F.broadcast(cand_use), "doc_a")
-    with_b = sb.join(F.broadcast(cand_use), "doc_b").select("doc_a", "doc_b", "sb")
     return (
-        with_a.join(F.broadcast(with_b), ["doc_a", "doc_b"])
-        .withColumn("common", F.size(F.array_intersect("sa", "sb")))
+        _survivor_verify(spark, d, _containment_candidates(spark, d))
         # threshold on the EXACT rational (2*common >= n — integer
         # compare, engine-identical, and precisely the prefix-filter
         # guarantee common >= ceil(n/2)); rounding is output-only and
-        # floor-based (engine-portable, see text.py::_r — round() is
-        # decimal-string HALF_UP in Spark vs binary in DuckDB)
+        # floor-based (engine-portable, see common.floor_round — round()
+        # is decimal-string HALF_UP in Spark vs binary in DuckDB)
         .filter(
             (2 * F.col("common") >= F.size("sa"))
             | (2 * F.col("common") >= F.size("sb"))
         )
         .withColumn(
-            "containment_a",
-            F.floor(F.col("common") / F.size("sa") * 10000 + 0.5) / 10000,
+            "containment_a", floor_round(F.col("common") / F.size("sa"), 4)
         )
         .withColumn(
-            "containment_b",
-            F.floor(F.col("common") / F.size("sb") * 10000 + 0.5) / 10000,
+            "containment_b", floor_round(F.col("common") / F.size("sb"), 4)
         )
         .select("doc_a", "doc_b", "containment_a", "containment_b")
     )
@@ -1885,9 +1863,7 @@ def dedup_incremental(spark, sf_dir):
     (left-semi on content hash -> flag) and its canonical doc within
     the batch.  r07: spread the single-split scan so the normalize+md5
     projection parallelizes (guide §2.5, the dedup_exact fix)."""
-    d = spread(spark, read(spark, sf_dir, "documents").select("doc_id", "text"))
-    norm = F.md5(F.lower(F.trim(F.regexp_replace("text", "[ \t\n\x0b\f\r]+", " "))))
-    hashed = d.select("doc_id", norm.alias("content_hash"))
+    hashed = docs(spark, sf_dir).select("doc_id", content_hash().alias("content_hash"))
     committed = (
         hashed.filter(F.col("doc_id") < INCREMENT_SPLIT)
         .select("content_hash")
@@ -2398,18 +2374,20 @@ QUERIES["dedup_cluster_stats"] = (dedup_cluster_stats, _cluster_stats_sql())
 SPLIT_BUCKETS = 100
 VAL_PCT = 5
 TEST_PCT = 5
+_SPLIT_BUCKET = f"pmod({_spark_hash('CAST(doc_id AS STRING)')}, {SPLIT_BUCKETS})"
+# the split label of doc_id: dataset_split, split_leakage_audit and
+# extraction.build_training_set all assign it with this one CASE
+_SPARK_SPLIT = (
+    f"CASE WHEN {_SPLIT_BUCKET} < {VAL_PCT} THEN 'val'"
+    f" WHEN {_SPLIT_BUCKET} < {VAL_PCT + TEST_PCT} THEN 'test'"
+    f" ELSE 'train' END"
+)
 
 
 def dataset_split(spark, sf_dir):
     """(doc_id, bucket, split) — hash-stable train/val/test labels."""
-    d = read(spark, sf_dir, "documents")
-    bucket = f"pmod({_spark_hash('CAST(doc_id AS STRING)')}, {SPLIT_BUCKETS})"
-    return d.selectExpr(
-        "doc_id",
-        f"{bucket} AS bucket",
-        f"CASE WHEN {bucket} < {VAL_PCT} THEN 'val'"
-        f" WHEN {bucket} < {VAL_PCT + TEST_PCT} THEN 'test'"
-        f" ELSE 'train' END AS split",
+    return read(spark, sf_dir, "documents").selectExpr(
+        "doc_id", f"{_SPLIT_BUCKET} AS bucket", f"{_SPARK_SPLIT} AS split"
     )
 
 
@@ -2452,19 +2430,10 @@ def split_leakage_audit(spark, sf_dir):
         (F.col("doc_id") + RECRAWL_OFFSET).alias("doc_id"), "text"
     )
     u = d.select("doc_id", "text").unionByName(recrawl)
-    bucket = f"pmod({_spark_hash('CAST(doc_id AS STRING)')}, {SPLIT_BUCKETS})"
-    split = (
-        f"CASE WHEN {bucket} < {VAL_PCT} THEN 'val'"
-        f" WHEN {bucket} < {VAL_PCT + TEST_PCT} THEN 'test'"
-        f" ELSE 'train' END"
-    )
-    # Explicit whitespace class, NOT \s: Java's \s includes \x0B
-    # (vertical tab) while DuckDB's RE2 \s does not, and this query's
-    # entire output hinges on the content hash — a \x0B-bearing doc
-    # would flip the leak counts between engines (ADVICE r05).
-    norm = F.lower(F.trim(F.regexp_replace("text", "[ \t\n\x0b\f\r]+", " ")))
+    # this query's entire output hinges on the content hash (see
+    # common.content_hash for its engine-portable whitespace class)
     hashed = u.select(
-        F.md5(norm).alias("content_hash"), F.expr(split).alias("split")
+        content_hash().alias("content_hash"), F.expr(_SPARK_SPLIT).alias("split")
     )
     per_hash = hashed.groupBy("content_hash").agg(
         F.count("*").alias("n_docs_h"),

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..extract import DEFAULT_BASE_URL
 from ..pipeline.job import plan_extraction
 from .common import read
 
@@ -74,9 +75,7 @@ def _extracted(spark, sf_dir, where: str | None = None):
     # doc_id route is the plan's one corpus shuffle.
     n = max(int(spark.sparkContext.defaultParallelism), 2)
     docs = interleaved_documents(spark, sf_dir, where=where)
-    return plan_extraction(
-        docs, "http://fakehost/test/page.html", run_id="entry", n_partitions=n
-    )
+    return plan_extraction(docs, DEFAULT_BASE_URL, run_id="entry", n_partitions=n)
 
 
 def extract_metadata(spark, sf_dir):
@@ -291,16 +290,8 @@ def build_training_set(spark, sf_dir):
     into train for users switching between the two)."""
     from pyspark.sql import Window
 
-    from .curation import PACK_BUCKETS, PACK_BUDGET
-    from .dedup import (
-        DECON_NGRAM,
-        SPLIT_BUCKETS,
-        TEST_PCT,
-        VAL_PCT,
-        _ngram_lookahead_re,
-        _spark_hash,
-        _spark_hash60,
-    )
+    from .curation import _PACK_BUCKET, PACK_BUDGET
+    from .dedup import DECON_NGRAM, _SPARK_SPLIT, _ngram_lookahead_re, _spark_hash60
 
     norm = (
         "trim(regexp_replace(lower(regexp_replace(content,"
@@ -338,21 +329,13 @@ def build_training_set(spark, sf_dir):
         )
         .filter(F.col("overlap") == 0)
     )
-    split_bucket = (
-        f"pmod({_spark_hash('CAST(doc_id AS STRING)')}, {SPLIT_BUCKETS})"
-    )
-    pack_bucket = (
-        f"pmod({_spark_hash('CAST(doc_id AS STRING)')}, {PACK_BUCKETS})"
-    )
     routed = clean.selectExpr(
         "doc_id",
         "lang",
         "text_length",
         "CAST(size(split(trim(content), '[ \\\\t\\\\n\\\\x0b\\\\f\\\\r]+')) AS BIGINT) AS n_tokens",
-        f"CASE WHEN {split_bucket} < {VAL_PCT} THEN 'val'"
-        f" WHEN {split_bucket} < {VAL_PCT + TEST_PCT} THEN 'test'"
-        f" ELSE 'train' END AS split",
-        f"CAST({pack_bucket} AS BIGINT) AS pack_bucket",
+        f"{_SPARK_SPLIT} AS split",
+        f"CAST({_PACK_BUCKET} AS BIGINT) AS pack_bucket",
     )
     w = (
         Window.partitionBy("split", "pack_bucket")

@@ -27,8 +27,9 @@ Vector primitives (the embedding kernels):
 into an (n, dim) float64 matrix plus its validity mask, and
 ``fold_dot`` is the exact sequential-fold dot product that the cosine,
 hyperplane-signature and IVF-argmax kernels share with the JVM
-``aggregate(zip_with(...))`` forms.  Ragged rows and null elements
-raise instead of taking a slower path with different results.
+``aggregate(zip_with(...))`` forms, and ``fold_cosines`` the cosine
+matrix the query and IVF kernels score with.  Ragged rows and null
+elements raise instead of taking a slower path with different results.
 """
 
 from __future__ import annotations
@@ -158,6 +159,17 @@ def fold_dot(A, B):
     for i in range(A.shape[-1]):
         acc = acc + A[..., i] * B[..., i]
     return acc
+
+
+def fold_cosines(X, valid, Y):
+    """(n, m) exact cosines of every row of ``X`` against every row of
+    ``Y``: ``fold_dot(x, y) / (sqrt(fold_dot(x, x)) * sqrt(fold_dot(y,
+    y)))``, the op order of the JVM and DuckDB forms.  Rows outside the
+    ``valid`` mask (null embeddings) are never divided and read 0; a
+    non-null zero row divides 0/0 and reads NaN, as in SQL."""
+    dots = fold_dot(X[:, None, :], Y[None, :, :])
+    norms = np.sqrt(fold_dot(X, X))[:, None] * np.sqrt(fold_dot(Y, Y))[None, :]
+    return np.divide(dots, norms, out=np.zeros_like(dots), where=valid[:, None])
 
 
 # -- the kernel wrapper ----------------------------------------------------

@@ -22,6 +22,7 @@ from .common import (
     spread,
     spread_by,
 )
+from .kernels import docs
 
 # Exact scaled-integer readings of the 2-dp money/value columns
 # (operators/common.py: the exact-arithmetic aggregation discipline —
@@ -503,9 +504,7 @@ def order_aging(spark, sf_dir):
         # the only remaining engine-divergent double surface in the
         # module (value-only, driver-green since r01); an ulp flip at
         # a .00005 boundary would show here first.
-        F.expr(
-            "floor(log10(o_totalprice + 1) * 10000 + 0.5) / 10000"
-        ).alias("log_price"),
+        F.expr(fround("log10(o_totalprice + 1)", 4)).alias("log_price"),
         F.pmod(F.col("o_orderkey"), F.lit(7)).cast("bigint").alias("key_mod7"),
     )
 
@@ -663,7 +662,7 @@ def arrays_setops_demo(spark, sf_dir):
     ``regexp_extract_all('[^ ]+')`` replaces ``filter(split(...))`` —
     identical arrays (maximal non-space runs), but the filter() HOF ran
     interpreted per element; plus the spread-scan fix (guide §2.5)."""
-    d = spread(spark, read(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = docs(spark, sf_dir)
     stop = "array('the','a','and','of','to','in')"
     toks = (
         "array_distinct(regexp_extract_all(lower(regexp_replace(text,"

@@ -14,8 +14,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from .common import read
-from .kernels import collect_within, embedding_matrix, fold_dot, map_arrow
+from .common import floor_round, fround, read
+from .kernels import collect_within, embedding_matrix, fold_cosines, fold_dot, map_arrow
 
 QUERY_VEC_ID = 0
 TOP_K = 10
@@ -26,11 +26,10 @@ def _query_cosine_batches(q_ids, Q, keep=None):
     each collected query (ids ``q_ids``, rows of ``Q``) — ``fold_dot``
     == the sequential ``aggregate(zip_with(...))`` fold bit-for-bit.
     Emits one output batch per (input batch, query); null embeddings
-    get a null cosine.  ``keep(X)``, when given, is a boolean row mask
-    over the batch's float64 matrix: only the non-null rows it keeps
-    are scored, every other row is dropped (the hyperplane probe)."""
-    qnorm = np.sqrt(fold_dot(Q, Q))
-
+    get a null cosine (and are never divided).  ``keep(X)``, when
+    given, is a boolean row mask over the batch's float64 matrix: only
+    the non-null rows it keeps are scored, every other row is dropped
+    (the hyperplane probe)."""
     def batches(it):
         import pyarrow as pa
 
@@ -42,16 +41,14 @@ def _query_cosine_batches(q_ids, Q, keep=None):
             n = batch.num_rows
             if n == 0:
                 continue
-            enorm = np.sqrt(fold_dot(X, X))
-            dots = fold_dot(X[:, None, :], Q[None, :, :])
+            cos = fold_cosines(X, valid, Q)
             for j, qid in enumerate(q_ids):
-                cos = dots[:, j] / (enorm * qnorm[j])
                 yield pa.RecordBatch.from_arrays(
                     [
                         pa.array([qid] * n, type=pa.int64()),
                         batch.column("vec_id"),
                         batch.column("label"),
-                        pa.array(cos, type=pa.float64(), mask=~valid),
+                        pa.array(cos[:, j], type=pa.float64(), mask=~valid),
                     ],
                     ["q_id", "vec_id", "label", "cosine_raw"],
                 )
@@ -90,14 +87,14 @@ def _top_k(scored):
     """The shared ANN tail: rank by the RAW cosine (identical IEEE folds
     in both engines), ties by ascending vec_id, TakeOrdered; floor-based
     rounding is output-only (round() is engine-divergent on doubles —
-    text.py::_r)."""
+    common.floor_round)."""
     return (
         scored.orderBy(F.desc("cosine_raw"), F.asc("vec_id"))
         .limit(TOP_K)
         .select(
             "vec_id",
             "label",
-            (F.floor(F.col("cosine_raw") * 10000 + 0.5) / 10000).alias("cosine"),
+            floor_round(F.col("cosine_raw"), 4).alias("cosine"),
         )
     )
 
@@ -243,7 +240,7 @@ def _assign_kernel(e, cents):
     which reproduces the ``max(struct(cc, -cell))`` tie-break (lowest
     cell wins equal cosines) and Spark's NaN-greatest double ordering
     (the isnan clause).  Null embeddings yield null cells, matching
-    ``transform(NULL) -> NULL`` propagation."""
+    ``transform(NULL) -> NULL`` propagation (they are never divided)."""
     bc = e.sparkSession.sparkContext.broadcast(cents)
     dtypes = dict(e.dtypes)
     schema = (
@@ -255,18 +252,16 @@ def _assign_kernel(e, cents):
         import pyarrow as pa
 
         cell_ids, C = bc.value
-        cnorm = np.sqrt(fold_dot(C, C))
         for batch in it:
             if batch.num_rows == 0:
                 continue
             col = batch.column("embedding")
             X, valid = embedding_matrix(col, C.shape[1])
-            enorm = np.sqrt(fold_dot(X, X))
-            dots = fold_dot(X[:, None, :], C[None, :, :])
-            best_cc = dots[:, 0] / (enorm * cnorm[0])
+            cos = fold_cosines(X, valid, C)
+            best_cc = cos[:, 0]
             best_cell = np.full(len(X), cell_ids[0], dtype=np.int64)
             for j in range(1, len(cell_ids)):
-                cc = dots[:, j] / (enorm * cnorm[j])
+                cc = cos[:, j]
                 better = (cc > best_cc) | (np.isnan(cc) & ~np.isnan(best_cc))
                 best_cell = np.where(better, cell_ids[j], best_cell)
                 best_cc = np.where(better, cc, best_cc)
@@ -303,8 +298,7 @@ def _cell_centroids(assigned):
         .groupBy("cell", "pos")
         .agg(
             F.expr(
-                "floor(CAST(sum(v) AS DOUBLE) / CAST(count(v) AS DOUBLE)"
-                " * 10000 + 0.5) / 10000"
+                fround("CAST(sum(v) AS DOUBLE) / CAST(count(v) AS DOUBLE)", 4)
             ).alias("mean_v"),
             F.count("*").alias("_cnt"),
         )
@@ -377,8 +371,7 @@ def ivf_centroids(spark, sf_dir):
     return cents.selectExpr(
         "CAST(cell AS BIGINT) AS cell",
         "n_members",
-        "floor(aggregate(centroid, 0D, (a, v) -> a + v) * 10000 + 0.5)"
-        " / 10000 AS centroid_sum",
+        f"{fround('aggregate(centroid, 0D, (a, v) -> a + v)', 4)} AS centroid_sum",
     )
 
 

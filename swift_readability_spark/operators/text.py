@@ -17,14 +17,14 @@ from math import floor
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .common import read, spread
-from .kernels import collect_within, map_docs, tokenize_batch
+from .common import content_hash, floor_scaled, read, spread
+from .kernels import collect_within, docs, map_docs, tokenize_batch
 
 
 def comma_score(spark, sf_dir):
     """The element content score (ArticleGrabber.swift:770-801):
     1 (base) + commas+1 + min(floor(len/100), 3)."""
-    d = spread(spark, read(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = docs(spark, sf_dir)
     commas = F.length("text") - F.length(F.regexp_replace("text", ",", ""))
     return d.select(
         "doc_id",
@@ -90,9 +90,7 @@ def readerable_score(spark, sf_dir):
         # (instead of dividing back to a double) keeps every double
         # out of the driver's hash surface, the rule corpus_report's
         # two red rounds established.
-        F.floor(score * 10000 + F.lit(0.5)).cast("bigint").alias(
-            "readerable_score_e4"
-        ),
+        floor_scaled(score, 4).alias("readerable_score_e4"),
         (score > 20).alias("readerable"),
     )
 
@@ -111,7 +109,7 @@ FROM documents
 def normalized_text_length(spark, sf_dir):
     """getInnerText whitespace collapse (ProcessorBase.swift:49-56):
     trim + \\s{2,} -> ' ', then count chars."""
-    d = spread(spark, read(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = docs(spark, sf_dir)
     return d.select(
         "doc_id",
         F.length(F.trim(F.regexp_replace("text", "[ \t\n\x0b\f\r]{2,}", " "))).alias(
@@ -130,7 +128,7 @@ FROM documents
 def token_counts(spark, sf_dir):
     """Whitespace tokens plus a BPE-ish regex token count
     (word pieces + punctuation as separate tokens)."""
-    d = spread(spark, read(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = docs(spark, sf_dir)
     # r07: regexp_count avoids materializing the token ARRAYS the old
     # size(split)/size(regexp_extract_all) built per row just to count
     # them: size(split(s, re)) == regexp_count(s, re) + 1 (split yields
@@ -155,52 +153,48 @@ FROM documents
 """
 
 
-def _r(col, digits: int):
-    """Portable rounding: floor(x*10^k + 0.5)/10^k, pure IEEE double
-    ops, bit-identical in any engine.  Spark's round() converts the
-    double through its decimal string (Double.toString -> HALF_UP), so
-    a value like 0.50145 whose nearest double sits just BELOW the
-    midpoint rounds UP in Spark but DOWN in engines that round the raw
-    binary double (DuckDB) — found by the sf0.1 oracle sweep, one row
-    in 6500."""
-    p = 10**digits
-    return F.floor(col * p + F.lit(0.5)) / p
-
-
-def quality_score(spark, sf_dir):
-    """Composite document-quality heuristics: length, mean word length,
-    stopword ratio, punctuation density."""
-    d = spread(
-        spark, read(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    )
-    # regexp_count(sep)+1 == size(split(...)) (see token_counts) — no
-    # token array materialized just to count it
+def _quality_terms():
+    """(n_words, n_stop, n_punct): the quality gate's per-doc counts as
+    doubles.  regexp_count(sep)+1 == size(split(...)) (see
+    token_counts) — no token array materialized just to count it."""
     n_words = (
         F.expr("regexp_count(trim(text), '[ \t\n\x0b\f\r]+')") + 1
     ).cast("double")
     stop_re = r"\\b(the|a|an|and|or|of|to|in|is|it)\\b"
     n_stop = F.expr(rf"regexp_count(lower(text), '{stop_re}')").cast("double")
     n_punct = F.expr(r"regexp_count(text, '[.,;:!?]')").cast("double")
-    mean_word_len = F.length(F.regexp_replace("text", "[ \t\n\x0b\f\r]+", "")) / n_words
-    # Integer-scaled BIGINT outputs (round 6): the per-row doubles are
-    # deterministic (same IEEE op sequence over ints in both engines),
-    # but no double crosses the driver's hash surface any more — the
-    # rule corpus_report's two red rounds established.  floor(x*10^k
-    # + 0.5) lands on the same integer in both engines; emit it raw.
-    def _e(col, digits):
-        return F.floor(col * (10**digits) + F.lit(0.5)).cast("bigint")
+    return n_words, n_stop, n_punct
 
+
+def _quality_e4(n_words, n_stop, n_punct):
+    """The composite quality score, integer-scaled: length, stopword
+    ratio and punctuation density over ``n_chars``/``text``."""
+    return floor_scaled(
+        F.least(F.col("n_chars") / 1000.0, F.lit(1.0)) * 0.4
+        + F.least(n_stop / n_words * 5.0, F.lit(1.0)) * 0.4
+        + (1.0 - F.least(n_punct / F.length("text") * 20.0, F.lit(1.0))) * 0.2,
+        4,
+    )
+
+
+def quality_score(spark, sf_dir):
+    """Composite document-quality heuristics: length, mean word length,
+    stopword ratio, punctuation density.  Integer-scaled BIGINT outputs
+    (round 6): the per-row doubles are deterministic (same IEEE op
+    sequence over ints in both engines), but no double crosses the
+    driver's hash surface — the rule corpus_report's two red rounds
+    established."""
+    d = spread(
+        spark, read(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
+    )
+    n_words, n_stop, n_punct = _quality_terms()
+    mean_word_len = F.length(F.regexp_replace("text", "[ \t\n\x0b\f\r]+", "")) / n_words
     return d.select(
         "doc_id",
-        _e(mean_word_len, 4).alias("mean_word_len_e4"),
-        _e(n_stop / n_words, 4).alias("stopword_ratio_e4"),
-        _e(n_punct / F.length("text"), 6).alias("punct_density_e6"),
-        _e(
-            F.least(F.col("n_chars") / 1000.0, F.lit(1.0)) * 0.4
-            + F.least(n_stop / n_words * 5.0, F.lit(1.0)) * 0.4
-            + (1.0 - F.least(n_punct / F.length("text") * 20.0, F.lit(1.0))) * 0.2,
-            4,
-        ).alias("quality_e4"),
+        floor_scaled(mean_word_len, 4).alias("mean_word_len_e4"),
+        floor_scaled(n_stop / n_words, 4).alias("stopword_ratio_e4"),
+        floor_scaled(n_punct / F.length("text"), 6).alias("punct_density_e6"),
+        _quality_e4(n_words, n_stop, n_punct).alias("quality_e4"),
     )
 
 
@@ -231,6 +225,24 @@ _LANG_MARKERS = {
 }
 
 
+def _lang_counts():
+    """{code: per-doc marker count of that language}."""
+    return {
+        code: F.expr(rf"regexp_count(lower(text), '{p}')")
+        for code, p in _LANG_MARKERS.items()
+    }
+
+
+def _lang_argmax(counts):
+    """The predicted language over ``counts`` ({code: Column}): the
+    argmax, 'und' when nothing matches, ties to the lowest code."""
+    best = F.greatest(*counts.values())
+    pred = F.when(best <= 0, F.lit("und"))
+    for code in sorted(counts):
+        pred = pred.when(counts[code] == best, F.lit(code))
+    return pred
+
+
 def lang_id(spark, sf_dir):
     """N-gram/stopword-marker language ID: argmax of per-language
     marker counts, 'und' when nothing matches (deterministic
@@ -239,16 +251,11 @@ def lang_id(spark, sf_dir):
     # cluster parallelism, not on one core (guide §2.5; 1.8 s -> 0.5 s
     # at sf1.0/local[32])
     d = spread(spark, read(spark, sf_dir, "documents").select("doc_id", "lang", "text"))
-    cols = []
-    for code, pattern in _LANG_MARKERS.items():
-        cols.append(
-            F.expr(rf"regexp_count(lower(text), '{pattern}')").alias(f"n_{code}")
-        )
-    scored = d.select("doc_id", "lang", *cols)
-    best = F.greatest(*[F.col(f"n_{c}") for c in _LANG_MARKERS])
-    pred = F.when(best <= 0, F.lit("und"))
-    for code in sorted(_LANG_MARKERS):
-        pred = pred.when(F.col(f"n_{code}") == best, F.lit(code))
+    counts = _lang_counts()
+    scored = d.select(
+        "doc_id", "lang", *[c.alias(f"n_{code}") for code, c in counts.items()]
+    )
+    pred = _lang_argmax({code: F.col(f"n_{code}") for code in counts})
     return scored.select("doc_id", "lang", pred.alias("lang_pred"))
 
 
@@ -501,40 +508,15 @@ def curation_pipeline(spark, sf_dir):
         spark,
         read(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars"),
     )
-    # lang gate (== lang_id's lang_pred expression)
-    marker = {
-        code: F.expr(rf"regexp_count(lower(text), '{p}')")
-        for code, p in _LANG_MARKERS.items()
-    }
-    best = F.greatest(*marker.values())
-    pred = F.when(best <= 0, F.lit("und"))
-    for code in sorted(_LANG_MARKERS):
-        pred = pred.when(marker[code] == best, F.lit(code))
-    # quality gate (== quality_score's quality_e4 expression;
-    # quality_e4 >= 5000 ⟺ the old rounded-double quality >= 0.5 —
-    # exact integers, round-6 rule)
-    n_words = (
-        F.expr("regexp_count(trim(text), '[ \t\n\x0b\f\r]+')") + 1
-    ).cast("double")
-    stop_re = r"\\b(the|a|an|and|or|of|to|in|is|it)\\b"
-    n_stop = F.expr(rf"regexp_count(lower(text), '{stop_re}')").cast("double")
-    n_punct = F.expr(r"regexp_count(text, '[.,;:!?]')").cast("double")
-    quality_e4 = F.floor(
-        (
-            F.least(F.col("n_chars") / 1000.0, F.lit(1.0)) * 0.4
-            + F.least(n_stop / n_words * 5.0, F.lit(1.0)) * 0.4
-            + (1.0 - F.least(n_punct / F.length("text") * 20.0, F.lit(1.0))) * 0.2
-        )
-        * 10000
-        + F.lit(0.5)
-    ).cast("bigint")
-    norm = F.lower(F.trim(F.regexp_replace("text", "[ \t\n\x0b\f\r]+", " ")))
-    from pyspark.sql.window import Window
-
+    # the lang gate is lang_id's lang_pred and the quality gate
+    # quality_score's quality_e4 (quality_e4 >= 5000 ⟺ the old
+    # rounded-double quality >= 0.5 — exact integers, round-6 rule)
+    pred = _lang_argmax(_lang_counts())
+    quality_e4 = _quality_e4(*_quality_terms())
     return (
         d.select(
             "doc_id",
-            F.md5(norm).alias("content_hash"),
+            content_hash().alias("content_hash"),
             ((pred == F.col("lang")) & (quality_e4 >= 5000)).alias("_keep"),
             F.monotonically_increasing_id().alias("_nd"),
         )
@@ -580,7 +562,7 @@ def pii_scan(spark, sf_dir):
     corpus: per-doc counts of email-, phone-, and URL-shaped strings,
     plus the release flag.  Pure built-in regexp_extract_all: stays in
     whole-stage codegen, embarrassingly parallel, no shuffle."""
-    d = spread(spark, read(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = docs(spark, sf_dir)
     email_re = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
     phone_re = r"\\+?[0-9][0-9 ()-]{7,}[0-9]"
     # explicit class, not \s: Java \s includes \x0B, RE2's does not —

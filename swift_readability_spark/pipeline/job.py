@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..extract import DEFAULT_BASE_URL
 from .session import map_arrow
 
 SPAN_STRUCT = T.StructType(
@@ -119,7 +120,7 @@ def make_extract_batches(base_url: str, options=None):
             for row in batch.to_pylist():
                 t0 = time.perf_counter()
                 result = extract_document(
-                    row["doc_id"], row.get("spans") or [], base_url, options
+                    row["doc_id"], row["spans"] or [], base_url, options
                 )
                 result["wall_ms"] = (time.perf_counter() - t0) * 1000.0
                 results.append(result)
@@ -172,6 +173,9 @@ def plan_extraction(
     One scan, one shuffle: :func:`route_for_extraction` hashes
     ``doc_id`` over ``n_partitions * DEFAULT_TASK_OVERSUBSCRIPTION``
     physical tasks, so documents of every size spread evenly.
+    Only ``doc_id`` and ``spans`` cross the shuffle and the Arrow
+    boundary; input without either column fails here, at plan time,
+    instead of extracting every document as empty.
     The lineage/resume key (``partition_key``) is a *column* with its
     own stable domain, computed from ``doc_id`` after the Arrow stage,
     so routing and task sizing never affect resume semantics.
@@ -182,7 +186,7 @@ def plan_extraction(
     A plain parquet path declares no layout: Spark packs its files into
     scan splits by size, so the route stays.
     """
-    df = route_for_extraction(df, n_partitions)
+    df = route_for_extraction(df.select("doc_id", "spans"), n_partitions)
     extracted = map_arrow(df, make_extract_batches(base_url, options), _KERNEL_SCHEMA)
     return (
         with_partition_key(extracted, n_partitions)
@@ -311,7 +315,7 @@ def run_extraction(
     documents: DataFrame,
     output_path: str,
     lineage_path: str,
-    base_url: str = "http://fakehost/test/page.html",
+    base_url: str = DEFAULT_BASE_URL,
     n_partitions: int | None = None,
     run_id: str | None = None,
     resume: bool = True,

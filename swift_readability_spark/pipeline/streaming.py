@@ -22,6 +22,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..extract import DEFAULT_BASE_URL
 from .job import DOCUMENTS_SCHEMA, check_run_id, run_extraction
 
 
@@ -49,7 +50,7 @@ def run_extraction_stream(
     output_path: str,
     lineage_path: str,
     *,
-    base_url: str = "http://fakehost/test/page.html",
+    base_url: str = DEFAULT_BASE_URL,
     n_partitions: int | None = None,
     checkpoint_path: str | None = None,
     run_id: str = "stream",

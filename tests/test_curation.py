@@ -159,51 +159,77 @@ def test_stratified_sample_small_stratum_keeps_all_without_raising(spark, tmp_pa
     assert {r.rnk for r in got} == set(range(1, 8))
 
 
-def test_stratified_sample_undershoot_raises_loudly(spark, tmp_path):
-    """Planted undershoot (VERDICT r04 item 5): a 500-doc stratum whose
-    doc_ids are CHOSEN so only K-1 of them land under the oversample
-    threshold must fail the job with the remedy in the message — never
-    silently return a short sample.
-
-    Construction mirrors the operator's own hash: bucket =
-    int(md5(str(doc_id))[:15], 16) % 1_000_000, threshold =
-    ceil(8K * 1e6 / n); pick 49 ids below it and 451 at-or-above."""
+def _undershooting_ids(k, oversample, n=500):
+    """``n`` doc_ids CHOSEN so only k-1 of them land under the hash
+    sampler's oversample threshold.  Construction mirrors the
+    operator's own hash: bucket = int(md5(str(doc_id))[:15], 16) %
+    1_000_000, threshold = ceil(oversample * k * 1e6 / n); pick k-1
+    ids below it and the rest at-or-above."""
     import hashlib
 
-    import pytest
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
+    from swift_readability_spark.operators.curation import _STRATA_BUCKETS
 
-    from swift_readability_spark.operators.curation import (
-        _STRATA_BUCKETS,
-        STRATA_K,
-        STRATA_OVERSAMPLE,
-        stratified_sample,
-    )
-
-    n = 500
-    thresh = (STRATA_OVERSAMPLE * STRATA_K * _STRATA_BUCKETS + n - 1) // n
+    thresh = (oversample * k * _STRATA_BUCKETS + n - 1) // n
 
     def bucket(i: int) -> int:
         return int(hashlib.md5(str(i).encode()).hexdigest()[:15], 16) % _STRATA_BUCKETS
 
     below, above = [], []
     i = 0
-    while len(below) < STRATA_K - 1 or len(above) < n - (STRATA_K - 1):
+    while len(below) < k - 1 or len(above) < n - (k - 1):
         if bucket(i) < thresh:
-            if len(below) < STRATA_K - 1:
+            if len(below) < k - 1:
                 below.append(i)
-        elif len(above) < n - (STRATA_K - 1):
+        elif len(above) < n - (k - 1):
             above.append(i)
         i += 1
     ids = below + above
     assert len(ids) == n
-    rows = [(i, f"text {i}", "en", "s", 10) for i in ids]
-    d = str(tmp_path)
+    return ids
+
+
+def _write_docs(spark, path, ids, lang="en", source="s"):
+    rows = [(i, f"text {i}", lang, source, 10) for i in ids]
     spark.createDataFrame(
         rows, "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    ).write.parquet(f"{d}/documents.parquet")
+    ).write.parquet(f"{path}/documents.parquet")
+
+
+def test_stratified_sample_undershoot_raises_loudly(spark, tmp_path):
+    """Planted undershoot (VERDICT r04 item 5): a 500-doc stratum whose
+    doc_ids are chosen so only K-1 of them land under the oversample
+    threshold must fail the job with the remedy in the message — never
+    silently return a short sample."""
+    import pytest
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+
+    from swift_readability_spark.operators.curation import (
+        STRATA_K,
+        STRATA_OVERSAMPLE,
+        stratified_sample,
+    )
+
+    _write_docs(spark, str(tmp_path), _undershooting_ids(STRATA_K, STRATA_OVERSAMPLE))
     with pytest.raises(SparkRuntimeException, match="STRATA_OVERSAMPLE"):
-        stratified_sample(spark, d).collect()
+        stratified_sample(spark, str(tmp_path)).collect()
+
+
+def test_source_cap_undershoot_raises_loudly(spark, tmp_path):
+    """The same planted undershoot through source_cap, the sampler's
+    other caller: a 500-doc source with only CAP-1 candidates under the
+    oversample threshold fails the job naming SOURCE_CAP_OVERSAMPLE."""
+    import pytest
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+
+    from swift_readability_spark.operators.curation import (
+        SOURCE_CAP,
+        SOURCE_CAP_OVERSAMPLE,
+        source_cap,
+    )
+
+    _write_docs(spark, str(tmp_path), _undershooting_ids(SOURCE_CAP, SOURCE_CAP_OVERSAMPLE))
+    with pytest.raises(SparkRuntimeException, match="SOURCE_CAP_OVERSAMPLE"):
+        source_cap(spark, str(tmp_path)).collect()
 
 
 def test_source_cap_caps_every_source_exactly(spark, reg):

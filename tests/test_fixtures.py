@@ -14,8 +14,8 @@ import json
 import pytest
 
 from swift_readability_spark.core.readability import ReadabilityOptions
-from swift_readability_spark.corpus.synth import BASE_URL
 from swift_readability_spark.corpus.synth import FIXTURES_DIR as FIXTURES
+from swift_readability_spark.extract import DEFAULT_BASE_URL
 from swift_readability_spark.extract import extract_document
 from swift_readability_spark.spans.codec import html_to_spans
 from swift_readability_spark.spans.compare import compare_spans
@@ -52,10 +52,10 @@ def run_fixture(name: str):
     expected_meta = json.loads(
         (d / "expected-metadata.json").read_text(encoding="utf-8")
     )
-    in_spans = html_to_spans(source, BASE_URL)
+    in_spans = html_to_spans(source, DEFAULT_BASE_URL)
     opts = ReadabilityOptions(classes_to_preserve=("caption",))
-    result = extract_document(name, in_spans, BASE_URL, opts)
-    exp_spans = html_to_spans(expected_html, BASE_URL, visibility_filter=False)
+    result = extract_document(name, in_spans, DEFAULT_BASE_URL, opts)
+    exp_spans = html_to_spans(expected_html, DEFAULT_BASE_URL, visibility_filter=False)
     return result, exp_spans, expected_meta
 
 

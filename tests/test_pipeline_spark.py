@@ -384,6 +384,22 @@ def test_legacy_lineage_without_domain_column(spark, tmp_path_factory):
         )
 
 
+def test_input_without_spans_fails_before_any_commit(spark, tmp_path_factory):
+    """A (doc_id, html) frame carries no spans to extract: the job fails
+    at plan time and writes no lineage, instead of committing every
+    document as an empty 'no_article' extraction that resume would then
+    skip for good."""
+    from pyspark.errors import AnalysisException
+
+    out = tmp_path_factory.mktemp("nospans")
+    docs = spark.createDataFrame([("d1", PLAIN_PAGE)], "doc_id string, html string")
+    with pytest.raises(AnalysisException, match="spans"):
+        run_extraction(
+            spark, docs, str(out / "extracted"), str(out / "lineage"), n_partitions=2
+        )
+    assert not (out / "lineage").exists()
+
+
 def test_run_extraction_defaults_to_default_parallelism(spark, tmp_path_factory):
     """Without n_partitions (and no lineage to adopt a domain from) the
     resume-key domain is the session's defaultParallelism: one

@@ -7,6 +7,9 @@ the kernels cannot read as a dense row must fail loudly instead of
 taking a path with different results.
 """
 
+import math
+import warnings
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -102,6 +105,17 @@ def test_ragged_or_null_element_embedding_raises(bad):
         with pytest.raises(ValueError, match="row 1"):
             _cosine([_GOOD, bad], keep)
     assert _cosine([_GOOD, None]) == [_exact_cosine(_GOOD), None]
+
+
+def test_null_row_is_never_divided():
+    """A null embedding is masked before the cosine division, so
+    scoring it raises no 0/0 RuntimeWarning; a non-null zero vector
+    still divides 0/0 and reads NaN, as the SQL forms do."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        assert _cosine([None, _GOOD]) == [None, _exact_cosine(_GOOD)]
+    with np.errstate(invalid="ignore"):
+        assert math.isnan(_cosine([[0.0] * len(_GOOD)])[0])
 
 
 def test_hyperplane_sigs_are_the_sequential_fold_bits():
