@@ -141,11 +141,11 @@ def main():
             scols = sorted(sdf.columns)
             srows = [r.asDict() for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {str(e)[:200]}")
+            print(f"FAIL {name}: spark error: {str(e)[:200]}", flush=True)
             failures += 1
             continue
         if oracle is None:
-            print(f"ok   {name}: rows-only ({len(srows)} rows)")
+            print(f"ok   {name}: rows-only ({len(srows)} rows)", flush=True)
             continue
         try:
             rel = con.sql(oracle)
@@ -153,11 +153,11 @@ def main():
             dtypes = {c: _norm_duck_type(str(t)) for c, t in zip(dcols, rel.types)}
             drows = [dict(zip(dcols, row)) for row in rel.fetchall()]
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {str(e)[:200]}")
+            print(f"FAIL {name}: duckdb error: {str(e)[:200]}", flush=True)
             failures += 1
             continue
         if scols != sorted(dcols):
-            print(f"FAIL {name}: columns {scols} vs {sorted(dcols)}")
+            print(f"FAIL {name}: columns {scols} vs {sorted(dcols)}", flush=True)
             failures += 1
             continue
         stypes = {f.name: _norm_spark_type(f.dataType) for f in sdf.schema.fields}
@@ -165,22 +165,22 @@ def main():
             c: (stypes[c], dtypes[c]) for c in scols if stypes[c] != dtypes[c]
         }
         if type_mismatch:
-            print(f"FAIL {name}: column type mismatch {type_mismatch}")
+            print(f"FAIL {name}: column type mismatch {type_mismatch}", flush=True)
             failures += 1
             continue
         s_sig = rows_signature(scols, srows)
         d_sig = rows_signature(scols, drows)
         if s_sig != d_sig:
-            print(f"FAIL {name}: spark {s_sig} vs duckdb {d_sig}")
+            print(f"FAIL {name}: spark {s_sig} vs duckdb {d_sig}", flush=True)
             s_set = {"\x1f".join(norm_cell(r[c]) for c in scols) for r in srows}
             d_set = {"\x1f".join(norm_cell(r[c]) for c in scols) for r in drows}
             for x in list(s_set - d_set)[:3]:
-                print("   spark-only:", x[:160].replace("\x1f", " | "))
+                print("   spark-only:", x[:160].replace("\x1f", " | "), flush=True)
             for x in list(d_set - s_set)[:3]:
-                print("   duck-only :", x[:160].replace("\x1f", " | "))
+                print("   duck-only :", x[:160].replace("\x1f", " | "), flush=True)
             failures += 1
         else:
-            print(f"ok   {name}: {s_sig[0]} rows match")
+            print(f"ok   {name}: {s_sig[0]} rows match", flush=True)
     spark.stop()
     sys.exit(1 if failures else 0)
 

@@ -25,7 +25,7 @@ from .kernels import (
     embedding_matrix,
     fold_dot,
     h60,
-    map_arrow,
+    map_batches,
     map_docs,
     md5_u64,
     null_safe_i64,
@@ -181,7 +181,15 @@ def _shingle_hash(ids, texts):
     }
 
 
-def _bucket_hamming_batches(it):
+# popcount of every 16-bit value (high byte's plus low byte's); the
+# uint8 per-pair sums hold up to 7 words (224 bits)
+_POPCOUNT8 = _np.array([bin(i).count("1") for i in range(256)], dtype=_np.uint8)
+_POPCOUNT16 = (_POPCOUNT8[:, None] + _POPCOUNT8[None, :]).ravel()
+# pair slots one bucket's chunk of the pair matrix may hold
+_HAMMING_CHUNK_SLOTS = 4_000_000
+
+
+def _bucket_hamming(batch):
     """Per Hamming-band bucket: expand member pairs and keep those with
     XOR-popcount <= SIMHASH_MAX_HAMMING (== SIMHASH_WIDE_MAX_HAMMING:
     both widths use 4 bands), vectorized over the bucket's pair matrix.
@@ -201,68 +209,52 @@ def _bucket_hamming_batches(it):
     emitted by boolean indexing, not a per-pair Python loop (~3.3M
     qualifying pairs here)."""
     import numpy as np
-    import pyarrow as pa
     import pyarrow.compute as pc
 
-    _lut8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
-    a16 = np.arange(65536, dtype=np.uint32)
-    # uint8 sums hold up to 7 words (224 bits)
-    _lut16 = (_lut8[a16 & 255] + _lut8[a16 >> 8]).astype(np.uint8)
-    CHUNK_SLOTS = 4_000_000
-
-    for batch in it:
-        members = batch.column("members")
-        flat = members.flatten()
-        id_type = flat.type.field("doc_id").type
-        fields = dict(zip((f.name for f in flat.type), flat.flatten()))
-        ids_all = fields.pop("doc_id").to_numpy(zero_copy_only=False)
-        live_all = np.ones(len(flat), dtype=bool)
-        words = np.zeros((len(flat), len(fields)), dtype=np.int64)
-        for k, (name, col) in enumerate(fields.items()):
-            live_all &= col.is_valid().to_numpy(zero_copy_only=False)
-            words[:, k] = col.fill_null(0).to_numpy()
-            bad = (words[:, k] < 0) | (words[:, k] >= 1 << 32)
-            if bad.any():
-                raise ValueError(
-                    f"fingerprint word {name}={words[bad, k][0]} is outside [0, 2^32)"
-                )
-        words = words.astype(np.uint32)
-        lens = pc.list_value_length(members).fill_null(0).to_numpy()
-        bounds = np.concatenate([[0], np.cumsum(lens)])
-        out_a, out_b, out_h = [], [], []
-        for start, end in zip(bounds[:-1], bounds[1:]):
-            live = start + np.flatnonzero(live_all[start:end])
-            n = len(live)
-            if n < 2:
-                continue
-            ids_np, fps = ids_all[live], words[live]
-            rows_per_chunk = max(CHUNK_SLOTS // n, 1)
-            for lo in range(0, n - 1, rows_per_chunk):
-                hi = min(lo + rows_per_chunk, n - 1)
-                hm = 0
-                for k in range(fps.shape[1]):
-                    x = fps[lo:hi, None, k] ^ fps[None, :, k]
-                    hm = hm + _lut16[x & np.uint32(0xFFFF)] + _lut16[
-                        x >> np.uint32(16)
-                    ]
-                # upper triangle only: column index > global row index
-                mask = hm <= SIMHASH_MAX_HAMMING
-                cols = np.arange(n)[None, :]
-                rows = np.arange(lo, hi)[:, None]
-                mask &= cols > rows
-                ri, ci = np.nonzero(mask)
-                if len(ri):
-                    out_a.extend(ids_np[ri + lo].tolist())
-                    out_b.extend(ids_np[ci].tolist())
-                    out_h.extend(hm[ri, ci].tolist())
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(out_a, type=id_type),
-                pa.array(out_b, type=id_type),
-                pa.array(out_h, type=pa.int32()),
-            ],
-            ["doc_a", "doc_b", "hamming"],
-        )
+    members = batch.column("members")
+    flat = members.flatten()
+    fields = dict(zip((f.name for f in flat.type), flat.flatten()))
+    ids_all = fields.pop("doc_id").to_numpy(zero_copy_only=False)
+    live_all = np.ones(len(flat), dtype=bool)
+    words = np.zeros((len(flat), len(fields)), dtype=np.int64)
+    for k, (name, col) in enumerate(fields.items()):
+        live_all &= col.is_valid().to_numpy(zero_copy_only=False)
+        words[:, k] = col.fill_null(0).to_numpy()
+        bad = (words[:, k] < 0) | (words[:, k] >= 1 << 32)
+        if bad.any():
+            raise ValueError(
+                f"fingerprint word {name}={words[bad, k][0]} is outside [0, 2^32)"
+            )
+    words = words.astype(np.uint32)
+    lens = pc.list_value_length(members).fill_null(0).to_numpy()
+    bounds = np.concatenate([[0], np.cumsum(lens)])
+    out_a, out_b, out_h = [], [], []
+    for start, end in zip(bounds[:-1], bounds[1:]):
+        live = start + np.flatnonzero(live_all[start:end])
+        n = len(live)
+        if n < 2:
+            continue
+        ids_np, fps = ids_all[live], words[live]
+        rows_per_chunk = max(_HAMMING_CHUNK_SLOTS // n, 1)
+        for lo in range(0, n - 1, rows_per_chunk):
+            hi = min(lo + rows_per_chunk, n - 1)
+            hm = 0
+            for k in range(fps.shape[1]):
+                x = fps[lo:hi, None, k] ^ fps[None, :, k]
+                hm = hm + _POPCOUNT16[x & np.uint32(0xFFFF)] + _POPCOUNT16[
+                    x >> np.uint32(16)
+                ]
+            # upper triangle only: column index > global row index
+            mask = hm <= SIMHASH_MAX_HAMMING
+            cols = np.arange(n)[None, :]
+            rows = np.arange(lo, hi)[:, None]
+            mask &= cols > rows
+            ri, ci = np.nonzero(mask)
+            if len(ri):
+                out_a.extend(ids_np[ri + lo].tolist())
+                out_b.extend(ids_np[ci].tolist())
+                out_h.extend(hm[ri, ci].tolist())
+    return {"doc_a": out_a, "doc_b": out_b, "hamming": out_h}
 
 
 def _shingle_h60(ids, texts):
@@ -313,19 +305,20 @@ def _pair_hash_prefilter(spark, pairs, hs_map, keep):
     bc = spark.sparkContext.broadcast(hs_map)
     dtypes = dict(pairs.dtypes)
     schema = f"doc_a {dtypes['doc_a']}, doc_b {dtypes['doc_b']}"
+    pair_memo: dict = {}  # per task: each task unpickles its own copy
 
-    def batches(it):
+    def pair_hash_prefilter(batch):
         import numpy as np
         import pyarrow as pa
 
         ids_arr, offs, flat = bc.value
-        sizes = offs[1:] - offs[:-1]
         m_ids = len(ids_arr)
-        int_ids = ids_arr.dtype.kind in "iu"
-        pair_memo: dict = {}
+
+        def size(idx):
+            return offs[idx + 1] - offs[idx]
 
         def col_to_np(col):
-            if int_ids:
+            if ids_arr.dtype.kind in "iu":
                 return col.to_numpy(zero_copy_only=False)
             # own width: forcing the map's '<U' width would truncate a
             # longer unknown id onto a known one
@@ -343,7 +336,7 @@ def _pair_hash_prefilter(spark, pairs, hs_map, keep):
         def gather_keys(idx):
             """(pair_index << 32 | h32) composite keys for the docs at
             ``idx`` — one sorted-once int64 stream per side."""
-            lens = sizes[idx]
+            lens = size(idx)
             total = int(lens.sum())
             rep = np.repeat(
                 np.arange(len(idx), dtype=np.uint64) << np.uint64(32), lens
@@ -356,66 +349,54 @@ def _pair_hash_prefilter(spark, pairs, hs_map, keep):
             # per-doc sortedness is preserved)
             return rep | (flat[pos] >> np.uint64(32))
 
-        for batch in it:
-            if batch.num_rows == 0:
-                yield batch
-                continue
-            ia = idx_of(col_to_np(batch.column("doc_a")))
-            ib = idx_of(col_to_np(batch.column("doc_b")))
-            pk = ia * m_ids + ib
-            uniq, inv = np.unique(pk, return_inverse=True)
-            verdicts = np.empty(len(uniq), dtype=bool)
-            unknown = []
-            for j, key in enumerate(uniq.tolist()):
-                v = pair_memo.get(key)
-                if v is None:
-                    unknown.append(j)
-                else:
-                    verdicts[j] = v
-            if unknown:
-                up = np.asarray(unknown, dtype=np.int64)
-                ua, ub = uniq[up] // m_ids, uniq[up] % m_ids
-                na, nb = sizes[ua], sizes[ub]
-                cvec = np.zeros(len(up), dtype=np.int64)
-                need = ~keep(cvec, na, nb)  # monotone: keep(0,..) => keep
-                if need.any():
-                    ka, kb = ua[need], ub[need]
-                    # chunk by gathered-element budget: a batch full of
-                    # distinct mega-doc pairs must not materialize an
-                    # unbounded (pairs x shingles) buffer
-                    mass = np.cumsum(sizes[ka] + sizes[kb])
-                    counts = np.empty(len(ka), dtype=np.int64)
-                    lo = 0
-                    while lo < len(ka):
-                        hi = int(
-                            np.searchsorted(
-                                mass, mass[lo] + 8_000_000, side="left"
-                            )
-                        )
-                        hi = max(hi, lo + 1)
-                        keys = np.concatenate(
-                            [
-                                gather_keys(ka[lo:hi]),
-                                gather_keys(kb[lo:hi]),
-                            ]
-                        )
-                        keys.sort()
-                        dup = keys[1:] == keys[:-1]
-                        counts[lo:hi] = np.bincount(
-                            (keys[1:][dup] >> np.uint64(32)).astype(
-                                np.int64
-                            ),
-                            minlength=hi - lo,
-                        )
-                        lo = hi
-                    cvec[need] = counts
-                kv = keep(cvec, na, nb)
-                verdicts[up] = kv
-                for key, v in zip(uniq[up].tolist(), kv.tolist()):
-                    pair_memo[key] = v
-            yield batch.filter(pa.array(verdicts[inv]))
+        ia = idx_of(col_to_np(batch.column("doc_a")))
+        ib = idx_of(col_to_np(batch.column("doc_b")))
+        pk = ia * m_ids + ib
+        uniq, inv = np.unique(pk, return_inverse=True)
+        verdicts = np.empty(len(uniq), dtype=bool)
+        unknown = []
+        for j, key in enumerate(uniq.tolist()):
+            v = pair_memo.get(key)
+            if v is None:
+                unknown.append(j)
+            else:
+                verdicts[j] = v
+        if unknown:
+            up = np.asarray(unknown, dtype=np.int64)
+            ua, ub = uniq[up] // m_ids, uniq[up] % m_ids
+            na, nb = size(ua), size(ub)
+            cvec = np.zeros(len(up), dtype=np.int64)
+            need = ~keep(cvec, na, nb)  # monotone: keep(0,..) => keep
+            if need.any():
+                ka, kb = ua[need], ub[need]
+                # chunk by gathered-element budget: a batch full of
+                # distinct mega-doc pairs must not materialize an
+                # unbounded (pairs x shingles) buffer
+                mass = np.cumsum(size(ka) + size(kb))
+                counts = np.empty(len(ka), dtype=np.int64)
+                lo = 0
+                while lo < len(ka):
+                    hi = int(np.searchsorted(mass, mass[lo] + 8_000_000, side="left"))
+                    hi = max(hi, lo + 1)
+                    keys = np.concatenate(
+                        [gather_keys(ka[lo:hi]), gather_keys(kb[lo:hi])]
+                    )
+                    keys.sort()
+                    dup = keys[1:] == keys[:-1]
+                    counts[lo:hi] = np.bincount(
+                        (keys[1:][dup] >> np.uint64(32)).astype(np.int64),
+                        minlength=hi - lo,
+                    )
+                    lo = hi
+                cvec[need] = counts
+            kv = keep(cvec, na, nb)
+            verdicts[up] = kv
+            for key, v in zip(uniq[up].tolist(), kv.tolist()):
+                pair_memo[key] = v
+        mask = pa.array(verdicts[inv])
+        return {c: batch.column(c).filter(mask) for c in ("doc_a", "doc_b")}
 
-    return map_arrow(pairs, batches, schema)
+    return map_batches(pairs, pair_hash_prefilter, schema)
 
 
 # broadcast bound of the prefilter's shingle-hash table (see below);
@@ -806,9 +787,9 @@ def _hamming_band_pairs(fp, bands):
         .agg(F.sort_array(F.collect_set(F.struct(*fp.columns))).alias("members"))
     )
     id_t = dict(fp.dtypes)["doc_id"]
-    pairs = map_arrow(
+    pairs = map_batches(
         buckets.select("members"),
-        _bucket_hamming_batches,
+        _bucket_hamming,
         f"doc_a {id_t}, doc_b {id_t}, hamming int",
     )
     return pairs.distinct()
@@ -1024,7 +1005,7 @@ def _cosine_pair_verify(spark, packed, pairs):
     dict-lookup-and-stack loop per pair."""
     bc = spark.sparkContext.broadcast(packed)
 
-    def verify(it):
+    def cosine_pair_verify(batch):
         import numpy as np
         import pyarrow as pa
 
@@ -1041,28 +1022,20 @@ def _cosine_pair_verify(spark, packed, pairs):
                 raise KeyError("pair vec_id missing from embedding table")
             return ix
 
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            A = M[idx(batch.column("vec_a"))]
-            B = M[idx(batch.column("vec_b"))]
-            cos = fold_dot(A, B) / (
-                np.sqrt(fold_dot(A, A)) * np.sqrt(fold_dot(B, B))
-            )
-            keep = cos >= NEARDUP_MIN_COSINE
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("vec_a").filter(pa.array(keep)),
-                    batch.column("vec_b").filter(pa.array(keep)),
-                    pa.array(
-                        np.floor(cos[keep] * 10000 + 0.5) / 10000,
-                        type=pa.float64(),
-                    ),
-                ],
-                ["vec_a", "vec_b", "cosine"],
-            )
+        A = M[idx(batch.column("vec_a"))]
+        B = M[idx(batch.column("vec_b"))]
+        cos = fold_dot(A, B) / (np.sqrt(fold_dot(A, A)) * np.sqrt(fold_dot(B, B)))
+        keep = cos >= NEARDUP_MIN_COSINE
+        mask = pa.array(keep)
+        return {
+            "vec_a": batch.column("vec_a").filter(mask),
+            "vec_b": batch.column("vec_b").filter(mask),
+            "cosine": np.floor(cos[keep] * 10000 + 0.5) / 10000,
+        }
 
-    return map_arrow(pairs, verify, "vec_a bigint, vec_b bigint, cosine double")
+    return map_batches(
+        pairs, cosine_pair_verify, "vec_a bigint, vec_b bigint, cosine double"
+    )
 
 
 def _neardup_sql() -> str:

@@ -1,9 +1,9 @@
 """The Python boundary of the corpus operators: the shared per-document
-primitives, the vector primitives, the one ``(doc_id, text)``
-Arrow-kernel wrapper, and the one bounded driver collect.  Every
-kernel stage goes through ``pipeline.session.map_arrow`` (re-exported
-here), which ships the package and installs the worker's zip re-read
-guard before the kernel runs.
+primitives, the vector primitives, the one ``(doc_id, text)`` adapter,
+and the one bounded driver collect.  Every kernel is a per-batch
+function run by ``pipeline.session.map_batches`` (re-exported here),
+which ships the package, installs the worker's zip re-read guard and
+assembles the output batches.
 
 Kernels (the word/shingle/chunk -> md5 -> integer pipelines) are
 per-document independent, so each runs as one ``mapInArrow`` stage:
@@ -39,7 +39,7 @@ from hashlib import md5
 
 import numpy as np
 
-from ..pipeline.session import map_arrow
+from ..pipeline.session import map_batches
 from .common import read, spread
 
 _ASCII_STRIP = re.compile("[^a-zA-Z0-9 ]")
@@ -186,45 +186,26 @@ def docs(spark, sf_dir):
 def map_docs(spark, df, fn, out_ddl):
     """Run the per-document kernel ``fn`` over ``df`` — a DataFrame with
     a ``text`` column (and usually ``doc_id``), or an sf_dir meaning
-    :func:`docs` of it — as one ``mapInArrow`` stage.
+    :func:`docs` of it — as one :func:`map_batches` stage.
 
     ``fn(ids, texts)`` gets one Arrow batch as Python lists (``ids`` is
-    None when the input has no doc_id) and returns a dict of output
-    columns, each a list or numpy array, keyed by the names in
-    ``out_ddl``.  When the input carries doc_id, the output starts with
-    it in the input's type: a kernel that returns no ``doc_id`` gets
-    the input column passed through (one row per doc), one that
-    explodes rows returns its own.  Arrow types come from the DDL."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
+    None when the input has no doc_id) and returns the output columns
+    named in ``out_ddl``.  When the input carries doc_id, the output
+    starts with it in the input's type: a kernel that returns no
+    ``doc_id`` passes the input column through (one row per doc), one
+    that explodes rows returns its own."""
     if isinstance(df, str):
         df = docs(spark, df)
     id_t = dict(df.dtypes).get("doc_id")
     if id_t is not None:
         out_ddl = f"doc_id {id_t}, {out_ddl}"
-    fields = list(to_arrow_schema(StructType.fromDDL(out_ddl)))
 
-    def batches(it):
-        import pyarrow as pa
+    def kernel(batch):
+        ids = batch.column("doc_id").to_pylist() if id_t is not None else None
+        return fn(ids, batch.column("text").to_pylist())
 
-        for batch in it:
-            ids = batch.column("doc_id") if id_t is not None else None
-            cols = fn(
-                None if ids is None else ids.to_pylist(),
-                batch.column("text").to_pylist(),
-            )
-            arrays = []
-            for f in fields:
-                if f.name == "doc_id" and "doc_id" not in cols:
-                    arrays.append(ids)
-                else:
-                    t = ids.type if f.name == "doc_id" else f.type
-                    arrays.append(pa.array(cols[f.name], type=t))
-            yield pa.RecordBatch.from_arrays(arrays, [f.name for f in fields])
-
-    batches.__name__ = fn.__name__  # the kernel's name in the plan
-    return map_arrow(df, batches, out_ddl)
+    kernel.__name__ = fn.__name__  # the kernel's name in the plan
+    return map_batches(df, kernel, out_ddl)
 
 
 # -- the bounded driver collect --------------------------------------------

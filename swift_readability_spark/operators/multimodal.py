@@ -1,10 +1,10 @@
 """Multimodal-column plumbing: opaque binary payloads with typed
-metadata, processed in Arrow-batched Pandas stages.
+metadata, processed in per-batch Arrow stages.
 
 The container has no image/audio codecs, so the actual decode is a
 clearly-marked stub (``decode_image_real`` raises NotImplementedError;
 ``_fake_decode`` is a deterministic arithmetic stand-in).  Everything
-Spark-side — the binary column, the mapInPandas batch shape, the
+Spark-side — the binary column, the Arrow batch shape, the
 schema, the partition behavior — is real and oracle-checked where the
 stub arithmetic is SQL-expressible.
 """
@@ -12,8 +12,8 @@ stub arithmetic is SQL-expressible.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from ..pipeline.session import map_batches
 from .common import read
 
 
@@ -55,46 +55,25 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     return width, height, n_frames
 
 
-_DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("n_frames", T.LongType()),
-    ]
-)
-
-
 def media_decode_stub(spark, sf_dir):
-    """mapInPandas decode stage over the binary column: Arrow batches
-    in, feature rows out.  This is the exact plumbing a real
-    decode/resize/frame-sample stage uses — swap ``_fake_decode`` for
-    the codec call on a cluster with codecs installed."""
-    from ..pipeline.session import ensure_package_on_workers, on_worker
-
-    ensure_package_on_workers(spark)
+    """Arrow decode stage over the binary column: one batch of payloads
+    in, one feature row per payload out.  This is the exact plumbing a
+    real decode/resize/frame-sample stage uses — swap ``_fake_decode``
+    for the codec call on a cluster with codecs installed."""
     d = read(spark, sf_dir, "documents").select(
         "doc_id", F.encode("text", "utf-8").alias("payload")
     )
 
-    def decode_batches(iterator):
-        import pandas as pd
+    def decode(batch):
+        decoded = zip(*map(_fake_decode, batch.column("payload").to_pylist()))
+        return dict(zip(("width", "height", "n_frames"), decoded))
 
-        for pdf in iterator:
-            decoded = [_fake_decode(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "n_frames": [d[2] for d in decoded],
-                }
-            )
-
-    return d.mapInPandas(on_worker(decode_batches), _DECODE_SCHEMA)
+    return map_batches(
+        d, decode, "doc_id bigint, width bigint, height bigint, n_frames bigint"
+    )
 
 
-# the stub arithmetic is SQL-expressible, so even the Pandas stage gets
+# the stub arithmetic is SQL-expressible, so even the Arrow stage gets
 # a full value oracle: ascii() of the first char == first utf-8 byte
 # for this ASCII corpus
 DECODE_STUB_SQL = """
@@ -115,59 +94,46 @@ QUERIES = {
 
 FRAME_SAMPLE_K = 4
 
-_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_offset", T.LongType()),
-        T.StructField("frame_byte", T.IntegerType()),
-    ]
-)
-
-
 def media_frame_sample(spark, sf_dir):
-    """Frame sampling over the binary column — the 1->N mapInPandas
-    shape a video pipeline uses (decode emits one row per *frame*, so
-    output cardinality differs from input): up to FRAME_SAMPLE_K
-    frames at a uniform byte stride per payload.  The 'frame' here is
-    the byte at the sampled offset (deterministic stand-in — no video
-    codecs in this container); the Spark-side batch shape, exploded
-    output schema, and partition behavior are the real thing."""
-    from ..pipeline.session import ensure_package_on_workers, on_worker
-
-    ensure_package_on_workers(spark)
+    """Frame sampling over the binary column — the 1->N shape a video
+    pipeline uses (decode emits one row per *frame*, so output
+    cardinality differs from input): up to FRAME_SAMPLE_K frames at a
+    uniform byte stride per payload.  The 'frame' here is the byte at
+    the sampled offset (deterministic stand-in — no video codecs in
+    this container); the Spark-side batch shape, exploded output
+    schema, and partition behavior are the real thing."""
     d = read(spark, sf_dir, "documents").select(
         "doc_id", F.encode("text", "utf-8").alias("payload")
     )
 
-    def sample_batches(iterator):
-        import pandas as pd
+    def sample_frames(batch):
+        doc_ids, idxs, offsets, fbytes = [], [], [], []
+        for doc_id, p in zip(
+            batch.column("doc_id").to_pylist(), batch.column("payload").to_pylist()
+        ):
+            n = len(p)
+            if n == 0:
+                continue
+            k = min(FRAME_SAMPLE_K, n)
+            stride = n // k
+            for i in range(k):
+                off = i * stride
+                doc_ids.append(doc_id)
+                idxs.append(i)
+                offsets.append(off)
+                fbytes.append(p[off])
+        return {
+            "doc_id": doc_ids,
+            "frame_idx": idxs,
+            "frame_offset": offsets,
+            "frame_byte": fbytes,
+        }
 
-        for pdf in iterator:
-            doc_ids, idxs, offsets, fbytes = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                n = len(p)
-                if n == 0:
-                    continue
-                k = min(FRAME_SAMPLE_K, n)
-                stride = n // k
-                for i in range(k):
-                    off = i * stride
-                    doc_ids.append(doc_id)
-                    idxs.append(i)
-                    offsets.append(off)
-                    fbytes.append(p[off])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(doc_ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_offset": pd.Series(offsets, dtype="int64"),
-                    "frame_byte": pd.Series(fbytes, dtype="int32"),
-                }
-            )
-
-    return d.mapInPandas(on_worker(sample_batches), _FRAME_SCHEMA)
+    return map_batches(
+        d,
+        sample_frames,
+        "doc_id bigint, frame_idx int, frame_offset bigint, frame_byte int",
+    )
 
 
 # ASCII corpus: byte at offset == ascii(char at offset+1)

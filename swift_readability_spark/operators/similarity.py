@@ -15,45 +15,46 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from .common import floor_round, fround, read
-from .kernels import collect_within, embedding_matrix, fold_cosines, fold_dot, map_arrow
+from .kernels import (
+    collect_within,
+    embedding_matrix,
+    fold_cosines,
+    fold_dot,
+    map_batches,
+)
 
 QUERY_VEC_ID = 0
 TOP_K = 10
 
 
-def _query_cosine_batches(q_ids, Q, keep=None):
-    """mapInArrow factory: per corpus vector, the exact cosine against
-    each collected query (ids ``q_ids``, rows of ``Q``) — ``fold_dot``
-    == the sequential ``aggregate(zip_with(...))`` fold bit-for-bit.
-    Emits one output batch per (input batch, query); null embeddings
-    get a null cosine (and are never divided).  ``keep(X)``, when
-    given, is a boolean row mask over the batch's float64 matrix: only
-    the non-null rows it keeps are scored, every other row is dropped
-    (the hyperplane probe)."""
-    def batches(it):
-        import pyarrow as pa
+def _query_cosine(q_ids, Q, keep=None):
+    """map_batches kernel factory: per corpus vector, the exact cosine
+    against each collected query (ids ``q_ids``, rows of ``Q``) —
+    ``fold_dot`` == the sequential ``aggregate(zip_with(...))`` fold
+    bit-for-bit.  A batch's output holds its rows once per query, query
+    by query; null embeddings get a null cosine (and are never
+    divided).  ``keep(X)``, when given, is a boolean row mask over the
+    batch's float64 matrix: only the non-null rows it keeps are scored,
+    every other row is dropped (the hyperplane probe)."""
 
-        for batch in it:
-            X, valid = embedding_matrix(batch.column("embedding"), Q.shape[1])
-            if keep is not None:
-                rows = np.flatnonzero(valid & keep(X))
-                batch, X, valid = batch.take(rows), X[rows], valid[rows]
-            n = batch.num_rows
-            if n == 0:
-                continue
-            cos = fold_cosines(X, valid, Q)
-            for j, qid in enumerate(q_ids):
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([qid] * n, type=pa.int64()),
-                        batch.column("vec_id"),
-                        batch.column("label"),
-                        pa.array(cos[:, j], type=pa.float64(), mask=~valid),
-                    ],
-                    ["q_id", "vec_id", "label", "cosine_raw"],
-                )
+    def query_cosine(batch):
+        X, valid = embedding_matrix(batch.column("embedding"), Q.shape[1])
+        rows = np.arange(batch.num_rows)
+        if keep is not None:
+            rows = np.flatnonzero(valid & keep(X))
+            X, valid = X[rows], valid[rows]
+        cos = fold_cosines(X, valid, Q)
+        rows = np.tile(rows, len(q_ids))
+        return {
+            "q_id": np.repeat(np.asarray(q_ids, dtype=np.int64), len(X)),
+            "vec_id": batch.column("vec_id").take(rows),
+            "label": batch.column("label").take(rows),
+            "cosine_raw": np.ma.masked_array(
+                cos.T.ravel(), mask=np.tile(~valid, len(q_ids))
+            ),
+        }
 
-    return batches
+    return query_cosine
 
 
 def _dense_rows(tbl, key, vectors, what):
@@ -76,9 +77,9 @@ def _query_vecs(e, pred, cap):
 
 
 def _scored_against_queries(e, queries, corpus_pred, keep=None):
-    return map_arrow(
+    return map_batches(
         e.filter(corpus_pred).select("vec_id", "label", "embedding"),
-        _query_cosine_batches(*queries, keep),
+        _query_cosine(*queries, keep),
         "q_id bigint, vec_id bigint, label int, cosine_raw double",
     )
 
@@ -248,34 +249,20 @@ def _assign_kernel(e, cents):
         f" embedding {dtypes['embedding']}, cell int"
     )
 
-    def batches(it):
-        import pyarrow as pa
-
+    def assign_cell(batch):
         cell_ids, C = bc.value
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            col = batch.column("embedding")
-            X, valid = embedding_matrix(col, C.shape[1])
-            cos = fold_cosines(X, valid, C)
-            best_cc = cos[:, 0]
-            best_cell = np.full(len(X), cell_ids[0], dtype=np.int64)
-            for j in range(1, len(cell_ids)):
-                cc = cos[:, j]
-                better = (cc > best_cc) | (np.isnan(cc) & ~np.isnan(best_cc))
-                best_cell = np.where(better, cell_ids[j], best_cell)
-                best_cc = np.where(better, cc, best_cc)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("vec_id"),
-                    batch.column("label"),
-                    col,
-                    pa.array(best_cell, type=pa.int32(), mask=~valid),
-                ],
-                ["vec_id", "label", "embedding", "cell"],
-            )
+        X, valid = embedding_matrix(batch.column("embedding"), C.shape[1])
+        cos = fold_cosines(X, valid, C)
+        best_cc = cos[:, 0]
+        best_cell = np.full(len(X), cell_ids[0], dtype=np.int64)
+        for j in range(1, len(cell_ids)):
+            cc = cos[:, j]
+            better = (cc > best_cc) | (np.isnan(cc) & ~np.isnan(best_cc))
+            best_cell = np.where(better, cell_ids[j], best_cell)
+            best_cc = np.where(better, cc, best_cc)
+        return {"cell": np.ma.masked_array(best_cell, mask=~valid)}
 
-    return map_arrow(e.select("vec_id", "label", "embedding"), batches, schema)
+    return map_batches(e.select("vec_id", "label", "embedding"), assign_cell, schema)
 
 
 def _seed_assignment(e, k: int):

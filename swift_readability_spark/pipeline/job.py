@@ -26,14 +26,12 @@ import time
 import uuid
 from datetime import datetime, timezone
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..extract import DEFAULT_BASE_URL
-from .session import map_arrow
+from .session import map_batches
 
 SPAN_STRUCT = T.StructType(
     [
@@ -90,11 +88,10 @@ LINEAGE_SCHEMA = T.StructType(
 _KERNEL_SCHEMA = T.StructType(
     [f for f in EXTRACTED_SCHEMA.fields if f.name not in ("partition_key", "run_id")]
 )
-_ARROW_OUT = to_arrow_schema(_KERNEL_SCHEMA)
 
 
 def make_extract_batches(base_url: str, options=None):
-    """Returns a mapInArrow function: vectorized batch extraction.
+    """Returns the extraction kernel, a :func:`map_batches` function.
 
     The pure-Python readability core runs per document *inside* the
     Arrow batch; only columnar Arrow buffers cross the JVM<->Python
@@ -103,7 +100,7 @@ def make_extract_batches(base_url: str, options=None):
     closure (e.g. classes_to_preserve for harness parity runs).
     """
 
-    def extract_batches(batches):
+    def extract_batch(batch):
         import gc
 
         from ..extract import extract_document
@@ -114,32 +111,43 @@ def make_extract_batches(base_url: str, options=None):
         # Arrow batch cuts allocator contention across parallel workers
         # (the per-batch collect bounds peak heap to one batch's trees).
         gc.set_threshold(200_000, 50, 25)
+        results = []
+        for row in batch.to_pylist():
+            t0 = time.perf_counter()
+            result = extract_document(
+                row["doc_id"], row["spans"] or [], base_url, options
+            )
+            result["wall_ms"] = (time.perf_counter() - t0) * 1000.0
+            results.append(result)
+        gc.collect()
+        return {name: [r[name] for r in results] for name in _KERNEL_SCHEMA.names}
 
-        for batch in batches:
-            results = []
-            for row in batch.to_pylist():
-                t0 = time.perf_counter()
-                result = extract_document(
-                    row["doc_id"], row["spans"] or [], base_url, options
-                )
-                result["wall_ms"] = (time.perf_counter() - t0) * 1000.0
-                results.append(result)
-            yield pa.RecordBatch.from_pylist(results, schema=_ARROW_OUT)
-            gc.collect()
+    return extract_batch
 
-    return extract_batches
+
+# what Java's number parsers trim from a string's ends
+_JAVA_BLANK = "".join(map(chr, range(33)))
 
 
 def check_run_id(run_id: str) -> str:
     """Reject run_ids Spark's partition-column type inference would
-    read back as a non-string (all digits -> bigint): one such run
-    poisons the partitionBy(run_id) output/lineage directories with a
-    mixed-type partition column, breaking every later scan."""
-    if run_id.isdigit():
+    read back as a non-string: one such run poisons the
+    partitionBy(run_id) output/lineage directories with a mixed-type
+    partition column, breaking every later scan.
+
+    Spark tries int, bigint, decimal, double (Java's parser, which
+    also reads ``NaN`` and ``Infinity``), timestamp and date before
+    string.  Every form those accept starts with a digit, a sign, a dot
+    or a blank, except ``NaN`` and ``Infinity``, so an id is safe when
+    it starts with an ASCII letter and is neither of those two."""
+    head = run_id[:1]
+    special = run_id.rstrip(_JAVA_BLANK) in ("NaN", "Infinity")
+    if special or not (head.isascii() and head.isalpha()):
         raise ValueError(
-            f"run_id {run_id!r} is all digits; partitionBy(run_id) would "
-            "be read back as bigint and mix types with string run_ids — "
-            "prefix it with a letter"
+            f"run_id {run_id!r}: Spark reads partition values made of digits "
+            "and signs, NaN and Infinity back as numbers, dates or timestamps, "
+            "so partitionBy(run_id) would mix types with string run_ids — "
+            "start it with a letter"
         )
     return run_id
 
@@ -187,7 +195,7 @@ def plan_extraction(
     scan splits by size, so the route stays.
     """
     df = route_for_extraction(df.select("doc_id", "spans"), n_partitions)
-    extracted = map_arrow(df, make_extract_batches(base_url, options), _KERNEL_SCHEMA)
+    extracted = map_batches(df, make_extract_batches(base_url, options), _KERNEL_SCHEMA)
     return (
         with_partition_key(extracted, n_partitions)
         .withColumn("run_id", F.lit(run_id))

@@ -19,9 +19,9 @@ splitting are on by default), the scan split size (maxPartitionBytes
 executor-memory-sized at any corpus size).
 
 The package's Python stages all enter the executors through
-:func:`map_arrow` (or :func:`on_worker` for ``mapInPandas``), which
-ships the package and installs :func:`install_zip_reread_guard` in
-each worker before the stage's function runs.
+:func:`map_batches`, which ships the package, installs
+:func:`install_zip_reread_guard` in each task before the stage's
+per-batch function runs, and assembles every output batch.
 """
 
 from __future__ import annotations
@@ -123,24 +123,46 @@ def install_zip_reread_guard() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-def on_worker(fn):
-    """``fn`` with :func:`install_zip_reread_guard` run in the executor
-    before it; ``fn.__name__`` is kept (the stage's name in plan text)."""
+def map_batches(df, fn, schema):
+    """``df.mapInArrow`` over the per-batch function ``fn``: the one way
+    the package's Python stages enter the executors.
 
-    def hooked(batches):
-        install_zip_reread_guard()
-        return fn(batches)
+    Ships the package to the executor Python workers and, once per
+    task, installs :func:`install_zip_reread_guard` before ``fn`` sees
+    a batch.  Empty input batches are skipped.  ``fn(batch)`` returns
+    ``{name: values}`` for the columns of ``schema`` (a DDL string or a
+    StructType), each an Arrow array, a numpy array (a masked array's
+    masked slots become nulls) or a list, typed from ``schema``; a
+    column ``fn`` leaves out is the input batch's column of that name.
+    ``fn.__name__`` is the stage's name in the plan."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    hooked.__name__ = fn.__name__
-    return hooked
-
-
-def map_arrow(df, fn, ddl):
-    """``df.mapInArrow(fn, ddl)`` with the package shipped to the
-    executor Python workers first and ``fn`` wrapped by
-    :func:`on_worker`: the one way the package enters ``mapInArrow``."""
     ensure_package_on_workers(df.sparkSession)
-    return df.mapInArrow(on_worker(fn), ddl)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    fields = list(to_arrow_schema(schema))
+
+    def task(batches):
+        import pyarrow as pa
+
+        install_zip_reread_guard()
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            cols = fn(batch)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(cols[f.name], type=f.type)
+                    if f.name in cols
+                    else batch.column(f.name)
+                    for f in fields
+                ],
+                [f.name for f in fields],
+            )
+
+    task.__name__ = fn.__name__
+    return df.mapInArrow(task, schema)
 
 
 def build_session(

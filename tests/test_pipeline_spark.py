@@ -337,6 +337,38 @@ def test_numeric_run_id_rejected_and_generated_ids_safe():
     assert not ("r" + _uuid.uuid4().hex[:11]).isdigit()
 
 
+_SAFE_RUN_IDS = ["r123", "stream-0", "r1e5", "e5", "Inf", "NaNs", "Infinity-0", "d2024-01-01"]
+_TYPED_RUN_IDS = ["-3", "1.5", "1e5", "2024-01-01", "NaN", "Infinity"]
+
+
+def test_run_id_check_matches_partition_type_inference(spark, tmp_path):
+    """Every id ``check_run_id`` accepts reads back from a schema-less
+    scan of a ``partitionBy(run_id)`` directory as a string; every id
+    Spark infers as another type (int, double, decimal, date) raises."""
+    from pyspark.sql.types import StringType
+
+    from swift_readability_spark.pipeline.job import check_run_id
+
+    ids = _SAFE_RUN_IDS + _TYPED_RUN_IDS
+    rows = [(k, run_id, 0) for k, run_id in enumerate(ids)]
+    spark.createDataFrame(rows, "k int, run_id string, x int").write.partitionBy(
+        "k", "run_id"
+    ).parquet(str(tmp_path / "t"))
+
+    def inferred(k):
+        # one id per directory: a mixed directory would widen to string
+        return spark.read.parquet(str(tmp_path / "t" / f"k={k}")).schema["run_id"].dataType
+
+    for k, run_id in enumerate(ids):
+        if run_id in _SAFE_RUN_IDS:
+            assert check_run_id(run_id) == run_id
+            assert inferred(k) == StringType(), run_id
+        else:
+            assert inferred(k) != StringType(), run_id
+            with pytest.raises(ValueError, match="start it with a letter"):
+                check_run_id(run_id)
+
+
 def test_legacy_null_domain_rows_mixed_with_recorded_domain_raise(
     spark, tmp_path_factory
 ):

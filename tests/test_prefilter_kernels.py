@@ -1,7 +1,7 @@
 """Focused unit tests for the r07 session-3 kernel internals.
 
 ``_pair_hash_prefilter``'s vectorized sweep (composite-key sort,
-32-bit truncation, per-task memo) and ``_bucket_hamming_batches``'s
+32-bit truncation, per-task memo) and ``_bucket_hamming``'s
 row-chunked LUT popcount both replaced per-pair Python loops; these
 tests pin their semantics directly against brute-force references —
 conservative keep (never drops a pair the exact rule keeps), duplicate
@@ -14,7 +14,7 @@ import pytest
 
 from swift_readability_spark.operators.dedup import (
     SIMHASH_MAX_HAMMING,
-    _bucket_hamming_batches,
+    _bucket_hamming,
     _pair_hash_prefilter,
 )
 
@@ -154,16 +154,8 @@ def _members_batch(members, words):
 
 
 def _hamming_pairs(batch):
-    got = []
-    for ob in _bucket_hamming_batches([batch]):
-        got.extend(
-            zip(
-                ob.column("doc_a").to_pylist(),
-                ob.column("doc_b").to_pylist(),
-                ob.column("hamming").to_pylist(),
-            )
-        )
-    return got
+    out = _bucket_hamming(batch)
+    return list(zip(out["doc_a"], out["doc_b"], out["hamming"]))
 
 
 def test_bucket_hamming_chunking_matches_bruteforce():

@@ -112,13 +112,11 @@ def test_arrow_input_batches_close_at_the_byte_cap(spark):
     ``arrow.maxBytesPerBatch`` however many records
     ``maxRecordsPerBatch`` allows: that cap bounds a batch of
     mega-docs."""
-    from swift_readability_spark.pipeline.session import map_arrow
+    from swift_readability_spark.pipeline.session import map_batches
 
-    def batch_rows(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            yield pa.RecordBatch.from_pydict({"n": [batch.num_rows]})
+    def batch_rows(batch):
+        # one row per input batch, holding its record count
+        return {"n": [batch.num_rows]}
 
     key = "spark.sql.execution.arrow.maxBytesPerBatch"
     old = spark.conf.get(key, None)
@@ -127,7 +125,7 @@ def test_arrow_input_batches_close_at_the_byte_cap(spark):
         rows = spark.range(0, 40, numPartitions=1).select(
             F.repeat(F.lit("x"), 300_000).alias("text")
         )
-        sizes = [r["n"] for r in map_arrow(rows, batch_rows, "n bigint").collect()]
+        sizes = [r["n"] for r in map_batches(rows, batch_rows, "n bigint").collect()]
     finally:
         if old is None:
             spark.conf.unset(key)

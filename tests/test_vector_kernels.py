@@ -20,7 +20,7 @@ from swift_readability_spark.operators.dedup import _hyperplane_sigs
 from swift_readability_spark.operators.kernels import embedding_matrix, fold_dot
 from swift_readability_spark.operators.similarity import (
     HYPERPLANES,
-    _query_cosine_batches,
+    _query_cosine,
     _within_hamming_probe,
 )
 
@@ -76,9 +76,8 @@ _Q = _GOOD[::-1]
 
 
 def _cosine(rows, keep=None):
-    kernel = _query_cosine_batches([0], np.array([_Q]), keep)
-    out = kernel(iter([_batch(rows)]))
-    return [v for b in out for v in b.column("cosine_raw").to_pylist()]
+    out = _query_cosine([0], np.array([_Q]), keep)(_batch(rows))
+    return pa.array(out["cosine_raw"]).to_pylist()
 
 
 def _exact_cosine(x):
@@ -137,6 +136,6 @@ def test_row_mask_drops_null_and_far_rows_before_scoring():
     sigs = _hyperplane_sigs(np.array([_Q, far]), HYPERPLANES)
     assert bin(int(sigs[0] ^ sigs[1])).count("1") > 2
     batch = _batch([None, far, near])
-    out = list(_query_cosine_batches([0], np.array([_Q]), _near_query)(iter([batch])))
-    assert [b.column("vec_id").to_pylist() for b in out] == [[2]]
-    assert out[0].column("cosine_raw").to_pylist() == [_exact_cosine(near)]
+    out = _query_cosine([0], np.array([_Q]), _near_query)(batch)
+    assert out["vec_id"].to_pylist() == [2]
+    assert pa.array(out["cosine_raw"]).to_pylist() == [_exact_cosine(near)]

@@ -18,7 +18,7 @@ import pytest
 from swift_readability_spark.pipeline import session
 from swift_readability_spark.pipeline.session import (
     install_zip_reread_guard,
-    map_arrow,
+    map_batches,
 )
 
 
@@ -101,20 +101,37 @@ def test_install_wraps_once(zip_on_path):
 
 
 def test_one_mapinarrow_call_site():
-    """Every ``mapInArrow`` the package creates goes through the one
-    hooked ``map_arrow``."""
+    """Every Python stage the package creates goes through the one
+    batch driver, ``map_batches``: it is the only ``mapInArrow`` call,
+    no module calls ``mapInPandas``, and only the driver loops over
+    batches or builds an output batch (``RecordBatch.from_arrays`` /
+    ``from_pylist`` / ``from_pydict``)."""
     import ast
 
     pkg = Path(session.__file__).resolve().parent.parent
-    sites = [
-        (str(p.relative_to(pkg)), node.lineno)
-        for p in sorted(pkg.rglob("*.py"))
-        for node in ast.walk(ast.parse(p.read_text()))
-        if isinstance(node, ast.Call)
-        and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "mapInArrow"
-    ]
-    assert [path for path, _ in sites] == ["pipeline/session.py"]
+    sites = {"mapInArrow": [], "mapInPandas": [], "RecordBatch": [], "for batch": []}
+    for p in sorted(pkg.rglob("*.py")):
+        path = str(p.relative_to(pkg))
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.For) and getattr(node.target, "id", None) == "batch":
+                sites["for batch"].append(path)
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            attr, owner = node.func.attr, node.func.value
+            if attr in ("mapInArrow", "mapInPandas"):
+                sites[attr].append(path)
+            elif (
+                attr in ("from_arrays", "from_pylist", "from_pydict")
+                and getattr(owner, "attr", getattr(owner, "id", None)) == "RecordBatch"
+            ):
+                sites["RecordBatch"].append(path)
+    assert sites == {
+        "mapInArrow": ["pipeline/session.py"],
+        "mapInPandas": [],
+        "RecordBatch": ["pipeline/session.py"],
+        "for batch": ["pipeline/session.py"],
+    }
+    assert not hasattr(session, "map_arrow") and not hasattr(session, "on_worker")
 
 
 def test_workers_run_with_guard(spark):
@@ -137,14 +154,12 @@ def test_workers_run_with_guard(spark):
     extracted = plan_extraction(corpus, "http://example.com/", "rhook", 2).collect()
     assert len(extracted) == 40 and not any(r["error"] for r in extracted)
 
-    def probe(batches):
+    def probe(batch):
         """Report, from inside the worker, whether the guard is installed
         and how many zip directories ``invalidate_caches`` re-reads."""
         import importlib
         import sys
         import zipimport
-
-        import pyarrow as pa
 
         real = zipimport._read_directory
         reads = []
@@ -164,17 +179,14 @@ def test_workers_run_with_guard(spark):
         guarded = bool(
             getattr(zipimport.zipimporter.invalidate_caches, "zip_reread_guard", False)
         )
-        for batch in batches:
-            n = batch.num_rows
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "guarded": [guarded] * n,
-                    "zips": [zips] * n,
-                    "rereads": [len(reads)] * n,
-                }
-            )
+        n = batch.num_rows
+        return {
+            "guarded": [guarded] * n,
+            "zips": [zips] * n,
+            "rereads": [len(reads)] * n,
+        }
 
-    probed = map_arrow(
+    probed = map_batches(
         spark.range(4 * 64).repartition(4),
         probe,
         "guarded boolean, zips bigint, rereads bigint",
@@ -192,13 +204,13 @@ def test_package_zip_removed_at_driver_exit(tmp_path):
         """
         import glob, os, sys, tempfile
         sys.path.insert(0, sys.argv[1])
-        from swift_readability_spark.pipeline.session import build_session, map_arrow
+        from swift_readability_spark.pipeline.session import build_session, map_batches
 
-        def identity(batches):
-            yield from batches
+        def identity(batch):
+            return {}
 
         spark = build_session(master="local[1]", shuffle_partitions=1)
-        print(map_arrow(spark.range(4), identity, "id long").count())
+        print(map_batches(spark.range(4), identity, "id long").count())
         pattern = os.path.join(tempfile.gettempdir(), "swift_readability_spark_pkg_*.zip")
         print(len(glob.glob(pattern)))
         spark.stop()
