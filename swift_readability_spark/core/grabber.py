@@ -15,6 +15,26 @@ Faithfulness notes (quirks deliberately mirrored):
   (the canonical code re-parses the cached innerHTML, which equally
   drops expando scores; <body>'s score is not journaled and survives,
   as the canonical expando does).
+- after a failed chain, ``dir`` is read from the last attempt's top
+  candidate as the canonical code sees it once the body is re-parsed:
+  that attempt's nodes hang in detached subtrees, so the walk stops
+  below <body> unless <body> is the candidate's parent.
+
+Retry chain (``grab_article``), which runs fewer attempts than the
+canonical loop and returns the same result:
+- a retry whose relaxed flag gated nothing in the last attempt, and
+  which starts where that attempt started (no byline found in it, no
+  <body> among its top candidates), reproduces it, so it is skipped;
+- once a failed attempt's normalized text is as long as the pristine
+  <body>'s, no later attempt can be longer: an article is an in-order
+  subsequence of the body's text nodes (nothing outside <body> is
+  joined, no text is created), and collapsing whitespace runs cannot
+  make a subsequence longer (each non-space character counts once and
+  each whitespace run once).  The stable best-attempt sort keeps the
+  earliest longest attempt, which has then already run, so the chain
+  stops.  ``dir`` alone comes from the *last* attempt, so a page where
+  any element carries ``dir`` runs the chain out.
+``tests/test_retry_twin.py`` holds the canonical loop as a twin.
 """
 
 from __future__ import annotations
@@ -223,6 +243,7 @@ class Grabber:
         # replayed in reverse (body subtree restored exactly; <html>/
         # <head>-level removals re-applied, matching the innerHTML-
         # only restore — see dom.journal_replay).
+        body_length = None
         try:
             _dom.journal_start()
             while True:
@@ -241,33 +262,46 @@ class Grabber:
                 _dom.journal_stop()
                 _dom.journal_replay(journal, doc)
 
+                # exact cut (module docstring): no attempt is longer
+                # than the pristine body, so one as long ends the chain
+                # unless ``dir`` could still change
+                if body_length is None:
+                    body_length = len(get_inner_text(page, True))
+                    has_dir = any(
+                        n.IS_ELEMENT and "dir" in n.attrs for n in doc.iter_subtree()
+                    )
+                if text_length == body_length and not has_dir:
+                    self.flag_strip_unlikelys = False
+                    self.flag_weight_classes = False
+                    self.flag_clean_conditionally = False
+
                 # relax flags; a retry whose flag gated NOTHING in the
-                # last attempt provably reproduces it byte-for-byte
-                # (same pristine start state after replay + no flag-off
-                # divergence point), so it is skipped.  The canonical
-                # code re-runs anyway; its attempts list just gains a
-                # duplicate (same article, same length), which the
-                # stable best-attempt sort resolves to the same result.
+                # last attempt, and which starts where the last attempt
+                # started, provably reproduces it byte-for-byte (no
+                # flag-off divergence point), so it is skipped.  The
+                # canonical code re-runs anyway; its attempts list just
+                # gains a duplicate (same article, same length), which
+                # the stable best-attempt sort resolves to the same
+                # result.
                 while True:
                     if self.flag_strip_unlikelys:
                         self.flag_strip_unlikelys = False
-                        if self._attempt_stripped:
-                            break
+                        gated = self._attempt_stripped
                     elif self.flag_weight_classes:
                         self.flag_weight_classes = False
-                        if self._attempt_weight_seen:
-                            break
+                        gated = self._attempt_weight_seen
                     elif self.flag_clean_conditionally:
                         self.flag_clean_conditionally = False
-                        if self._attempt_cond_cleaned:
-                            break
+                        gated = self._attempt_cond_cleaned
                     else:
                         self.attempts.sort(key=lambda a: a[1], reverse=True)
                         if not self.attempts[0][1]:
                             return None
                         article = self.attempts[0][0]
-                        self._set_article_dir()
+                        self._set_article_dir(restored=True)
                         return article
+                    if gated or self._attempt_carries_over:
+                        break
                 _dom.journal_start()
         except BaseException:
             # mid-attempt failure: replay the active journal before
@@ -301,6 +335,11 @@ class Grabber:
         self._attempt_stripped = False
         self._attempt_weight_seen = False
         self._attempt_cond_cleaned = False
+        # ... and whether this attempt leaves the next one a different
+        # start: a byline found now is neither looked for nor removed
+        # again, and a <body> scored now keeps its (unjournaled) score,
+        # so it is no candidate next time
+        self._attempt_carries_over = False
 
         elements_to_score: list[Element] = []
         node: Element | None = doc.document_element
@@ -350,6 +389,7 @@ class Grabber:
                     nxt = get_next_node(nxt)
                 chosen = itemprop_name_node if itemprop_name_node is not None else node
                 self.article_byline = js_trim(chosen.text_content)
+                self._attempt_carries_over = True
                 node = remove_and_get_next(node)
                 continue
 
@@ -478,6 +518,10 @@ class Grabber:
                         top_candidates.pop()
                     break
 
+        # top_candidates is a stable top-k, so a <body> outside it
+        # shapes nothing that its absence next time would change
+        if any(c is page for c in top_candidates):
+            self._attempt_carries_over = True
         top_candidate = top_candidates[0] if top_candidates else None
         needed_to_create_top_candidate = False
         parent_of_top_candidate: Element | None = None
@@ -619,14 +663,23 @@ class Grabber:
 
         return article_content
 
-    def _set_article_dir(self) -> None:
+    def _set_article_dir(self, restored: bool = False) -> None:
+        """``dir`` from the last attempt's top candidate, its parent
+        and the parent's ancestors.  ``restored``: the chain failed and
+        the page was restored; the canonical restore re-parses the
+        body's HTML, which leaves the last attempt's nodes in detached
+        subtrees, so unless the parent is <body> itself the walk ends
+        below <body>."""
         parent = getattr(self, "_parent_of_top_candidate", None)
         top = getattr(self, "_top_candidate", None)
         if parent is None or top is None:
             return
+        page = self.doc.body
         ancestors: list[Element] = [parent, top]
         ancestors.extend(get_node_ancestors(parent))
         for ancestor in ancestors:
+            if restored and ancestor is page and parent is not page:
+                return
             if not isinstance(ancestor, Element) or ancestor.tag.startswith("#"):
                 continue
             article_dir = ancestor.get_attr("dir")

@@ -109,7 +109,9 @@ def make_extract_batches(base_url: str, options=None):
         # CPython GC thresholds trigger full generational scans many
         # times per document.  Raising gen0 and collecting once per
         # Arrow batch cuts allocator contention across parallel workers
-        # (the per-batch collect bounds peak heap to one batch's trees).
+        # (the per-batch collect bounds peak heap to one batch's trees;
+        # map_batches has frozen the worker's long-lived heap, so the
+        # collect walks little more than those trees).
         gc.set_threshold(200_000, 50, 25)
         results = []
         for row in batch.to_pylist():

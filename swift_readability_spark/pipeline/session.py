@@ -20,8 +20,9 @@ executor-memory-sized at any corpus size).
 
 The package's Python stages all enter the executors through
 :func:`map_batches`, which ships the package, installs
-:func:`install_zip_reread_guard` in each task before the stage's
-per-batch function runs, and assembles every output batch.
+:func:`install_zip_reread_guard` and freezes the worker's long-lived
+heap (``gc.freeze``) in each task before the stage's per-batch
+function runs, and assembles every output batch.
 """
 
 from __future__ import annotations
@@ -128,8 +129,15 @@ def map_batches(df, fn, schema):
     the package's Python stages enter the executors.
 
     Ships the package to the executor Python workers and, once per
-    task, installs :func:`install_zip_reread_guard` before ``fn`` sees
-    a batch.  Empty input batches are skipped.  ``fn(batch)`` returns
+    task, installs :func:`install_zip_reread_guard` and calls
+    ``gc.freeze()`` before ``fn`` sees a batch.  pyspark's worker
+    daemon runs a full collect after every task, so what the freeze
+    takes in is the worker's long-lived heap; neither that collect nor
+    a stage's own ``gc.collect()`` walks it again.  The freeze is per
+    task, not per process, because heap arrives after the first task
+    starts: the first ``pa.array`` imports pandas.  Objects frozen in
+    one task and dropped later are still freed by refcounting.
+    Empty input batches are skipped.  ``fn(batch)`` returns
     ``{name: values}`` for the columns of ``schema`` (a DDL string or a
     StructType), each an Arrow array, a numpy array (a masked array's
     masked slots become nulls) or a list, typed from ``schema``; a
@@ -144,9 +152,12 @@ def map_batches(df, fn, schema):
     fields = list(to_arrow_schema(schema))
 
     def task(batches):
+        import gc
+
         import pyarrow as pa
 
         install_zip_reread_guard()
+        gc.freeze()
         for batch in batches:
             if batch.num_rows == 0:
                 continue

@@ -155,10 +155,15 @@ def test_workers_run_with_guard(spark):
     assert len(extracted) == 40 and not any(r["error"] for r in extracted)
 
     def probe(batch):
-        """Report, from inside the worker, whether the guard is installed
-        and how many zip directories ``invalidate_caches`` re-reads."""
+        """Report, from inside the worker, whether the guard is installed,
+        how many zip directories ``invalidate_caches`` re-reads and how
+        many objects the worker heap has frozen, with the worker's pid
+        and the time."""
+        import gc
         import importlib
+        import os
         import sys
+        import time
         import zipimport
 
         real = zipimport._read_directory
@@ -184,17 +189,34 @@ def test_workers_run_with_guard(spark):
             "guarded": [guarded] * n,
             "zips": [zips] * n,
             "rereads": [len(reads)] * n,
+            "frozen": [gc.get_freeze_count()] * n,
+            "pid": [os.getpid()] * n,
+            "t": [time.monotonic_ns()] * n,
         }
 
+    # one row, so one batch, per task: a few workers run them in turn
+    n_tasks = 64
     probed = map_batches(
-        spark.range(4 * 64).repartition(4),
+        spark.range(0, n_tasks, numPartitions=n_tasks),
         probe,
-        "guarded boolean, zips bigint, rereads bigint",
+        "guarded boolean, zips bigint, rereads bigint, frozen bigint, pid bigint, t bigint",
     ).collect()
-    assert len(probed) == 256
+    assert len(probed) == n_tasks
     assert all(r["guarded"] for r in probed)
     assert all(r["zips"] > 0 for r in probed)
-    assert [r["rereads"] for r in probed] == [0] * 256
+    assert [r["rereads"] for r in probed] == [0] * n_tasks
+    assert all(r["frozen"] > 0 for r in probed)
+    # the frozen heap plateaus in a reused worker: a task leaves no
+    # cycles behind in it (the first pa.array imports pandas, which
+    # the second task's freeze takes in; from the third task on it is
+    # flat)
+    by_pid = {}
+    for r in sorted(probed, key=lambda r: r["t"]):
+        by_pid.setdefault(r["pid"], []).append(r["frozen"])
+    reused = [counts for counts in by_pid.values() if len(counts) >= 8]
+    assert reused, {pid: len(c) for pid, c in by_pid.items()}
+    for counts in reused:
+        assert abs(counts[-1] - counts[2]) <= 0.05 * counts[2], counts
 
 
 def test_package_zip_removed_at_driver_exit(tmp_path):
