@@ -20,21 +20,22 @@ Faithfulness notes (quirks deliberately mirrored):
   that attempt's nodes hang in detached subtrees, so the walk stops
   below <body> unless <body> is the candidate's parent.
 
-Retry chain (``grab_article``), which runs fewer attempts than the
-canonical loop and returns the same result:
-- a retry whose relaxed flag gated nothing in the last attempt, and
-  which starts where that attempt started (no byline found in it, no
-  <body> among its top candidates), reproduces it, so it is skipped;
-- once a failed attempt's normalized text is as long as the pristine
-  <body>'s, no later attempt can be longer: an article is an in-order
-  subsequence of the body's text nodes (nothing outside <body> is
-  joined, no text is created), and collapsing whitespace runs cannot
-  make a subsequence longer (each non-space character counts once and
-  each whitespace run once).  The stable best-attempt sort keeps the
-  earliest longest attempt, which has then already run, so the chain
-  stops.  ``dir`` alone comes from the *last* attempt, so a page where
-  any element carries ``dir`` runs the chain out.
-``tests/test_retry_twin.py`` holds the canonical loop as a twin.
+Retry chain (``grab_article``): the canonical loop, restored between
+attempts by the journal replay, with one exact cut.  Once a failed
+attempt's normalized text is as long as the pristine <body>'s, no later
+attempt can be longer: an article is an in-order subsequence of the
+body's text nodes (nothing outside <body> is joined, no text is
+created), and collapsing whitespace runs cannot make a subsequence
+longer (each non-space character counts once and each whitespace run
+once).  The stable best-attempt sort keeps the earliest longest
+attempt, which has then already run, so the chain stops.  ``dir``
+alone comes from the *last* attempt, so a page where any element
+carries ``dir`` runs the chain out.  An older skip of retries whose
+relaxed flag had gated nothing is gone: with the cut in place it ran
+no fewer attempts on the benchmark's pages (1.000 per document on
+interleaved and ``corpus.synth`` pages either way) and needed four
+per-attempt trackers.  ``tests/test_retry_twin.py`` holds the
+canonical loop as a twin.
 """
 
 from __future__ import annotations
@@ -175,10 +176,6 @@ class Grabber:
         el_id = e.id
         if el_id:
             weight += _string_weight(el_id)
-        if weight:
-            # retry-skip tracker: a zero-weight-everywhere attempt is
-            # provably identical with the flag disabled
-            self._attempt_weight_seen = True
         return weight
 
     def initialize_node(self, node: Element) -> None:
@@ -271,38 +268,23 @@ class Grabber:
                         n.IS_ELEMENT and "dir" in n.attrs for n in doc.iter_subtree()
                     )
                 if text_length == body_length and not has_dir:
+                    break
+                if self.flag_strip_unlikelys:
                     self.flag_strip_unlikelys = False
+                elif self.flag_weight_classes:
                     self.flag_weight_classes = False
+                elif self.flag_clean_conditionally:
                     self.flag_clean_conditionally = False
-
-                # relax flags; a retry whose flag gated NOTHING in the
-                # last attempt, and which starts where the last attempt
-                # started, provably reproduces it byte-for-byte (no
-                # flag-off divergence point), so it is skipped.  The
-                # canonical code re-runs anyway; its attempts list just
-                # gains a duplicate (same article, same length), which
-                # the stable best-attempt sort resolves to the same
-                # result.
-                while True:
-                    if self.flag_strip_unlikelys:
-                        self.flag_strip_unlikelys = False
-                        gated = self._attempt_stripped
-                    elif self.flag_weight_classes:
-                        self.flag_weight_classes = False
-                        gated = self._attempt_weight_seen
-                    elif self.flag_clean_conditionally:
-                        self.flag_clean_conditionally = False
-                        gated = self._attempt_cond_cleaned
-                    else:
-                        self.attempts.sort(key=lambda a: a[1], reverse=True)
-                        if not self.attempts[0][1]:
-                            return None
-                        article = self.attempts[0][0]
-                        self._set_article_dir(restored=True)
-                        return article
-                    if gated or self._attempt_carries_over:
-                        break
+                else:
+                    break
                 _dom.journal_start()
+            # best-attempt fallback: the stable sort keeps the earliest
+            # longest attempt
+            self.attempts.sort(key=lambda a: a[1], reverse=True)
+            if not self.attempts[0][1]:
+                return None
+            self._set_article_dir(restored=True)
+            return self.attempts[0][0]
         except BaseException:
             # mid-attempt failure: replay the active journal before
             # propagating, so a caller that catches the exception and
@@ -327,39 +309,17 @@ class Grabber:
         page = doc.body
         strip_unlikely = self.flag_strip_unlikelys
 
-        # retry-skip trackers: record whether anything each flag gates
-        # actually HAPPENED this attempt.  If not, re-running with that
-        # flag disabled provably reproduces this attempt byte-for-byte
-        # (the flag-off code path differs only where these fire), so
-        # grab_article skips the redundant retry.
-        self._attempt_stripped = False
-        self._attempt_weight_seen = False
-        self._attempt_cond_cleaned = False
-        # ... and whether this attempt leaves the next one a different
-        # start: a byline found now is neither looked for nor removed
-        # again, and a <body> scored now keeps its (unjournaled) score,
-        # so it is no candidate next time
-        self._attempt_carries_over = False
-
         elements_to_score: list[Element] = []
         node: Element | None = doc.document_element
         should_remove_title_header = True
 
         # ---- phase 1: prepareNodes walk -------------------------------
-        # match_string (class + " " + id) is needed by the byline
-        # probe and the strip-unlikelys gate only — build it lazily so
-        # attempts where both are inactive (byline already known +
-        # strip flag relaxed) skip two dict gets and a concat per node
-        byline_inactive = bool(self.metadata.get("byline"))
         while node is not None:
             if node.tag == "html":
                 self.article_lang = node.get_attr("lang")
 
-            _attrs = node.attrs
-            if strip_unlikely or not (byline_inactive or self.article_byline is not None):
-                match_string = _attrs.get("class", "") + " " + _attrs.get("id", "")
-            else:
-                match_string = None
+            attrs = node.attrs
+            match_string = attrs.get("class", "") + " " + attrs.get("id", "")
 
             if not is_probably_visible(node):
                 node = remove_and_get_next(node)
@@ -389,7 +349,6 @@ class Grabber:
                     nxt = get_next_node(nxt)
                 chosen = itemprop_name_node if itemprop_name_node is not None else node
                 self.article_byline = js_trim(chosen.text_content)
-                self._attempt_carries_over = True
                 node = remove_and_get_next(node)
                 continue
 
@@ -406,12 +365,10 @@ class Grabber:
                     and node.tag != "body"
                     and node.tag != "a"
                 ):
-                    self._attempt_stripped = True
                     node = remove_and_get_next(node)
                     continue
                 role = node.get_attr("role")
                 if role in R.UNLIKELY_ROLES:
-                    self._attempt_stripped = True
                     node = remove_and_get_next(node)
                     continue
 
@@ -518,10 +475,6 @@ class Grabber:
                         top_candidates.pop()
                     break
 
-        # top_candidates is a stable top-k, so a <body> outside it
-        # shapes nothing that its absence next time would change
-        if any(c is page for c in top_candidates):
-            self._attempt_carries_over = True
         top_candidate = top_candidates[0] if top_candidates else None
         needed_to_create_top_candidate = False
         parent_of_top_candidate: Element | None = None
@@ -979,7 +932,6 @@ class Grabber:
                 if node.parent is None or not self._is_attached(node, e):
                     continue
                 if self._should_clean_conditionally(node, tag):
-                    self._attempt_cond_cleaned = True
                     node.remove()
 
     # tags whose ELEMENT LISTS the conditional-clean heuristics need

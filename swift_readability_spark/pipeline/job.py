@@ -162,6 +162,33 @@ def with_partition_key(df: DataFrame, n_partitions: int) -> DataFrame:
     )
 
 
+def _check_document_types(schema: T.StructType) -> None:
+    """Reject, at plan time, a ``(doc_id, spans)`` schema the kernel
+    would turn into one error row per document, or fail on only inside
+    the extraction tasks: ``doc_id`` must be a string, and ``spans`` an
+    array of structs whose :data:`SPAN_STRUCT` fields have their types
+    in any order, ``offset`` any integral type.  ``text`` and
+    ``media_ref`` may be missing, since a JSON writer drops fields that
+    are null in every row (the kernel reads a missing one as null)."""
+    doc_id, spans = (f.dataType for f in schema.fields)
+    if not isinstance(doc_id, T.StringType):
+        raise ValueError(f"column doc_id has type {doc_id.simpleString()}; expected string")
+    element = spans.elementType if isinstance(spans, T.ArrayType) else None
+    got = {f.name: f.dataType for f in element.fields} if isinstance(element, T.StructType) else {}
+    for field in SPAN_STRUCT.fields:
+        have = got.get(field.name)
+        if have is None and field.name in ("text", "media_ref"):
+            continue
+        want = field.dataType
+        if not isinstance(have, T.IntegralType if isinstance(want, T.IntegralType) else type(want)):
+            raise ValueError(
+                f"column spans has type {spans.simpleString()}; expected "
+                f"{SPANS_TYPE.simpleString()}, fields in any order, offset "
+                "any integral type"
+                + ("; CSV cannot carry spans" if isinstance(spans, T.StringType) else "")
+            )
+
+
 # physical extraction tasks per resume key: every task pays a fixed
 # cost (task deserialization, Python stage setup, one parquet writer,
 # one more file for the commit pass to read), so one task per key, and
@@ -184,8 +211,9 @@ def plan_extraction(
     ``doc_id`` over ``n_partitions * DEFAULT_TASK_OVERSUBSCRIPTION``
     physical tasks, so documents of every size spread evenly.
     Only ``doc_id`` and ``spans`` cross the shuffle and the Arrow
-    boundary; input without either column fails here, at plan time,
-    instead of extracting every document as empty.
+    boundary; input without either column, or with either mistyped
+    (:func:`_check_document_types`), fails here, at plan time, instead
+    of extracting every document as empty or as an error.
     The lineage/resume key (``partition_key``) is a *column* with its
     own stable domain, computed from ``doc_id`` after the Arrow stage,
     so routing and task sizing never affect resume semantics.
@@ -196,7 +224,9 @@ def plan_extraction(
     A plain parquet path declares no layout: Spark packs its files into
     scan splits by size, so the route stays.
     """
-    df = route_for_extraction(df.select("doc_id", "spans"), n_partitions)
+    df = df.select("doc_id", "spans")
+    _check_document_types(df.schema)
+    df = route_for_extraction(df, n_partitions)
     extracted = map_batches(df, make_extract_batches(base_url, options), _KERNEL_SCHEMA)
     return (
         with_partition_key(extracted, n_partitions)

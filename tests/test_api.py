@@ -139,45 +139,3 @@ def test_char_threshold_retry():
     assert r is not None and r.length > 0
     r2 = parse(short, URL)  # default 500: retry loop, best attempt
     assert r2 is None or r2.length >= 0
-
-
-def test_retry_skip_is_output_identical(monkeypatch):
-    """Skipping provably-no-op retries must be byte-identical to the
-    canonical always-rerun behavior.  Force the trackers True (= never
-    skip) and compare full outputs on short documents that exhaust the
-    retry chain."""
-    from swift_readability_spark.core import grabber as G
-    from swift_readability_spark.extract import extract_document
-
-    docs = []
-    for i in range(30):
-        body = "".join(
-            f"<p>Short paragraph {i}-{j}, with commas, here.</p>" for j in range(3)
-        )
-        docs.append(
-            (
-                f"d{i}",
-                [{
-                    "kind": "text",
-                    "text": f'<html lang="en"><head><title>Doc {i} Title Words</title>'
-                    f'</head><body><div class="content">{body}</div></body></html>',
-                    "media_ref": None,
-                    "offset": 0,
-                }],
-            )
-        )
-
-    fast = [extract_document(d, s) for d, s in docs]
-
-    orig = G.Grabber._grab_once
-
-    def never_skip(self):
-        out = orig(self)
-        self._attempt_stripped = True
-        self._attempt_weight_seen = True
-        self._attempt_cond_cleaned = True
-        return out
-
-    monkeypatch.setattr(G.Grabber, "_grab_once", never_skip)
-    slow = [extract_document(d, s) for d, s in docs]
-    assert fast == slow

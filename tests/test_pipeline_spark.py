@@ -432,6 +432,71 @@ def test_input_without_spans_fails_before_any_commit(spark, tmp_path_factory):
     assert not (out / "lineage").exists()
 
 
+def test_csv_documents_fail_before_any_job(spark, tmp_path_factory):
+    """CSV reads ``spans`` as a string: the job fails at plan time, runs
+    no Spark job and writes nothing, instead of committing one error
+    row per document that resume would then skip for good."""
+    from swift_readability_spark.pipeline.io import read_documents
+
+    out = tmp_path_factory.mktemp("csvdocs")
+    _plain_docs(spark, ["c1", "c2"]).selectExpr("doc_id", "to_json(spans) AS spans").write.option(
+        "header", "true"
+    ).csv(str(out / "docs.csv"))
+    docs = read_documents(spark, str(out / "docs.csv"))
+    assert docs.schema["spans"].dataType.simpleString() == "string"
+    sc = spark.sparkContext
+    sc.setJobGroup("csv-docs", "plan-time type check")
+    try:
+        with pytest.raises(ValueError, match="CSV cannot carry spans"):
+            run_extraction(
+                spark, docs, str(out / "extracted"), str(out / "lineage"), n_partitions=2
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("csv-docs") == []
+    assert not (out / "extracted").exists() and not (out / "lineage").exists()
+
+
+def test_non_string_doc_id_fails_at_plan_time(spark):
+    """JSON inference reads numeric ids as bigint, which the Arrow
+    kernel's string output column cannot hold."""
+    from swift_readability_spark.pipeline.job import plan_extraction
+
+    docs = _plain_docs(spark, ["1", "2"]).selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "spans")
+    with pytest.raises(ValueError, match="doc_id has type bigint"):
+        plan_extraction(docs, "http://fakehost/x.html", "r", 2)
+
+
+def test_json_round_trip_extracts(spark, corpus_dir, tmp_path_factory):
+    """JSON inference orders the span fields alphabetically, reads
+    ``offset`` as bigint and drops a field null in every row (no
+    ``media_ref`` on a text-only corpus): all of it extracts as the
+    parquet input does."""
+    from swift_readability_spark.pipeline.io import read_documents
+    from swift_readability_spark.pipeline.job import plan_extraction
+
+    out = tmp_path_factory.mktemp("jsondocs")
+    syn = spark.read.parquet(corpus_dir + "/documents.parquet").filter(
+        F.col("doc_id").startswith("syn-") & (F.col("doc_id") != MEGA_DOC)
+    )
+    for name, docs, fields in (
+        ("syn", syn, "kind:string,media_ref:string,offset:bigint,text:string"),
+        ("plain", _plain_docs(spark, ["p1", "p2"]), "kind:string,offset:bigint,text:string"),
+    ):
+        path = str(out / f"{name}.jsonl")
+        docs.write.json(path)
+        got = read_documents(spark, path)
+        assert got.schema["spans"].dataType.simpleString() == f"array<struct<{fields}>>"
+
+        def rows(df):
+            plan = plan_extraction(df, "http://fakehost/test/page.html", "r", 2)
+            return sorted(plan.select("doc_id", "spans", "text_length", "error").collect())
+
+        want = rows(docs)
+        assert want and all(r["error"] is None for r in want)
+        assert rows(got) == want
+
+
 def test_run_extraction_defaults_to_default_parallelism(spark, tmp_path_factory):
     """Without n_partitions (and no lineage to adopt a domain from) the
     resume-key domain is the session's defaultParallelism: one

@@ -1,14 +1,15 @@
 """The retry loop against its canonical twin.
 
 ``Grabber.grab_article`` restores the page between attempts by
-replaying a DOM mutation journal, skips retries whose relaxed flag
-gated nothing, and stops relaxing once an attempt holds the whole
-body's text.  :func:`canonical_grab_article` is Readability.js
-``_grabArticle``'s retry loop written the plain way: it re-parses the
-cached body HTML before every retry, runs every attempt, picks the
-fallback by a stable sort on text length and reads ``dir`` from the
-last attempt's top candidate.  ``extract_document`` must not tell the
-two apart on seeded generated pages and on the test corpus.
+replaying a DOM mutation journal and stops relaxing once an attempt
+holds the whole body's text.  :func:`canonical_grab_article` is
+Readability.js ``_grabArticle``'s retry loop written the plain way: it
+re-parses the cached body HTML before every retry, runs every attempt,
+picks the fallback by a stable sort on text length and reads ``dir``
+from the last attempt's top candidate.  ``extract_document`` must not
+tell the two apart on seeded generated pages, the test corpus, short
+pages that run the chain out, and the deep, wide and malformed shapes
+of ``test_robustness.py``.
 """
 
 import random
@@ -76,7 +77,7 @@ _SPACES = (" ", "  ", "\n", "\t\n ", "\u00a0", " \u00a0\n", "&nbsp; ", "&nbsp;")
 
 class _Page:
     """Random page parts: the branches the retry chain reacts to
-    (threshold, skip trackers, cut, ``dir``, byline, title header)."""
+    (threshold, relaxed flags, cut, ``dir``, byline, title header)."""
 
     def __init__(self, rng):
         self.rng = rng
@@ -179,13 +180,14 @@ class _Page:
         return f"<html{html_dir}>{head}<body{body_dir}>{''.join(parts)}</body></html>"
 
 
+def _text_page(html):
+    return [{"kind": "text", "text": html, "media_ref": None, "offset": 0}]
+
+
 def generated_pages(n, seed):
     rng = random.Random(seed)
     page = _Page(rng)
-    return [
-        (f"gen-{seed}-{i}", [{"kind": "text", "text": page.build(), "media_ref": None, "offset": 0}])
-        for i in range(n)
-    ]
+    return [(f"gen-{seed}-{i}", _text_page(page.build())) for i in range(n)]
 
 
 def interleaved_pages(n, seed):
@@ -214,6 +216,40 @@ def interleaved_pages(n, seed):
             spans = [dict(text, text=head + tail, offset=0)]
         pages.append((str(d), spans))
     return pages
+
+
+def short_content_pages(n=30):
+    """Three short paragraphs in a ``class="content"`` wrapper: every
+    page stays below ``char_threshold`` and reaches the fallback."""
+    pages = []
+    for i in range(n):
+        body = "".join(f"<p>Short paragraph {i}-{j}, with commas, here.</p>" for j in range(3))
+        html = (
+            f'<html lang="en"><head><title>Doc {i} Title Words</title></head>'
+            f'<body><div class="content">{body}</div></body></html>'
+        )
+        pages.append((f"short-{i}", _text_page(html)))
+    return pages
+
+
+def robustness_pages():
+    """The deep, wide and malformed shapes of ``test_robustness.py``."""
+
+    def body(inner):
+        return _text_page(f"<html><body>{inner}</body></html>")
+
+    shorts = "".join(f"<p>Short paragraph {j}, with commas, here.</p>" for j in range(3))
+    long_paragraph = "<p>paragraph {} with some words, and more words after the comma.</p>"
+    return [
+        ("deep-div", body("<div>" * 300 + "deep text, here." + "</div>" * 300)),
+        # fails the threshold, so the replay undoes a 150-deep journal
+        ("deep-short", body("<div><section>" * 150 + shorts + "</section></div>" * 150)),
+        ("wide-long", body("".join(long_paragraph.format(i) for i in range(2000)))),
+        ("wide-short", body("<p>w.</p>" * 2000)),
+        ("not-html", _text_page("\x00\x01<<<>>>&&&")),
+        ("bad-offset", [{"kind": "media", "text": None, "media_ref": "x.jpg", "offset": 5}]),
+        ("empty-spans", []),
+    ]
 
 
 def _extract_all(docs):
@@ -247,6 +283,18 @@ def test_twin_agrees_on_corpus(corpus_dir, monkeypatch):
     _assert_twin_agrees(docs, monkeypatch)
 
 
+def test_twin_agrees_on_short_content_pages(monkeypatch):
+    out = _assert_twin_agrees(short_content_pages(), monkeypatch)
+    assert all(0 < r["text_length"] < G.DEFAULT_CHAR_THRESHOLD for r in out)
+
+
+def test_twin_agrees_on_robustness_shapes(monkeypatch):
+    out = _assert_twin_agrees(robustness_pages(), monkeypatch)
+    by_id = {r["doc_id"]: r for r in out}
+    assert 0 < by_id["deep-short"]["text_length"] < G.DEFAULT_CHAR_THRESHOLD
+    assert by_id["wide-long"]["text_length"] > 100_000
+
+
 @pytest.fixture
 def attempts_run(monkeypatch):
     """Counts ``_grab_once`` calls: the attempts actually run."""
@@ -262,9 +310,10 @@ def attempts_run(monkeypatch):
 
 
 def test_one_attempt_per_interleaved_page(attempts_run):
-    """Every interleaved page fails its first attempt or passes it
-    whole: the first attempt holds the body's whole text, so no retry
-    runs (with the no-op skip alone, 1.30 attempts per page ran)."""
+    """Every interleaved page passes its first attempt, or fails it
+    holding the body's whole text, so the cut ends the chain: no retry
+    runs (with the deleted no-op skip in the cut's place, 1.30 attempts
+    per page ran)."""
     docs = interleaved_pages(3000, seed=1)
     out = _extract_all(docs)
     assert not any(r["error"] for r in out)
@@ -274,6 +323,8 @@ def test_one_attempt_per_interleaved_page(attempts_run):
 def test_one_attempt_per_synth_page(attempts_run):
     from swift_readability_spark.corpus.synth import synth_documents
 
-    docs = synth_documents(300, seed=5, mega_every=0)
+    # the synth_skewed shape: every 200th page a ~1 MB mega-doc
+    docs = synth_documents(300, seed=5, mega_every=200)
+    assert any(sum(len(s["text"] or "") for s in spans) > 500_000 for _, spans in docs)
     _extract_all(docs)
     assert len(attempts_run) == len(docs)
