@@ -8,9 +8,11 @@ Usage:
       --lineage <lineage path> \
       [--base-url URL] \
       [--partitions N] [--run-id ID] [--no-resume] [--streaming] \
-      [--input-format parquet|json|csv|orc]
+      [--input-format parquet|json|orc]
 
-``--streaming`` reads a parquet file stream (any other
+JSON input is read with the documents schema, so a numeric ``doc_id``
+arrives as its JSON text; parquet and ORC are read with their own
+types.  ``--streaming`` reads a parquet file stream (any other
 ``--input-format`` is rejected) and names micro-batch ``k``'s run
 ``<run-id>-<k>`` (``stream-<k>`` without ``--run-id``).
 
@@ -47,7 +49,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--input-format",
-        choices=["parquet", "json", "csv", "orc"],
+        choices=["parquet", "json", "orc"],
         default=None,
         help="input format (default: sniff from the path extension; "
         "directories of part files need this set explicitly)",

@@ -1,5 +1,4 @@
-"""Corpus I/O: the bucketed-corpus writer and the multi-format
-documents reader.
+"""Corpus I/O: the bucketed-corpus writer and the documents reader.
 
 Output and lineage are plain parquet appends; the semantics relied
 upon — append-only output, lineage-as-commit-point — are the ones an
@@ -9,7 +8,11 @@ commit-protocol note for the parquet caveat).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+
+from .job import DOCUMENTS_SCHEMA
 
 
 def write_bucketed_corpus(
@@ -38,42 +41,34 @@ _FORMAT_BY_EXT = {
     ".json": "json",
     ".jsonl": "json",
     ".ndjson": "json",
-    ".csv": "csv",
     ".orc": "orc",
 }
+_FORMATS = sorted(set(_FORMAT_BY_EXT.values()))
 
 
-def read_documents(
-    spark: SparkSession,
-    path: str,
-    schema: str | None = None,
-    fmt: str | None = None,
-) -> DataFrame:
-    """Read a documents table from any of the common lake formats.
+def read_documents(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
+    """Read a ``(doc_id, spans)`` documents table.
 
-    ``fmt`` (parquet/json/csv/orc) wins when given — the common lake
-    layout is a *directory* of .json/.csv part files whose path carries
-    no extension, so extension sniffing alone would misread it as
-    parquet; sniffing is only the fallback for unset ``fmt``.  CSV
-    reads with a header; JSON is line-delimited.  Passing an explicit
-    ``schema`` string avoids the inference scan — at 100 TB schema
-    inference is a full extra pass, so production callers should
-    always pass it."""
-    import os
+    ``fmt`` (parquet/json/orc) wins when given — the common lake
+    layout is a *directory* of part files whose path carries no
+    extension, so extension sniffing alone would misread it as
+    parquet; sniffing is only the fallback for unset ``fmt``, and a
+    path without an extension reads as parquet.  Any other format,
+    CSV included (it cannot carry the nested ``spans``), raises before
+    Spark touches the path.
 
+    Parquet and ORC carry their own types and are read as they are;
+    ``plan_extraction`` rejects a mistyped file at plan time.  JSON is
+    line-delimited and read with :data:`DOCUMENTS_SCHEMA`: no inference
+    scan, and a numeric id arrives as its JSON text (``123`` as
+    ``'123'``, ``4.5e1`` as ``'4.5e1'``)."""
     if fmt is None:
         ext = os.path.splitext(path.rstrip("/"))[1].lower()
-        fmt = _FORMAT_BY_EXT.get(ext, "parquet")
-    elif fmt not in set(_FORMAT_BY_EXT.values()):
+        fmt = _FORMAT_BY_EXT.get(ext, ext[1:] or "parquet")
+    if fmt not in _FORMATS:
         raise ValueError(
-            f"unsupported input format {fmt!r}; expected one of "
-            f"{sorted(set(_FORMAT_BY_EXT.values()))}"
+            f"unsupported input format {fmt!r} for {path}; expected one of {_FORMATS}"
         )
-    reader = spark.read
-    if schema:
-        reader = reader.schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", "true").option(
-            "inferSchema", "false" if schema else "true"
-        )
-    return reader.format(fmt).load(path)
+    if fmt == "json":
+        return spark.read.schema(DOCUMENTS_SCHEMA).json(path)
+    return spark.read.format(fmt).load(path)

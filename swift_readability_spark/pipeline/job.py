@@ -185,7 +185,6 @@ def _check_document_types(schema: T.StructType) -> None:
                 f"column spans has type {spans.simpleString()}; expected "
                 f"{SPANS_TYPE.simpleString()}, fields in any order, offset "
                 "any integral type"
-                + ("; CSV cannot carry spans" if isinstance(spans, T.StringType) else "")
             )
 
 
@@ -420,10 +419,16 @@ def run_extraction(
     # far bigger than any single run's slice)
     extracted.write.mode("append").partitionBy("run_id").parquet(output_path)
 
+    # read this run's directory only: a filter on run_id prunes the
+    # scan, but the file index would first list every earlier run's
+    # directory.  The name is escaped as the writer escapes it, and a
+    # run over zero documents writes no directory.
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    run_dir = f"{output_path}/{escape.getPartitionPathString('run_id', run_id)}"
     committed = (
-        spark.read.schema(EXTRACTED_SCHEMA)
-        .parquet(output_path)
-        .filter(F.col("run_id") == run_id)
+        spark.read.schema(EXTRACTED_SCHEMA).option("basePath", output_path).parquet(run_dir)
+        if _path_exists(spark, run_dir)
+        else spark.createDataFrame([], EXTRACTED_SCHEMA)
     )
     lineage_from_output(committed, started_at, n_partitions).write.mode(
         "append"

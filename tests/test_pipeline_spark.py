@@ -248,6 +248,33 @@ def test_output_is_partitioned_by_run_id(spark, extracted):
     )[1].split("]")[0]
 
 
+def test_commit_reads_only_this_runs_directory(spark, tmp_path_factory, monkeypatch):
+    """The commit pass lists this run's directory only: a run_id filter
+    prunes the scan, but its file index lists every earlier run's
+    directory first, with a Spark job of its own past
+    ``parallelPartitionDiscovery.threshold`` (32 paths).  The run id
+    needs escaping in the directory name (``:`` is ``%3A``)."""
+    from urllib.parse import unquote
+
+    from swift_readability_spark.pipeline import job
+
+    out = tmp_path_factory.mktemp("manyruns")
+    paths = (str(out / "extracted"), str(out / "lineage"))
+    spark.range(33).selectExpr("'x' AS doc_id", "concat('old', id) AS run_id").write.partitionBy(
+        "run_id"
+    ).parquet(paths[0])
+    commits = []
+    lineage = job.lineage_from_output
+    monkeypatch.setattr(
+        job, "lineage_from_output", lambda df, *a: commits.append(df) or lineage(df, *a)
+    )
+    run_extraction(spark, _plain_docs(spark, ["n1", "n2"]), *paths, n_partitions=2, run_id="new:1")
+    files = [unquote(f) for f in commits[0].inputFiles()]  # file URIs
+    assert files and all("/run_id=new%3A1/" in f for f in files), files
+    rows = spark.read.parquet(paths[1]).collect()
+    assert {r["run_id"] for r in rows} == {"new:1"} and sum(r["doc_count"] for r in rows) == 2
+
+
 def test_resume_skips_committed_and_completes(spark, corpus_dir, tmp_path_factory):
     """Crash-resume semantics: a run that only committed some partition
     keys is completed by a second run, and the union equals a
@@ -433,45 +460,48 @@ def test_input_without_spans_fails_before_any_commit(spark, tmp_path_factory):
 
 
 def test_csv_documents_fail_before_any_job(spark, tmp_path_factory):
-    """CSV reads ``spans`` as a string: the job fails at plan time, runs
-    no Spark job and writes nothing, instead of committing one error
-    row per document that resume would then skip for good."""
+    """CSV cannot carry the nested ``spans``: ``read_documents`` rejects
+    a ``.csv`` path and ``fmt="csv"`` before Spark touches the input, so
+    no job runs and nothing is written."""
     from swift_readability_spark.pipeline.io import read_documents
 
     out = tmp_path_factory.mktemp("csvdocs")
-    _plain_docs(spark, ["c1", "c2"]).selectExpr("doc_id", "to_json(spans) AS spans").write.option(
-        "header", "true"
-    ).csv(str(out / "docs.csv"))
-    docs = read_documents(spark, str(out / "docs.csv"))
-    assert docs.schema["spans"].dataType.simpleString() == "string"
+    (out / "docs.csv").write_text('doc_id,spans\nc1,"[]"\n')
     sc = spark.sparkContext
-    sc.setJobGroup("csv-docs", "plan-time type check")
+    sc.setJobGroup("csv-docs", "reader format check")
     try:
-        with pytest.raises(ValueError, match="CSV cannot carry spans"):
-            run_extraction(
-                spark, docs, str(out / "extracted"), str(out / "lineage"), n_partitions=2
-            )
+        for path, fmt in ((str(out / "docs.csv"), None), (str(out), "csv")):
+            with pytest.raises(ValueError, match=r"'csv'.*\['json', 'orc', 'parquet'\]"):
+                docs = read_documents(spark, path, fmt=fmt)
+                run_extraction(
+                    spark, docs, str(out / "extracted"), str(out / "lineage"), n_partitions=2
+                )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("csv-docs") == []
     assert not (out / "extracted").exists() and not (out / "lineage").exists()
 
 
-def test_non_string_doc_id_fails_at_plan_time(spark):
+def test_non_string_doc_id_fails_at_plan_time(spark, tmp_path):
     """JSON inference reads numeric ids as bigint, which the Arrow
-    kernel's string output column cannot hold."""
+    kernel's string output column cannot hold.  ``read_documents`` reads
+    parquet with its own types, so a mistyped file meets the same check."""
+    from swift_readability_spark.pipeline.io import read_documents
     from swift_readability_spark.pipeline.job import plan_extraction
 
     docs = _plain_docs(spark, ["1", "2"]).selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "spans")
-    with pytest.raises(ValueError, match="doc_id has type bigint"):
-        plan_extraction(docs, "http://fakehost/x.html", "r", 2)
+    docs.write.parquet(str(tmp_path / "docs.parquet"))
+    for df in (docs, read_documents(spark, str(tmp_path / "docs.parquet"))):
+        with pytest.raises(ValueError, match="doc_id has type bigint"):
+            plan_extraction(df, "http://fakehost/x.html", "r", 2)
 
 
 def test_json_round_trip_extracts(spark, corpus_dir, tmp_path_factory):
-    """JSON inference orders the span fields alphabetically, reads
-    ``offset`` as bigint and drops a field null in every row (no
-    ``media_ref`` on a text-only corpus): all of it extracts as the
-    parquet input does."""
+    """JSON documents extract as the parquet input does, read through
+    ``read_documents`` (the documents schema) or by inference, which
+    orders the span fields alphabetically, reads ``offset`` as bigint
+    and drops a field null in every row (no ``media_ref`` on a
+    text-only corpus): the plan-time check accepts all of it."""
     from swift_readability_spark.pipeline.io import read_documents
     from swift_readability_spark.pipeline.job import plan_extraction
 
@@ -486,7 +516,9 @@ def test_json_round_trip_extracts(spark, corpus_dir, tmp_path_factory):
         path = str(out / f"{name}.jsonl")
         docs.write.json(path)
         got = read_documents(spark, path)
-        assert got.schema["spans"].dataType.simpleString() == f"array<struct<{fields}>>"
+        assert got.schema == DOCUMENTS_SCHEMA
+        inferred = spark.read.json(path)
+        assert inferred.schema["spans"].dataType.simpleString() == f"array<struct<{fields}>>"
 
         def rows(df):
             plan = plan_extraction(df, "http://fakehost/test/page.html", "r", 2)
@@ -495,6 +527,26 @@ def test_json_round_trip_extracts(spark, corpus_dir, tmp_path_factory):
         want = rows(docs)
         assert want and all(r["error"] is None for r in want)
         assert rows(got) == want
+        assert rows(inferred) == want
+
+
+def test_numeric_json_ids_extract(spark, tmp_path_factory):
+    """JSON numbers as ids arrive as their JSON text, so a numeric-id
+    corpus extracts instead of failing the plan-time ``doc_id`` check
+    (inference reads ``123`` as bigint and ``4.5e1`` as double)."""
+    import json
+
+    from swift_readability_spark.pipeline.io import read_documents
+
+    out = tmp_path_factory.mktemp("numericids")
+    span = {"kind": "text", "text": PLAIN_PAGE, "offset": 0}
+    lines = [f'{{"doc_id": {i}, "spans": [{json.dumps(span)}]}}' for i in ("123", "4.5e1")]
+    (out / "docs.jsonl").write_text("\n".join(lines) + "\n")
+    paths = (str(out / "extracted"), str(out / "lineage"))
+    run_extraction(spark, read_documents(spark, str(out / "docs.jsonl")), *paths, n_partitions=2)
+    rows = read_committed(spark, *paths).select("doc_id", "error", "text_length").collect()
+    assert sorted((r["doc_id"], r["error"]) for r in rows) == [("123", None), ("4.5e1", None)]
+    assert all(r["text_length"] > 0 for r in rows)
 
 
 def test_run_extraction_defaults_to_default_parallelism(spark, tmp_path_factory):

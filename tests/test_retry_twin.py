@@ -7,9 +7,9 @@ Readability.js ``_grabArticle``'s retry loop written the plain way: it
 re-parses the cached body HTML before every retry, runs every attempt,
 picks the fallback by a stable sort on text length and reads ``dir``
 from the last attempt's top candidate.  ``extract_document`` must not
-tell the two apart on seeded generated pages, the test corpus, short
-pages that run the chain out, and the deep, wide and malformed shapes
-of ``test_robustness.py``.
+tell the two apart on seeded generated pages, the test corpus and the
+golden's contested pages, short pages that run the chain out, and the
+deep, wide and malformed shapes of ``test_robustness.py``.
 """
 
 import random
@@ -278,9 +278,11 @@ def test_twin_agrees_on_generated_pages(monkeypatch):
 
 
 def test_twin_agrees_on_corpus(corpus_dir, monkeypatch):
+    from test_extract_golden import contested_pages
+
     table = pq.read_table(f"{corpus_dir}/documents.parquet")
     docs = list(zip(table.column("doc_id").to_pylist(), table.column("spans").to_pylist()))
-    _assert_twin_agrees(docs, monkeypatch)
+    _assert_twin_agrees(docs + contested_pages(), monkeypatch)
 
 
 def test_twin_agrees_on_short_content_pages(monkeypatch):

@@ -55,9 +55,9 @@ def test_streaming_rejects_non_parquet_input_before_spark(tmp_path):
             str(REPO / "run_job.py"),
             "--streaming",
             "--input-format",
-            "csv",
+            "json",
             "--input",
-            str(tmp_path / "docs.csv"),
+            str(tmp_path / "docs.jsonl"),
             "--output",
             str(tmp_path / "out"),
             "--lineage",
