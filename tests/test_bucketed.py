@@ -88,6 +88,8 @@ def test_bucketed_scan_reports_bucket_layout(bucketed):
 def test_read_documents_all_formats(spark, corpus_dir, tmp_path_factory):
     """The same documents round-trip through parquet, JSON-lines and
     ORC sources."""
+    import shutil
+
     from swift_readability_spark.pipeline.io import read_documents
     from swift_readability_spark.pipeline.job import DOCUMENTS_SCHEMA
 
@@ -100,6 +102,10 @@ def test_read_documents_all_formats(spark, corpus_dir, tmp_path_factory):
     pq = str(out / "d.parquet")
     docs.write.parquet(pq)
     assert read_documents(spark, pq).count() == n
+    # an extension the reader does not know reads as parquet
+    dotted = str(out / "corpus-2024.10")
+    shutil.copytree(pq, dotted)
+    assert read_documents(spark, dotted).count() == n
 
     orc = str(out / "d.orc")
     docs.write.orc(orc)

@@ -459,6 +459,31 @@ def test_input_without_spans_fails_before_any_commit(spark, tmp_path_factory):
     assert not (out / "lineage").exists()
 
 
+@pytest.mark.parametrize(
+    "line",
+    [
+        '{"id": "j1", "html": "<p>x</p>"}',  # neither doc_id nor spans
+        '{"doc_id": "j1", "spans": "[]"}',  # spans a string
+        '{"doc_id": "j1", "spans": [{"kind": "text", "text": "x", "offset": 1.5}]}',
+    ],
+    ids=["no_keys", "spans_string", "offset_float"],
+)
+def test_malformed_json_fails_before_any_commit(spark, tmp_path_factory, line):
+    """JSON is read with the documents schema, so a file that does not
+    fit it reads as ``(doc_id, spans)`` and passes the plan-time check.
+    It must still fail the run, not commit its documents as empty
+    extractions that resume would then skip for good."""
+    from swift_readability_spark.pipeline.io import read_documents
+
+    out = tmp_path_factory.mktemp("badjson")
+    (out / "docs.jsonl").write_text(line + "\n")
+    docs = read_documents(spark, str(out / "docs.jsonl"))
+    with pytest.raises(Exception, match="JSON document without doc_id|MALFORMED_RECORD"):
+        run_extraction(spark, docs, str(out / "extracted"), str(out / "lineage"), n_partitions=2)
+    assert not (out / "lineage").exists()
+    assert not list((out / "extracted").rglob("*.parquet"))
+
+
 def test_csv_documents_fail_before_any_job(spark, tmp_path_factory):
     """CSV cannot carry the nested ``spans``: ``read_documents`` rejects
     a ``.csv`` path and ``fmt="csv"`` before Spark touches the input, so
